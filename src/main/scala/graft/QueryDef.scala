@@ -36,4 +36,9 @@ object TmpSlices {
       .replaceAll("^_+|_+$", "").takeRight(48)
     s"${sane}_${java.lang.Integer.toHexString(d.hashCode)}"
   }
+
+  /** `<java.io.tmpdir>/<family>/<leaf>`: the one root every write-path
+    * slice lives under. */
+  def dir(family: String, leaf: String): String =
+    s"${sys.props("java.io.tmpdir")}/$family/$leaf"
 }

@@ -1271,7 +1271,7 @@ object Aggregates {
     QueryDef(
       "q_agg_hll_persist",
       (s, d) => {
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_hll_store/${graft.TmpSlices.key(d)}"
+        val dir = graft.TmpSlices.dir("graft_hll_store", graft.TmpSlices.key(d))
         Tables.events(s, d)
           .select(to_date(col("ts")).as("day"), col("user_id"))
           .groupBy("day")

@@ -171,8 +171,6 @@ object Clustering {
       ckRdd.count() // materializes the checkpoint AND drives the accumulator
       minLab.unpersist()
       changed = acc.value
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $iter changed=$changed")
       // Re-baseline on the checkpointed RDD with FRESH attribute ids:
       // the next round unions this frame with a projection of itself,
       // and Catalyst's union-constraint rewrite chokes when both

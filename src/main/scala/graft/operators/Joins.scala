@@ -420,8 +420,7 @@ object Joins {
     QueryDef(
       "q_join_dpp",
       (s, d) => {
-        val key = graft.TmpSlices.key(d)
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_dpp/$key"
+        val dir = graft.TmpSlices.dir("graft_dpp", graft.TmpSlices.key(d))
         Tables.orders(s, d)
           .selectExpr("o_orderkey",
             "CAST(CAST(o_totalprice AS DECIMAL(28,2)) * 100 AS BIGINT) AS cents",

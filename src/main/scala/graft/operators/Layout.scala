@@ -225,8 +225,8 @@ object Layout {
       "q_compact",
       (s, d) => {
         val key = graft.TmpSlices.key(d)
-        val frag = s"${sys.props("java.io.tmpdir")}/graft_compact/frag_$key"
-        val dst = s"${sys.props("java.io.tmpdir")}/graft_compact/dst_$key"
+        val frag = graft.TmpSlices.dir("graft_compact", s"frag_$key")
+        val dst = graft.TmpSlices.dir("graft_compact", s"dst_$key")
         Tables.documents(s, d).repartition(32)
           .write.mode("overwrite").parquet(frag)
         val conf = s.sparkContext.hadoopConfiguration
@@ -261,8 +261,7 @@ object Layout {
     QueryDef(
       "q_write_dynamic",
       (s, d) => {
-        val key = graft.TmpSlices.key(d)
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_dynpart/$key"
+        val dir = graft.TmpSlices.dir("graft_dynpart", graft.TmpSlices.key(d))
         val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try {
@@ -302,8 +301,7 @@ object Layout {
     QueryDef(
       "q_write_retention",
       (s, d) => {
-        val key = graft.TmpSlices.key(d)
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_retention/$key"
+        val dir = graft.TmpSlices.dir("graft_retention", graft.TmpSlices.key(d))
         val ev = Tables.events(s, d)
         val deleteSet = ev.filter(col("event_type") === "error")
           .select("user_id").distinct()

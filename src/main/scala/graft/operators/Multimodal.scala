@@ -596,8 +596,7 @@ object Multimodal {
       (s, d) => {
         implicit val sp: SparkSession = s
         import sp.implicits._
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_binfiles/" +
-          graft.TmpSlices.key(d)
+        val dir = graft.TmpSlices.dir("graft_binfiles", graft.TmpSlices.key(d))
         val base = java.nio.file.Paths.get(dir)
         java.nio.file.Files.createDirectories(base)
         // driver-side idempotence: drop stale files before the export

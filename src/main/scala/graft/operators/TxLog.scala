@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import scala.jdk.CollectionConverters._
+import graft.{QueryDef, Tables, TmpSlices}
 
 /** Delta-style transactional commit protocol over a file manifest —
   * the multi-writer lake-lifecycle capability the compaction /
@@ -33,6 +37,20 @@ import graft.{QueryDef, Tables}
   *    a coordinating log store in front; that substitution is config,
   *    not protocol.
   *
+  * Each manifest format has one owner here:
+  *  - act line (`action\tpart\tfile`): written by [[publish]], parsed by
+  *    [[readManifest]]; version manifests and checkpoints share it, and
+  *    [[listLog]] lists both kinds of log file;
+  *  - table slice (`<tmpdir>/<family>/<key>/{data,_log}`, wiped per
+  *    run): [[Table.fresh]];
+  *  - `partitionBy` directory → partition value: [[partitionedActs]]
+  *    (write side) and [[readPartitioned]] (read side);
+  *  - base commit by `lang`: [[Table.commitByLang]];
+  *  - eight `doc_id DIV width` range buckets: [[Table.rangeBuckets]];
+  *  - zone-map `stats` line (`lo,hi`): built by [[zoneMap]], parsed by
+  *    [[liveZoneMaps]], pruned on by [[Table.prunedRead]];
+  *  - which candidate files exist on disk: [[Table.readExisting]].
+  *
   * At 100 TB the data writes are ordinary distributed parquet jobs;
   * the log is metadata — bytes per commit, independent of data volume.
   * Only the manifest lines pass through the driver.
@@ -49,93 +67,94 @@ object TxLog {
 
   final case class Act(action: String, part: String, file: String)
 
+  private def manifestName(version: Int): String = f"v$version%06d.tsv"
+  private def checkpointName(version: Int): String = f"ckpt_v$version%06d.tsv"
+
   /** Atomic slot claim with the manifest content ALREADY COMPLETE:
     * stage the lines into a hidden temp file, then publish by hard
     * link — POSIX link() fails with EEXIST if the slot is taken, and
     * the linked name carries the fully-written content, so a
     * concurrent reader can never observe a torn manifest (a bare
     * create-then-write would expose an empty slot file mid-commit).
-    * HDFS substitutes its server-side atomic create(overwrite=false);
-    * object stores need a coordinating log store — config, not
-    * protocol. Returns false iff the slot was already taken. */
-  def tryCommit(logDir: String, version: Int, acts: Seq[Act]): Boolean = {
-    val dir = java.nio.file.Paths.get(logDir)
-    java.nio.file.Files.createDirectories(dir)
-    val path = dir.resolve(f"v$version%06d.tsv")
+    * Filesystems without hard links degrade to ATOMIC_MOVE behind an
+    * existence check: still no torn reads (the move is atomic), but
+    * create-exclusivity is only best-effort there — single-writer use
+    * keeps full semantics; true multi-writer logs on such filesystems
+    * need a coordinating log store, same as object stores (HDFS
+    * substitutes its server-side atomic create(overwrite=false)).
+    * Returns false iff `name` was already taken. */
+  private def publish(logDir: String, name: String, acts: Seq[Act]): Boolean = {
+    val dir = Paths.get(logDir)
+    Files.createDirectories(dir)
+    val path = dir.resolve(name)
     val stage = dir.resolve(
       s".stage_${Thread.currentThread().getId}_${System.nanoTime()}")
-    java.nio.file.Files.write(stage,
-      acts.map(a => s"${a.action}\t${a.part}\t${a.file}")
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    try publishAtomically(stage, path)
-    finally java.nio.file.Files.deleteIfExists(stage)
-  }
-
-  /** Publish a fully-written staged file at `path`, failing (false) iff
-    * the name is already taken. Primary: POSIX link() — atomic and
-    * create-exclusive. Filesystems without hard links degrade to
-    * ATOMIC_MOVE behind an existence check: still no torn reads (the
-    * move is atomic), but create-exclusivity is only best-effort there —
-    * single-writer use keeps full semantics; true multi-writer logs on
-    * such filesystems need a coordinating log store, same as object
-    * stores. */
-  private def publishAtomically(stage: java.nio.file.Path,
-                                path: java.nio.file.Path): Boolean =
+    Files.write(stage, acts.map(a => s"${a.action}\t${a.part}\t${a.file}")
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     try {
-      java.nio.file.Files.createLink(path, stage) // link() — atomic, EEXCL
+      Files.createLink(path, stage) // link() — atomic, EEXCL
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
       case _: UnsupportedOperationException =>
-        if (java.nio.file.Files.exists(path)) false
+        if (Files.exists(path)) false
         else try {
-          java.nio.file.Files.move(stage, path,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          Files.move(stage, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           true
         } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    }
-
-  /** Committed versions in order. */
-  def versions(logDir: String): Seq[Int] = {
-    val dir = java.nio.file.Paths.get(logDir)
-    if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("v") && n.endsWith(".tsv"))
-        .map(n => n.stripPrefix("v").stripSuffix(".tsv").toInt)
-        .toSeq.sorted
-    } finally st.close()
+    } finally Files.deleteIfExists(stage)
   }
 
-  /** Manifest files are immutable once committed, so acts cache by
-    * (logDir, version) — validated with one cheap stat (size + mtime)
-    * so a log directory wiped and re-created at the same path (specs,
-    * re-run queries in one JVM) never serves stale lines. This is what
-    * makes the OCC loop and snapshot replay O(new manifests read),
-    * not O(full log re-parsed per call). */
-  private val actCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), (Long, Long, Seq[Act])]()
+  /** Claim manifest slot `version` for `acts`; false iff it was taken. */
+  def tryCommit(logDir: String, version: Int, acts: Seq[Act]): Boolean =
+    publish(logDir, manifestName(version), acts)
 
-  def readActs(logDir: String, version: Int): Seq[Act] = {
-    val path = java.nio.file.Paths.get(logDir, f"v$version%06d.tsv")
-    val attrs = java.nio.file.Files.readAttributes(
+  /** Versions of the log files named `<prefix>%06d.tsv`, in order. */
+  private def listLog(logDir: String, prefix: String): Seq[Int] = {
+    val dir = Paths.get(logDir)
+    if (!Files.isDirectory(dir)) return Seq.empty
+    val st = Files.list(dir)
+    try st.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith(prefix) && n.endsWith(".tsv"))
+      .map(n => n.stripPrefix(prefix).stripSuffix(".tsv").toInt)
+      .toSeq.sorted
+    finally st.close()
+  }
+
+  /** Committed versions in order. */
+  def versions(logDir: String): Seq[Int] = listLog(logDir, "v")
+
+  /** Committed checkpoint versions in order. */
+  def checkpointVersions(logDir: String): Seq[Int] = listLog(logDir, "ckpt_v")
+
+  /** Log files are immutable once published, so acts cache by path —
+    * validated with one cheap stat (size + mtime) so a log directory
+    * wiped and re-created at the same path (specs, re-run queries in
+    * one JVM) never serves stale lines. This is what makes the OCC
+    * loop and snapshot replay O(new manifests read), not O(full log
+    * re-parsed per call). */
+  private val actCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Seq[Act])]()
+
+  private def readManifest(logDir: String, name: String): Seq[Act] = {
+    val path = Paths.get(logDir, name)
+    val attrs = Files.readAttributes(
       path, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = (logDir, version)
     val stamp = (attrs.size(), attrs.lastModifiedTime().toMillis)
-    Option(actCache.get(key)) match {
+    Option(actCache.get(path.toString)) match {
       case Some((sz, mt, acts)) if (sz, mt) == stamp => acts
       case _ =>
-        import scala.jdk.CollectionConverters._
-        val acts = java.nio.file.Files.readAllLines(path).asScala.toSeq
+        val acts = Files.readAllLines(path).asScala.toSeq
           .filter(_.nonEmpty).map { l =>
             val Array(a, p, f) = l.split("\t", 3); Act(a, p, f)
           }
-        actCache.put(key, (stamp._1, stamp._2, acts))
+        actCache.put(path.toString, (stamp._1, stamp._2, acts))
         acts
     }
   }
+
+  def readActs(logDir: String, version: Int): Seq[Act] =
+    readManifest(logDir, manifestName(version))
 
   private def replayInto(live: scala.collection.mutable.LinkedHashMap[String, Vector[String]],
                          acts: Seq[Act]): Unit =
@@ -161,7 +180,7 @@ object TxLog {
     val live = scala.collection.mutable.LinkedHashMap[String, Vector[String]]()
     val ck = if (useCheckpoint) checkpointVersions(logDir).filter(_ <= asOf).lastOption
              else None
-    ck.foreach(c => replayInto(live, readCheckpointActs(logDir, c)))
+    ck.foreach(c => replayInto(live, readManifest(logDir, checkpointName(c))))
     versions(logDir).filter(v => v <= asOf && ck.forall(v > _))
       .foreach(v => replayInto(live, readActs(logDir, v)))
     live.toMap.filter(_._2.nonEmpty)
@@ -250,16 +269,24 @@ object TxLog {
     * job actually produced — ONE distributed write per transaction
     * instead of a driver-serialized loop of per-partition jobs, with
     * the manifest reflecting reality (a row-empty partition writes no
-    * dir and commits no act). Returns (partitionValue, relativeFile). */
+    * dir and commits no act). Directory values are Hive-escaped
+    * (`%2F` for `/`); the partition value is the unescaped one, so it
+    * equals the data's own value. A NULL partition value (Hive's
+    * default-partition directory) has no manifest partition and fails
+    * loudly. Returns (partitionValue, relativeFile), sorted by value. */
   def partitionedActs(s: SparkSession, dataDir: String,
                       rel: String): Seq[(String, String)] = {
-    val hfs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    hfs.listStatus(new org.apache.hadoop.fs.Path(s"$dataDir/$rel"))
+    val root = new Path(s"$dataDir/$rel")
+    root.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(root)
       .map(_.getPath.getName)
       .filter(_.contains("="))
-      .sorted
-      .map(n => (n.substring(n.indexOf('=') + 1), s"$rel/$n"))
+      .map { n =>
+        val v = n.substring(n.indexOf('=') + 1)
+        require(v != ExternalCatalogUtils.DEFAULT_PARTITION_NAME,
+          s"NULL partition value in $dataDir/$rel/$n")
+        (ExternalCatalogUtils.unescapePathName(v), s"$rel/$n")
+      }
+      .sortBy(_._1)
       .toSeq
   }
 
@@ -268,25 +295,28 @@ object TxLog {
     * metadata — the data files written by `partitionBy` don't carry
     * the column). Reserved partitions (e.g. `_dv`) are excluded.
     *
-    * r14: ONE parquet relation over every live file instead of one
-    * read per partition unioned — the per-partition reads each paid a
-    * driver-serialized schema-inference job and planned a separate
-    * scan node (StageProf: ~25 such 30-60 ms jobs per
-    * q_tx_delete_vectors run), and a Union of N scans defeats split
-    * packing. The partition value is recovered from the file path:
-    * every manifest act names a relative directory, so `/<rel>/` is an
-    * unambiguous marker inside `input_file_name()` (the act paths are
-    * full relative paths — none is a path-suffix of another). */
+    * ONE parquet relation over every live file, and ONE constant-size
+    * lookup for the partition: the directory of `input_file_name()`
+    * keys a map literal of live directory → partition (every manifest
+    * act names the directory that directly holds its files; keys are
+    * qualified URIs, encoded the way
+    * `input_file_name()` encodes them, so Hive-escaped directories
+    * match). The expression's size does not depend on the file count,
+    * and a row whose directory is not in the snapshot fails the query
+    * instead of getting a NULL partition. */
   def readPartitioned(s: SparkSession, dataDir: String,
                       snap: Map[String, Seq[String]], partCol: String,
-                      except: Set[String] = Set.empty): org.apache.spark.sql.DataFrame = {
+                      except: Set[String] = Set.empty): DataFrame = {
     val dirs = (snap -- except).toSeq.sortBy(_._1)
-      .flatMap { case (p, fs) => fs.map(f => (f, p)) }
-    val part = dirs.foldLeft(lit(null).cast("string")) { case (acc, (f, p)) =>
-      when(input_file_name().contains(s"/$f/"), lit(p)).otherwise(acc)
-    }
-    s.read.parquet(dirs.map { case (f, _) => s"$dataDir/$f" }: _*)
-      .withColumn(partCol, part)
+      .flatMap { case (p, files) => files.map(f => (s"$dataDir/$f", p)) }
+    val fs = new Path(dataDir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val partOf = typedLit(dirs.map { case (dir, p) =>
+      fs.makeQualified(new Path(dir)).toUri.toString -> p
+    }.toMap)
+    val file = input_file_name()
+    s.read.parquet(dirs.map(_._1): _*)
+      .withColumn(partCol, coalesce(partOf(regexp_extract(file, "^(.*)/[^/]*$", 1)),
+        raise_error(concat(lit("file outside the manifest snapshot: "), file))))
   }
 
   /** Size-gated deletion-vector anti-join — the two-regime discipline:
@@ -296,14 +326,115 @@ object TxLog {
     * no broadcast survives the ~10¹⁰ keys a 1% delete on a 100 TB
     * table produces. The gate reads FILE SIZES from the manifest
     * listing — a metadata decision, not an extra count() job. */
-  def antiJoinDv(s: SparkSession, t: org.apache.spark.sql.DataFrame,
-                 del: org.apache.spark.sql.DataFrame,
-                 dvBytes: Long): org.apache.spark.sql.DataFrame = {
+  def antiJoinDv(s: SparkSession, t: DataFrame, del: DataFrame,
+                 dvBytes: Long): DataFrame = {
     val maxBytes = s.conf.get("graft.tx.dvBroadcastMaxBytes",
       (64L << 20).toString).toLong
     val cond = col("doc_id") === col("del_id")
     if (dvBytes <= maxBytes) t.join(broadcast(del), cond, "left_anti")
     else t.join(del.hint("SHUFFLE_HASH"), cond, "left_anti")
+  }
+
+  /** The zone-map manifest line: file `f` holds doc_ids in [lo, hi]. */
+  private def zoneMap(f: String, lo: Long, hi: Long): Act = Act("stats", f, s"$lo,$hi")
+
+  /** Zone maps of the live files, from the log's `stats` lines; the
+    * stale line of a removed file is inert. */
+  private def liveZoneMaps(logDir: String): Seq[(String, Long, Long)] = {
+    val live = snapshotFiles(logDir).values.flatten.toSet
+    versions(logDir).flatMap(readActs(logDir, _)).collect {
+      case Act("stats", f, mm) if live(f) =>
+        val Array(lo, hi) = mm.split(",", 2); (f, lo.toLong, hi.toLong)
+    }
+  }
+
+  private def bucketFile(b: Int): String = s"buckets/bucket=$b"
+  /** Integer DIV, not double division: exact for all longs, where
+    * /-then-cast drifts past 2^53. */
+  private def bucketOf(width: Long): Column = expr(s"CAST(doc_id DIV $width AS INT)")
+  private def bucketZoneMaps(width: Long): Seq[Act] =
+    (0 until 8).map(b => zoneMap(bucketFile(b), b * width, (b + 1) * width - 1))
+
+  /** The result columns every entry pins: row count and an exact key
+    * checksum (Σ key·7). */
+  private val nRows: Column = count(lit(1)).as("n_rows")
+  private def keyChecksum(key: String): Column = sum(col(key) * 7).cast("bigint").as("key_checksum")
+
+  /** One entry's manifest table: data files under `data/`, the log
+    * under `_log/`. */
+  private final class Table(s: SparkSession, val base: String) {
+    val dataDir = s"$base/data"
+    val logDir = s"$base/_log"
+    val fs: org.apache.hadoop.fs.FileSystem =
+      new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def path(f: String): String = s"$dataDir/$f"
+    def read(files: Seq[String]): DataFrame = s.read.parquet(files.map(path): _*)
+
+    /** Read the candidates that exist: a range bucket that happened to
+      * be row-empty has a manifest line but no directory (partitionBy
+      * writes none — sparse id spaces). */
+    def readExisting(files: Seq[String]): DataFrame =
+      read(files.filter(f => fs.exists(new Path(path(f)))))
+
+    /** v0 partitioned by `lang`: ONE partitionBy write job, acts derived
+      * from the layout it produced (the driver never loops
+      * per-partition writes, and no separate distinct-langs job runs).
+      * Returns the langs, sorted. */
+    def commitByLang(docs: DataFrame): Seq[String] = {
+      docs.write.partitionBy("lang").mode("overwrite").parquet(path("base"))
+      val acts = partitionedActs(s, dataDir, "base")
+      val langs = acts.map(_._1)
+      val v0 = commit(logDir, -1, acts.map { case (l, f) => Act("add", l, f) }, langs.toSet)
+      require(v0.contains(0), s"base commit landed at $v0, expected 0")
+      langs
+    }
+
+    /** v0 range-bucketed on doc_id: ONE pass writes all eight buckets
+      * `doc_id DIV width` (width = maxId / 8 + 1; bucket = partition
+      * column), not eight filtered scans, and one commit adds them with
+      * the per-bucket lines `meta(width)`. `maxId` comes from the
+      * caller's own aggregate pass, so this scans nothing else. Returns
+      * the width. */
+    def rangeBuckets(docs: DataFrame, maxId: Long)(meta: Long => Seq[Act]): Long = {
+      // the pinned pruning arithmetic needs width >= 2 (with width 1
+      // the [2.5w, 4.5w) band straddles two buckets); fail loud instead
+      // of hash-mismatching on a degenerate fixture
+      require(maxId >= 8, s"range buckets need max doc_id >= 8, got $maxId")
+      val width = maxId / 8 + 1
+      docs.withColumn("bucket", bucketOf(width))
+        .write.partitionBy("bucket").mode("overwrite").parquet(path("buckets"))
+      require(commit(logDir, -1,
+        (0 until 8).map(b => Act("add", "all", bucketFile(b))) ++ meta(width),
+        Set("all")).contains(0))
+      width
+    }
+
+    /** Zone-map pruning: open only the live files whose [lo, hi]
+      * overlaps [qLo, qHi], run `q` over them, and pin the answer
+      * (count, checksum, n_chars sum) next to the pruning arithmetic
+      * (files scanned / skipped), so opening too many or — worse — too
+      * few files fails the hash. */
+    def prunedRead(qLo: Long, qHi: Long)(q: DataFrame => DataFrame): DataFrame = {
+      val scanned = liveZoneMaps(logDir).filter { case (_, lo, hi) =>
+        hi >= qLo && lo <= qHi
+      }.map(_._1).sorted
+      val skipped = snapshotFiles(logDir).values.flatten.toSet.size.toLong - scanned.length
+      q(readExisting(scanned))
+        .agg(nRows, keyChecksum("doc_id"), sum(col("n_chars").cast("long")).as("chars_sum"))
+        .withColumn("files_scanned", lit(scanned.length.toLong))
+        .withColumn("files_skipped", lit(skipped))
+    }
+  }
+
+  private object Table {
+    /** `family`'s slice for dataset `d`, emptied first: every run
+      * replays its script from an empty table, so a re-run in the same
+      * JVM returns the same rows. */
+    def fresh(s: SparkSession, d: String, family: String): Table = {
+      val t = new Table(s, TmpSlices.dir(family, TmpSlices.key(d)))
+      t.fs.delete(new Path(t.base), true)
+      t
+    }
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -329,55 +460,39 @@ object TxLog {
     QueryDef(
       "q_tx_commit",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txlog/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        // idempotent re-run: the protocol twin starts from an empty table
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
-
+        val t = Table.fresh(s, d, "graft_txlog")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
-
-        // v0: base commit — one distributed write, acts from the layout
-        docs.write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base")
-        val langs = baseActs.map(_._1)
+        val langs = t.commitByLang(docs)
         val (lmin, lmax) = (langs.head, langs.last)
-        val v0 = commit(logDir, -1,
-          baseActs.map { case (l, f) => Act("add", l, f) }, langs.toSet)
-        require(v0.contains(0), s"base commit landed at $v0, expected 0")
 
         // all three writers snapshot NOW — each holds readVer = 0
-        val snapVer = versions(logDir).last
+        val snapVer = versions(t.logDir).last
 
         // writer A: blind append into lmax (re-keyed duplicates)
         docs.filter(col("lang") === lmax)
           .select((col("doc_id") + lit(1000000000L)).as("doc_id"))
-          .write.mode("overwrite").parquet(s"$dataDir/appendA_$lmax")
-        val vA = commit(logDir, snapVer,
+          .write.mode("overwrite").parquet(t.path(s"appendA_$lmax"))
+        val vA = commit(t.logDir, snapVer,
           Seq(Act("add", lmax, s"appendA_$lmax")), Set(lmax))
         require(vA.isDefined, "append A must never conflict")
 
         // writer B: stale rewrite of lmin — disjoint from A, must rebase
         docs.filter(col("lang") === lmin && col("doc_id") % 2 === 0)
           .select("doc_id")
-          .write.mode("overwrite").parquet(s"$dataDir/rewriteB_$lmin")
-        val vB = commit(logDir, snapVer,
-          Seq(Act("remove", lmin, s"base/lang=$lmin"),
-            Act("add", lmin, s"rewriteB_$lmin")), Set(lmin))
+          .write.mode("overwrite").parquet(t.path(s"rewriteB_$lmin"))
+        val vB = commit(t.logDir, snapVer,
+          snapshotFiles(t.logDir, snapVer)(lmin).map(f => Act("remove", lmin, f)) :+
+            Act("add", lmin, s"rewriteB_$lmin"), Set(lmin))
         require(vB.isDefined, "disjoint rewrite B must rebase, not abort")
 
         // writer C: stale rewrite of lmax — A got there first, so the
         // first attempt ABORTS; the packaged retry re-runs the
         // transaction body against the fresh snapshot (whose lmax now
         // includes A's appends) and lands
-        val retried = retryingCommit(logDir, snapVer) { rv =>
-          val cur = snapshotFiles(logDir, rv)(lmax)
-          s.read.parquet(cur.map(f => s"$dataDir/$f"): _*)
-            .filter(col("doc_id") % 2 === 0)
-            .write.mode("overwrite").parquet(s"$dataDir/rewriteC_v$rv")
+        val retried = retryingCommit(t.logDir, snapVer) { rv =>
+          val cur = snapshotFiles(t.logDir, rv)(lmax)
+          t.read(cur).filter(col("doc_id") % 2 === 0)
+            .write.mode("overwrite").parquet(t.path(s"rewriteC_v$rv"))
           Some((cur.map(f => Act("remove", lmax, f)) :+
             Act("add", lmax, s"rewriteC_v$rv"), Set(lmax)))
         }
@@ -387,11 +502,9 @@ object TxLog {
 
         // read the final table THROUGH the manifest (partition value
         // attached from manifest metadata, not from the data files)
-        val nVersions = versions(logDir).length.toLong
-        readPartitioned(s, dataDir, snapshotFiles(logDir), "lang")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+        val nVersions = versions(t.logDir).length.toLong
+        readPartitioned(s, t.dataDir, snapshotFiles(t.logDir), "lang")
+          .groupBy("lang").agg(nRows, keyChecksum("doc_id"))
           .withColumn("n_versions", lit(nVersions))
           .withColumn("n_aborted", lit(nAborted))
           .orderBy("lang")
@@ -434,33 +547,25 @@ object TxLog {
     QueryDef(
       "q_tx_timetravel",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txtt/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txtt")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
         val lmin = docs.agg(min("lang")).head().getString(0)
         val part = docs.filter(col("lang") === lmin)
 
-        part.write.mode("overwrite").parquet(s"$dataDir/f0")
-        require(commit(logDir, -1, Seq(Act("add", lmin, "f0")), Set(lmin)).contains(0))
+        part.write.mode("overwrite").parquet(t.path("f0"))
+        require(commit(t.logDir, -1, Seq(Act("add", lmin, "f0")), Set(lmin)).contains(0))
         part.filter(col("doc_id") % 2 === 0)
-          .write.mode("overwrite").parquet(s"$dataDir/f1")
-        require(commit(logDir, 0,
+          .write.mode("overwrite").parquet(t.path("f1"))
+        require(commit(t.logDir, 0,
           Seq(Act("remove", lmin, "f0"), Act("add", lmin, "f1")), Set(lmin)).contains(1))
         part.filter(col("doc_id") % 2 === 1)
           .withColumn("doc_id", col("doc_id") + lit(1000000000L))
-          .write.mode("overwrite").parquet(s"$dataDir/f2")
-        require(commit(logDir, 1, Seq(Act("add", lmin, "f2")), Set(lmin)).contains(2))
+          .write.mode("overwrite").parquet(t.path("f2"))
+        require(commit(t.logDir, 1, Seq(Act("add", lmin, "f2")), Set(lmin)).contains(2))
 
         (0 to 2).map { v =>
-          val files = snapshotFiles(logDir, asOf = v).values.flatten.toSeq.sorted
-            .map(f => s"$dataDir/$f")
-          s.read.parquet(files: _*)
-            .agg(count(lit(1)).as("n_rows"),
-              sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+          t.read(snapshotFiles(t.logDir, asOf = v).values.flatten.toSeq.sorted)
+            .agg(nRows, keyChecksum("doc_id"))
             .withColumn("version", lit(v))
             .select("version", "n_rows", "key_checksum")
         }.reduce(_ unionAll _).orderBy("version")
@@ -495,38 +600,26 @@ object TxLog {
     QueryDef(
       "q_tx_vacuum",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txvac/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txvac")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
-        // v0: ONE partitionBy write job, acts from the produced layout
-        docs.write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base")
-        val langs = baseActs.map(_._1)
-        val lmin = langs.head
-        require(commit(logDir, -1,
-          baseActs.map { case (l, f) => Act("add", l, f) }, langs.toSet).contains(0))
-        // v1 rewrite makes base/lang=lmin DEAD (referenced only by v0)
+        val lmin = t.commitByLang(docs).head
+        // v1 rewrite makes lmin's base dir DEAD (referenced only by v0)
         docs.filter(col("lang") === lmin && col("doc_id") % 2 === 0)
           .select("doc_id")
-          .write.mode("overwrite").parquet(s"$dataDir/live_$lmin")
-        require(commit(logDir, 0,
-          Seq(Act("remove", lmin, s"base/lang=$lmin"), Act("add", lmin, s"live_$lmin")),
-          Set(lmin)).contains(1))
+          .write.mode("overwrite").parquet(t.path(s"live_$lmin"))
+        require(commit(t.logDir, 0,
+          snapshotFiles(t.logDir)(lmin).map(f => Act("remove", lmin, f)) :+
+            Act("add", lmin, s"live_$lmin"), Set(lmin)).contains(1))
         // a crashed writer: staged data, commit never attempted
-        docs.limit(1).write.mode("overwrite").parquet(s"$dataDir/staged_orphan")
+        docs.limit(1).write.mode("overwrite").parquet(t.path("staged_orphan"))
 
         // checkpoint the latest snapshot; prove it equals the FULL log
         // replay (useCheckpoint=false — the default read path now
         // consults the checkpoint, which would make this circular)
-        val ckVer = versions(logDir).last
-        writeCheckpoint(logDir, ckVer)
-        val fromCk = readCheckpoint(logDir).get
-        require(fromCk == snapshotFiles(logDir, ckVer, useCheckpoint = false),
+        val ckVer = versions(t.logDir).last
+        writeCheckpoint(t.logDir, ckVer)
+        val fromCk = readCheckpoint(t.logDir).get
+        require(fromCk == snapshotFiles(t.logDir, ckVer, useCheckpoint = false),
           "checkpoint must equal the full log replay")
 
         // vacuum with retention 0: live = latest snapshot only. The
@@ -534,25 +627,19 @@ object TxLog {
         // dead PARTITION DIR (base/lang=lmin) is reclaimed without
         // touching its live siblings; _SUCCESS markers are ignored.
         val live = fromCk.values.flatten.toSet
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val onDisk = hfs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
+        val onDisk = t.fs.listStatus(new Path(t.dataDir))
           .flatMap { st =>
             val n = st.getPath.getName
             if (st.isDirectory) {
-              val kids = hfs.listStatus(st.getPath)
+              val kids = t.fs.listStatus(st.getPath)
                 .map(_.getPath.getName).filter(_.contains("="))
               if (kids.nonEmpty) kids.map(k => s"$n/$k").toSeq else Seq(n)
             } else Seq(n)
           }.filterNot(_.startsWith("_")).sorted.toVector
         val dead = onDisk.filterNot(live)
-        dead.foreach { f =>
-          hfs.delete(new org.apache.hadoop.fs.Path(s"$dataDir/$f"), true)
-        }
-        readPartitioned(s, dataDir, fromCk, "lang")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+        dead.foreach(f => t.fs.delete(new Path(t.path(f)), true))
+        readPartitioned(s, t.dataDir, fromCk, "lang")
+          .groupBy("lang").agg(nRows, keyChecksum("doc_id"))
           .withColumn("n_live_files", lit(live.size.toLong))
           .withColumn("n_vacuumed", lit(dead.size.toLong))
           .orderBy("lang")
@@ -589,37 +676,31 @@ object TxLog {
     QueryDef(
       "q_tx_stream_sink",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txsink/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txsink")
         // stage the source as a 4-file directory: the file-stream
         // source needs a directory, and multiple files force multiple
         // microbatches under maxFilesPerTrigger — the retry window
         // the marker protocol exists for
-        val srcDir = s"$base/src"
+        val srcDir = s"${t.base}/src"
         Tables.events(s, d).select(col("event_id"), col("event_type"))
           .repartition(4).write.mode("overwrite").parquet(srcDir)
         val sch = s.read.parquet(srcDir).schema
         val appId = "graft_tx_sink"
         val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-        // r14: two files per microbatch — still >1 batch over the
-        // 4-file source (the at-least-once retry window the marker
-        // protocol exists for stays exercised, and the deliberate
-        // duplicate replay below is the exactly-once proof either
-        // way), at half the per-batch stream-cycle + commit overhead
-        // (the production "bigger microbatches" throughput knob).
+        // two files per microbatch — still >1 batch over the 4-file
+        // source (the at-least-once retry window stays exercised, and
+        // the deliberate duplicate replay below is the exactly-once
+        // proof either way), at half the per-batch stream-cycle +
+        // commit overhead of one file per batch.
         val q = s.readStream.schema(sch)
           .option("maxFilesPerTrigger", 2).parquet(srcDir)
           .writeStream
-          .option("checkpointLocation", s"$base/_ckpt")
-          .foreachBatch { (df: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          .option("checkpointLocation", s"${t.base}/_ckpt")
+          .foreachBatch { (df: DataFrame, batchId: Long) =>
             val file = f"batch_$batchId%06d"
-            df.write.mode("overwrite").parquet(s"$dataDir/$file")
-            val readVer = versions(logDir).lastOption.getOrElse(-1)
-            require(idempotentCommit(logDir, readVer,
+            df.write.mode("overwrite").parquet(t.path(file))
+            val readVer = versions(t.logDir).lastOption.getOrElse(-1)
+            require(idempotentCommit(t.logDir, readVer,
               Seq(Act("add", "all", file)), Set.empty, appId, batchId).isRight,
               s"sink commit for batch $batchId must land")
             lastBatch.updateAndGet(b => math.max(b, batchId))
@@ -631,17 +712,13 @@ object TxLog {
 
         // deliberate duplicate delivery of the last batch — the
         // at-least-once retry the marker must absorb
-        val retry = idempotentCommit(logDir,
-          versions(logDir).last, Seq(Act("add", "all", "batch_DUP")),
+        val retry = idempotentCommit(t.logDir,
+          versions(t.logDir).last, Seq(Act("add", "all", "batch_DUP")),
           Set.empty, appId, lastBatch.get())
         val retrySkipped = retry == Left("duplicate")
 
-        val files = snapshotFiles(logDir).values.flatten.toSeq.sorted
-          .map(f => s"$dataDir/$f")
-        s.read.parquet(files: _*)
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("event_id") * 7).cast("bigint").as("key_checksum"))
+        t.read(snapshotFiles(t.logDir).values.flatten.toSeq.sorted)
+          .groupBy("event_type").agg(nRows, keyChecksum("event_id"))
           .withColumn("retry_skipped", lit(retrySkipped))
           .orderBy("event_type")
       },
@@ -661,29 +738,23 @@ object TxLog {
     QueryDef(
       "q_tx_schema_evolve",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txevo/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txevo")
         val docs = Tables.documents(s, d)
         docs.select(col("doc_id"), col("lang"))
-          .write.mode("overwrite").parquet(s"$dataDir/gen0")
-        require(commit(logDir, -1, Seq(Act("add", "all", "gen0")), Set("all")).contains(0))
+          .write.mode("overwrite").parquet(t.path("gen0"))
+        require(commit(t.logDir, -1, Seq(Act("add", "all", "gen0")), Set("all")).contains(0))
         docs.select((col("doc_id") + lit(1000000000L)).as("doc_id"), col("lang"),
             col("n_chars").cast("long").as("n_chars"))
-          .write.mode("overwrite").parquet(s"$dataDir/gen1")
-        require(commit(logDir, 0, Seq(Act("add", "all", "gen1")), Set.empty).isDefined)
+          .write.mode("overwrite").parquet(t.path("gen1"))
+        require(commit(t.logDir, 0, Seq(Act("add", "all", "gen1")), Set.empty).isDefined)
 
-        val files = snapshotFiles(logDir).values.flatten.toSeq.sorted
-          .map(f => s"$dataDir/$f")
-        s.read.option("mergeSchema", "true").parquet(files: _*)
+        val files = snapshotFiles(t.logDir).values.flatten.toSeq.sorted
+        s.read.option("mergeSchema", "true").parquet(files.map(t.path): _*)
           .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
+          .agg(nRows,
             count(col("n_chars")).as("n_with_chars"),
             sum(col("n_chars")).cast("bigint").as("chars_sum"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+            keyChecksum("doc_id"))
           .orderBy("lang")
       },
       Some("""WITH fin AS (
@@ -713,12 +784,7 @@ object TxLog {
     QueryDef(
       "q_tx_compact",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txcomp/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txcomp")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
         val langs = docs.select("lang").distinct()
           .collect().map(_.getString(0)).sorted // bounded: #langs
@@ -731,21 +797,21 @@ object TxLog {
               concat(lit("frag"), (col("doc_id") % 4).cast("int")))
               .otherwise(lit("base")))
           .write.partitionBy("lang", "slice").mode("overwrite")
-          .parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base").flatMap {
-          case (l, rel) => partitionedActs(s, dataDir, rel).map {
+          .parquet(t.path("base"))
+        val baseActs = partitionedActs(s, t.dataDir, "base").flatMap {
+          case (l, rel) => partitionedActs(s, t.dataDir, rel).map {
             case (_, sliceRel) => Act("add", l, sliceRel)
           }
         }
-        require(commit(logDir, -1, baseActs, langs.toSet).contains(0))
-        val nFragsBefore = snapshotFiles(logDir)(lmin).length.toLong
+        require(commit(t.logDir, -1, baseActs, langs.toSet).contains(0))
+        val nFragsBefore = snapshotFiles(t.logDir)(lmin).length.toLong
         require(nFragsBefore == 4L, s"expected 4 fragments, got $nFragsBefore")
 
         // compactor @v0: rewrite the snapshot's lmin fragments as ONE file
-        val frags = snapshotFiles(logDir, 0)(lmin)
-        s.read.parquet(frags.map(f => s"$dataDir/$f"): _*).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dataDir/compacted_$lmin")
-        val vComp = commit(logDir, 0,
+        val frags = snapshotFiles(t.logDir, 0)(lmin)
+        t.read(frags).coalesce(1)
+          .write.mode("overwrite").parquet(t.path(s"compacted_$lmin"))
+        val vComp = commit(t.logDir, 0,
           frags.map(f => Act("remove", lmin, f)) :+
             Act("add", lmin, s"compacted_$lmin"), Set(lmin))
         require(vComp.contains(1), s"compactor must commit at v1, got $vComp")
@@ -753,22 +819,20 @@ object TxLog {
         // appender @v0 (stale): disjoint partition — rebases past v1
         docs.filter(col("lang") === lmax)
           .select((col("doc_id") + lit(1000000000L)).as("doc_id"))
-          .write.mode("overwrite").parquet(s"$dataDir/append_$lmax")
-        require(commit(logDir, 0,
+          .write.mode("overwrite").parquet(t.path(s"append_$lmax"))
+        require(commit(t.logDir, 0,
           Seq(Act("add", lmax, s"append_$lmax")), Set(lmax)).contains(2))
 
         // second compactor @v0 (stale): lmin changed under it — abort
-        val vComp2 = commit(logDir, 0,
+        val vComp2 = commit(t.logDir, 0,
           Seq(Act("remove", lmin, frags.head), Act("add", lmin, "recompact")),
           Set(lmin))
         require(vComp2.isEmpty, s"stale second compactor must abort, got $vComp2")
 
-        val snap = snapshotFiles(logDir)
+        val snap = snapshotFiles(t.logDir)
         val nFragsAfter = snap(lmin).length.toLong
-        readPartitioned(s, dataDir, snap, "lang")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+        readPartitioned(s, t.dataDir, snap, "lang")
+          .groupBy("lang").agg(nRows, keyChecksum("doc_id"))
           .withColumn("files_before", lit(nFragsBefore))
           .withColumn("files_after", lit(nFragsAfter))
           .withColumn("n_aborted", lit(1L))
@@ -803,35 +867,24 @@ object TxLog {
     QueryDef(
       "q_tx_quarantine",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txq/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txq")
         // ONE pass: validity is a partition column, not a second filter scan
         Tables.events(s, d)
           .selectExpr("event_id", "event_type", "value",
             "CASE WHEN value > 0 THEN 'main' ELSE 'quarantine' END AS dest")
-          .write.partitionBy("dest").mode("overwrite").parquet(s"$dataDir/gate")
+          .write.partitionBy("dest").mode("overwrite").parquet(t.path("gate"))
         // both destinations in ONE atomic version (a dest with zero
         // rows writes no partition dir — commit only what exists, and
         // report the empty destination as a 0/NULL row like the oracle)
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val present = Seq("main", "quarantine").filter(dest =>
-          hfs.exists(new org.apache.hadoop.fs.Path(s"$dataDir/gate/dest=$dest")))
-        require(commit(logDir, -1,
-          present.map(dest => Act("add", dest, s"gate/dest=$dest")),
+        require(commit(t.logDir, -1,
+          partitionedActs(s, t.dataDir, "gate").map { case (dest, f) => Act("add", dest, f) },
           Set("main", "quarantine")).contains(0))
 
-        val snap = snapshotFiles(logDir)
+        val snap = snapshotFiles(t.logDir)
         Seq("main", "quarantine").map { dest =>
           snap.get(dest) match {
             case Some(files) =>
-              s.read.parquet(files.map(f => s"$dataDir/$f"): _*)
-                .agg(count(lit(1)).as("n_rows"),
-                  sum(col("event_id") * 7).cast("bigint").as("key_checksum"))
+              t.read(files).agg(nRows, keyChecksum("event_id"))
                 .withColumn("dest", lit(dest))
                 .select("dest", "n_rows", "key_checksum")
             case None =>
@@ -862,68 +915,20 @@ object TxLog {
     // At 100 TB this is the difference between listing-then-opening
     // every file (footer pruning still opens them) and never touching
     // the irrelevant 95% — the manifest is metadata-sized and lives on
-    // the driver. Eight range-bucketed files; the query band overlaps
-    // exactly two of them; the output pins the answer AND the pruning
-    // arithmetic (files scanned / skipped), so opening too many or —
-    // worse — too few files fails the hash.
+    // the driver. Eight range-bucketed files (the per-file min/max are
+    // the band edges by construction, so the stats lines need no
+    // second look at the data); the query band overlaps exactly three
+    // of them; the output pins the answer AND the pruning arithmetic.
     QueryDef(
       "q_tx_dataskip",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txskip/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txskip")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-        val maxId = docs.agg(max("doc_id")).head().getLong(0)
-        val width = maxId / 8 + 1
-        // the pinned 3-scanned/5-skipped arithmetic needs width >= 2
-        // (with width 1 the band [2,3] straddles two buckets); fail
-        // loud instead of hash-mismatching on a degenerate fixture
-        require(maxId >= 8, s"dataskip needs max doc_id >= 8, got $maxId")
-        // ONE pass writes all eight range buckets (bucket = partition
-        // column), not eight filtered scans — the write cost of
-        // stats-keyed layout must itself scale; the per-file min/max
-        // are the band edges by construction, so the stats lines need
-        // no second look at the data. Integer DIV, not double division:
-        // exact for all longs, where /-then-cast drifts past 2^53.
-        docs.withColumn("bucket", expr(s"CAST(doc_id DIV $width AS INT)"))
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(s"$dataDir/buckets")
-        val acts = (0 until 8).flatMap { b =>
-          val (lo, hi) = (b * width, (b + 1) * width - 1)
-          Seq(Act("add", "all", s"buckets/bucket=$b"),
-            Act("stats", s"buckets/bucket=$b", s"$lo,$hi"))
-        }
-        require(commit(logDir, -1, acts, Set("all")).contains(0))
-
+        val width = t.rangeBuckets(docs, docs.agg(max("doc_id")).head().getLong(0))(bucketZoneMaps)
         // predicate band: the middle quarter [2.5w, 4.5w) — overlaps
         // exactly buckets 2..4 at the edges: [2w..3w),[3w..4w),[4w..5w)
         val (qLo, qHi) = (width * 5 / 2, width * 9 / 2 - 1)
-        val stats = versions(logDir).flatMap(readActs(logDir, _)).collect {
-          case Act("stats", f, mm) =>
-            val Array(lo, hi) = mm.split(",", 2); (f, lo.toLong, hi.toLong)
-        }
-        val live = snapshotFiles(logDir).values.flatten.toSet
-        val scanned = stats.filter { case (f, lo, hi) =>
-          live(f) && hi >= qLo && lo <= qHi
-        }.map(_._1).sorted
-        val skipped = live.size.toLong - scanned.length
-        // counts stay STATS-based (the pruning decision); the physical
-        // read tolerates a range bucket that happened to be row-empty
-        // (partitionBy writes no dir for it — sparse id spaces)
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val readable = scanned.map(f => s"$dataDir/$f")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-        s.read.parquet(readable: _*)
-          .filter(col("doc_id").between(qLo, qHi))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"),
-            sum(col("n_chars").cast("long")).as("chars_sum"))
-          .withColumn("files_scanned", lit(scanned.length.toLong))
-          .withColumn("files_skipped", lit(skipped))
+        t.prunedRead(qLo, qHi)(_.filter(col("doc_id").between(qLo, qHi)))
       },
       Some("""WITH m AS (SELECT MAX(doc_id) AS mx FROM documents),
              |w AS (SELECT mx // 8 + 1 AS width FROM m),
@@ -951,21 +956,11 @@ object TxLog {
     QueryDef(
       "q_tx_merge",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txmerge/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txmerge")
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
-        val langs = docs.select("lang").distinct()
-          .collect().map(_.getString(0)).sorted
+        val langs = t.commitByLang(docs)
         val (lmin, lmax) = (langs.head, langs.last)
-        // v0: one pass, one partition dir per lang
-        docs.write.partitionBy("lang").mode("overwrite").parquet(s"$dataDir/base")
-        require(commit(logDir, -1,
-          langs.map(l => Act("add", l, s"base/lang=$l")), langs.toSet).contains(0))
 
         // updates: every 10th doc of lang_max gets n_chars += 1000;
         // inserts: re-keyed new rows landing in lang_min
@@ -983,35 +978,32 @@ object TxLog {
         // write — one Spark job per transaction, not one per partition
         // serialized on the driver. Acts derive from the layout the
         // job produced.
-        val snap0 = snapshotFiles(logDir)
-        val cur = readPartitioned(s, dataDir,
+        val snap0 = snapshotFiles(t.logDir)
+        val cur = readPartitioned(s, t.dataDir,
           touched.map(l => l -> snap0(l)).toMap, "lang")
         val merged = cur.join(
             updates.select(col("doc_id").as("uid"), col("lang").as("ulang")),
             col("doc_id") === col("uid") && col("lang") === col("ulang"),
             "left_anti")
           .unionByName(updates).unionByName(inserts)
-        merged.write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/merged")
-        val acts = partitionedActs(s, dataDir, "merged").flatMap {
-          case (l, rel) => Seq(Act("remove", l, s"base/lang=$l"), Act("add", l, rel))
+        merged.write.partitionBy("lang").mode("overwrite").parquet(t.path("merged"))
+        val acts = partitionedActs(s, t.dataDir, "merged").flatMap { case (l, rel) =>
+          snap0(l).map(f => Act("remove", l, f)) :+ Act("add", l, rel)
         }
         require(acts.map(_.part).distinct.sorted == touched.sorted,
           "merge must rewrite exactly the touched partitions")
-        require(commit(logDir, 0, acts, touched.toSet).contains(1))
+        require(commit(t.logDir, 0, acts, touched.toSet).contains(1))
 
         // untouched partitions must keep their v0 FILES, not just content
-        val snap1 = snapshotFiles(logDir)
+        val snap1 = snapshotFiles(t.logDir)
         langs.filterNot(touched.contains).foreach { l =>
           require(snap1(l) == snap0(l), s"untouched partition $l was rewritten")
         }
         val nRewritten = touched.size.toLong
 
-        readPartitioned(s, dataDir, snap1, "lang")
+        readPartitioned(s, t.dataDir, snap1, "lang")
           .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("n_chars")).as("chars_sum"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+          .agg(nRows, sum(col("n_chars")).as("chars_sum"), keyChecksum("doc_id"))
           .withColumn("n_partitions_rewritten", lit(nRewritten))
           .withColumn("n_partitions_total", lit(langs.length.toLong))
           .select("lang", "n_rows", "chars_sum", "key_checksum",
@@ -1051,27 +1043,15 @@ object TxLog {
     QueryDef(
       "q_tx_delete_vectors",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txdv/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txdv")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
-        // r14: langs derive from the layout the base write produced
-        // (partitionedActs — a directory listing), not a separate
-        // distinct+collect scan job (the q_tx_commit discipline)
-        docs.write.partitionBy("lang").mode("overwrite").parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base")
-        val langs = baseActs.map(_._1)
-        require(commit(logDir, -1,
-          baseActs.map { case (l, f) => Act("add", l, f) }, langs.toSet).contains(0))
+        val langs = t.commitByLang(docs)
 
         // delete #1 and #2: each writes ONLY its deleted keys + a log line
-        def deleteWhere(cond: org.apache.spark.sql.Column, tag: String, readVer: Int): Int = {
+        def deleteWhere(cond: Column, tag: String, readVer: Int): Int = {
           docs.filter(cond).select("doc_id")
-            .write.mode("overwrite").parquet(s"$dataDir/dv_$tag")
-          commit(logDir, readVer, Seq(Act("add", "_dv", s"dv_$tag")), Set("_dv")).get
+            .write.mode("overwrite").parquet(t.path(s"dv_$tag"))
+          commit(t.logDir, readVer, Seq(Act("add", "_dv", s"dv_$tag")), Set("_dv")).get
         }
         deleteWhere(col("doc_id") % 7 === 0, "a", 0)
         deleteWhere(col("doc_id") % 11 === 3, "b", 1)
@@ -1079,52 +1059,39 @@ object TxLog {
         // manifest-resolved read: per-partition (the data files don't
         // carry the partition column), DV union anti-joined when live —
         // size-gated on the DV files' TOTAL BYTES from the listing
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        def dvBytes(dvs: Seq[String]): Long = dvs.map(f =>
-          hfs.getContentSummary(new org.apache.hadoop.fs.Path(s"$dataDir/$f"))
-            .getLength).sum
-        def readTable(): org.apache.spark.sql.DataFrame = {
-          val snap = snapshotFiles(logDir)
-          val t = readPartitioned(s, dataDir, snap, "lang", except = Set("_dv"))
-          snap.get("_dv").fold(t) { dvs =>
-            val del = s.read.parquet(dvs.map(f => s"$dataDir/$f"): _*)
-              .select(col("doc_id").as("del_id")).distinct()
-            antiJoinDv(s, t, del, dvBytes(dvs))
+        def readTable(): DataFrame = {
+          val snap = snapshotFiles(t.logDir)
+          val live = readPartitioned(s, t.dataDir, snap, "lang", except = Set("_dv"))
+          snap.get("_dv").fold(live) { dvs =>
+            val del = t.read(dvs).select(col("doc_id").as("del_id")).distinct()
+            val dvBytes = dvs.map(f => t.fs.getContentSummary(new Path(t.path(f))).getLength).sum
+            antiJoinDv(s, live, del, dvBytes)
           }
         }
-        val preDvs = snapshotFiles(logDir).getOrElse("_dv", Seq.empty).length.toLong
+        val preDvs = snapshotFiles(t.logDir).getOrElse("_dv", Seq.empty).length.toLong
         val pre = readTable().agg(count(lit(1)), sum(col("doc_id") * 7)).head()
-        // PURGE: ONE job materializes the anti-join for every partition
-        // (partitionBy write), drop DVs in the same atomic version;
+        // PURGE: ONE job materializes the DV-filtered read for every
+        // partition (partitionBy write), drop DVs in the same version;
         // removes cover every rewritten partition's old files, adds
         // derive from the layout the job produced (a fully-deleted
         // partition writes no dir and simply disappears)
-        val snap = snapshotFiles(logDir)
-        val cur = readPartitioned(s, dataDir, snap, "lang", except = Set("_dv"))
-        val deleted = s.read.parquet(snap("_dv").map(f => s"$dataDir/$f"): _*)
-          .select(col("doc_id").as("del_id")).distinct()
-        antiJoinDv(s, cur, deleted, dvBytes(snap("_dv")))
-          .write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/purged")
+        val snap = snapshotFiles(t.logDir)
+        readTable().write.partitionBy("lang").mode("overwrite").parquet(t.path("purged"))
         val purgeActs =
           langs.flatMap(l => snap(l).map(f => Act("remove", l, f))) ++
-          partitionedActs(s, dataDir, "purged").map {
+          partitionedActs(s, t.dataDir, "purged").map {
             case (l, rel) => Act("add", l, rel)
           } ++ snap("_dv").map(f => Act("remove", "_dv", f))
-        require(commit(logDir, versions(logDir).last, purgeActs,
+        require(commit(t.logDir, versions(t.logDir).last, purgeActs,
           langs.toSet + "_dv").isDefined)
-        val postDvs = snapshotFiles(logDir).getOrElse("_dv", Seq.empty).length.toLong
-        // r14: the post-purge content proof derives from the FINAL
-        // per-lang aggregate (materialized once via eager local
-        // checkpoint) instead of a separate fourth full-table read —
-        // the global (count, checksum) is the exact integer sum of the
-        // per-lang rows. The returned frame re-reads only the
-        // checkpointed 5-row aggregate.
+        val postDvs = snapshotFiles(t.logDir).getOrElse("_dv", Seq.empty).length.toLong
+        // the post-purge content proof derives from the FINAL per-lang
+        // aggregate (materialized once via eager local checkpoint), not
+        // a separate full-table read — the global (count, checksum) is
+        // the exact integer sum of the per-lang rows. The returned
+        // frame re-reads only the checkpointed 5-row aggregate.
         val fin = readTable()
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+          .groupBy("lang").agg(nRows, keyChecksum("doc_id"))
           .withColumn("dvs_before_purge", lit(preDvs))
           .withColumn("dvs_after_purge", lit(postDvs))
           .localCheckpoint(true)
@@ -1159,26 +1126,10 @@ object TxLog {
     QueryDef(
       "q_tx_join_prune",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txjp/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txjp")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-        val maxId = docs.agg(max("doc_id")).head().getLong(0)
-        val width = maxId / 8 + 1
-        require(maxId >= 8, s"join-prune needs max doc_id >= 8, got $maxId")
         // fact table: eight range buckets + zone-map stats, ONE write
-        docs.withColumn("bucket", expr(s"CAST(doc_id DIV $width AS INT)"))
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(s"$dataDir/buckets")
-        val acts = (0 until 8).flatMap { b =>
-          val (lo, hi) = (b * width, (b + 1) * width - 1)
-          Seq(Act("add", "all", s"buckets/bucket=$b"),
-            Act("stats", s"buckets/bucket=$b", s"$lo,$hi"))
-        }
-        require(commit(logDir, -1, acts, Set("all")).contains(0))
+        val width = t.rangeBuckets(docs, docs.agg(max("doc_id")).head().getLong(0))(bucketZoneMaps)
 
         // dim relation: a narrow key subset (band ∩ every-5th) standing
         // in for a small dimension table — its bounds drive the prune
@@ -1188,29 +1139,10 @@ object TxLog {
           .select(col("doc_id").as("dim_id"))
         val bounds = dim.agg(min("dim_id"), max("dim_id")).head()
         require(!bounds.isNullAt(0), "dim relation is empty — prune is vacuous")
-        val (dmin, dmax) = (bounds.getLong(0), bounds.getLong(1))
 
         // metadata join: dim bounds × manifest zone maps → files to open
-        val stats = versions(logDir).flatMap(readActs(logDir, _)).collect {
-          case Act("stats", f, mm) =>
-            val Array(lo, hi) = mm.split(",", 2); (f, lo.toLong, hi.toLong)
-        }
-        val live = snapshotFiles(logDir).values.flatten.toSet
-        val scanned = stats.filter { case (f, lo, hi) =>
-          live(f) && hi >= dmin && lo <= dmax
-        }.map(_._1).sorted
-        val skipped = live.size.toLong - scanned.length
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val readable = scanned.map(f => s"$dataDir/$f")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-        s.read.parquet(readable: _*)
-          .join(broadcast(dim), col("doc_id") === col("dim_id"))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"),
-            sum(col("n_chars").cast("long")).as("chars_sum"))
-          .withColumn("files_scanned", lit(scanned.length.toLong))
-          .withColumn("files_skipped", lit(skipped))
+        t.prunedRead(bounds.getLong(0), bounds.getLong(1))(
+          _.join(broadcast(dim), col("doc_id") === col("dim_id")))
       },
       Some("""WITH m AS (SELECT MAX(doc_id) AS mx FROM documents),
              |w AS (SELECT mx // 8 + 1 AS width FROM m),
@@ -1242,56 +1174,37 @@ object TxLog {
     QueryDef(
       "q_tx_bloom_index",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txbli/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txbli")
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
-        // r14: ONE scalar-aggregate pass supplies the bucket width, the
-        // bloom sizing count AND the lookup key — previously three
-        // separate full scans (max, count, min) per run (guide §1.2:
-        // don't re-read what one pass can answer).
+        // ONE scalar-aggregate pass supplies the bucket width, the
+        // bloom sizing count AND the lookup key (don't re-read what one
+        // pass can answer)
         val head = docs.agg(max("doc_id"), count(lit(1)), min("n_chars")).head()
         val (maxId, n, k) = (head.getLong(0), head.getLong(1), head.getLong(2))
-        val width = maxId / 8 + 1
-        require(maxId >= 8, s"bloom index needs max doc_id >= 8, got $maxId")
-        docs.withColumn("bucket", expr(s"CAST(doc_id DIV $width AS INT)"))
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(s"$dataDir/buckets")
         // per-file blooms over the NON-layout column, one grouped pass
         val bloomAgg = graft.functions.BloomFilterAgg.sized(n / 8 + 1)
-        val blooms = docs
-          .withColumn("bucket", expr(s"CAST(doc_id DIV $width AS INT)"))
-          .groupBy("bucket").agg(bloomAgg(col("n_chars")).as("bits"))
-          .collect().map(r => (r.getInt(0), r.getSeq[Long](1)))
-        val acts = (0 until 8).map(b => Act("add", "all", s"buckets/bucket=$b")) ++
-          blooms.map { case (b, bits) =>
-            Act("bloom", s"buckets/bucket=$b", bits.mkString(","))
-          }
-        require(commit(logDir, -1, acts, Set("all")).contains(0))
+        t.rangeBuckets(docs, maxId) { width =>
+          docs.withColumn("bucket", bucketOf(width))
+            .groupBy("bucket").agg(bloomAgg(col("n_chars")).as("bits"))
+            .collect().toSeq
+            .map(r => Act("bloom", bucketFile(r.getInt(0)), r.getSeq[Long](1).mkString(",")))
+        }
 
         // point lookup on n_chars = MIN(n_chars) (k, from the single
         // aggregate pass above): probe the manifest blooms, open only
         // candidate files
-        val bloomLines = versions(logDir).flatMap(readActs(logDir, _)).collect {
+        val bloomLines = versions(t.logDir).flatMap(readActs(t.logDir, _)).collect {
           case Act("bloom", f, bs) => (f, bs.split(",").map(_.toLong).toSeq)
         }
-        val live = snapshotFiles(logDir).values.flatten.toSet
+        val live = snapshotFiles(t.logDir).values.flatten.toSet
         val candidates = bloomLines.filter { case (f, bits) =>
           live(f) && graft.functions.BloomHash.mightContainBoxed(bits, k)
         }.map(_._1).sorted
         require(candidates.nonEmpty, "the key's own file must probe positive")
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val readable = candidates.map(f => s"$dataDir/$f")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-        s.read.parquet(readable: _*)
+        t.readExisting(candidates)
           .filter(col("n_chars") === k)
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+          .agg(nRows, keyChecksum("doc_id"))
       },
       Some("""SELECT COUNT(*) AS n_rows,
              |  CAST(SUM(doc_id * 7) AS BIGINT) AS key_checksum
@@ -1312,69 +1225,27 @@ object TxLog {
     QueryDef(
       "q_tx_dataskip_compact",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txskc/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txskc")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-        val maxId = docs.agg(max("doc_id")).head().getLong(0)
-        val width = maxId / 8 + 1
-        require(maxId >= 8, s"dataskip needs max doc_id >= 8, got $maxId")
-        docs.withColumn("bucket", expr(s"CAST(doc_id DIV $width AS INT)"))
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(s"$dataDir/buckets")
-        val acts = (0 until 8).flatMap { b =>
-          val (lo, hi) = (b * width, (b + 1) * width - 1)
-          Seq(Act("add", "all", s"buckets/bucket=$b"),
-            Act("stats", s"buckets/bucket=$b", s"$lo,$hi"))
-        }
-        require(commit(logDir, -1, acts, Set("all")).contains(0))
-
-        def liveStats(): Seq[(String, Long, Long)] = {
-          val live = snapshotFiles(logDir).values.flatten.toSet
-          versions(logDir).flatMap(readActs(logDir, _)).collect {
-            case Act("stats", f, mm) if live(f) =>
-              val Array(lo, hi) = mm.split(",", 2); (f, lo.toLong, hi.toLong)
-          }
-        }
+        val width = t.rangeBuckets(docs, docs.agg(max("doc_id")).head().getLong(0))(bucketZoneMaps)
 
         // maintenance: compact buckets 3+4 into ONE file; the new
         // stats line is the union of the removed ranges, read from the
         // manifest — stats upkeep costs metadata, never a data scan
-        val hfs = new org.apache.hadoop.fs.Path(dataDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val victims = Seq(3, 4).map(b => s"buckets/bucket=$b")
-        val vStats = liveStats().filter { case (f, _, _) => victims.contains(f) }
+        val victims = Seq(3, 4).map(bucketFile)
+        val vStats = liveZoneMaps(t.logDir).filter { case (f, _, _) => victims.contains(f) }
         require(vStats.length == 2, s"expected 2 victim stats, got $vStats")
-        val (ulo, uhi) = (vStats.map(_._2).min, vStats.map(_._3).max)
-        val vReadable = victims.map(f => s"$dataDir/$f")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-        s.read.parquet(vReadable: _*).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dataDir/compact34")
-        require(commit(logDir, 0,
+        t.readExisting(victims).coalesce(1)
+          .write.mode("overwrite").parquet(t.path("compact34"))
+        require(commit(t.logDir, 0,
           victims.map(f => Act("remove", "all", f)) ++
             Seq(Act("add", "all", "compact34"),
-              Act("stats", "compact34", s"$ulo,$uhi")), Set("all")).contains(1))
+              zoneMap("compact34", vStats.map(_._2).min, vStats.map(_._3).max)),
+          Set("all")).contains(1))
 
         // the q_tx_dataskip band over the POST-maintenance layout
         val (qLo, qHi) = (width * 5 / 2, width * 9 / 2 - 1)
-        val stats = liveStats()
-        val live = snapshotFiles(logDir).values.flatten.toSet
-        val scanned = stats.filter { case (_, lo, hi) =>
-          hi >= qLo && lo <= qHi
-        }.map(_._1).sorted
-        val skipped = live.size.toLong - scanned.length
-        val readable = scanned.map(f => s"$dataDir/$f")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-        s.read.parquet(readable: _*)
-          .filter(col("doc_id").between(qLo, qHi))
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"),
-            sum(col("n_chars").cast("long")).as("chars_sum"))
-          .withColumn("files_scanned", lit(scanned.length.toLong))
-          .withColumn("files_skipped", lit(skipped))
+        t.prunedRead(qLo, qHi)(_.filter(col("doc_id").between(qLo, qHi)))
       },
       Some("""WITH m AS (SELECT MAX(doc_id) AS mx FROM documents),
              |w AS (SELECT mx // 8 + 1 AS width FROM m),
@@ -1403,47 +1274,35 @@ object TxLog {
     QueryDef(
       "q_tx_restore",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txrst/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txrst")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
-        docs.write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base")
-        val langs = baseActs.map(_._1)
+        val langs = t.commitByLang(docs)
         val (lmin, lmax) = (langs.head, langs.last)
-        require(commit(logDir, -1,
-          baseActs.map { case (l, f) => Act("add", l, f) }, langs.toSet).contains(0))
 
         // the "bad deploy": v1 rewrites lmin to evens, v2 appends
         // re-keyed duplicates into lmax
         docs.filter(col("lang") === lmin && col("doc_id") % 2 === 0)
           .select("doc_id")
-          .write.mode("overwrite").parquet(s"$dataDir/bad_rewrite")
-        require(commit(logDir, 0,
-          Seq(Act("remove", lmin, s"base/lang=$lmin"),
-            Act("add", lmin, "bad_rewrite")), Set(lmin)).contains(1))
+          .write.mode("overwrite").parquet(t.path("bad_rewrite"))
+        require(commit(t.logDir, 0,
+          snapshotFiles(t.logDir)(lmin).map(f => Act("remove", lmin, f)) :+
+            Act("add", lmin, "bad_rewrite"), Set(lmin)).contains(1))
         docs.filter(col("lang") === lmax)
           .select((col("doc_id") + lit(1000000000L)).as("doc_id"))
-          .write.mode("overwrite").parquet(s"$dataDir/bad_append")
-        require(commit(logDir, 1,
+          .write.mode("overwrite").parquet(t.path("bad_append"))
+        require(commit(t.logDir, 1,
           Seq(Act("add", lmax, "bad_append")), Set(lmax)).contains(2))
 
         // RESTORE to v0: metadata-only diff commit
-        val restored = restore(logDir, toVersion = 0)
+        val restored = restore(t.logDir, toVersion = 0)
         require(restored.contains(3), s"restore must commit at v3, got $restored")
 
         // the restored snapshot must equal the as-of-v0 snapshot exactly
-        require(snapshotFiles(logDir) == snapshotFiles(logDir, asOf = 0),
+        require(snapshotFiles(t.logDir) == snapshotFiles(t.logDir, asOf = 0),
           "restored snapshot must equal the as-of target")
-        val nVersions = versions(logDir).length.toLong
-        readPartitioned(s, dataDir, snapshotFiles(logDir), "lang")
-          .groupBy("lang")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+        val nVersions = versions(t.logDir).length.toLong
+        readPartitioned(s, t.dataDir, snapshotFiles(t.logDir), "lang")
+          .groupBy("lang").agg(nRows, keyChecksum("doc_id"))
           .withColumn("n_versions", lit(nVersions))
           .orderBy("lang")
       },
@@ -1468,21 +1327,11 @@ object TxLog {
     QueryDef(
       "q_tx_cdf",
       (s, d) => {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_txcdf/${graft.TmpSlices.key(d)}"
-        val dataDir = s"$base/data"
-        val logDir = s"$base/_log"
-        val fsp = new org.apache.hadoop.fs.Path(base)
-        fsp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsp, true)
-
+        val t = Table.fresh(s, d, "graft_txcdf")
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("n_chars").cast("long").as("n_chars"))
-        docs.write.partitionBy("lang").mode("overwrite")
-          .parquet(s"$dataDir/base")
-        val baseActs = partitionedActs(s, dataDir, "base")
-        val langs = baseActs.map(_._1)
+        val langs = t.commitByLang(docs)
         val (lmin, lmax) = (langs.head, langs.last)
-        require(commit(logDir, -1,
-          baseActs.map { case (l, f) => Act("add", l, f) }, langs.toSet).contains(0))
 
         // v1: rewrite lang_max — deletes (%9==4) and updates (%10==0)
         docs.filter(col("lang") === lmax && col("doc_id") % 9 =!= 4)
@@ -1490,21 +1339,19 @@ object TxLog {
             when(col("doc_id") % 10 === 0, col("n_chars") + lit(1000L))
               .otherwise(col("n_chars")))
           .select("doc_id", "n_chars")
-          .write.mode("overwrite").parquet(s"$dataDir/rewrite_$lmax")
-        require(commit(logDir, 0,
-          Seq(Act("remove", lmax, s"base/lang=$lmax"),
-            Act("add", lmax, s"rewrite_$lmax")), Set(lmax)).contains(1))
+          .write.mode("overwrite").parquet(t.path(s"rewrite_$lmax"))
+        require(commit(t.logDir, 0,
+          snapshotFiles(t.logDir)(lmax).map(f => Act("remove", lmax, f)) :+
+            Act("add", lmax, s"rewrite_$lmax"), Set(lmax)).contains(1))
         // v2: inserts into lang_min
         docs.filter(col("lang") === lmin)
           .select((col("doc_id") + lit(2000000000L)).as("doc_id"), col("n_chars"))
-          .write.mode("overwrite").parquet(s"$dataDir/inserts_$lmin")
-        require(commit(logDir, 1,
+          .write.mode("overwrite").parquet(t.path(s"inserts_$lmin"))
+        require(commit(t.logDir, 1,
           Seq(Act("add", lmin, s"inserts_$lmin")), Set(lmin)).contains(2))
 
-        changeFeed(s, dataDir, logDir, fromVersion = 0, toVersion = 2)
-          .groupBy("change_type")
-          .agg(count(lit(1)).as("n_rows"),
-            sum(col("doc_id") * 7).cast("bigint").as("key_checksum"))
+        changeFeed(s, t.dataDir, t.logDir, fromVersion = 0, toVersion = 2)
+          .groupBy("change_type").agg(nRows, keyChecksum("doc_id"))
           .orderBy("change_type")
       },
       Some("""WITH l AS (
@@ -1545,12 +1392,6 @@ object TxLog {
     else commit(logDir, readVer, acts, acts.map(_.part).toSet)
   }
 
-  /** Row-level change feed between two snapshot versions, from ONLY
-    * the files their file-level diff touches: full-outer-join the
-    * removed-files read against the added-files read on the key and
-    * classify — before-only = delete, after-only = insert, both with
-    * a changed payload = update; carried-over identical rows fall out.
-    * Returns (change_type, doc_id, n_chars). */
   /** File-level diff between two snapshot versions: (removed, added),
     * each in sorted-partition order — the pruned read set a change
     * feed or restore works from. */
@@ -1566,8 +1407,14 @@ object TxLog {
     (removed, added)
   }
 
+  /** Row-level change feed between two snapshot versions, from ONLY
+    * the files their file-level diff touches: full-outer-join the
+    * removed-files read against the added-files read on the key and
+    * classify — before-only = delete, after-only = insert, both with
+    * a changed payload = update; carried-over identical rows fall out.
+    * Returns (change_type, doc_id, n_chars). */
   def changeFeed(s: SparkSession, dataDir: String, logDir: String,
-                 fromVersion: Int, toVersion: Int): org.apache.spark.sql.DataFrame = {
+                 fromVersion: Int, toVersion: Int): DataFrame = {
     val (removed, added) = fileDiff(logDir, fromVersion, toVersion)
     def readFiles(fs: Seq[String], idCol: String, vCol: String) =
       if (fs.isEmpty)
@@ -1591,43 +1438,14 @@ object TxLog {
   /** Materialize the flattened snapshot at `version` as
     * `_log/ckpt_v%06d.tsv` (add-lines only) — readers replay the
     * newest checkpoint plus the log tail after it instead of the full
-    * history. The checkpoint is itself published atomically with the
-    * same staged-link discipline as commits. */
+    * history. The checkpoint is published atomically through the same
+    * staged-link [[publish]] as commits. */
   def writeCheckpoint(logDir: String, version: Int): Unit = {
-    val snap = snapshotFiles(logDir, version)
-    val dir = java.nio.file.Paths.get(logDir)
-    val stage = dir.resolve(s".stage_ck_${System.nanoTime()}")
-    val lines = snap.toSeq.sortBy(_._1).flatMap { case (p, fs) =>
-      fs.map(f => s"add\t$p\t$f")
-    }
-    java.nio.file.Files.write(stage,
-      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
-    val path = dir.resolve(f"ckpt_v$version%06d.tsv")
-    try { publishAtomically(stage, path); () }
-    finally java.nio.file.Files.deleteIfExists(stage)
-  }
-
-  /** Committed checkpoint versions in order. */
-  def checkpointVersions(logDir: String): Seq[Int] = {
-    val dir = java.nio.file.Paths.get(logDir)
-    if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n.startsWith("ckpt_v") && n.endsWith(".tsv"))
-        .map(n => n.stripPrefix("ckpt_v").stripSuffix(".tsv").toInt)
-        .toSeq.sorted
-    } finally st.close()
-  }
-
-  private def readCheckpointActs(logDir: String, ck: Int): Seq[Act] = {
-    val ckPath = java.nio.file.Paths.get(logDir, f"ckpt_v$ck%06d.tsv")
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.readAllLines(ckPath).asScala.toSeq
-      .filter(_.nonEmpty).map { l =>
-        val Array(a, p, f) = l.split("\t", 3); Act(a, p, f)
-      }
+    publish(logDir, checkpointName(version),
+      snapshotFiles(logDir, version).toSeq.sortBy(_._1).flatMap { case (p, fs) =>
+        fs.map(f => Act("add", p, f))
+      })
+    ()
   }
 
   /** Snapshot from the newest checkpoint plus the tail of the log

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * aggregated — double sums would need the Parity decimal path and prove
   * nothing extra about the format.
   *
-  * The round-trip slice is written under java.io.tmpdir, keyed by input
+  * The round-trip slice is written under a `TmpSlices` dir, keyed by input
   * dir, `overwrite` mode — idempotent per (sf, format).
   */
 object FileFormats {
@@ -29,10 +29,8 @@ object FileFormats {
     * qualified class name loads the same built-in format directly. */
   val AvroFormat = "org.apache.spark.sql.avro.AvroFileFormat"
 
-  private def sliceDir(d: String, fmt: String): String = {
-    val key = graft.TmpSlices.key(d)
-    s"${sys.props("java.io.tmpdir")}/graft_roundtrip/${fmt}_$key"
-  }
+  private def sliceDir(d: String, fmt: String): String =
+    graft.TmpSlices.dir("graft_roundtrip", s"${fmt}_${graft.TmpSlices.key(d)}")
 
   val defs: Seq[QueryDef] = Seq(
 

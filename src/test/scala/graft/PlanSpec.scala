@@ -593,7 +593,8 @@ class PlanSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val src = java.nio.file.Paths.get("src/main/scala/graft")
     val baseCache = "Tables\\.[a-zA-Z]+\\([^)]*\\)\\s*\\.(cache\\(\\)|persist\\()".r
-    val offenders = java.nio.file.Files.walk(src).iterator().asScala
+    val walk = java.nio.file.Files.walk(src)
+    val offenders = try walk.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
@@ -601,6 +602,7 @@ class PlanSpec extends AnyFunSuite {
             s"$p:${i + 1}: ${l.trim}"
         }
       }.toList
+    finally walk.close()
     assert(offenders.isEmpty,
       s"base-table cache in a query path:\n${offenders.mkString("\n")}")
     // and the session memos hold DERIVED relations, never a bare scan
