@@ -4,6 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /** Session-scoped memoized cache of expensive shared frames (the dedup
   * family's shingle projection, the near-dup pair relation, the
   * k-means/PQ point set and codebooks).
@@ -11,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Keyed by (session, logical key) so parallel suites with separate
   * sessions never see each other's entries, and [[release]] evicts ONLY
   * the caller's session — a concurrent live session keeps its cached
-  * frames. `unpersist` is try-wrapped: releasing after a session stop
-  * must not throw inside the eviction loop.
+  * frames. `unpersist` is try-wrapped for non-fatal errors: releasing
+  * after a session stop must not throw inside the eviction loop.
   *
   * [[memo]] deliberately does NOT use `computeIfAbsent`: builds compose
   * (minhashPairs' build calls shingleFrame's memo on the same map), and
@@ -45,7 +47,7 @@ object FrameCache {
       val raced = cache.putIfAbsent(k, built)
       if (raced != null) {
         try built.unpersist()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         raced
       } else built
     }
@@ -58,7 +60,7 @@ object FrameCache {
       val e = it.next()
       if (e.getKey._1 eq s) {
         try e.getValue.unpersist()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         it.remove()
       }
     }
@@ -72,7 +74,7 @@ object FrameCache {
       val e = it.next()
       val stopped =
         try e.getKey._1.sparkContext.isStopped
-        catch { case _: Throwable => true }
+        catch { case NonFatal(_) => true }
       if (stopped) it.remove()
     }
   }

@@ -1,6 +1,10 @@
 package graft.reference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Record transport abstraction over the reference's Kafka hop.
@@ -29,27 +33,40 @@ trait RecordTransport {
   def readBatch(spark: SparkSession): DataFrame
 }
 
-/** In-memory transport for tests and local runs; preserves write order
-  * like a single-partition topic. */
+/** In-memory transport for tests and local runs. Records are held as
+  * bytes, as on the Kafka wire, in write order like a single-partition
+  * topic. [[readBatch]] hands them out as an order-keeping parallel frame
+  * (one slice per core), so consumers parse in tasks and Catalyst never
+  * folds the parse into a `LocalRelation` while it plans. */
 final class InMemoryTransport extends RecordTransport {
-  private val buf = ArrayBuffer.empty[(String, String)]
+  private val buf = ArrayBuffer.empty[Row]
 
   override def writeBatch(kv: DataFrame): Unit = {
-    val rows = kv.select("key", "value").collect()
-    buf.synchronized { rows.foreach(r => buf += ((r.getString(0), r.getString(1)))) }
+    val rows = kv.selectExpr("CAST(key AS BINARY) AS key", "CAST(value AS BINARY) AS value")
+      .collect()
+    buf.synchronized { buf ++= rows }
   }
 
   override def send(key: String, value: String): Unit =
-    buf.synchronized { buf += ((key, value)) }
+    buf.synchronized { buf += Row(InMemoryTransport.bytes(key), InMemoryTransport.bytes(value)) }
 
   override def readBatch(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val snapshot = buf.synchronized { buf.toSeq }
-    snapshot.toDF("k", "v")
-      .selectExpr("CAST(k AS BINARY) AS key", "CAST(v AS BINARY) AS value")
+    val snapshot = buf.synchronized { buf.toVector }
+    val sc = spark.sparkContext
+    spark.createDataFrame(sc.parallelize(snapshot, sc.defaultParallelism), InMemoryTransport.wireSchema)
   }
 
   def size: Int = buf.synchronized { buf.size }
+}
+
+object InMemoryTransport {
+
+  /** The Kafka source's (key, value) columns. */
+  private val wireSchema: StructType = StructType(Seq(
+    StructField("key", BinaryType), StructField("value", BinaryType)))
+
+  /** UTF-8 bytes; a null key (unkeyed record) or value (tombstone) stays null. */
+  private def bytes(s: String): Array[Byte] = if (s == null) null else s.getBytes(UTF_8)
 }
 
 /** Kafka/MSK config — the plain-config replacement for the reference's

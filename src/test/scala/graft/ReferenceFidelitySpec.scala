@@ -1,18 +1,19 @@
 package graft
 
-import graft.reference.{InMemoryTransport, SensorSchema, TemPipelines}
+import graft.reference.{InMemoryTransport, SensorFixture, SensorSchema, TemPipelines}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Reference-fidelity tests (SURVEY.md §5): replay the reference's own
-  * CSV fixtures through the ported pipelines and golden-check the
-  * derived metric, the JSON wire shape and the transport round trip.
+/** Reference-fidelity tests (SURVEY.md §5): replay CSV fixtures with the
+  * reference's documented profile ([[SensorFixture]], FIXTURES.md §A)
+  * through the ported pipelines and golden-check the derived metric, the
+  * JSON wire shape and the transport round trip.
   */
 class ReferenceFidelitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val Csv2 = "/root/reference/data/csv2.csv"
-  private val SeedCsv = "/root/reference/data/csvFile_2021_01_27.csv"
+  private lazy val Csv2 = SensorFixture.csv2
+  private lazy val SeedCsv = SensorFixture.seedCsv
 
   test("seed CSV reads with the producer schema: 6054 rows, unique ids") {
     val df = TemPipelines.readSeedCsv(spark, SeedCsv)

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.Executors
 
 import graft.operators.{MediaRow, Multimodal}
-import graft.reference.{SensorSchema, TemPipelines}
+import graft.reference.{SensorFixture, SensorSchema, TemPipelines}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +22,7 @@ class RobustnessSpec extends AnyFunSuite {
   test("malformed JSON values parse to null rows (PERMISSIVE), valid ones survive") {
     import spark.implicits._
     val good = TemPipelines.toKeyValue(
-        TemPipelines.readSeedCsv(spark, "/root/reference/data/csv2.csv"))
+        TemPipelines.readSeedCsv(spark, SensorFixture.csv2))
       .limit(1).collect().head.getString(1)
     val kv = Seq(
       ("1", good),

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.reference.{InMemoryTransport, TemPipelines}
+import graft.reference.{InMemoryTransport, SensorFixture, TemPipelines}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -95,7 +95,7 @@ class SourcesSpec extends AnyFunSuite {
   test("pipe-CSV sink writes header + overwrite and reads back") {
     val dir = Files.createTempDirectory("graft_csv").toString
     val transport = new InMemoryTransport
-    TemPipelines.seedProduce(spark, "/root/reference/data/csv2.csv", transport)
+    TemPipelines.seedProduce(spark, SensorFixture.csv2, transport)
     val out = TemPipelines.batchConsume(spark, transport, csvOut = Some(dir), show = false)
     // overwrite semantics: writing twice must not double the data
     TemPipelines.batchConsume(spark, transport, csvOut = Some(dir), show = false)
