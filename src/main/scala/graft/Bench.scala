@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract).
@@ -34,6 +36,24 @@ import org.apache.spark.sql.SparkSession
   * dedup query happens to run first would double-charge one query.
   */
 object Bench {
+
+  /** Evaluates every output column of every row, with no driver collect. */
+  def force(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Untimed warm-ups run before any timing: JVM/codegen/filesystem
+    * caches, the dedup family's shared cached shingle frame, and the
+    * trained trigram model every scoring pass reuses (once-per-session
+    * costs, not per-query). A failed warm-up would silently move its fill
+    * into the first timed query, so it fails the run, naming itself. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = Seq[(String, () => DataFrame)](
+    "q_scan_parquet" -> (() => SparkEntry.queries("q_scan_parquet")(spark, sfDir)),
+    "Dedup.shingleFrame" -> (() => graft.operators.Dedup.shingleFrame(spark, sfDir)),
+    "Vocab.lmModel" -> (() => graft.functions.Vocab.lmModel(spark, sfDir))
+  ).foreach { case (name, df) =>
+    try force(df())
+    catch { case NonFatal(e) => throw new IllegalStateException(s"warm-up $name failed on $sfDir", e) }
+  }
 
   val headline: Seq[String] = Seq(
     "q_scan_parquet",
@@ -481,19 +501,7 @@ object Bench {
     require(headline.forall(!excluded(_)),
       s"headline contains scale-excluded baselines: ${headline.filter(excluded)}")
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // untimed warmups: JVM/codegen/filesystem caches + the dedup family's
-    // shared cached shingle frame (once-per-session cost, not per-query)
-    try force(SparkEntry.queries("q_scan_parquet")(spark, sfDir))
-    catch { case _: Throwable => () }
-    try force(graft.operators.Dedup.shingleFrame(spark, sfDir))
-    catch { case _: Throwable => () }
-    // the trained trigram model — like the shingle frame, a
-    // once-per-corpus training artifact every scoring pass reuses
-    try force(graft.functions.Vocab.lmModel(spark, sfDir))
-    catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
 
     // A query that throws must NOT be recorded as a ~0 s timing (it
     // would *improve* the total): failures go to a separate `errors`

@@ -46,19 +46,12 @@ object StageProf {
     })
 
     // warm the session the way Bench does (shared frames untimed)
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    try force(graft.SparkEntry.queries("q_scan_parquet")(spark, d))
-    catch { case _: Throwable => () }
-    try force(graft.operators.Dedup.shingleFrame(spark, d))
-    catch { case _: Throwable => () }
-    try force(graft.functions.Vocab.lmModel(spark, d))
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, d)
 
     for (r <- 1 to reps) {
       stages.clear()
       val t0 = System.nanoTime()
-      force(graft.SparkEntry.queries(name)(spark, d))
+      graft.Bench.force(graft.SparkEntry.queries(name)(spark, d))
       val secs = (System.nanoTime() - t0) / 1e9
       Thread.sleep(300) // let listener drain (best-effort; queue is safe)
       import scala.jdk.CollectionConverters._

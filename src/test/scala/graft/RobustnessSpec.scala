@@ -202,4 +202,11 @@ class RobustnessSpec extends AnyFunSuite {
     val after = Multimodal.decodeFeatures(back).collect().sortBy(_.doc_id).toSeq
     assert(before === after) // checksums identical ⇒ bytes identical
   }
+
+  test("a failed bench warm-up fails the run and names itself") {
+    val missing = java.nio.file.Files.createTempDirectory("graft_warmup").resolve("no_such_sf").toString
+    val e = intercept[IllegalStateException](Bench.warmUp(spark, missing))
+    assert(e.getMessage === s"warm-up q_scan_parquet failed on $missing")
+    assert(e.getCause != null)
+  }
 }

@@ -4,7 +4,8 @@
 # startup per invocation). Usage: tools/jrun.sh <mainClass> [args...]
 # Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM.
 set -euo pipefail
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script sits in
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do

@@ -55,7 +55,7 @@ def main():
         r = subprocess.run(
             ["sbt", "-batch",
              f'runMain graft.Verify {sfdir} {outdir} {" ".join(sorted(only))}'],
-            cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+            cwd=Path(__file__).resolve().parent.parent, capture_output=True, text=True, timeout=1800)
         if r.returncode != 0:
             print(r.stdout[-3000:]); print(r.stderr[-3000:])
             sys.exit("Verify failed")
