@@ -41,6 +41,15 @@ object Bench {
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** Forces one entry; a non-fatal failure comes back as its message, a
+    * fatal error (an OOM, say) propagates and ends the run. */
+  private[graft] def runEntry(spark: SparkSession, sfDir: String,
+                              fn: (SparkSession, String) => DataFrame): Option[String] =
+    try { force(fn(spark, sfDir)); None }
+    catch { case NonFatal(e) =>
+      Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+    }
+
   /** Untimed warm-ups run before any timing: JVM/codegen/filesystem
     * caches, the dedup family's shared cached shingle frame, and the
     * trained trigram model every scoring pass reuses (once-per-session
@@ -510,11 +519,7 @@ object Bench {
     val benchT0 = System.nanoTime()
     val results = names.map { name =>
       val t0 = System.nanoTime()
-      val err =
-        try { force(SparkEntry.queries(name)(spark, sfDir)); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-        }
+      val err = runEntry(spark, sfDir, SparkEntry.queries(name))
       (name, (t0 - benchT0) / 1e9, (System.nanoTime() - t0) / 1e9, err)
     }
     graft.FrameCache.release(spark)

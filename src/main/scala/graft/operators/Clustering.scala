@@ -541,6 +541,9 @@ object Clustering {
        |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
        |  FROM scored)""".stripMargin
 
+  /** Edge rows per partition of [[edgeFrame]] (4M rows ≈ 64 MB). */
+  private val EdgeRowsPerPartition = 4000000L
+
   /** Undirected near-dup edge relation — BOTH directions of every
     * verified pair in ONE explode pass, memoized per session (r13):
     * nine graph entries build the identical doubled edge list, and
@@ -556,14 +559,11 @@ object Clustering {
       // The pair relation is already cached, so the count() here is
       // the cache fill the first graph query paid anyway; the edge
       // list then coalesces (narrow — no shuffle) to ceil(2·pairs /
-      // rowsPerPartition): ONE partition at the test SFs, growing
-      // linearly with the duplication mass at scale (4M edge rows
-      // ≈ 64 MB). Conf-tunable for cluster deployments.
+      // EdgeRowsPerPartition): ONE partition at the test SFs, growing
+      // linearly with the duplication mass at scale.
       val pairs = Dedup.minhashPairs(s, d)
-      val rowsPerPart =
-        s.conf.get("graft.graph.edgeRowsPerPartition", "4000000").toLong
       val nParts = math.max(1L,
-        (2L * pairs.count() + rowsPerPart - 1) / rowsPerPart).toInt
+        (2L * pairs.count() + EdgeRowsPerPartition - 1) / EdgeRowsPerPartition).toInt
       pairs
         .selectExpr("explode(array(named_struct('src', a, 'dst', b), " +
           "named_struct('src', b, 'dst', a))) AS e")
@@ -622,6 +622,28 @@ object Clustering {
       }
       lbl
     }
+
+  /** DuckDB twin of [[labelProp]], ending in `l3(v, lbl)` over the
+    * verified-pair edges `e(a, b)`: every node starts as its own label,
+    * then three vote+argmax rounds. */
+  private def duckLabelPropCtes: String = {
+    def round(i: Int): String = {
+      val prev = s"l${i - 1}"
+      s"""v$i AS (SELECT v, lbl, COUNT(*) AS n FROM (
+         |  SELECT e.a AS v, l.lbl FROM e JOIN $prev l ON l.v = e.b
+         |  UNION ALL SELECT e.b, l.lbl FROM e JOIN $prev l ON l.v = e.a
+         |  UNION ALL SELECT v, lbl FROM $prev) GROUP BY v, lbl),
+         |l$i AS (SELECT v, lbl FROM (
+         |  SELECT v, lbl, ROW_NUMBER() OVER (PARTITION BY v
+         |    ORDER BY n DESC, lbl) AS rk FROM v$i) WHERE rk = 1)""".stripMargin
+    }
+    s"""${Dedup.duckVerifiedPairsCtes},
+       |e AS (SELECT a, b FROM verified),
+       |n0 AS (SELECT DISTINCT v FROM (
+       |  SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
+       |l0 AS (SELECT v, v AS lbl FROM n0),
+       |${(1 to 3).map(round).mkString(",\n")}""".stripMargin
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -870,27 +892,11 @@ object Clustering {
         .agg(count(lit(1)).as("size"),
           sum(col("v") * 7).cast("bigint").as("member_checksum"))
         .orderBy("community"),
-      Some {
-        def round(i: Int): String = {
-          val prev = s"l${i - 1}"
-          s"""v$i AS (SELECT v, lbl, COUNT(*) AS n FROM (
-             |  SELECT e.a AS v, l.lbl FROM e JOIN $prev l ON l.v = e.b
-             |  UNION ALL SELECT e.b, l.lbl FROM e JOIN $prev l ON l.v = e.a
-             |  UNION ALL SELECT v, lbl FROM $prev) GROUP BY v, lbl),
-             |l$i AS (SELECT v, lbl FROM (
-             |  SELECT v, lbl, ROW_NUMBER() OVER (PARTITION BY v
-             |    ORDER BY n DESC, lbl) AS rk FROM v$i) WHERE rk = 1)""".stripMargin
-        }
-        s"""WITH ${Dedup.duckVerifiedPairsCtes},
-           |e AS (SELECT a, b FROM verified),
-           |n0 AS (SELECT DISTINCT v FROM (
-           |  SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
-           |l0 AS (SELECT v, v AS lbl FROM n0),
-           |${(1 to 3).map(round).mkString(",\n")}
+      Some(
+        s"""WITH $duckLabelPropCtes
            |SELECT lbl AS community, COUNT(*) AS size,
            |  CAST(SUM(v * 7) AS BIGINT) AS member_checksum
-           |FROM l3 GROUP BY lbl ORDER BY community""".stripMargin
-      }),
+           |FROM l3 GROUP BY lbl ORDER BY community""".stripMargin)),
 
     // Newman modularity of the label-propagation communities — the
     // number that says whether q_graph_labelprop's partition actually
@@ -928,23 +934,8 @@ object Clustering {
           .selectExpr("n_communities", "n_edges", "q_num",
             "CAST(q_num AS DOUBLE) / (4.0 * n_edges * n_edges) AS modularity")
       },
-      Some {
-        def round(i: Int): String = {
-          val prev = s"l${i - 1}"
-          s"""v$i AS (SELECT v, lbl, COUNT(*) AS n FROM (
-             |  SELECT e.a AS v, l.lbl FROM e JOIN $prev l ON l.v = e.b
-             |  UNION ALL SELECT e.b, l.lbl FROM e JOIN $prev l ON l.v = e.a
-             |  UNION ALL SELECT v, lbl FROM $prev) GROUP BY v, lbl),
-             |l$i AS (SELECT v, lbl FROM (
-             |  SELECT v, lbl, ROW_NUMBER() OVER (PARTITION BY v
-             |    ORDER BY n DESC, lbl) AS rk FROM v$i) WHERE rk = 1)""".stripMargin
-        }
-        s"""WITH ${Dedup.duckVerifiedPairsCtes},
-           |e AS (SELECT a, b FROM verified),
-           |n0 AS (SELECT DISTINCT v FROM (
-           |  SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
-           |l0 AS (SELECT v, v AS lbl FROM n0),
-           |${(1 to 3).map(round).mkString(",\n")},
+      Some(
+        s"""WITH $duckLabelPropCtes,
            |mm AS (SELECT COUNT(*) AS m FROM e),
            |intra AS (SELECT la.lbl AS c, COUNT(*) AS ec
            |  FROM e JOIN l3 la ON la.v = e.a JOIN l3 lb ON lb.v = e.b
@@ -961,8 +952,7 @@ object Clustering {
            |  FROM per, mm)
            |SELECT n_communities, n_edges, q_num,
            |  CAST(q_num AS DOUBLE) / (4.0 * n_edges * n_edges) AS modularity
-           |FROM agg""".stripMargin
-      }),
+           |FROM agg""".stripMargin)),
 
     // Triangle count over the near-dup graph — the clustering-coefficient
     // numerator (how clique-like the duplication neighborhoods are; for

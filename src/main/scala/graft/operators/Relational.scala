@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryDef, Tables, Parity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Scans, filters, projections, sorts/limits and set operations.
   *

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,6 +27,22 @@ import org.apache.spark.sql.functions._
   *  - `q_dedup_embed` (cosine near-dup) is the all-pairs baseline kept at
   *    verify scale; at 100 TB you run the LSH variant and verify only
   *    within buckets.
+  *
+  * ANN kernel: every index family is judged by recall@k against an exact
+  * brute-force top-k, and every recall entry (LSH bits×tables, IVF cells,
+  * multi-probe nprobe, filtered IVF, random projection) runs the same
+  * four steps, each owned by one helper:
+  *  1. [[bruteTopK]] — broadcast queries, one pass over the candidates,
+  *     session-memoized per (dir, k, queryLimit, predicate);
+  *  2. [[scoreIds]] — exact cosine of an index's candidate ids;
+  *  3. [[topK]] — the per-query `(cosine DESC, c_id)` window;
+  *  4. [[recallFold]] — `n_queries / n_brute / n_cand / n_matched /
+  *     recall_at_k` in one row.
+  * A recall entry builds only its candidate ids (bucket join, cell join,
+  * probe join) or, for projection, its scored pairs, and selects its own
+  * setting columns. The DuckDB twins share the same text the same way
+  * ([[duckTopK]], [[duckIdRecall]], [[duckRecallSelect]]); the probe
+  * entries share [[cellProbe]] and the probe tails of their oracles.
   */
 object Similarity {
 
@@ -140,7 +157,7 @@ object Similarity {
       .mkString("(", " + ", ")")
 
   /** vec_id, embedding, nrm (L2 norm as double) — Spark side. */
-  private def withNorm(s: org.apache.spark.sql.SparkSession, d: String) = {
+  private def withNorm(s: SparkSession, d: String) = {
     graft.functions.GraftFunctions.ensureDot(s)
     Tables.embeddings(s, d).selectExpr(
       "vec_id", "embedding", "label",
@@ -150,13 +167,116 @@ object Similarity {
   private val duckNormCte =
     s"n AS (SELECT vec_id, embedding, label, sqrt(${duckDot("embedding", "embedding")}) AS nrm FROM embeddings)"
 
+  /** The query and candidate sides of exact-cosine scoring over `n`
+    * ([[withNorm]]): (q_id, q_emb, q_nrm, q_label) and its `c_` twin. */
+  private def sides(n: DataFrame): (DataFrame, DataFrame) = {
+    def side(p: String) = n.select(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}_emb"),
+      col("nrm").as(s"${p}_nrm"), col("label").as(s"${p}_label"))
+    (side("q"), side("c"))
+  }
+
+  /** Exact cosine of a scored (q, c) row of [[sides]]. */
+  private val exactCosine = s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine"
+
+  /** Per-query top-k of `scored` by (cosine DESC, c_id); rank in `rnk`. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))))
+      .filter(col("rnk") <= k)
+
+  /** Exact top-k (q_id, c_id) of the first `queryLimit` vectors of `n`
+    * ([[withNorm]] over `d`) against every other one satisfying `pred`:
+    * the queries are broadcast and the candidates stream once. The ground
+    * truth does not depend on the index setting, so it is
+    * session-memoized per (dir, k, queryLimit, pred) and a recall curve
+    * pays the brute force once. */
+  private def bruteTopK(s: SparkSession, d: String, n: DataFrame, k: Int, queryLimit: Int,
+                        pred: String = "true"): DataFrame =
+    graft.FrameCache.memo(s, s"ann-brute:$d:$k:$queryLimit:$pred") {
+      val (q, c) = sides(n)
+      topK(c.join(broadcast(q.filter(col("q_id") < queryLimit)), expr(s"q_id <> c_id AND $pred"))
+        .selectExpr("q_id", "c_id", exactCosine), k).select("q_id", "c_id")
+    }
+
+  /** Exact cosine of an index's candidate ids (q_id, c_id) under `pred`,
+    * scored over `n` ([[withNorm]]). */
+  private def scoreIds(n: DataFrame, ids: DataFrame, pred: String = "true"): DataFrame = {
+    val (q, c) = sides(n)
+    ids.join(q, "q_id").join(c, "c_id").filter(pred).selectExpr("q_id", "c_id", exactCosine)
+  }
+
+  /** The recall@k fold: matched = |brute ∩ top-k of `cand`| per query,
+    * summed to one row (n_queries, n_brute, [n_cand,] n_matched,
+    * recall_at_k = matched / |brute|). `n_cand` is the scored-pair count,
+    * the probe cost the recall was bought at. Both sides hold distinct
+    * (q_id, c_id) pairs, so one left join of the brute counts all three
+    * brute-side numbers in a single scan of it. All-integer counts and
+    * one final division, so the row is deterministic. */
+  private def recallFold(brute: DataFrame, cand: DataFrame, k: Int,
+                         nCand: Boolean = true): DataFrame = {
+    val hits = topK(cand, k).select(col("q_id"), col("c_id"), lit(1).as("hit"))
+    val counts = brute.join(hits, Seq("q_id", "c_id"), "left")
+      .agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"),
+        count(col("hit")).as("n_matched"))
+    (if (nCand) counts.crossJoin(cand.agg(count(lit(1)).as("n_cand"))) else counts)
+      .withColumn("recall_at_k", expr("CAST(n_matched AS DOUBLE) / n_brute"))
+  }
+
+  /** DuckDB twin of [[topK]] reduced to (q_id, c_id): `name AS (…)` over
+    * `src` (a CTE name or a parenthesized subquery with a `cosine`). */
+  private def duckTopK(name: String, src: String, k: Int): String =
+    s"""$name AS (SELECT q_id, c_id FROM (
+       |  SELECT q_id, c_id,
+       |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
+       |  FROM $src) WHERE rnk <= $k)""".stripMargin
+
+  /** Every (query, other) pair of `tbl` scored by cosine — the source of
+    * a brute top-k; `emb` and `nrm` name the vector and norm columns. */
+  private def duckAllPairs(tbl: String, emb: String, nrm: String, queryLimit: Int): String =
+    s"""(SELECT q.vec_id AS q_id, c.vec_id AS c_id,
+       |               ${duckDot(s"q.$emb", s"c.$emb")} / (q.$nrm * c.$nrm) AS cosine
+       |        FROM $tbl q JOIN $tbl c ON q.vec_id <> c.vec_id
+       |        WHERE q.vec_id < $queryLimit)""".stripMargin
+
+  /** DuckDB twin of [[recallFold]]: `setting` columns, then the counts
+    * against `brute` and `approx`; `counts` are the (table, column) row
+    * counts printed between n_queries and n_matched. */
+  private def duckRecallSelect(setting: String, brute: String, approx: String,
+                               counts: Seq[(String, String)]): String =
+    (Seq(s"SELECT $setting,", s"  (SELECT COUNT(DISTINCT q_id) FROM $brute) AS n_queries,") ++
+      counts.map { case (t, c) => s"  (SELECT COUNT(*) FROM $t) AS $c," } ++
+      Seq("  COUNT(*) AS n_matched,",
+        s"  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM $brute) AS recall_at_k",
+        s"FROM $brute JOIN $approx USING (q_id, c_id)")).mkString("\n")
+
+  /** DuckDB twin of [[scoreIds]] + [[recallFold]] for one setting:
+    * `idsCtes` ends in `ids$sfx(q_id, c_id)`; the statement supplies the
+    * shared `n` and `brute` CTEs. Returns (CTEs, summary select). */
+  private def duckIdRecall(sfx: String, setting: String, idsCtes: String,
+                           k: Int): (String, String) = {
+    val ctes =
+      s"""$idsCtes,
+         |cand$sfx AS (
+         |  SELECT q_id, c_id,
+         |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
+         |  FROM ids$sfx JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id),
+         |${duckTopK(s"approx$sfx", s"cand$sfx", k)}""".stripMargin
+    (ctes, duckRecallSelect(setting, "brute", s"approx$sfx", Seq(s"cand$sfx" -> "n_cand")))
+  }
+
+  /** Query ids under the same cell as another vector of `cells` — the
+    * IVF candidate ids, as the CTE `name`. */
+  private def duckCellIds(name: String, cells: String, queryLimit: Int): String =
+    s"""$name AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id
+       |  FROM $cells q JOIN $cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
+       |  WHERE q.vec_id < $queryLimit)""".stripMargin
+
   /** LSH ANN at a given hyperplane count: bucket assignment is map work,
     * candidates come from an equi-join on the bucket id, top-1 per query
     * by a window keyed on q_id. The only shuffles are the bucket join
     * and the per-query window — both keyed, both skew-bounded because
     * 2^bits tracks N ([[lshBitsFor]]). */
-  def lshAnn(s: org.apache.spark.sql.SparkSession, d: String, bits: Int,
-             queryLimit: Int = 100): org.apache.spark.sql.DataFrame = {
+  def lshAnn(s: SparkSession, d: String, bits: Int, queryLimit: Int = 100): DataFrame = {
     val b = withNorm(s, d).selectExpr("vec_id", "embedding", "nrm", s"${sparkBucket(bits)} AS bucket")
     val q = b.filter(col("vec_id") < queryLimit).select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -183,8 +303,7 @@ object Similarity {
     * session-memoized per (dir, cells) like the shingle frame: an
     * index assignment is a fit-once artifact every consumer reuses,
     * and the first consumer pays the fill. */
-  private[graft] def cellAssign(s: org.apache.spark.sql.SparkSession, d: String,
-                                cells: Int): org.apache.spark.sql.DataFrame =
+  private[graft] def cellAssign(s: SparkSession, d: String, cells: Int): DataFrame =
     graft.FrameCache.memo(s, s"ivf_cells:$d:$cells") {
       val e = Tables.embeddings(s, d)
       if (cells <= graft.functions.NearestCell.MaxCents)
@@ -203,9 +322,8 @@ object Similarity {
     * `row_number() OVER (ORDER BY c_cos DESC, cent_id) = 1`, so both
     * regimes and the DuckDB twin agree exactly (CellAssignSpec pins
     * regime equality). */
-  private[graft] def assignByExpression(s: org.apache.spark.sql.SparkSession,
-                                        e: org.apache.spark.sql.DataFrame,
-                                        cells: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def assignByExpression(s: SparkSession, e: DataFrame,
+                                        cells: Int): DataFrame = {
     graft.functions.GraftFunctions.ensureNearestCell(s)
     import s.implicits._
     val cent: Seq[(Long, Seq[Float])] = e.filter(col("vec_id") < cells)
@@ -222,9 +340,7 @@ object Similarity {
     * SORT before the partial window group-limit — at sf10 that was 350M
     * wide rows sorted for a top-1, the dominant cost of the shared cell
     * assignment, which is why the expression regime exists. */
-  private[graft] def assignByJoin(s: org.apache.spark.sql.SparkSession,
-                                  e: org.apache.spark.sql.DataFrame,
-                                  cells: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def assignByJoin(s: SparkSession, e: DataFrame, cells: Int): DataFrame = {
     graft.functions.GraftFunctions.ensureCosine(s)
     val cent = e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
@@ -264,36 +380,47 @@ object Similarity {
     * `cells` vectors (deterministic, no trained state), broadcast to
     * assign every vector its nearest cell; probes equi-join on the cell.
     * Complements sign-LSH (hash-bucketed vs centroid-bucketed recall). */
-  def ivfAnn(s: org.apache.spark.sql.SparkSession, d: String, cells: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val cellFrame = cellAssign(s, d, cells)
+  def ivfAnn(s: SparkSession, d: String, cells: Int): DataFrame =
+    cellProbe(cellAssign(s, d, cells))
+
+  /** The IVF probe over any cell assignment (vec_id, embedding, cell):
+    * queries 100..119 equi-join their own cell and keep the top-1 by
+    * cosine. */
+  private def cellProbe(cellFrame: DataFrame): DataFrame = {
     val q = cellFrame.filter(col("vec_id").between(100, 119))
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cell"))
     val c = cellFrame.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
       col("cell").as("c_cell"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    q.join(c, col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-      .selectExpr("q_id", "cell", "c_id", "cosine_sim(q_emb, c_emb) AS cosine")
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") === 1)
+    topK(q.join(c, col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
+        .selectExpr("q_id", "cell", "c_id", "cosine_sim(q_emb, c_emb) AS cosine"), 1)
       .select("q_id", "cell", "c_id", "cosine")
       .orderBy("q_id")
   }
 
-  /** DuckDB twin of [[ivfAnn]], generated from the same parameters. */
-  def ivfOracle(cells: Int): String =
-    s"""WITH ${duckCellCtes(cells)},
-       |probe AS (
+  /** DuckDB twin of [[cellProbe]] over the CTE `cells`, with `cosine`
+    * the scoring text of a (q, c) pair. */
+  private def duckCellProbe(cells: String, cosine: String): String =
+    s"""probe AS (
        |  SELECT q.vec_id AS q_id, q.cell AS cell, c.vec_id AS c_id,
-       |    ${duckDot("q.embedding", "c.embedding")}
-       |      / (sqrt(${duckDot("q.embedding", "q.embedding")})
-       |         * sqrt(${duckDot("c.embedding", "c.embedding")})) AS cosine
-       |  FROM cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
+       |    $cosine AS cosine
+       |  FROM $cells q JOIN $cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
        |  WHERE q.vec_id BETWEEN 100 AND 119)
        |SELECT q_id, cell, c_id, cosine FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
        |            ORDER BY cosine DESC, c_id) AS rn FROM probe)
        |WHERE rn = 1 ORDER BY q_id""".stripMargin
+
+  /** The flat probe: [[duckCellProbe]] over `cells` with the three-dot
+    * cosine. */
+  private val duckFlatProbe = duckCellProbe("cells",
+    s"""${duckDot("q.embedding", "c.embedding")}
+       |      / (sqrt(${duckDot("q.embedding", "q.embedding")})
+       |         * sqrt(${duckDot("c.embedding", "c.embedding")}))""".stripMargin)
+
+  /** DuckDB twin of [[ivfAnn]], generated from the same parameters. */
+  def ivfOracle(cells: Int): String =
+    s"""WITH ${duckCellCtes(cells)},
+       |$duckFlatProbe""".stripMargin
 
   /** ⌊√cells⌋ ≈ N^¼ sizing for the two-level quantizer's super-cell
     * count — see [[hierCellAssign]]. Same deterministic floor(sqrt) as
@@ -317,8 +444,7 @@ object Similarity {
     * super-cell — which is the standard two-level trade (same shape as
     * FAISS's IVF-on-IVF coarse quantizers); recall is measured, not
     * assumed, and the oracle replays the exact same two argmax levels. */
-  private[graft] def hierCellAssign(s: org.apache.spark.sql.SparkSession,
-                                    d: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def hierCellAssign(s: SparkSession, d: String): DataFrame = {
     // NOT FrameCache-memoized, deliberately: q_ivf_hier's benchmark
     // meaning is the N^1.25 BUILD cost (BASELINE.md's headline fix for
     // the flat N·√N assignment) — a memoized build would let whichever
@@ -347,21 +473,8 @@ object Similarity {
   }
 
   /** [[ivfAnn]]'s probe over the two-level assignment. */
-  def ivfHierAnn(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val cellFrame = hierCellAssign(s, d)
-    val q = cellFrame.filter(col("vec_id").between(100, 119))
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("cell"))
-    val c = cellFrame.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      col("cell").as("c_cell"))
-    val wTop = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    q.join(c, col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-      .selectExpr("q_id", "cell", "c_id", "cosine_sim(q_emb, c_emb) AS cosine")
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") === 1)
-      .select("q_id", "cell", "c_id", "cosine")
-      .orderBy("q_id")
-  }
+  def ivfHierAnn(s: SparkSession, d: String): DataFrame =
+    cellProbe(hierCellAssign(s, d))
 
   /** DuckDB twin of [[ivfHierAnn]]: sizes from COUNT(*), replays both
     * argmax levels, probes the final cell. */
@@ -388,15 +501,7 @@ object Similarity {
        |      ROW_NUMBER() OVER (PARTITION BY p.vec_id
        |        ORDER BY ${cos("p.embedding", "c.cent_emb")} DESC, c.cent_id) AS rn
        |    FROM pts p JOIN subc c ON c.sup = p.sup) WHERE rn = 1),
-       |probe AS (
-       |  SELECT q.vec_id AS q_id, q.cell AS cell, c.vec_id AS c_id,
-       |    ${cos("q.embedding", "c.embedding")} AS cosine
-       |  FROM hcells q JOIN hcells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id BETWEEN 100 AND 119)
-       |SELECT q_id, cell, c_id, cosine FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-       |            ORDER BY cosine DESC, c_id) AS rn FROM probe)
-       |WHERE rn = 1 ORDER BY q_id""".stripMargin
+       |${duckCellProbe("hcells", cos("q.embedding", "c.embedding"))}""".stripMargin
   }
 
   /** Recall@k of a sign-LSH index against the brute-force baseline —
@@ -413,9 +518,8 @@ object Similarity {
     * the recall was bought at). All-integer counts + one final
     * division — deterministic. Requires bits·tables ≤ dim (64).
     */
-  def annRecall(s: org.apache.spark.sql.SparkSession, d: String, bits: Int,
-                tables: Int = 1, k: Int = 5, queryLimit: Int = 100)
-      : org.apache.spark.sql.DataFrame = {
+  def annRecall(s: SparkSession, d: String, bits: Int,
+                tables: Int = 1, k: Int = 5, queryLimit: Int = 100): DataFrame = {
     // beyond dim, element_at returns NULL and the high bits silently
     // zero on BOTH engines — degenerate buckets with no error anywhere
     require(bits * tables <= 64,
@@ -431,64 +535,27 @@ object Similarity {
       .filter(col("x.vec_id") < queryLimit)
       .select(col("x.vec_id").as("q_id"), col("y.vec_id").as("c_id"))
       .distinct()
-    val qn = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cn = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    val brute = cn.join(broadcast(qn.filter(col("q_id") < queryLimit)), col("q_id") =!= col("c_id"))
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    val cand = candIds.join(qn, "q_id").join(cn, "c_id")
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-    val approx = cand.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    brute.agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(brute.join(approx, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_matched")))
+    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, candIds), k)
       .selectExpr(s"$bits AS bits", s"$tables AS tables", "n_queries", "n_cand", "n_matched",
-        "CAST(n_matched AS DOUBLE) / n_brute AS recall_at_k")
+        "recall_at_k")
   }
 
   /** DuckDB twin of [[annRecall]]: per-setting CTEs (names suffixed
     * `_<bits>_<tables>`) + one shared brute CTE the caller emits once. */
   def recallOracleBruteCte(k: Int = 5, queryLimit: Int = 100): String =
-    s"""brute AS (SELECT q_id, c_id FROM (
-       |  SELECT q_id, c_id,
-       |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-       |  FROM (SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-       |               ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-       |        FROM n q JOIN n c ON q.vec_id <> c.vec_id
-       |        WHERE q.vec_id < $queryLimit)) WHERE rnk <= $k)""".stripMargin
+    duckTopK("brute", duckAllPairs("n", "embedding", "nrm", queryLimit), k)
 
   def recallOracleCtes(bits: Int, tables: Int = 1, k: Int = 5,
                        queryLimit: Int = 100): (String, String) = {
     val sfx = s"_${bits}_$tables"
     val tableSelects = (0 until tables).map(t =>
       s"SELECT vec_id, $t AS tbl, ${duckBucket(bits, t * bits)} AS bucket FROM n")
-    val ctes =
+    duckIdRecall(sfx, s"$bits AS bits, $tables AS tables",
       s"""bkt$sfx AS (${tableSelects.mkString("\n  UNION ALL ")}),
          |ids$sfx AS (SELECT DISTINCT x.vec_id AS q_id, y.vec_id AS c_id
          |  FROM bkt$sfx x JOIN bkt$sfx y
          |  ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id <> y.vec_id
-         |  WHERE x.vec_id < $queryLimit),
-         |cand$sfx AS (
-         |  SELECT q_id, c_id,
-         |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-         |  FROM ids$sfx JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id),
-         |approx$sfx AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-         |  FROM cand$sfx) WHERE rnk <= $k)""".stripMargin
-    val select =
-      s"""SELECT $bits AS bits, $tables AS tables,
-         |  (SELECT COUNT(DISTINCT q_id) FROM brute) AS n_queries,
-         |  (SELECT COUNT(*) FROM cand$sfx) AS n_cand,
-         |  COUNT(*) AS n_matched,
-         |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM brute) AS recall_at_k
-         |FROM brute JOIN approx$sfx USING (q_id, c_id)""".stripMargin
-    (ctes, select)
+         |  WHERE x.vec_id < $queryLimit)""".stripMargin, k)
   }
 
   // ---- random projection (Johnson–Lindenstrauss) ------------------------
@@ -530,22 +597,10 @@ object Similarity {
     * map-only pass fused into the scan (16 sign-sum expressions, no
     * shuffle, no model to broadcast), so reduced-space vectors are
     * ~4× cheaper to score AND to shuffle. */
-  def rpRecall(s: org.apache.spark.sql.SparkSession, d: String, projDim: Int,
-               k: Int = 5, queryLimit: Int = 100): org.apache.spark.sql.DataFrame = {
+  def rpRecall(s: SparkSession, d: String, projDim: Int,
+               k: Int = 5, queryLimit: Int = 100): DataFrame = {
     require(projDim <= rpMaxDim, s"projDim $projDim exceeds the sign matrix ($rpMaxDim)")
     val n = withNorm(s, d)
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    // the exact-space baseline is setting-independent — memoized so the
-    // three-dim curve pays the 64-dim brute force once, not per setting
-    val brute = graft.FrameCache.memo(s, s"rp-brute:$d:$k:$queryLimit") {
-      val qn = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-      val cn = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-      cn.join(broadcast(qn.filter(col("q_id") < queryLimit)), col("q_id") =!= col("c_id"))
-        .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .select("q_id", "c_id")
-    }
     // cache the projected vectors — computed by the NATIVE rp_project
     // expression ([[graft.functions.RpProject]]): the expanded
     // 2048-term array() chain this replaces blew janino's 64 KB method
@@ -561,15 +616,10 @@ object Similarity {
       col("vec_id").as("q_id"), col("p").as("q_p"), col("pnrm").as("q_pnrm"))
     val cp = proj.select(
       col("vec_id").as("c_id"), col("p").as("c_p"), col("pnrm").as("c_pnrm"))
-    val approx = cp.join(broadcast(qp), col("q_id") =!= col("c_id"))
+    val projected = cp.join(broadcast(qp), col("q_id") =!= col("c_id"))
       .selectExpr("q_id", "c_id", s"${sparkDot("q_p", "c_p")} / (q_pnrm * c_pnrm) AS cosine")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    brute.agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"))
-      .crossJoin(brute.join(approx, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_matched")))
-      .selectExpr(s"$projDim AS proj_dim", "n_queries", "n_matched",
-        "CAST(n_matched AS DOUBLE) / n_brute AS recall_at_k")
+    recallFold(bruteTopK(s, d, n, k, queryLimit), projected, k, nCand = false)
+      .selectExpr(s"$projDim AS proj_dim", "n_queries", "n_matched", "recall_at_k")
   }
 
   /** DuckDB twin of one [[rpRecall]] setting (CTEs suffixed `_<dim>`). */
@@ -580,20 +630,8 @@ object Similarity {
       s"""proj$sfx AS (
          |  SELECT vec_id, p, sqrt(${duckDot("p", "p")}) AS pnrm
          |  FROM (SELECT vec_id, [$pList] AS p FROM embeddings)),
-         |approx$sfx AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-         |  FROM (SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         |               ${duckDot("q.p", "c.p")} / (q.pnrm * c.pnrm) AS cosine
-         |        FROM proj$sfx q JOIN proj$sfx c ON q.vec_id <> c.vec_id
-         |        WHERE q.vec_id < 100)) WHERE rnk <= 5)""".stripMargin
-    val select =
-      s"""SELECT $projDim AS proj_dim,
-         |  (SELECT COUNT(DISTINCT q_id) FROM brute) AS n_queries,
-         |  COUNT(*) AS n_matched,
-         |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM brute) AS recall_at_k
-         |FROM brute JOIN approx$sfx USING (q_id, c_id)""".stripMargin
-    (ctes, select)
+         |${duckTopK(s"approx$sfx", duckAllPairs(s"proj$sfx", "p", "pnrm", 100), 5)}""".stripMargin
+    (ctes, duckRecallSelect(s"$projDim AS proj_dim", "brute", s"approx$sfx", Nil))
   }
 
   /** Recall@k of the IVF index against the brute-force baseline — the
@@ -602,33 +640,22 @@ object Similarity {
     * retention, this is the coarse-quantizer knob). Candidates are the
     * query's own cell members; more cells → fewer candidates per
     * probe → lower recall. */
-  def ivfRecall(s: org.apache.spark.sql.SparkSession, d: String, cells: Int,
-                k: Int = 5, queryLimit: Int = 100): org.apache.spark.sql.DataFrame = {
-    val cellsF = cellAssign(s, d, cells).select("vec_id", "cell")
+  def ivfRecall(s: SparkSession, d: String, cells: Int,
+                k: Int = 5, queryLimit: Int = 100): DataFrame = {
     val n = withNorm(s, d)
-    val qn = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cn = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    val brute = cn.join(broadcast(qn.filter(col("q_id") < queryLimit)), col("q_id") =!= col("c_id"))
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    val candIds = cellsF.select(col("vec_id").as("q_id"), col("cell"))
+    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, cellIds(s, d, cells, queryLimit)), k)
+      .selectExpr(s"$cells AS cells", "n_queries", "n_cand", "n_matched", "recall_at_k")
+  }
+
+  /** IVF candidate ids: each query paired with the other members of its
+    * own cell. */
+  private def cellIds(s: SparkSession, d: String, cells: Int, queryLimit: Int): DataFrame = {
+    val cellsF = cellAssign(s, d, cells).select("vec_id", "cell")
+    cellsF.select(col("vec_id").as("q_id"), col("cell"))
       .filter(col("q_id") < queryLimit)
       .join(cellsF.select(col("vec_id").as("c_id"), col("cell").as("c_cell")),
         col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
-    val cand = candIds.join(qn, "q_id").join(cn, "c_id")
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-    val approx = cand.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    brute.agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(brute.join(approx, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_matched")))
-      .selectExpr(s"$cells AS cells", "n_queries", "n_cand", "n_matched",
-        "CAST(n_matched AS DOUBLE) / n_brute AS recall_at_k")
   }
 
   /** FILTERED ANN — vector search under a metadata predicate (here:
@@ -641,35 +668,14 @@ object Similarity {
     * top-k (broadcast of `queryLimit` queries — O(Q·N), linear in the
     * corpus); published output is the checked recall + candidate
     * counts, the same surface as [[ivfRecall]]. */
-  def filteredAnn(s: org.apache.spark.sql.SparkSession, d: String, cells: Int,
-                  k: Int = 3, queryLimit: Int = 100): org.apache.spark.sql.DataFrame = {
-    val cellsF = cellAssign(s, d, cells).select("vec_id", "cell")
+  def filteredAnn(s: SparkSession, d: String, cells: Int,
+                  k: Int = 3, queryLimit: Int = 100): DataFrame = {
     val n = withNorm(s, d)
-    val qn = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-      col("nrm").as("q_nrm"), col("label").as("q_label"))
-    val cn = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-      col("nrm").as("c_nrm"), col("label").as("c_label"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    val brute = cn.join(broadcast(qn.filter(col("q_id") < queryLimit)),
-        col("q_id") =!= col("c_id") && col("q_label") === col("c_label"))
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    val candIds = cellsF.select(col("vec_id").as("q_id"), col("cell"))
-      .filter(col("q_id") < queryLimit)
-      .join(cellsF.select(col("vec_id").as("c_id"), col("cell").as("c_cell")),
-        col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id")
-    val cand = candIds.join(qn, "q_id").join(cn, "c_id")
-      .filter(col("q_label") === col("c_label"))
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-    val approx = cand.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    brute.agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(brute.join(approx, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_matched")))
+    val sameLabel = "q_label = c_label"
+    recallFold(bruteTopK(s, d, n, k, queryLimit, sameLabel),
+        scoreIds(n, cellIds(s, d, cells, queryLimit), sameLabel), k)
       .selectExpr(s"$cells AS cells", "n_queries", "n_brute", "n_cand", "n_matched",
-        "CAST(n_matched AS DOUBLE) / n_brute AS recall_at_k")
+        "recall_at_k")
   }
 
   /** DuckDB twin of [[filteredAnn]]. */
@@ -684,24 +690,14 @@ object Similarity {
        |  FROM n q JOIN n c ON q.vec_id <> c.vec_id AND q.label = c.label
        |  WHERE q.vec_id < $queryLimit) WHERE rnk <= $k),
        |${duckCellCtes(cells, sfx)},
-       |fids AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id
-       |  FROM cells$sfx q JOIN cells$sfx c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $queryLimit),
+       |${duckCellIds("fids", s"cells$sfx", queryLimit)},
        |fcand AS (SELECT q_id, c_id,
        |    ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
        |  FROM fids JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id
        |  WHERE q.label = c.label),
-       |fapprox AS (SELECT q_id, c_id FROM (
-       |  SELECT q_id, c_id,
-       |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-       |  FROM fcand) WHERE rnk <= $k)
-       |SELECT $cells AS cells,
-       |  (SELECT COUNT(DISTINCT q_id) FROM fbrute) AS n_queries,
-       |  (SELECT COUNT(*) FROM fbrute) AS n_brute,
-       |  (SELECT COUNT(*) FROM fcand) AS n_cand,
-       |  COUNT(*) AS n_matched,
-       |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM fbrute) AS recall_at_k
-       |FROM fbrute JOIN fapprox USING (q_id, c_id)""".stripMargin
+       |${duckTopK("fapprox", "fcand", k)}
+       |${duckRecallSelect(s"$cells AS cells", "fbrute", "fapprox",
+          Seq("fbrute" -> "n_brute", "fcand" -> "n_cand"))}""".stripMargin
   }
 
   /** Recall@k of MULTI-PROBE IVF: queries probe their `nprobe` nearest
@@ -712,9 +708,8 @@ object Similarity {
     * One broadcast argmax pass RANKS the cells per vector; rank 1 is
     * the member assignment, ranks ≤ nprobe are the query's probe set —
     * the same scored frame serves both, no second pass. */
-  def ivfProbeRecall(s: org.apache.spark.sql.SparkSession, d: String, cells: Int,
-                     nprobe: Int, k: Int = 5, queryLimit: Int = 100)
-      : org.apache.spark.sql.DataFrame = {
+  def ivfProbeRecall(s: SparkSession, d: String, cells: Int,
+                     nprobe: Int, k: Int = 5, queryLimit: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.ensureCosine(s)
     val e = Tables.embeddings(s, d)
     val cent = e.filter(col("vec_id") < cells)
@@ -734,24 +729,9 @@ object Similarity {
         col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
     val n = withNorm(s, d)
-    val qn = n.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-    val cn = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-    val brute = cn.join(broadcast(qn.filter(col("q_id") < queryLimit)), col("q_id") =!= col("c_id"))
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    val cand = candIds.join(qn, "q_id").join(cn, "c_id")
-      .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-    val approx = cand.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "c_id")
-    brute.agg(countDistinct(col("q_id")).as("n_queries"), count(lit(1)).as("n_brute"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-      .crossJoin(brute.join(approx, Seq("q_id", "c_id")).agg(count(lit(1)).as("n_matched")))
+    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, candIds), k)
       .selectExpr(s"$cells AS cells", s"$nprobe AS nprobe", "n_queries", "n_cand", "n_matched",
-        "CAST(n_matched AS DOUBLE) / n_brute AS recall_at_k")
+        "recall_at_k")
   }
 
   /** DuckDB twin of [[ivfProbeRecall]] (expects the shared `n` and
@@ -761,7 +741,7 @@ object Similarity {
     val sfx = s"_p$nprobe"
     val cos = s"${duckDot("e.embedding", "c.cent_emb")} / " +
       s"(sqrt(${duckDot("e.embedding", "e.embedding")}) * sqrt(${duckDot("c.cent_emb", "c.cent_emb")}))"
-    val ctes =
+    duckIdRecall(sfx, s"$cells AS cells, $nprobe AS nprobe",
       s"""ranked$sfx AS (
          |  SELECT vec_id, cent_id,
          |         ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -774,23 +754,7 @@ object Similarity {
          |  SELECT q.vec_id AS q_id, m.vec_id AS c_id
          |  FROM ranked$sfx q JOIN ranked$sfx m
          |    ON q.cent_id = m.cent_id AND m.rn = 1 AND q.vec_id <> m.vec_id
-         |  WHERE q.vec_id < $queryLimit AND q.rn <= $nprobe),
-         |cand$sfx AS (
-         |  SELECT q_id, c_id,
-         |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-         |  FROM ids$sfx JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id),
-         |approx$sfx AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-         |  FROM cand$sfx) WHERE rnk <= $k)""".stripMargin
-    val select =
-      s"""SELECT $cells AS cells, $nprobe AS nprobe,
-         |  (SELECT COUNT(DISTINCT q_id) FROM brute) AS n_queries,
-         |  (SELECT COUNT(*) FROM cand$sfx) AS n_cand,
-         |  COUNT(*) AS n_matched,
-         |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM brute) AS recall_at_k
-         |FROM brute JOIN approx$sfx USING (q_id, c_id)""".stripMargin
-    (ctes, select)
+         |  WHERE q.vec_id < $queryLimit AND q.rn <= $nprobe)""".stripMargin, k)
   }
 
   /** DuckDB twin of [[ivfRecall]]; cell CTEs suffixed by the cell count
@@ -798,27 +762,9 @@ object Similarity {
     * `brute` CTEs of [[recallOracleBruteCte]]). */
   def ivfRecallOracleCtes(cells: Int, k: Int = 5, queryLimit: Int = 100): (String, String) = {
     val sfx = s"_c$cells"
-    val ctes =
+    duckIdRecall(sfx, s"$cells AS cells",
       s"""${duckCellCtes(cells, sfx)},
-         |ids$sfx AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id
-         |  FROM cells$sfx q JOIN cells$sfx c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < $queryLimit),
-         |cand$sfx AS (
-         |  SELECT q_id, c_id,
-         |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-         |  FROM ids$sfx JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id),
-         |approx$sfx AS (SELECT q_id, c_id FROM (
-         |  SELECT q_id, c_id,
-         |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk
-         |  FROM cand$sfx) WHERE rnk <= $k)""".stripMargin
-    val select =
-      s"""SELECT $cells AS cells,
-         |  (SELECT COUNT(DISTINCT q_id) FROM brute) AS n_queries,
-         |  (SELECT COUNT(*) FROM cand$sfx) AS n_cand,
-         |  COUNT(*) AS n_matched,
-         |  CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM brute) AS recall_at_k
-         |FROM brute JOIN approx$sfx USING (q_id, c_id)""".stripMargin
-    (ctes, select)
+         |${duckCellIds(s"ids$sfx", s"cells$sfx", queryLimit)}""".stripMargin, k)
   }
 
   /** DuckDB twin of the SIZED [[lshAnn]]: the bit count comes from the
@@ -829,7 +775,12 @@ object Similarity {
        |${duckLshSizedCte()},
        |b AS (SELECT vec_id, embedding, nrm, ${duckBucketSized()} AS bucket
        |      FROM n CROSS JOIN sized),
-       |scored AS (
+       |${duckLshProbe(queryLimit)}""".stripMargin
+
+  /** The probe tail of both LSH twins over `b(vec_id, embedding, nrm,
+    * bucket)`: in-bucket top-1 per query with its candidate count. */
+  private def duckLshProbe(queryLimit: Int): String =
+    s"""scored AS (
        |  SELECT q.vec_id AS q_id, q.bucket AS bucket, c.vec_id AS c_id,
        |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
        |  FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -848,17 +799,7 @@ object Similarity {
     s"""WITH sizedc AS (
        |  SELECT GREATEST(4, CAST(floor(sqrt(COUNT(*))) AS INT)) AS c FROM embeddings),
        |${duckCellCtesExpr("(SELECT c FROM sizedc)")},
-       |probe AS (
-       |  SELECT q.vec_id AS q_id, q.cell AS cell, c.vec_id AS c_id,
-       |    ${duckDot("q.embedding", "c.embedding")}
-       |      / (sqrt(${duckDot("q.embedding", "q.embedding")})
-       |         * sqrt(${duckDot("c.embedding", "c.embedding")})) AS cosine
-       |  FROM cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id BETWEEN 100 AND 119)
-       |SELECT q_id, cell, c_id, cosine FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-       |            ORDER BY cosine DESC, c_id) AS rn FROM probe)
-       |WHERE rn = 1 ORDER BY q_id""".stripMargin
+       |$duckFlatProbe""".stripMargin
 
   /** COUNT-driven IVF — the production sized entry. The cell count
     * executes [[ivfCellsFor]]; the ASSIGNMENT strategy gates on it:
@@ -870,8 +811,7 @@ object Similarity {
     * while hier does ~8+8, so the crossover is safely behind it. The
     * oracle twin recomputes cells AND the gate from COUNT(*); `cap` is
     * injectable so specs can pin both branches without scale fixtures. */
-  def ivfSizedAnn(s: org.apache.spark.sql.SparkSession, d: String,
-                  flatCellCap: Int = 64): org.apache.spark.sql.DataFrame = {
+  def ivfSizedAnn(s: SparkSession, d: String, flatCellCap: Int = 64): DataFrame = {
     val cells = ivfCellsFor(Tables.embeddings(s, d).count())
     if (cells > flatCellCap) ivfHierAnn(s, d) else ivfAnn(s, d, cells)
   }
@@ -892,18 +832,7 @@ object Similarity {
   def lshOracle(bits: Int, queryLimit: Int = 100): String =
     s"""WITH $duckNormCte,
        |b AS (SELECT vec_id, embedding, nrm, ${duckBucket(bits)} AS bucket FROM n),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, q.bucket AS bucket, c.vec_id AS c_id,
-       |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
-       |  FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $queryLimit),
-       |ranked AS (
-       |  SELECT q_id, bucket, c_id, cosine,
-       |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk,
-       |         COUNT(*) OVER (PARTITION BY q_id) AS n_cand
-       |  FROM scored)
-       |SELECT q_id, bucket, c_id AS nn_id, cosine, n_cand FROM ranked WHERE rnk = 1
-       |ORDER BY q_id""".stripMargin
+       |${duckLshProbe(queryLimit)}""".stripMargin
 
   /** Directed k-NN edges within the sized coarse-quantizer cells:
     * every vector's top-`k` neighbors by quantized cosine, ties by
@@ -923,8 +852,7 @@ object Similarity {
     * q_knn_graph, q_knn_mutual, q_knn_cluster AND q_semdedup. */
   private[graft] val KnnEdgeCap = 4
 
-  private[graft] def knnEdges(s: org.apache.spark.sql.SparkSession, d: String,
-                              k: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def knnEdges(s: SparkSession, d: String, k: Int): DataFrame = {
     require(k <= KnnEdgeCap, s"knnEdges k=$k exceeds memoized cap $KnnEdgeCap")
     // Session-memoized like the shingle frame and the cell assignment:
     // the within-cell join + cosine scoring + per-src ranking ran once
@@ -977,15 +905,9 @@ object Similarity {
     QueryDef(
       "q_sim_topk",
       (s, d) => {
-        val n = withNorm(s, d)
-        val q = n.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
-        val c = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
-        val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-          .selectExpr("q_id", "c_id", s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-        val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-        scored.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 5)
+        val (q, c) = sides(withNorm(s, d))
+        topK(c.join(broadcast(q.filter(col("q_id") < 8)), col("q_id") =!= col("c_id"))
+            .selectExpr("q_id", "c_id", exactCosine), 5)
           .select("q_id", "rnk", "c_id", "cosine")
           .orderBy("q_id", "rnk")
       },
@@ -1013,18 +935,9 @@ object Similarity {
     QueryDef(
       "q_hard_negatives",
       (s, d) => {
-        val n = withNorm(s, d)
-        val q = n.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-            col("nrm").as("q_nrm"), col("label").as("q_lbl"))
-        val c = n.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-          col("nrm").as("c_nrm"), col("label").as("c_lbl"))
-        val scored = c.join(broadcast(q), col("q_lbl") =!= col("c_lbl"))
-          .selectExpr("q_id", "c_id",
-            s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine")
-        val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))
-        scored.withColumn("rnk", row_number().over(w))
-          .filter(col("rnk") <= 3)
+        val (q, c) = sides(withNorm(s, d))
+        topK(c.join(broadcast(q.filter(col("q_id") < 8)), col("q_label") =!= col("c_label"))
+            .selectExpr("q_id", "c_id", exactCosine), 3)
           .select("q_id", "rnk", "c_id", "cosine")
           .orderBy("q_id", "rnk")
       },

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.functions._
 
 /** Order row as a domain type — the `Dataset[T]` face of the engine. */
 final case class OrderRow(

@@ -231,9 +231,9 @@ object Windows {
       .withColumn("total", sum(col("cnt")).over(wAll))
       .select("pid", "offset", "total")
     local.join(broadcast(offsets), "pid")
-      .selectExpr(df.columns ++ Seq("local_rn + offset AS rn",
+      .selectExpr(df.columns.toIndexedSeq ++ Seq("local_rn + offset AS rn",
         s"total DIV $k AS qsize", s"total % $k AS rem"): _*)
-      .selectExpr(df.columns :+
+      .selectExpr(df.columns.toIndexedSeq :+
         // SQL-standard ntile: rows 1..rem*(qsize+1) fall in the first rem
         // (larger) buckets; the remainder spreads over qsize-row buckets.
         s"""CAST(CASE WHEN qsize = 0 THEN rn

@@ -42,7 +42,7 @@ object ScaleGen {
 
   private def signArray(copy: Int, dim: Int): String =
     (0 until dim).map { idx =>
-      if ((MurmurHash3.productHash((copy, idx)) & 1) == 1) "-1.0D" else "1.0D"
+      if ((MurmurHash3.caseClassHash((copy, idx)) & 1) == 1) "-1.0D" else "1.0D"
     }.mkString("array(", ", ", ")")
 
   def main(args: Array[String]): Unit = {
