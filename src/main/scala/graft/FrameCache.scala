@@ -53,6 +53,20 @@ object FrameCache {
     }
   }
 
+  /** Eagerly materialize `df` (one `localCheckpoint` job) and re-wrap
+    * its rows as a fresh frame: the plan of everything built on top
+    * starts from the materialized rows, so an iterative loop's plan
+    * stays O(1) instead of nesting every earlier round. The re-wrap
+    * gives the columns FRESH attribute ids: a round that unions or
+    * joins this frame with a projection of itself would otherwise have
+    * both branches carry the same attribute ids out of one
+    * `LogicalRDD`, which Catalyst's union-constraint rewrite chokes
+    * on. */
+  private[graft] def rebase(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint(true)
+    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
   /** Evict and unpersist this session's entries only. */
   def release(s: SparkSession): Unit = {
     val it = cache.entrySet().iterator()

@@ -1100,8 +1100,7 @@ object Analytics {
             min(expr("datediff(now_d, CAST(o_orderdate AS DATE))")).as("recency"),
             count(lit(1)).as("freq"),
             Parity.dsum(col("o_totalprice"), 2).as("monetary"))
-        val ck = rfm0.localCheckpoint(true)
-        val rfm = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+        val rfm = graft.FrameCache.rebase(rfm0)
         def score(metric: String, name: String) =
           Windows.ntileBucket(rfm.select("o_custkey", metric), 4, 8,
             Seq(metric, "o_custkey"), name).select("o_custkey", name)

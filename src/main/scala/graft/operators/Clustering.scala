@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Similarity.{duckDot, sparkDot}
@@ -43,6 +43,19 @@ import Similarity.{duckDot, sparkDot}
   * the DuckDB oracle computes the same fixpoint declaratively with a
   * recursive CTE — a third evaluation strategy arriving at the same
   * answer is exactly what the cross-engine gate is for.
+  *
+  * The iterative entries share two kernels. The graph rounds are folds
+  * over one message pass, [[send]] (each edge of the memoized doubled
+  * [[edgeFrame]] carries its source's row): PageRank and PPR sum the
+  * quantized pr/deg contributions of [[rankSums]] and differ only in
+  * their restart term, BFS and SSSP run one keyed-MIN [[relax]] with a
+  * frontier predicate and a step, and label propagation counts the
+  * sent labels as votes. k-means and every PQ subspace codebook are one
+  * [[lloyd]] fit (first-k seeds, assign + update rounds, each round
+  * re-based). Each kernel has one DuckDB twin generator (`duckEdges`,
+  * `duckRankPass`, `duckRelax`, `duckLloyd`, `duckRounds`), so the
+  * oracle text of every entry is assembled from the same pieces as its
+  * Spark plan.
   */
 object Clustering {
 
@@ -171,10 +184,8 @@ object Clustering {
       ckRdd.count() // materializes the checkpoint AND drives the accumulator
       minLab.unpersist()
       changed = acc.value
-      // Re-baseline on the checkpointed RDD with FRESH attribute ids:
-      // the next round unions this frame with a projection of itself,
-      // and Catalyst's union-constraint rewrite chokes when both
-      // branches carry the same attribute ids out of a LogicalRDD.
+      // re-baseline with FRESH attribute ids ([[graft.FrameCache.rebase]]
+      // says why): the next round unions this frame with itself
       val jumped = jump.sparkSession.createDataFrame(ckRdd, jump.schema)
       labels.unpersist()
       labels = jumped.drop("old")
@@ -187,9 +198,7 @@ object Clustering {
   /** Shared oracle text: recursive min-reachability labeling over the
     * verified pair CTEs. Ends in `cc(v, cluster)`. */
   private[operators] def duckCcCtes: String =
-    s"""${Dedup.duckVerifiedPairsCtes},
-       |edges AS (SELECT a AS src, b AS dst FROM verified
-       |          UNION ALL SELECT b, a FROM verified),
+    s"""${duckEdges()},
        |reach(v, r) AS (
        |  SELECT src, src FROM edges
        |  UNION
@@ -251,48 +260,60 @@ object Clustering {
     graft.FrameCache.memo(s, s"embpts:$d")(
       Tables.embeddings(s, d).select("vec_id", "embedding"))
 
-  /** `iters` rounds of Lloyd's from the deterministic seed; returns the
-    * final assignment. Each round materializes the k-row centroid frame
-    * eagerly (localCheckpoint): the round is then ONE job over the
-    * cached points, and the next round's plan starts from k in-memory
-    * rows instead of nesting the whole previous fit — without this the
-    * final action re-ran every assignment and update pass against the
-    * raw scan (7 parquet re-reads for a 3-iteration fit). */
+  /** Lloyd's fit shared by k-means and every PQ subspace: seeds are the
+    * first `k` points by vec_id, then `iters` assign+update rounds over
+    * `pts` (vec_id, embedding); returns the k-row centroid frame. Each
+    * round materializes the centroids eagerly ([[graft.FrameCache.rebase]]):
+    * the round is then ONE job over the cached points, and the next
+    * round's plan starts from k in-memory rows instead of nesting the
+    * whole previous fit — without this the final action re-ran every
+    * assignment and update pass against the raw scan (7 parquet
+    * re-reads for a 3-iteration fit). */
+  private def lloyd(pts: DataFrame, k: Int, iters: Int): DataFrame =
+    (1 to iters).foldLeft(pts.filter(col("vec_id") < k)
+        .selectExpr("vec_id AS cid", "transform(embedding, v -> CAST(v AS DOUBLE)) AS cent")) {
+      (cents, _) => graft.FrameCache.rebase(kmUpdate(kmAssign(pts, cents), pts))
+    }
+
+  /** `KmIters` rounds of Lloyd's from the deterministic seed; returns
+    * the final assignment with its centroid, (cid, vec_id, cent). */
   def kmeansAssign(s: SparkSession, d: String): DataFrame = {
     val pts = cachedPoints(s, d)
-    var cents = pts.filter(col("vec_id") < KmK)
-      .selectExpr("vec_id AS cid", "transform(embedding, v -> CAST(v AS DOUBLE)) AS cent")
-    for (_ <- 1 to KmIters) {
-      val ck = kmUpdate(kmAssign(pts, cents), pts).localCheckpoint(true)
-      cents = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-    }
+    val cents = lloyd(pts, KmK, KmIters)
     kmAssign(pts, cents).join(cents, "cid")
   }
 
-  /** The same fixed-point unrolled as a DuckDB CTE chain (c0 → a1/c1 →
-    * … → final assignment `aF(vec_id, cid, cent)`). */
-  private def duckKmeansCtes: String = {
-    val dexpr = s"${duckDot("c.cent", "c.cent")} - 2 * ${duckDot("p.embedding", "c.cent")}"
-    def assign(i: Int, cents: String) =
-      s"""s$i AS (SELECT p.vec_id, c.cid, $dexpr AS d FROM pts p CROSS JOIN $cents c),
-         |a$i AS (SELECT vec_id, cid FROM (
+  /** DuckDB twin of [[lloyd]]'s rounds over `pts(vec_id, x)` from the
+    * seeds `c${sfx}0`: per round i the argmin `s/a${sfx}i` and the
+    * update `e/d/c${sfx}i`, ending at the centroids `c$sfx$iters` (and,
+    * with `assignLast`, their assignment `a$sfx${iters + 1}`). */
+  private def duckLloyd(sfx: String, pts: String, x: String, dim: Int, iters: Int,
+                        assignLast: Boolean): String = {
+    def assign(i: Int) =
+      s"""s$sfx$i AS (SELECT p.vec_id, c.cid,
+         |  ${duckDot("c.cent", "c.cent")} - 2 * ${duckDot(s"p.$x", "c.cent")} AS d
+         |  FROM $pts p CROSS JOIN c$sfx${i - 1} c),
+         |a$sfx$i AS (SELECT vec_id, cid FROM (
          |  SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
-         |  FROM s$i) WHERE rk = 1)""".stripMargin
+         |  FROM s$sfx$i) WHERE rk = 1)""".stripMargin
     def update(i: Int) =
-      s"""e$i AS (SELECT a.cid, g.i AS pos,
-         |  CAST(floor(CAST(p.embedding[g.i] AS DOUBLE) * 100000000) AS BIGINT) AS q
-         |  FROM a$i a JOIN pts p USING (vec_id) CROSS JOIN generate_series(1, $KmDim) AS g(i)),
-         |d$i AS (SELECT cid, pos, CAST(SUM(q) AS DOUBLE) / 100000000 / COUNT(*) AS coord
-         |  FROM e$i GROUP BY cid, pos),
-         |c$i AS (SELECT cid, list(coord ORDER BY pos) AS cent FROM d$i GROUP BY cid)""".stripMargin
-    val rounds = (1 to KmIters).map(i =>
-      s"${assign(i, s"c${i - 1}")},\n${update(i)}").mkString(",\n")
+      s"""e$sfx$i AS (SELECT a.cid, g.i AS pos,
+         |  CAST(floor(CAST(p.$x[g.i] AS DOUBLE) * 100000000) AS BIGINT) AS q
+         |  FROM a$sfx$i a JOIN $pts p USING (vec_id) CROSS JOIN generate_series(1, $dim) AS g(i)),
+         |d$sfx$i AS (SELECT cid, pos, CAST(SUM(q) AS DOUBLE) / 100000000 / COUNT(*) AS coord
+         |  FROM e$sfx$i GROUP BY cid, pos),
+         |c$sfx$i AS (SELECT cid, list(coord ORDER BY pos) AS cent FROM d$sfx$i GROUP BY cid)""".stripMargin
+    ((1 to iters).map(i => s"${assign(i)},\n${update(i)}") ++
+      (if (assignLast) Seq(assign(iters + 1)) else Nil)).mkString(",\n")
+  }
+
+  /** The k-means fit unrolled as a DuckDB CTE chain (c0 → a1/c1 → … →
+    * final assignment `a${KmIters + 1}(vec_id, cid)`). */
+  private def duckKmeansCtes: String =
     s"""pts AS (SELECT vec_id, embedding FROM embeddings),
        |c0 AS (SELECT vec_id AS cid, list_transform(embedding, v -> CAST(v AS DOUBLE)) AS cent
        |       FROM embeddings WHERE vec_id < $KmK),
-       |$rounds,
-       |${assign(KmIters + 1, s"c$KmIters")}""".stripMargin
-  }
+       |${duckLloyd("", "pts", "embedding", KmDim, KmIters, assignLast = true)}""".stripMargin
 
   // ---- product quantization over the embedding table -----------------
   //
@@ -330,14 +351,13 @@ object Clustering {
         s"${sparkDot("embedding", "embedding")} + cc - 2 * ${sparkDot("embedding", "cent")} AS dist")
   }
 
-  /** Fit one deterministic codebook per subspace (Lloyd's over the
-    * cached points, eager k-row checkpoints per round); returns the M
-    * final centroid frames. The M fits are independent, so they submit
-    * concurrently from driver threads — their per-round checkpoint
-    * actions interleave in the scheduler instead of serializing
-    * 2·M small jobs (each fit alone can't fill the cluster; together
-    * they do). Determinism is untouched: each fit's dataflow is
-    * self-contained and quantized. */
+  /** Fit one deterministic codebook per subspace ([[lloyd]] over the
+    * cached points); returns the M final centroid frames. The M fits
+    * are independent, so they submit concurrently from driver threads
+    * — their per-round checkpoint actions interleave in the scheduler
+    * instead of serializing 2·M small jobs (each fit alone can't fill
+    * the cluster; together they do). Determinism is untouched: each
+    * fit's dataflow is self-contained and quantized. */
   private[graft] def pqFit(s: SparkSession, d: String): Seq[DataFrame] = {
     import scala.concurrent.duration.Duration
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -347,37 +367,32 @@ object Clustering {
     // the same deterministic fit — one fit per session, not per query
     val fits = (0 until PqM).map { m =>
       Future {
-        graft.FrameCache.memo(s, s"pqfit:$d:$m") {
-          val pts = pqSub(all, m)
-          var cents = pts.filter(col("vec_id") < PqK)
-            .selectExpr("vec_id AS cid", "transform(embedding, v -> CAST(v AS DOUBLE)) AS cent")
-          for (_ <- 1 to PqIters) {
-            val ck = kmUpdate(kmAssign(pts, cents), pts).localCheckpoint(true)
-            cents = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-          }
-          cents
-        }
+        graft.FrameCache.memo(s, s"pqfit:$d:$m")(lloyd(pqSub(all, m), PqK, PqIters))
       }
     }
     Await.result(Future.sequence(fits), Duration.Inf)
   }
 
-  /** Codes + reconstruction error per vector: (vec_id, c0..c3, sq_err)
-    * where c_m is the argmin codeword of subspace m and sq_err sums the
-    * per-subspace squared distances in fixed order. */
-  def pqAssign(s: SparkSession, d: String): DataFrame = {
+  /** Per-subspace argmin codeword of every vector against the fitted
+    * codebooks: (vec_id, c0..c3, d0..d3), c_m the code and d_m its
+    * squared distance in subspace m. */
+  private def pqArgmin(s: SparkSession, d: String, fitted: Seq[DataFrame]): DataFrame = {
     val all = cachedPoints(s, d)
-    val perSub = pqFit(s, d).zipWithIndex.map { case (cents, m) =>
+    fitted.zipWithIndex.map { case (cents, m) =>
       pqDist(pqSub(all, m), cents)
         .groupBy("vec_id")
         .agg(min(struct(col("dist"), col("cid"))).as("m"))
         .selectExpr("vec_id", s"m.cid AS c$m", s"m.dist AS d$m")
-    }
-    perSub.reduce(_.join(_, "vec_id"))
-      .selectExpr("vec_id", "c0", "c1", "c2", "c3",
-        "d0 + d1 + d2 + d3 AS sq_err")
-      .orderBy("vec_id")
+    }.reduce(_.join(_, "vec_id"))
   }
+
+  /** Codes + reconstruction error per vector: (vec_id, c0..c3, sq_err)
+    * where c_m is the argmin codeword of subspace m and sq_err sums the
+    * per-subspace squared distances in fixed order. */
+  def pqAssign(s: SparkSession, d: String): DataFrame =
+    pqArgmin(s, d, pqFit(s, d))
+      .selectExpr("vec_id", "c0", "c1", "c2", "c3", "d0 + d1 + d2 + d3 AS sq_err")
+      .orderBy("vec_id")
 
   /** Asymmetric-distance PQ search (the query side of an IVF-PQ index):
     * database vectors are represented ONLY by their M codes; each query
@@ -389,15 +404,8 @@ object Clustering {
     * cell filter of [[Similarity.ivfAnn]] bounds it to a cell at scale).
     * Fixed-order additions keep it deterministic. */
   private def pqCodes(s: SparkSession, d: String, fitted: Seq[DataFrame]): DataFrame =
-    graft.FrameCache.memo(s, s"pqcodes:$d") {
-      val all = cachedPoints(s, d)
-      fitted.zipWithIndex.map { case (cents, m) =>
-        pqDist(pqSub(all, m), cents)
-          .groupBy("vec_id")
-          .agg(min(struct(col("dist"), col("cid"))).as("m"))
-          .selectExpr("vec_id", s"m.cid AS c$m")
-      }.reduce(_.join(_, "vec_id"))
-    }
+    graft.FrameCache.memo(s, s"pqcodes:$d")(
+      pqArgmin(s, d, fitted).select("vec_id", "c0", "c1", "c2", "c3"))
 
   /** Attach the M distance-table lookups for the query set selected by
     * `queryPred` to a frame that carries (vec_id, c0..cM) code columns
@@ -474,27 +482,11 @@ object Clustering {
     def chain(m: Int): String = {
       val lo = m * PqSub + 1
       val hi = m * PqSub + PqSub
-      def assign(i: Int, cents: String) =
-        s"""s${m}_$i AS (SELECT p.vec_id, c.cid,
-           |  ${duckDot("c.cent", "c.cent")} - 2 * ${duckDot("p.sub", "c.cent")} AS d
-           |  FROM pts$m p CROSS JOIN $cents c),
-           |a${m}_$i AS (SELECT vec_id, cid FROM (
-           |  SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rk
-           |  FROM s${m}_$i) WHERE rk = 1)""".stripMargin
-      def update(i: Int) =
-        s"""e${m}_$i AS (SELECT a.cid, g.i AS pos,
-           |  CAST(floor(CAST(p.sub[g.i] AS DOUBLE) * 100000000) AS BIGINT) AS q
-           |  FROM a${m}_$i a JOIN pts$m p USING (vec_id) CROSS JOIN generate_series(1, $PqSub) AS g(i)),
-           |d${m}_$i AS (SELECT cid, pos, CAST(SUM(q) AS DOUBLE) / 100000000 / COUNT(*) AS coord
-           |  FROM e${m}_$i GROUP BY cid, pos),
-           |c${m}_$i AS (SELECT cid, list(coord ORDER BY pos) AS cent FROM d${m}_$i GROUP BY cid)""".stripMargin
-      val rounds = (1 to PqIters).map(i =>
-        s"${assign(i, s"c${m}_${i - 1}")},\n${update(i)}").mkString(",\n")
       s"""pts$m AS (SELECT vec_id, embedding[$lo:$hi] AS sub FROM embeddings),
          |c${m}_0 AS (SELECT vec_id AS cid,
          |  list_transform(embedding[$lo:$hi], v -> CAST(v AS DOUBLE)) AS cent
          |  FROM embeddings WHERE vec_id < $PqK),
-         |$rounds,
+         |${duckLloyd(s"${m}_", s"pts$m", "sub", PqSub, PqIters, assignLast = false)},
          |f$m AS (SELECT p.vec_id, c.cid,
          |  ${duckDot("p.sub", "p.sub")} + ${duckDot("c.cent", "c.cent")}
          |    - 2 * ${duckDot("p.sub", "c.cent")} AS dist
@@ -545,22 +537,19 @@ object Clustering {
   private val EdgeRowsPerPartition = 4000000L
 
   /** Undirected near-dup edge relation — BOTH directions of every
-    * verified pair in ONE explode pass, memoized per session (r13):
-    * nine graph entries build the identical doubled edge list, and
-    * previously each re-derived it as `pairs ∪ reversed(pairs)` and
-    * re-filled (then dropped) its own private cache — a 64-partition
-    * two-scan union where one 32-partition explode scan suffices, paid
-    * once per query instead of once per session (guide §2.4). */
+    * verified pair in ONE explode pass, memoized per session: the graph
+    * entries all read the identical doubled edge list, built once per
+    * session instead of once per query (guide §2.4). */
   private[graft] def edgeFrame(s: SparkSession, d: String): DataFrame =
     graft.FrameCache.memo(s, s"graphedges:$d") {
-      // r14: data-proportional partition count (guide §2.2 "fewer,
-      // larger partitions" + the r13 finding that ppr/bfs ran 65
-      // stages of 32 near-empty tasks over a ~10³-row edge list).
-      // The pair relation is already cached, so the count() here is
-      // the cache fill the first graph query paid anyway; the edge
-      // list then coalesces (narrow — no shuffle) to ceil(2·pairs /
-      // EdgeRowsPerPartition): ONE partition at the test SFs, growing
-      // linearly with the duplication mass at scale.
+      // data-proportional partition count (guide §2.2 "fewer, larger
+      // partitions": a ~10³-row edge list over 32 near-empty tasks
+      // makes every round 32 tasks of scheduling). The pair relation
+      // is already cached, so the count() here is the cache fill the
+      // first graph query pays anyway; the edge list then coalesces
+      // (narrow — no shuffle) to ceil(2·pairs / EdgeRowsPerPartition):
+      // ONE partition at the test SFs, growing linearly with the
+      // duplication mass at scale.
       val pairs = Dedup.minhashPairs(s, d)
       val nParts = math.max(1L,
         (2L * pairs.count() + EdgeRowsPerPartition - 1) / EdgeRowsPerPartition).toInt
@@ -572,16 +561,45 @@ object Clustering {
     }
 
   /** Vertex degrees over [[edgeFrame]] (one keyed count), memoized:
-    * the degree relation was the family's other repeatedly-recomputed
-    * subtree (pagerank/ppr re-aggregated it from the edge cache every
-    * iteration and every `nodes`/`seeds` reference; linkpred,
-    * clustercoef, modularity, assortativity each re-derived it).
-    * `src` is also the family's distinct vertex set (every vertex of
-    * the pair graph has degree ≥ 1 in both directions). */
+    * pagerank/ppr read it every round, and linkpred, clustercoef,
+    * modularity and assortativity share it. `src` is also the family's
+    * distinct vertex set (every vertex of the pair graph has degree ≥ 1
+    * in both directions). */
   private[graft] def degFrame(s: SparkSession, d: String): DataFrame =
     graft.FrameCache.memo(s, s"graphdeg:$d") {
       edgeFrame(s, d).groupBy("src").agg(count(lit(1)).as("deg"))
     }
+
+  /** The message pass every graph round runs: each edge (src, dst)
+    * carries its source's row of `frame` (keyed `v`) — one keyed join;
+    * yields (src, dst, edge columns…, frame columns…). */
+  private def send(edges: DataFrame, frame: DataFrame): DataFrame =
+    edges.join(frame.withColumnRenamed("v", "src"), "src")
+
+  /** One rank pass of PageRank/PPR: every vertex sends pr/deg along its
+    * edges, floor-quantized to 1e-12 so partial-sum order cannot shift
+    * a bit; returns the per-target BIGINT sum (v, q). */
+  private def rankSums(edges: DataFrame, deg: DataFrame, pr: DataFrame): DataFrame =
+    send(edges, pr).join(deg, "src")
+      .selectExpr("dst AS v", "CAST(floor(pr / deg * 1000000000000) AS BIGINT) AS q")
+      .groupBy("v").agg(sum(col("q")).as("q"))
+
+  /** One min-relax round over the distance frame (v, dd): the rows
+    * passing `frontier` send `step` along their edges, and each vertex
+    * keeps MIN over dist ∪ sent — one keyed join + one keyed MIN. */
+  private def relax(edges: DataFrame, dist: DataFrame, frontier: Column,
+                    step: Column): DataFrame =
+    dist.unionAll(send(edges, dist.filter(frontier)).select(col("dst").as("v"), step.as("dd")))
+      .groupBy("v").agg(min(col("dd")).as("dd"))
+
+  /** Triangles of the oriented pair list `e(a, b)`: each wedge
+    * (x,y)(y,z) closed by an (x,z) edge counts once — two keyed
+    * equi-joins, no per-vertex adjacency; one row `n_triangles`. */
+  private def triangleCount(e: DataFrame): DataFrame =
+    e.as("e1").join(e.as("e2"), col("e1.b") === col("e2.a"))
+      .select(col("e1.a").as("x"), col("e2.b").as("z"))
+      .join(e.as("e3"), col("x") === col("e3.a") && col("z") === col("e3.b"))
+      .agg(count(lit(1)).as("n_triangles"))
 
   /** Synchronous label propagation over the near-dup pair graph:
     * `rounds` fixed rounds, each node adopting the most frequent label
@@ -590,38 +608,81 @@ object Clustering {
     * (v, lbl) assignment (q_graph_labelprop aggregates it;
     * LabelPropSpec joins it against the CC labeling).
     *
-    * r13: votes ride the memoized doubled [[edgeFrame]] — one keyed
-    * join per round instead of the former two joins against the
-    * directed pair list (identical vote multiset: edge (a,b) votes
-    * lbl(b)→a and lbl(a)→b exactly once either way); the winner pick
-    * is a map-side-combinable MAX of (n, −lbl) instead of a rank
-    * window (same (count DESC, lbl ASC) argmax, no per-group sort);
-    * and the final assignment is session-memoized — q_graph_labelprop
-    * and q_graph_modularity previously each re-ran all `rounds`
-    * materialized rounds. */
+    * Each round is one [[send]] over the doubled [[edgeFrame]] (edge
+    * (a,b) votes lbl(a)→b and lbl(b)→a exactly once) plus the self
+    * vote; the winner pick is a map-side-combinable MAX of (n, −lbl) —
+    * the (count DESC, lbl ASC) argmax without a per-group sort. The
+    * final assignment is session-memoized: q_graph_labelprop and
+    * q_graph_modularity share one run of the rounds. */
   private[graft] def labelProp(s: SparkSession, d: String,
                                rounds: Int = 3): DataFrame =
     graft.FrameCache.memo(s, s"labelprop$rounds:$d") {
       val nodes = degFrame(s, d).select(col("src").as("v"))
-      var lbl = nodes.withColumn("lbl", col("v"))
-      for (_ <- 1 to rounds) {
-        val votes = edgeFrame(s, d)
-          .join(lbl.withColumnRenamed("v", "nb"), col("dst") === col("nb"))
-          .select(col("src").as("v"), col("lbl"))
+      (1 to rounds).foldLeft(nodes.withColumn("lbl", col("v"))) { (lbl, _) =>
+        val votes = send(edgeFrame(s, d), lbl).select(col("dst").as("v"), col("lbl"))
           .unionAll(lbl)
-        // named struct fields (r13 ADVICE): the winner pick compared a
-        // positional `col2` of an auto-named struct — same (count DESC,
-        // lbl ASC) argmax, now robust to field reordering. Labels are
-        // doc_ids (non-negative), so the negation cannot overflow.
-        val nxt = votes.groupBy("v", "lbl").agg(count(lit(1)).as("n"))
+        // named struct fields keep the argmax robust to field order;
+        // labels are doc_ids (non-negative), so the negation cannot
+        // overflow
+        graft.FrameCache.rebase(votes.groupBy("v", "lbl").agg(count(lit(1)).as("n"))
           .groupBy("v")
           .agg(max(struct(col("n").as("n"), (-col("lbl")).as("neg_lbl"))).as("top"))
-          .selectExpr("v", "-top.neg_lbl AS lbl")
-        val ck = nxt.localCheckpoint(true)
-        lbl = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+          .selectExpr("v", "-top.neg_lbl AS lbl"))
       }
-      lbl
     }
+
+  // ---- DuckDB twins of the graph kernels ------------------------------
+
+  /** The verified-pair CTEs plus `name(src, dst[, w])` holding both
+    * directions of every pair ([[edgeFrame]]'s twin); `w` is an
+    * optional per-edge expression over (a, b), symmetric in a and b. */
+  private def duckEdges(name: String = "edges", src: String = "src", dst: String = "dst",
+                        w: String = ""): String = {
+    val (wa, wb) = if (w.isEmpty) ("", "") else (s", $w AS w", s", $w")
+    s"""${Dedup.duckVerifiedPairsCtes},
+       |$name AS (SELECT a AS $src, b AS $dst$wa FROM verified
+       |  UNION ALL SELECT b, a$wb FROM verified)""".stripMargin
+  }
+
+  /** The verified-pair CTEs plus the oriented pair list `e(a, b)`. */
+  private def duckPairs: String =
+    s"${Dedup.duckVerifiedPairsCtes},\ne AS (SELECT a, b FROM verified)"
+
+  /** [[degFrame]]'s and the vertex set's twins over `edges`. */
+  private val duckDeg = "deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)"
+  private val duckNodes = "nodes AS (SELECT DISTINCT src AS v FROM edges)"
+
+  /** The three rounds of a graph entry's CTE chain, round i built by
+    * `round(i)`. */
+  private def duckRounds(round: Int => String): String =
+    (1 to 3).map(round).mkString(",\n")
+
+  /** [[rankSums]]'s twin: `name(v, …)` over the `prev(v, pr)` ranks,
+    * where `sel` places the quantized contribution sum `q` it is given. */
+  private def duckRankPass(name: String, prev: String, sel: String => String): String =
+    s"""$name AS (SELECT dst AS v,
+       |  ${sel("SUM(CAST(floor(pr / deg * 1000000000000) AS BIGINT))")}
+       |  FROM edges JOIN $prev ON $prev.v = edges.src
+       |  JOIN deg ON deg.src = edges.src
+       |  GROUP BY dst)""".stripMargin
+
+  /** [[relax]]'s twin, round i over `d{i-1}(v, dd)`: the frontier is
+    * the rows settled at dd = i−1 (or every row), the step `f.dd + step`. */
+  private def duckRelax(step: String, frontier: Boolean)(i: Int): String = {
+    val on = if (frontier) s" AND f.dd = ${i - 1}" else ""
+    s"""d$i AS (SELECT v, MIN(dd) AS dd FROM (
+       |  SELECT v, dd FROM d${i - 1}
+       |  UNION ALL
+       |  SELECT e.dst, f.dd + $step FROM edges e
+       |  JOIN d${i - 1} f ON f.v = e.src$on) GROUP BY v)""".stripMargin
+  }
+
+  /** [[triangleCount]]'s twin over `e(a, b)`: the select list and FROM
+    * clause of the wedge-closing count. */
+  private val duckTriangles =
+    """COUNT(*) AS n_triangles
+      |  FROM e e1 JOIN e e2 ON e1.b = e2.a
+      |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b""".stripMargin
 
   /** DuckDB twin of [[labelProp]], ending in `l3(v, lbl)` over the
     * verified-pair edges `e(a, b)`: every node starts as its own label,
@@ -637,12 +698,11 @@ object Clustering {
          |  SELECT v, lbl, ROW_NUMBER() OVER (PARTITION BY v
          |    ORDER BY n DESC, lbl) AS rk FROM v$i) WHERE rk = 1)""".stripMargin
     }
-    s"""${Dedup.duckVerifiedPairsCtes},
-       |e AS (SELECT a, b FROM verified),
+    s"""$duckPairs,
        |n0 AS (SELECT DISTINCT v FROM (
        |  SELECT a AS v FROM e UNION ALL SELECT b FROM e)),
        |l0 AS (SELECT v, v AS lbl FROM n0),
-       |${(1 to 3).map(round).mkString(",\n")}""".stripMargin
+       |${duckRounds(round)}""".stripMargin
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -921,7 +981,7 @@ object Clustering {
           .join(lbl.selectExpr("v AS b", "lbl AS lb").hint("shuffle_hash"), "b")
         val intra = withLbl.filter(col("la") === col("lb"))
           .groupBy(col("la").as("c")).agg(count(lit(1)).as("ec"))
-        val dsum = degFrame(s, d).withColumnRenamed("src", "v") // r13: memoized degrees
+        val dsum = degFrame(s, d).withColumnRenamed("src", "v")
           .join(lbl, "v")
           .groupBy(col("lbl").as("c")).agg(sum(col("deg")).cast("bigint").as("dc"))
         dsum.join(intra, Seq("c"), "left")
@@ -966,21 +1026,13 @@ object Clustering {
       "q_graph_triangles",
       (s, d) => {
         val e = Dedup.minhashPairs(s, d).select("a", "b")
-        val wedges = e.as("e1")
-          .join(e.as("e2"), col("e1.b") === col("e2.a"))
-          .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-        wedges.join(e.as("e3"),
-            col("x") === col("e3.a") && col("z") === col("e3.b"))
-          .agg(count(lit(1)).as("n_triangles"))
+        triangleCount(e)
           .crossJoin(e.agg(count(lit(1)).as("n_edges")))
           .select("n_edges", "n_triangles")
       },
-      Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-              |e AS (SELECT a, b FROM verified)
+      Some(s"""WITH $duckPairs
               |SELECT (SELECT COUNT(*) FROM e) AS n_edges,
-              |  COUNT(*) AS n_triangles
-              |FROM e e1 JOIN e e2 ON e1.b = e2.a
-              |          JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b""".stripMargin)),
+              |  $duckTriangles""".stripMargin)),
 
     // Global clustering coefficient (transitivity) — the triangle
     // count's denominator: C = 3·triangles / wedges, where the wedge
@@ -992,32 +1044,20 @@ object Clustering {
     QueryDef(
       "q_graph_clustercoef",
       (s, d) => {
-        val e = Dedup.minhashPairs(s, d).select("a", "b")
-        val deg = degFrame(s, d) // r13: memoized degrees
-          .select(col("src").as("v"), col("deg"))
-        val wedges = deg.agg(
+        val wedges = degFrame(s, d).agg(
           sum(expr("deg * (deg - 1) DIV 2")).cast("bigint").as("n_wedges"),
           count(lit(1)).as("n_vertices"))
-        val wedgePaths = e.as("e1")
-          .join(e.as("e2"), col("e1.b") === col("e2.a"))
-          .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-        val tri = wedgePaths.join(e.as("e3"),
-            col("x") === col("e3.a") && col("z") === col("e3.b"))
-          .agg(count(lit(1)).as("n_triangles"))
-        wedges.crossJoin(tri)
+        wedges.crossJoin(triangleCount(Dedup.minhashPairs(s, d).select("a", "b")))
           .selectExpr("n_vertices", "n_wedges", "n_triangles",
             "CASE WHEN n_wedges = 0 THEN CAST(0.0 AS DOUBLE) " +
               "ELSE CAST(3.0 AS DOUBLE) * n_triangles / n_wedges END AS transitivity")
       },
-      Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-              |e AS (SELECT a, b FROM verified),
+      Some(s"""WITH $duckPairs,
               |deg AS (SELECT v, COUNT(*) AS deg FROM (
               |  SELECT a AS v FROM e UNION ALL SELECT b AS v FROM e) GROUP BY v),
               |w AS (SELECT CAST(SUM(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges,
               |             COUNT(*) AS n_vertices FROM deg),
-              |t AS (SELECT COUNT(*) AS n_triangles
-              |      FROM e e1 JOIN e e2 ON e1.b = e2.a
-              |                JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b)
+              |t AS (SELECT $duckTriangles)
               |SELECT n_vertices, n_wedges, n_triangles,
               |  CASE WHEN n_wedges = 0 THEN CAST(0.0 AS DOUBLE)
               |       ELSE CAST(3.0 AS DOUBLE) * n_triangles / n_wedges END AS transitivity
@@ -1025,81 +1065,51 @@ object Clustering {
 
     // PageRank (3 unrolled damped iterations) over the near-dup graph —
     // "which documents sit at the center of a duplication cluster". Each
-    // iteration is one keyed join + one combinable sum; contributions are
-    // floor-quantized so partial-sum order can't shift a bit. Top 20 by
-    // (rank, id) pins the head exactly.
+    // iteration is one [[rankSums]] pass (keyed join + combinable sum of
+    // floor-quantized contributions, so partial-sum order can't shift a
+    // bit). Top 20 by (rank, id) pins the head exactly.
     QueryDef(
       "q_graph_pagerank",
       (s, d) => {
-        // r13: memoized edge/degree relations (see edgeFrame/degFrame)
-        // replace the per-query union+cache and the per-iteration
-        // degree re-aggregation.
         val edges = edgeFrame(s, d)
         val deg = degFrame(s, d)
-        var pr = deg.select(col("src").as("v"), lit(1.0).as("pr"))
-        for (_ <- 1 to 3) {
-          pr = edges.join(pr.withColumnRenamed("v", "src"), "src")
-            .join(deg, "src")
-            .selectExpr("dst", "CAST(floor(pr / deg * 1000000000000) AS BIGINT) AS q")
-            .groupBy("dst")
-            .agg((lit(0.15) + lit(0.85) * (sum(col("q")).cast("double") / 1000000000000.0)).as("pr"))
-            .withColumnRenamed("dst", "v")
+        val pr = (1 to 3).foldLeft(deg.select(col("src").as("v"), lit(1.0).as("pr"))) { (pr, _) =>
+          rankSums(edges, deg, pr).select(col("v"),
+            (lit(0.15) + lit(0.85) * (col("q").cast("double") / 1000000000000.0)).as("pr"))
         }
         pr.join(deg.withColumnRenamed("src", "v"), "v")
           .orderBy(col("pr").desc, col("v"))
           .limit(20)
           .select("v", "deg", "pr")
-      }, {
-        def iter(i: Int): String =
-          s"""p$i AS (SELECT dst AS v,
-             |  0.15 + 0.85 * (CAST(SUM(CAST(floor(pr / deg * 1000000000000) AS BIGINT)) AS DOUBLE)
-             |                 / 1000000000000) AS pr
-             |  FROM edges JOIN p${i - 1} ON p${i - 1}.v = edges.src
-             |             JOIN deg ON deg.src = edges.src
-             |  GROUP BY dst)""".stripMargin
-        Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-                |edges AS (SELECT a AS src, b AS dst FROM verified
-                |          UNION ALL SELECT b, a FROM verified),
-                |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
-                |p0 AS (SELECT src AS v, CAST(1.0 AS DOUBLE) AS pr FROM deg),
-                |${iter(1)},
-                |${iter(2)},
-                |${iter(3)}
-                |SELECT p3.v, deg.deg, p3.pr FROM p3 JOIN deg ON deg.src = p3.v
-                |ORDER BY p3.pr DESC, p3.v LIMIT 20""".stripMargin)
-      }),
+      },
+      Some(s"""WITH ${duckEdges()},
+              |$duckDeg,
+              |p0 AS (SELECT src AS v, CAST(1.0 AS DOUBLE) AS pr FROM deg),
+              |${duckRounds(i => duckRankPass(s"p$i", s"p${i - 1}",
+                  q => s"0.15 + 0.85 * (CAST($q AS DOUBLE) / 1000000000000) AS pr"))}
+              |SELECT p3.v, deg.deg, p3.pr FROM p3 JOIN deg ON deg.src = p3.v
+              |ORDER BY p3.pr DESC, p3.v LIMIT 20""".stripMargin)),
 
     // Personalized PageRank — random walk with restart to a SEED SET
     // (the 4 smallest graph nodes): "what is near MY documents" rather
     // than global centrality; the similarity-expansion primitive
     // recommendation and related-content passes run. Same quantized
-    // per-iteration discipline as q_graph_pagerank, but the rank frame
-    // is rebuilt over ALL nodes each round (left joins against the
-    // node frame) so seeds keep their restart mass even with no
-    // in-edges and the trajectory is total — both engines replay it
-    // CTE-for-CTE.
+    // [[rankSums]] pass as q_graph_pagerank, but the rank frame is
+    // rebuilt over ALL nodes each round (left joins against the node
+    // frame) so seeds keep their restart mass even with no in-edges and
+    // the trajectory is total — both engines replay it CTE-for-CTE.
     QueryDef(
       "q_graph_ppr",
       (s, d) => {
-        // r13: memoized edge/degree relations — the rank rebuild
-        // references nodes/seeds once per iteration and the final
-        // rollup twice more; each reference is now a cached-degree
-        // scan instead of a fresh edge aggregation.
         val edges = edgeFrame(s, d)
         val deg = degFrame(s, d)
         val nodes = deg.select(col("src").as("v"))
         val seeds = nodes.orderBy("v").limit(4)
           .select(col("v"), lit(0.25).as("r"))
-        var pr = nodes.join(seeds, Seq("v"), "left_outer")
-          .selectExpr("v", "coalesce(r, CAST(0.0 AS DOUBLE)) AS pr")
-        for (_ <- 1 to 3) {
-          val t = edges.join(pr.withColumnRenamed("v", "src"), "src")
-            .join(deg, "src")
-            .selectExpr("dst AS v", "CAST(floor(pr / deg * 1000000000000) AS BIGINT) AS q")
-            .groupBy("v").agg(sum(col("q")).as("q"))
-          pr = nodes
-            .join(seeds, Seq("v"), "left_outer")
-            .join(t, Seq("v"), "left_outer")
+        val restart = nodes.join(seeds, Seq("v"), "left_outer")
+        val pr = (1 to 3).foldLeft(
+            restart.selectExpr("v", "coalesce(r, CAST(0.0 AS DOUBLE)) AS pr")) { (pr, _) =>
+          restart.join(rankSums(edges, deg, pr), Seq("v"), "left_outer")
             .selectExpr("v",
               "0.15 * coalesce(r, CAST(0.0 AS DOUBLE)) " +
                 "+ 0.85 * (CAST(coalesce(q, CAST(0 AS BIGINT)) AS DOUBLE) / 1000000000000) AS pr")
@@ -1110,28 +1120,20 @@ object Clustering {
           .limit(20)
       }, {
         def iter(i: Int): String =
-          s"""t$i AS (SELECT dst AS v,
-             |    CAST(SUM(CAST(floor(pr / deg * 1000000000000) AS BIGINT)) AS BIGINT) AS q
-             |  FROM edges JOIN p${i - 1} ON p${i - 1}.v = edges.src
-             |             JOIN deg ON deg.src = edges.src
-             |  GROUP BY dst),
+          s"""${duckRankPass(s"t$i", s"p${i - 1}", q => s"CAST($q AS BIGINT) AS q")},
              |p$i AS (SELECT n.v,
              |    0.15 * COALESCE(s.r, 0.0)
              |    + 0.85 * (CAST(COALESCE(t$i.q, 0) AS DOUBLE) / 1000000000000) AS pr
              |  FROM nodes n LEFT JOIN seeds s ON s.v = n.v
              |  LEFT JOIN t$i ON t$i.v = n.v)""".stripMargin
-        Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-                |edges AS (SELECT a AS src, b AS dst FROM verified
-                |          UNION ALL SELECT b, a FROM verified),
-                |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
+        Some(s"""WITH ${duckEdges()},
+                |$duckDeg,
                 |nodes AS (SELECT src AS v FROM deg),
                 |seeds AS (SELECT v, CAST(0.25 AS DOUBLE) AS r FROM
                 |  (SELECT v FROM nodes ORDER BY v LIMIT 4)),
                 |p0 AS (SELECT n.v, COALESCE(s.r, 0.0) AS pr
                 |  FROM nodes n LEFT JOIN seeds s ON s.v = n.v),
-                |${iter(1)},
-                |${iter(2)},
-                |${iter(3)}
+                |${duckRounds(iter)}
                 |SELECT p3.v, CAST(CASE WHEN s.v IS NULL THEN 0 ELSE 1 END AS INT) AS is_seed,
                 |  p3.pr
                 |FROM p3 LEFT JOIN seeds s ON s.v = p3.v
@@ -1143,101 +1145,64 @@ object Clustering {
     // blast-radius primitive ("which documents sit within k hops of a
     // known-bad set"). BFS over unit edges settles level by level, so
     // round i only expands the frontier that settled at distance i−1:
-    // each round is ONE keyed join (edges ⋈ frontier) + ONE keyed MIN —
-    // the pregel message pass as relational ops, distances are small
-    // exact integers, and the trajectory replays CTE-for-CTE in the
-    // oracle. Deliverable: the hop histogram with membership checksums;
-    // hops = −1 is the unreachable remainder.
+    // each round is one [[relax]] (edges ⋈ frontier + keyed MIN) — the
+    // pregel message pass as relational ops, distances are small exact
+    // integers, and the trajectory replays CTE-for-CTE in the oracle.
+    // Deliverable: the hop histogram with membership checksums; hops =
+    // −1 is the unreachable remainder.
     QueryDef(
       "q_graph_bfs",
       (s, d) => {
-        // r13: memoized edges; the vertex set is degFrame's key column
-        // (already distinct) instead of a per-query edge distinct.
         val edges = edgeFrame(s, d)
         val nodes = degFrame(s, d).select(col("src").as("v"))
-        var dist = nodes.filter(col("v") % 10 === 0)
-          .select(col("v"), lit(0L).as("dd"))
-        for (i <- 1 to 3) {
-          dist = dist.unionAll(
-              edges.join(
-                  dist.filter(col("dd") === (i - 1).toLong)
-                    .withColumnRenamed("v", "src"), "src")
-                .select(col("dst").as("v"), lit(i.toLong).as("dd")))
-            .groupBy("v").agg(min(col("dd")).as("dd"))
+        val dist = (1 to 3).foldLeft(
+            nodes.filter(col("v") % 10 === 0).select(col("v"), lit(0L).as("dd"))) {
+          (dist, i) => relax(edges, dist, col("dd") === (i - 1).toLong, lit(i.toLong))
         }
-        val out = nodes.join(dist, Seq("v"), "left_outer")
+        nodes.join(dist, Seq("v"), "left_outer")
           .selectExpr("v", "CAST(coalesce(dd, -1) AS BIGINT) AS hops")
           .groupBy("hops")
           .agg(count(lit(1)).as("n_vertices"),
             sum(col("v") * 7).cast("bigint").as("member_checksum"))
           .orderBy("hops")
-        out
-      }, {
-        def round(i: Int): String =
-          s"""d$i AS (SELECT v, MIN(dd) AS dd FROM (
-             |  SELECT v, dd FROM d${i - 1}
-             |  UNION ALL
-             |  SELECT e.dst, f.dd + 1 FROM edges e
-             |  JOIN d${i - 1} f ON f.v = e.src AND f.dd = ${i - 1}) GROUP BY v)""".stripMargin
-        Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-                |edges AS (SELECT a AS src, b AS dst FROM verified
-                |          UNION ALL SELECT b, a FROM verified),
-                |nodes AS (SELECT DISTINCT src AS v FROM edges),
-                |d0 AS (SELECT v, CAST(0 AS BIGINT) AS dd FROM nodes WHERE v % 10 = 0),
-                |${round(1)},
-                |${round(2)},
-                |${round(3)}
-                |SELECT CAST(COALESCE(d3.dd, -1) AS BIGINT) AS hops,
-                |  COUNT(*) AS n_vertices,
-                |  CAST(SUM(nodes.v * 7) AS BIGINT) AS member_checksum
-                |FROM nodes LEFT JOIN d3 ON d3.v = nodes.v
-                |GROUP BY 1 ORDER BY 1""".stripMargin)
-      }),
+      },
+      Some(s"""WITH ${duckEdges()},
+              |$duckNodes,
+              |d0 AS (SELECT v, CAST(0 AS BIGINT) AS dd FROM nodes WHERE v % 10 = 0),
+              |${duckRounds(duckRelax("1", frontier = true))}
+              |SELECT CAST(COALESCE(d3.dd, -1) AS BIGINT) AS hops,
+              |  COUNT(*) AS n_vertices,
+              |  CAST(SUM(nodes.v * 7) AS BIGINT) AS member_checksum
+              |FROM nodes LEFT JOIN d3 ON d3.v = nodes.v
+              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Weighted single-source shortest paths (3 Bellman-Ford relaxation
     // rounds) from the smallest graph node, deterministic integer edge
     // weights w = (a+b) % 10 + 1. Unlike BFS, weighted distances can
     // IMPROVE after first discovery, so every round relaxes the FULL
     // settled set (dist ∪ dist+edge, keyed MIN) rather than a frontier
-    // — still one keyed join + one keyed agg per round, the standard
+    // — the same [[relax]] with an always-true frontier, the standard
     // distributed Bellman-Ford step, exactly replayable as chained
     // CTEs. Top-20 nearest by (distance, node) pins the head.
     QueryDef(
       "q_graph_sssp",
       (s, d) => {
-        // r13: memoized edges; the weight is symmetric in (src, dst),
-        // so it derives from the shared undirected relation directly.
+        // the weight is symmetric in (src, dst), so it derives from the
+        // shared undirected relation directly
         val edges = edgeFrame(s, d)
           .selectExpr("src", "dst", "(src + dst) % 10 + 1 AS w")
         val nodes = degFrame(s, d).select(col("src").as("v"))
-        var dist = nodes.orderBy("v").limit(1)
-          .select(col("v"), lit(0L).as("dd"))
-        for (_ <- 1 to 3) {
-          dist = dist.unionAll(
-              edges.join(dist.withColumnRenamed("v", "src"), "src")
-                .selectExpr("dst AS v", "dd + w AS dd"))
-            .groupBy("v").agg(min(col("dd")).as("dd"))
-        }
-        dist.orderBy(col("dd"), col("v")).limit(20)
-      }, {
-        def round(i: Int): String =
-          s"""d$i AS (SELECT v, MIN(dd) AS dd FROM (
-             |  SELECT v, dd FROM d${i - 1}
-             |  UNION ALL
-             |  SELECT e.dst, f.dd + e.w FROM edges e
-             |  JOIN d${i - 1} f ON f.v = e.src) GROUP BY v)""".stripMargin
-        Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-                |edges AS (SELECT a AS src, b AS dst, (a + b) % 10 + 1 AS w FROM verified
-                |          UNION ALL SELECT b, a, (a + b) % 10 + 1 FROM verified),
-                |nodes AS (SELECT DISTINCT src AS v FROM edges),
-                |d0 AS (SELECT v, CAST(0 AS BIGINT) AS dd
-                |       FROM (SELECT v FROM nodes ORDER BY v LIMIT 1)),
-                |${round(1)},
-                |${round(2)},
-                |${round(3)}
-                |SELECT v, CAST(dd AS BIGINT) AS dd FROM d3
-                |ORDER BY dd, v LIMIT 20""".stripMargin)
-      }),
+        (1 to 3).foldLeft(nodes.orderBy("v").limit(1).select(col("v"), lit(0L).as("dd"))) {
+          (dist, _) => relax(edges, dist, lit(true), col("dd") + col("w"))
+        }.orderBy(col("dd"), col("v")).limit(20)
+      },
+      Some(s"""WITH ${duckEdges(w = "(a + b) % 10 + 1")},
+              |$duckNodes,
+              |d0 AS (SELECT v, CAST(0 AS BIGINT) AS dd
+              |       FROM (SELECT v FROM nodes ORDER BY v LIMIT 1)),
+              |${duckRounds(duckRelax("e.w", frontier = false))}
+              |SELECT v, CAST(dd AS BIGINT) AS dd FROM d3
+              |ORDER BY dd, v LIMIT 20""".stripMargin)),
 
     // k-core decomposition (k = 3, 3 peeling rounds): iteratively strip
     // nodes with degree < 3 until (up to the round bound) only the
@@ -1245,22 +1210,19 @@ object Clustering {
     // dense" reduction that bounds clique search and flags cohesive
     // duplication families beyond what the raw triangle count shows.
     // Each round is one keyed degree agg + two semi-style joins that
-    // keep edges whose BOTH endpoints survive, checkpointed so round
-    // r+1 starts from materialized rows (the labelProp discipline).
+    // keep edges whose BOTH endpoints survive, re-based so round r+1
+    // starts from materialized rows (the labelProp discipline).
     // Output: the surviving core's node/edge counts + node checksum.
     QueryDef(
       "q_graph_kcore",
       (s, d) => {
-        var edges = edgeFrame(s, d) // r13: memoized doubled edge list
-        for (_ <- 1 to 3) {
+        val edges = (1 to 3).foldLeft(edgeFrame(s, d)) { (edges, _) =>
           val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
             .filter(col("deg") >= 3).select("src")
-          val next = edges
+          graft.FrameCache.rebase(edges
             .join(keep, "src")
             .join(keep.withColumnRenamed("src", "dst"), "dst")
-            .select("src", "dst")
-          val ck = next.localCheckpoint(true)
-          edges = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+            .select("src", "dst"))
         }
         val nodes = edges.select(col("src").as("v")).distinct()
         nodes.agg(count(lit(1)).as("n_core_nodes"),
@@ -1275,12 +1237,8 @@ object Clustering {
              |e$i AS (SELECT e.src, e.dst FROM e${i - 1} e
              |  JOIN keep$i ka ON ka.src = e.src
              |  JOIN keep$i kb ON kb.src = e.dst)""".stripMargin
-        Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-                |e0 AS (SELECT a AS src, b AS dst FROM verified
-                |       UNION ALL SELECT b, a FROM verified),
-                |${round(1)},
-                |${round(2)},
-                |${round(3)},
+        Some(s"""WITH ${duckEdges("e0")},
+                |${duckRounds(round)},
                 |n AS (SELECT DISTINCT src AS v FROM e3)
                 |SELECT (SELECT COUNT(*) FROM n) AS n_core_nodes,
                 |  (SELECT COUNT(*) // 2 FROM e3) AS n_core_edges,
@@ -1381,8 +1339,6 @@ object Clustering {
       "q_graph_linkpred",
       (s, d) => {
         val pairs = Dedup.minhashPairs(s, d).select("a", "b")
-        // r13: neighbor and degree relations from the memoized family
-        // frames instead of a per-query union + re-aggregation
         val nbr = edgeFrame(s, d)
           .select(col("src").as("z"), col("dst").as("v"))
         // deg >= 2: a witness with one neighbor can never complete a
@@ -1411,9 +1367,7 @@ object Clustering {
           .orderBy(col("is_edge"), col("aa_micro").desc, col("pa"), col("pb"))
           .limit(20)
       },
-      Some(s"""WITH ${Dedup.duckVerifiedPairsCtes},
-              |nbr AS (SELECT a AS z, b AS v FROM verified
-              |        UNION ALL SELECT b, a FROM verified),
+      Some(s"""WITH ${duckEdges("nbr", "z", "v")},
               |deg AS (SELECT z, COUNT(*) AS deg FROM nbr GROUP BY 1),
               |wtd AS (
               |  SELECT nbr.z, nbr.v,
@@ -1503,7 +1457,6 @@ object Clustering {
     QueryDef(
       "q_graph_assortativity",
       (s, d) => {
-        // r13: memoized doubled edges + degrees
         val edges = edgeFrame(s, d)
           .select(col("src").as("a"), col("dst").as("b"))
         val deg = degFrame(s, d).withColumnRenamed("src", "a")

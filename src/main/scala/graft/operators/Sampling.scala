@@ -300,9 +300,8 @@ object Sampling {
           val (cid, radius) = (top.getLong(0), top.getDouble(1))
           picks = picks :+ ((r.toLong, cid, radius))
           val cEmb = pts.filter(col("vec_id") === cid).head().getSeq[Float](1)
-          val ck = md.selectExpr("vec_id", "embedding",
-            s"least(md, ${d2(cEmb)}) AS md").localCheckpoint(true)
-          md = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+          md = graft.FrameCache.rebase(md.selectExpr("vec_id", "embedding",
+            s"least(md, ${d2(cEmb)}) AS md"))
         }
         import s.implicits._
         picks.toDF("round", "center_id", "radius").orderBy("round")

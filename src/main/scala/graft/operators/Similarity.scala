@@ -711,12 +711,13 @@ object Similarity {
   def ivfProbeRecall(s: SparkSession, d: String, cells: Int,
                      nprobe: Int, k: Int = 5, queryLimit: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.ensureCosine(s)
-    val e = Tables.embeddings(s, d)
-    val cent = e.filter(col("vec_id") < cells)
+    // one table load serves the cell ranking and the exact scoring
+    val n = withNorm(s, d)
+    val cent = n.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
     val wAssign = Window.partitionBy("vec_id")
       .orderBy(col("c_cos").desc, col("cent_id"))
-    val ranked = e.join(broadcast(cent))
+    val ranked = n.join(broadcast(cent))
       .selectExpr("vec_id", "cent_id", "cosine_sim(embedding, cent_emb) AS c_cos")
       .withColumn("rn", row_number().over(wAssign))
     val members = ranked.filter(col("rn") === 1)
@@ -728,7 +729,6 @@ object Similarity {
     val candIds = probes.join(members,
         col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
-    val n = withNorm(s, d)
     recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, candIds), k)
       .selectExpr(s"$cells AS cells", s"$nprobe AS nprobe", "n_queries", "n_cand", "n_matched",
         "recall_at_k")
@@ -978,8 +978,7 @@ object Similarity {
             s"${sparkIntDot("q_emb", "embedding")} AS rel")
           .orderBy(col("rel").desc, col("vec_id"))
           .limit(16)
-        val ck = cand0.localCheckpoint(true)
-        val cand = ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+        val cand = graft.FrameCache.rebase(cand0)
         var sel = cand.orderBy(col("rel").desc, col("vec_id")).limit(1)
           .select(lit(1).as("pick"), col("vec_id"), col("rel"), col("rel").as("score"))
         for (t <- 2 to 5) {
@@ -993,8 +992,7 @@ object Similarity {
             .groupBy("vec_id", "rel").agg(max(col("sim")).as("mx"))
             .selectExpr(s"$t AS pick", "vec_id", "rel", "rel - mx AS score")
             .orderBy(col("score").desc, col("vec_id")).limit(1)
-          val sck = sel.unionByName(pick).localCheckpoint(true)
-          sel = sck.sparkSession.createDataFrame(sck.rdd, sck.schema)
+          sel = graft.FrameCache.rebase(sel.unionByName(pick))
         }
         sel.selectExpr("pick", "vec_id",
             "CAST(rel AS DOUBLE) / 100000000000000 AS rel",

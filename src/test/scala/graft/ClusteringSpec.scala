@@ -132,6 +132,37 @@ class ClusteringSpec extends AnyFunSuite {
       s"PQ total SSE ${agg.getDouble(3)} !< whole-vector k-means SSE $km")
   }
 
+  test("iterative graph, k-means and PQ entries keep every output row") {
+    import org.apache.spark.sql.functions._
+    // (row count : order-independent row-hash sum) per entry, in the
+    // tembench suite's fingerprint form; pinned so that a change to the
+    // shared message-pass or Lloyd kernels that shifts any row of any
+    // entry fails here, not only in oracle parity
+    val expected = Map(
+      "q_graph_pagerank" -> "20:-20586837792457448914",
+      "q_graph_ppr" -> "20:-10972959355897735708",
+      "q_graph_bfs" -> "3:17040131232312030376",
+      "q_graph_sssp" -> "3:-9218873725055053976",
+      "q_graph_kcore" -> "1:-71752941293896940",
+      "q_graph_labelprop" -> "21:30144275866449266991",
+      "q_graph_modularity" -> "1:-8057798433473874653",
+      "q_graph_triangles" -> "1:7396463958141115855",
+      "q_graph_clustercoef" -> "1:8788731208763023813",
+      "q_kmeans" -> "4:-13606828129028440313",
+      "q_kmeans_silhouette" -> "4:11766214945623350681",
+      "q_pq_assign" -> "500:8710066988981646976",
+      "q_pq_search" -> "12:-13831957808259922169",
+      "q_ivfpq" -> "20:-538669539211246956",
+      "q_pq_recall" -> "1:9100714886878829062")
+    val got = expected.keys.map { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      val hash = xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*)
+      val r = df.agg(count(lit(1)), sum(hash.cast("decimal(38,0)"))).head()
+      name -> s"${r.getLong(0)}:${r.get(1)}"
+    }.toMap
+    assert(got === expected)
+  }
+
   test("pagerank mass stays near |V| and ranks are in (0, |V|)") {
     val pr = SparkEntry.queries("q_graph_pagerank")(spark, sf)
     val rows = pr.collect()
