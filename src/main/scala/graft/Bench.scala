@@ -19,10 +19,8 @@ import scala.util.control.NonFatal
   * tagged baselines (the tag is mechanical, not a list convention);
   * naming one in SPARK_GRAFT_BENCH_ONLY still runs it.
   *
-  * Each query runs once untimed-warm? No: the JVM+session warm-up is
-  * amortized by a single untimed warmup query; per-query numbers are
-  * then single timed runs (the driver compares totals across rounds, so
-  * jitter matters less than honesty).
+  * One untimed warm-up query absorbs the JVM and session start-up;
+  * each query is then timed in a single run.
   *
   * Evaluation is forced through the noop sink, not `count()`: under a
   * `count(1)` aggregate Catalyst prunes unused projections and drops the

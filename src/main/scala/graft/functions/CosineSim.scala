@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression: quantized cosine similarity between two
@@ -196,27 +196,14 @@ object GraftFunctions {
     }
   }
 
-  /** [[MinHashSigs]] fallback for extension-less sessions: same fused
-    * signature over a boxed Seq. */
+  /** [[MinHashSigs]] fallback for extension-less sessions: the same
+    * fold over the boxed array, so a null element is skipped and an
+    * all-null or empty array gives a null signature, as natively. */
   def ensureMinhashSigs(spark: SparkSession): Unit = {
     if (!spark.catalog.functionExists("minhash_sigs")) {
-      val as = graft.operators.Dedup.MinhashPerms.map(_._1).toArray
-      val bs = graft.operators.Dedup.MinhashPerms.map(_._2).toArray
-      val p = graft.operators.Dedup.MinhashP
-      spark.udf.register("minhash_sigs", (hs: Seq[Long]) => {
-        if (hs == null || hs.isEmpty) null
-        else {
-          val mins = Array.fill(as.length)(Long.MaxValue)
-          hs.foreach { s =>
-            var k = 0
-            while (k < mins.length) {
-              val h = (as(k) * s + bs(k)) % p
-              if (h < mins(k)) mins(k) = h
-              k += 1
-            }
-          }
-          mins.toSeq
-        }
+      spark.udf.register("minhash_sigs", (hs: Seq[java.lang.Long]) => {
+        val sig = if (hs == null) null else MinHashSigs.signature(new GenericArrayData(hs))
+        if (sig == null) null else sig.toLongArray().toSeq
       }: Seq[Long])
     }
   }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import graft.operators.Dedup
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Encoder, SparkSession, functions => F}
@@ -18,25 +17,11 @@ import org.apache.spark.sql.{Encoder, SparkSession, functions => F}
   * MinHash viable at 100 TB, and it's the property the HOF formulation
   * (array_min over a materialized array) can't express incrementally.
   */
-class MinHashSignature(
-    perms: Seq[(Long, Long)] = Dedup.MinhashPerms,
-    p: Long = Dedup.MinhashP)
-  extends Aggregator[Long, Array[Long], Seq[Long]] {
+class MinHashSignature extends Aggregator[Long, Array[Long], Seq[Long]] {
 
-  private val as = perms.map(_._1).toArray
-  private val bs = perms.map(_._2).toArray
+  override def zero: Array[Long] = MinHashSigs.zero
 
-  override def zero: Array[Long] = Array.fill(perms.size)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], s: Long): Array[Long] = {
-    var i = 0
-    while (i < buf.length) {
-      val h = (as(i) * s + bs(i)) % p
-      if (h < buf(i)) buf(i) = h
-      i += 1
-    }
-    buf
-  }
+  override def reduce(buf: Array[Long], s: Long): Array[Long] = MinHashSigs.fold(buf, s)
 
   override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
     var i = 0

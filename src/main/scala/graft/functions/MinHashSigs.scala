@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * signature of a shingle-hash array in ONE fused pass — the HOF
   * formulation runs 16 separate `array_min(transform(...))` scans per
   * row, each an interpreted per-element lambda; this keeps all 16
-  * running minima in locals and reads the array once.
+  * running minima in one buffer and reads the array once.
   *
   * Permutation constants and modulus are the library's fixed MinHash
   * parameters ([[graft.operators.Dedup.MinhashPerms]]) — identical to
@@ -38,65 +38,52 @@ case class MinHashSigs(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
     copy(child = newChild)
 
+  override def nullSafeEval(input: Any): Any =
+    MinHashSigs.signature(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"""${ev.value} = graft.functions.MinHashSigs.signature($x);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+}
+
+/** The one MinHash fold: the native expression (interpreted and
+  * codegen), its extension-less UDF fallback and the
+  * [[MinHashSignature]] aggregator all run these loops. */
+object MinHashSigs {
   private val as = Dedup.MinhashPerms.map(_._1).toArray
   private val bs = Dedup.MinhashPerms.map(_._2).toArray
   private val p = Dedup.MinhashP
 
-  // Null ELEMENTS are skipped, matching the HOF twin: `transform` maps a
-  // null shingle hash to a null permuted hash and `array_min` skips null
-  // elements — so the minimum ranges over the non-null members only, and
-  // the signature is null exactly when no non-null member exists (the
-  // all-null array_min). Reading getLong past isNullAt would instead
-  // fold a phantom 0 hash into every permutation.
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val mins = Array.fill(as.length)(Long.MaxValue)
-    var seen = 0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i)) {
-        seen += 1
-        val s = x.getLong(i)
-        var k = 0
-        while (k < mins.length) {
-          val h = (as(k) * s + bs(k)) % p
-          if (h < mins(k)) mins(k) = h
-          k += 1
-        }
-      }
-      i += 1
+  /** The empty running minimum: one `Long.MaxValue` per permutation. */
+  def zero: Array[Long] = Array.fill(as.length)(Long.MaxValue)
+
+  /** Folds shingle hash `s` into the running minima `mins`, in place. */
+  def fold(mins: Array[Long], s: Long): Array[Long] = {
+    var k = 0
+    while (k < mins.length) {
+      val h = (as(k) * s + bs(k)) % p
+      if (h < mins(k)) mins(k) = h
+      k += 1
     }
-    if (seen == 0) null else new GenericArrayData(mins)
+    mins
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val m = ctx.freshName("m")
-      val seen = ctx.freshName("seen")
-      val updates = as.indices.map { k =>
-        s"""{ long h = (${as(k)}L * $s + ${bs(k)}L) % ${p}L;
-           |  if (h < $m[$k]) $m[$k] = h; }""".stripMargin
-      }.mkString("\n")
-      s"""
-         |int $n = $x.numElements();
-         |long[] $m = new long[${as.length}];
-         |java.util.Arrays.fill($m, Long.MAX_VALUE);
-         |int $seen = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($x.isNullAt($i)) continue;
-         |  $seen++;
-         |  long $s = $x.getLong($i);
-         |  $updates
-         |}
-         |if ($seen == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($m);
-         |}
-       """.stripMargin
-    })
+  /** The signature of `x`'s non-null members, or null when it has none.
+    * Null ELEMENTS are skipped, matching the HOF twin: `transform` maps a
+    * null shingle hash to a null permuted hash and `array_min` skips null
+    * elements — so the minimum ranges over the non-null members only, and
+    * the signature is null exactly when no non-null member exists (the
+    * all-null array_min). Reading getLong past isNullAt would instead
+    * fold a phantom 0 hash into every permutation. */
+  def signature(x: ArrayData): ArrayData = {
+    val mins = zero
+    var seen = false
+    var i = 0
+    while (i < x.numElements()) {
+      if (!x.isNullAt(i)) { fold(mins, x.getLong(i)); seen = true }
+      i += 1
+    }
+    if (seen) new GenericArrayData(mins) else null
+  }
 }

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.functions.TextAnalysis.{duckTokHash, tokHash}
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deduplication surface for a training-data pipeline: exact, hash,
   * MinHash+LSH, SimHash, n-gram Jaccard. The reference's only
@@ -28,6 +30,16 @@ import org.apache.spark.sql.functions._
   *    Jaccard), fine at verify scale, deliberately NOT in the headline
   *    bench set — its scalable twin is the MinHash path.
   *
+  * The candidate pipeline has one kernel per step, each with one DuckDB
+  * twin: [[bandPairs]] is the band self-join behind MinHash
+  * ([[bandCandidates]]) and SimHash ([[simhashPairs]]);
+  * [[withBothSides]] joins a per-doc payload onto both sides of a pair
+  * frame (MinHash and containment verification, the prefix filter,
+  * sorted neighborhood); [[allPairsJaccard]] is the brute-force truth
+  * of `q_dedup_ngram` and `q_dedup_lsh_recall`. Their twins are
+  * [[duckCandidateCtes]], [[duckVerified]], [[duckAllPairsJaccardCtes]]
+  * and [[duckSimhashCtes]]; [[duckMinhashSig]] spells the signature.
+  *
   * All hashes are md5-derived ([[graft.functions.TextAnalysis.tokHash]]),
   * so every stage — including the LSH bucketing itself — reproduces
   * bit-for-bit in the DuckDB oracle.
@@ -48,14 +60,17 @@ object Dedup {
     (16573L, 7177L), (17707L, 1801L), (18859L, 9461L), (19993L, 5701L))
 
   // ---- shared SQL fragments, Spark dialect ----
-  /** Distinct 3-gram token shingles (guarded against sub-3-token docs —
-    * Spark's `sequence(1, n)` descends when n < 1). NB for one-shot
-    * string use only: the lambda re-evaluates `split(text)` per index —
-    * the staged [[shingleFrame]] is the performant path. */
-  val sparkShingles: String =
-    "array_distinct(transform(CASE WHEN size(split(text, ' ')) >= 3 " +
-      "THEN sequence(1, size(split(text, ' ')) - 2) ELSE CAST(array() AS ARRAY<INT>) END, " +
-      "i -> concat_ws(' ', slice(split(text, ' '), i, 3))))"
+  /** Distinct 3-gram shingles of the token-array expression `toks`. The
+    * `size - 2` upper bound is guarded: Spark's `sequence(1, n)`
+    * DESCENDS when n < 1 (yielding [1, 0] — spurious null shingles), so
+    * sub-3-token docs map to an empty shingle set instead. */
+  def sparkShingles(toks: String): String =
+    s"array_distinct(transform(CASE WHEN size($toks) >= 3 THEN sequence(1, size($toks) - 2) " +
+      s"ELSE CAST(array() AS ARRAY<INT>) END, i -> concat_ws(' ', slice($toks, i, 3))))"
+
+  /** Set Jaccard of two array columns. */
+  private def sparkJaccard(x: String, y: String): String =
+    s"CAST(size(array_intersect($x, $y)) AS DOUBLE) / size(array_union($x, $y))"
 
   /** (doc_id, g: distinct shingles, hs: distinct shingle hashes), built
     * in staged projections so tokenization happens once per row (a
@@ -69,20 +84,51 @@ object Dedup {
     * per session ([[graft.FrameCache]]) — self-joins and join-backs
     * reference this frame 2-4 times per query and Spark recomputes
     * uncached join branches; `FrameCache.release(session)` is the
-    * end-of-job lifecycle hook (Bench and Verify call it). The `size - 2`
-    * upper bound is guarded: Spark's `sequence(1, n)` DESCENDS when
-    * n < 1 (yielding [1, 0] — spurious null shingles), so sub-3-token
-    * docs map to an empty shingle set instead. */
-  def shingleFrame(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    * end-of-job lifecycle hook (Bench and Verify call it). */
+  def shingleFrame(s: SparkSession, d: String): DataFrame =
     graft.FrameCache.memo(s, s"shingles:$d") {
       Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .selectExpr("doc_id", "split(text, ' ') AS toks")
-        .selectExpr("doc_id",
-          "array_distinct(transform(CASE WHEN size(toks) >= 3 THEN sequence(1, size(toks) - 2) " +
-            "ELSE CAST(array() AS ARRAY<INT>) END, i -> concat_ws(' ', slice(toks, i, 3)))) AS g")
+        .selectExpr("doc_id", s"${sparkShingles("toks")} AS g")
         .selectExpr("doc_id", "g", s"array_distinct(transform(g, x -> ${tokHash("x")})) AS hs")
     }
+
+  /** The LSH band self-join: pairs (a < b, distinct) of the docs in
+    * `docs` that agree exactly on at least one band, where band i's key
+    * is the expression `keys(i)`. One equi-join on (band, key), so only
+    * docs sharing a band ever meet. Each `carry` column of `docs` rides
+    * along to both sides as `<c>_a` / `<c>_b`. */
+  private def bandPairs(docs: DataFrame, keys: Seq[String], carry: String*): DataFrame = {
+    val structs = keys.zipWithIndex.map { case (k, i) => s"struct($i AS band, $k AS key)" }
+    val bands = docs
+      .selectExpr(("doc_id" +: carry) :+ s"explode(array(${structs.mkString(", ")})) AS bk": _*)
+      .select(("doc_id" +: carry).map(col) :+ col("bk.band").as("band") :+ col("bk.key").as("key"): _*)
+    bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key")
+          && col("x.doc_id") < col("y.doc_id"))
+      .select(Seq(col("x.doc_id").as("a"), col("y.doc_id").as("b")) ++
+        carry.flatMap(c => Seq(col(s"x.$c").as(s"${c}_a"), col(s"y.$c").as(s"${c}_b"))): _*)
+      .distinct()
+  }
+
+  /** The candidate join-back: `pairs` (keyed `a`, `b`) with the per-doc
+    * column `v` of `docs` attached to both sides as `<v>_a` / `<v>_b`. A
+    * join hint on `docs` applies to both joins. */
+  private def withBothSides(pairs: DataFrame, docs: DataFrame, v: String): DataFrame = {
+    def side(k: String) = docs.select(col("doc_id").as(k), col(v).as(s"${v}_$k"))
+    pairs.join(side("a"), "a").join(side("b"), "b")
+  }
+
+  /** Brute-force near-dup truth (a, b, jaccard): every pair a < b whose
+    * shingle sets have Jaccard ≥ 0.5 — the quadratic baseline the LSH
+    * paths are measured against, verify-scale only. */
+  private def allPairsJaccard(s: SparkSession, d: String): DataFrame = {
+    val sh = shingleFrame(s, d).select("doc_id", "g")
+    sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
+      .selectExpr("x.doc_id AS a", "y.doc_id AS b", s"${sparkJaccard("x.g", "y.g")} AS jaccard")
+      .filter(col("jaccard") >= 0.5)
+  }
 
   // ---- DuckDB dialect twins ----
   val duckShingles: String =
@@ -92,6 +138,17 @@ object Dedup {
   val duckShingleHashes: String =
     s"list_distinct(list_transform($duckShingles, x -> ${duckTokHash("x")}))"
 
+  /** DuckDB twin of [[sparkJaccard]]. The line break keeps the text of
+    * `verified` ([[duckVerifiedPairsCtes]]), which other families'
+    * oracles embed, byte-stable. */
+  private def duckJaccard(x: String, y: String): String =
+    s"CAST(len(list_intersect($x, $y)) AS DOUBLE)\n               / len(list_distinct(list_cat($x, $y)))"
+
+  /** The 16-permutation MinHash signature list of the DuckDB column `hs`. */
+  private def duckMinhashSig: String =
+    MinhashPerms.map { case (a, b) => s"list_min(list_transform(hs, s -> ($a * s + $b) % $MinhashP))" }
+      .mkString("[", ", ", "]")
+
   /** Verified near-dup pairs (a < b, shingle Jaccard ≥ 0.5) from the
     * MinHash+LSH candidate path — the production near-dup relation.
     * Factored out because it feeds five operators (the pair listing,
@@ -100,16 +157,19 @@ object Dedup {
     * is the family's expensive stage, and a pipeline computes the pair
     * relation once, not once per consumer. The cached frame is tiny
     * (pairs, not documents). */
-  def minhashPairs(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.FrameCache.memo(s, s"mhpairs:$d")(minhashPairsUncached(s, d))
+  def minhashPairs(s: SparkSession, d: String): DataFrame =
+    graft.FrameCache.memo(s, s"mhpairs:$d") {
+      withBothSides(bandCandidates(s, d), shingleFrame(s, d), "hs")
+        .selectExpr("a", "b", s"${sparkJaccard("hs_a", "hs_b")} AS jaccard")
+        .filter(col("jaccard") >= 0.5)
+    }
 
   /** LSH band-collision candidate pairs (a < b, distinct) — the
     * pre-verification stage of [[minhashPairs]], shared with the
     * containment query (which applies a different — asymmetric —
     * verification to the same candidate set). Memoized: the band
     * self-join is the family's expensive stage. */
-  private[graft] def bandCandidates(s: org.apache.spark.sql.SparkSession,
-                                    d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def bandCandidates(s: SparkSession, d: String): DataFrame =
     graft.FrameCache.memo(s, s"mhcand:$d") {
       // one fused native pass for all 16 permutations
       // ([[graft.functions.MinHashSigs]]) — the HOF alternative is 16
@@ -124,37 +184,16 @@ object Dedup {
       val sig = shingleFrame(s, d)
         .filter(size(col("hs")) > 0)
         .selectExpr("doc_id", "minhash_sigs(hs) AS sig")
-      val bandStructs = (0 until 4).map { b =>
-        val elems = (0 until 4).map(r => s"sig[${4 * b + r}]").mkString(", ")
-        s"struct($b AS band, concat_ws(',', $elems) AS bsig)"
-      }
-      val bands = sig
-        .selectExpr("doc_id", s"explode(array(${bandStructs.mkString(", ")})) AS bk")
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-      bands.as("x").join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig")
-            && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-        .distinct()
+      bandPairs(sig, (0 until 4).map(b =>
+        (0 until 4).map(r => s"sig[${4 * b + r}]").mkString("concat_ws(',', ", ", ", ")")))
     }
-
-  private def minhashPairsUncached(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val hs = shingleFrame(s, d).select("doc_id", "hs")
-    bandCandidates(s, d)
-      .join(hs.select(col("doc_id").as("a"), col("hs").as("ha")), "a")
-      .join(hs.select(col("doc_id").as("b"), col("hs").as("hb")), "b")
-      .selectExpr("a", "b",
-        "CAST(size(array_intersect(ha, hb)) AS DOUBLE) / size(array_union(ha, hb)) AS jaccard")
-      .filter(col("jaccard") >= 0.5)
-  }
 
   /** The prefix-filter join's verified pairs (a, b, inter, un,
     * jaccard), UNSORTED — everything q_dedup_prefix_filter computes
     * before its deterministic output sort. Exposed so PlanSpec can pin
     * the pruning regime on the pre-checkpoint plan (the query's eager
     * localCheckpoint truncates lineage — the cappedCorpus pattern). */
-  private[graft] def prefixFilterVerified(s: org.apache.spark.sql.SparkSession,
-                                          d: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def prefixFilterVerified(s: SparkSession, d: String): DataFrame = {
     // The prefix relation feeds BOTH sides of the candidate
     // self-join; left as a plain DataFrame the whole chain below
     // (shingle explode → df agg → shuffle-hash join → per-doc
@@ -175,18 +214,18 @@ object Dedup {
         .selectExpr("doc_id", "sz", "posexplode(pre) AS (p0, pr)")
         .selectExpr("doc_id", "sz", "p0 + 1 AS p", "pr.h AS h")
     }
-    // r14: the positional bound now uses the LAST matched prefix pair
-    // and the match count cp, not just the first match. Both docs sort
-    // tokens by the same global (df, h) order, so common tokens form a
-    // monotone sequence in both position columns; the matched set
-    // (tokens inside BOTH prefixes) is a PREFIX of that sequence —
-    // any common token globally before the last match would sit inside
-    // both prefixes and hence be matched itself. Therefore
+    // The positional bound uses the LAST matched prefix pair and the
+    // match count cp. Both docs sort tokens by the same global (df, h)
+    // order, so common tokens form a monotone sequence in both position
+    // columns; the matched set (tokens inside BOTH prefixes) is a PREFIX
+    // of that sequence — any common token globally before the last
+    // match would sit inside both prefixes and hence be matched itself.
+    // Therefore
     //   overlap ≤ cp + min(sza − max(pa), szb − max(pb)),
-    // which is ≤ the old first-match bound (equal when cp = 1, tighter
-    // by cp−1+Δposition otherwise) — strictly fewer candidates reach
-    // the fat verification join, zero completeness risk
-    // (WaveInvariantSpec pins exact equality with brute force).
+    // which is ≤ the first-match bound min(sza − pa, szb − pb) + 1
+    // (equal when cp = 1, tighter by cp−1+Δposition otherwise) — fewer
+    // candidates reach the fat verification join, zero completeness
+    // risk (WaveInvariantSpec pins exact equality with brute force).
     val cand = pref.select(col("doc_id").as("a"), col("sz").as("sza"),
         col("p").as("pa"), col("h"))
       .join(pref.select(col("doc_id").as("b"), col("sz").as("szb"),
@@ -201,20 +240,15 @@ object Dedup {
       .filter((col("cp") + least(col("sza") - col("lst.pa"),
         col("szb") - col("lst.pb"))) * 8 >= (col("sza") + col("szb")) * 3)
       .select("a", "b", "sza", "szb")
-    val hs = shingleFrame(s, d).select(col("doc_id"), col("hs"))
-    cand
-      .join(hs.select(col("doc_id").as("a"), col("hs").as("hsa"))
-        .hint("shuffle_hash"), "a")
-      .join(hs.select(col("doc_id").as("b"), col("hs").as("hsb"))
-        .hint("shuffle_hash"), "b")
+    withBothSides(cand, shingleFrame(s, d).hint("shuffle_hash"), "hs")
       // explode-of-singleton is a deliberate optimizer barrier: a
       // filter cannot push through a Generate's OUTPUT attribute, so
       // the τ predicate below stays ABOVE this projection and
       // array_intersect is evaluated exactly once per candidate
       // (plain select would let PushDownPredicates substitute the
-      // intersect into the filter — the r11 double-eval defect)
+      // intersect into the filter and evaluate it twice)
       .selectExpr("a", "b", "sza", "szb",
-        "explode(array(size(array_intersect(hsa, hsb)))) AS inter")
+        "explode(array(size(array_intersect(hs_a, hs_b)))) AS inter")
       .selectExpr("a", "b", "inter", "sza + szb - inter AS un")
       .filter(col("inter") * 5 >= col("un") * 3)
       .selectExpr("a", "b", "inter", "un",
@@ -224,14 +258,11 @@ object Dedup {
   /** DuckDB CTE chain ending in `pairs(a, b)` — the band-collision
     * candidate relation, twin of [[bandCandidates]]. */
   private def duckCandidateCtes: String = {
-    val sigExprs = MinhashPerms.map { case (a, b) =>
-      s"list_min(list_transform(hs, s -> ($a * s + $b) % $MinhashP))"
-    }
     val bandStructs = (0 until 4).map { b =>
       s"struct_pack(band := $b, bsig := array_to_string(sig[${4 * b + 1}:${4 * b + 4}], ','))"
     }
     s"""hs AS (SELECT doc_id, $duckShingleHashes AS hs FROM documents),
-       |sig AS (SELECT doc_id, [${sigExprs.mkString(", ")}] AS sig FROM hs
+       |sig AS (SELECT doc_id, $duckMinhashSig AS sig FROM hs
        |        WHERE len(hs) > 0),
        |bands AS (SELECT doc_id, UNNEST([${bandStructs.mkString(", ")}], recursive := true) FROM sig),
        |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
@@ -239,16 +270,33 @@ object Dedup {
        |          ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id)""".stripMargin
   }
 
+  /** DuckDB twin of [[withBothSides]] over the candidate chain: `pairs`
+    * joined to `hs` on both sides (as `xa` and `xb`), projected to a, b
+    * and the named `outs` expressions, filtered by `where`. */
+  private def duckVerified(outs: Seq[(String, String)], where: String): String =
+    s"""SELECT a, b, ${outs.map(_._1).mkString(", ")} FROM (
+       |  SELECT a, b, ${outs.map { case (n, e) => s"$e AS $n" }.mkString(",\n    ")}
+       |  FROM pairs JOIN hs xa ON xa.doc_id = pairs.a
+       |             JOIN hs xb ON xb.doc_id = pairs.b)
+       |  WHERE $where""".stripMargin
+
   /** DuckDB CTE chain ending in `verified(a, b, jaccard)` — the oracle
     * twin of [[minhashPairs]], shared by the pair and clustering oracles.
     * (No leading WITH so callers can prepend RECURSIVE members.) */
   def duckVerifiedPairsCtes: String =
     s"""$duckCandidateCtes,
-       |verified AS (SELECT a, b, jaccard FROM (
-       |  SELECT a, b, CAST(len(list_intersect(xa.hs, xb.hs)) AS DOUBLE)
-       |               / len(list_distinct(list_cat(xa.hs, xb.hs))) AS jaccard
-       |  FROM pairs JOIN hs xa ON xa.doc_id = pairs.a
-       |             JOIN hs xb ON xb.doc_id = pairs.b)
+       |verified AS (${duckVerified(Seq("jaccard" -> duckJaccard("xa.hs", "xb.hs")), "jaccard >= 0.5")})"""
+      .stripMargin
+
+  /** DuckDB CTEs `sh(doc_id, g)` and `truth(a, b, jaccard)`, twin of
+    * [[allPairsJaccard]]. */
+  private def duckAllPairsJaccardCtes: String =
+    s"""sh AS (SELECT doc_id, $duckShingles AS g FROM documents),
+       |truth AS (
+       |  SELECT a, b, jaccard FROM (
+       |    SELECT x.doc_id AS a, y.doc_id AS b,
+       |      ${duckJaccard("x.g", "y.g")} AS jaccard
+       |    FROM sh x JOIN sh y ON x.doc_id < y.doc_id)
        |  WHERE jaccard >= 0.5)""".stripMargin
 
   /** Distinct shingle hashes at `bits` width (Spark dialect, over the
@@ -262,11 +310,6 @@ object Dedup {
   private def sparkShingleHashesW(bits: Int): String =
     s"array_distinct(transform(g, x -> CAST(conv(substr(md5(x), 1, ${bits / 4}), 16, 10) AS BIGINT)))"
 
-  /** DuckDB twin of [[sparkShingleHashesW]]. */
-  private def duckShingleHashesW(bits: Int): String =
-    s"list_distinct(list_transform($duckShingles, x -> " +
-      s"CAST(('0x' || substr(md5(x), 1, ${bits / 4})) AS BIGINT)))"
-
   /** `bits`-wide SimHash over a bigint-list column named `hs` (DuckDB
     * oracle form): bit j is set when more member hashes have bit j set
     * than clear. The Spark side computes the same majority via explode +
@@ -277,7 +320,8 @@ object Dedup {
         s"CASE WHEN (x >> $j) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN ${1L << j} ELSE 0 END)"
     }.mkString("(", " + ", ")")
 
-  /** SimHash near-dup pairs at a given signature/band width.
+  /** SimHash near-dup pairs at a given band width; the signature is 4
+    * bands wide (4·`bandBits` bits).
     *
     * Bit-majority signature via explode + ONE partial-sum aggregate
     * (bit j set iff 2·count_set > n — map-side combinable, not
@@ -297,9 +341,8 @@ object Dedup {
     * path. 60 bits, not 64: bit 63 would make the band literal the
     * BIGINT sign bit, which the two engines shift differently. The
     * shingle hashes must be ≥ `bits` wide ([[sparkShingleHashesW]]). */
-  private def simhashPairs(s: org.apache.spark.sql.SparkSession, d: String,
-                           bits: Int, bandBits: Int): org.apache.spark.sql.DataFrame = {
-    require(4 * bandBits == bits, s"4 bands of $bandBits bits must cover $bits")
+  private def simhashPairs(s: SparkSession, d: String, bandBits: Int): DataFrame = {
+    val bits = 4 * bandBits
     val hs = if (bits == 32) col("hs") else expr(sparkShingleHashesW(bits))
     val bitSums = shingleFrame(s, d)
       .select(col("doc_id"), explode(hs).as("x"))
@@ -311,57 +354,49 @@ object Dedup {
       .mkString("(", " + ", ")")
     val sims = bitSums.selectExpr("doc_id", s"$simExpr AS sim")
     val mask = (1L << bandBits) - 1
-    val bandStructs = (0 until 4).map(k =>
-      s"struct($k AS k, (shiftright(sim, ${bandBits * k}) & $mask) AS byte)")
-    val bands = sims
-      .selectExpr("doc_id", "sim", s"explode(array(${bandStructs.mkString(", ")})) AS bk")
-      .select(col("doc_id"), col("sim"), col("bk.k").as("k"), col("bk.byte").as("byte"))
-    bands.as("x").join(bands.as("y"),
-        col("x.k") === col("y.k") && col("x.byte") === col("y.byte")
-          && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.sim").as("sim_a"), col("y.sim").as("sim_b"))
-      .distinct()
+    bandPairs(sims, (0 until 4).map(k => s"(shiftright(sim, ${bandBits * k}) & $mask)"), "sim")
       .selectExpr("a", "b", "bit_count(sim_a ^ sim_b) AS hamming")
       .filter(col("hamming") <= 3)
       .orderBy("a", "b")
   }
 
+  /** Target docs per band bucket for [[simhashBandBitsFor]]. 8, not 32:
+    * candidate-join work is ~2·N·target pairs, and — unlike LSH bits,
+    * where more bits cost recall — the 4-band pigeonhole guarantee
+    * (Hamming ≤ 3 ⇒ some band agrees exactly) holds at ANY band width,
+    * so a wider band only sheds random collisions. Measured at sf10
+    * (N = 5·10⁵): target 32 picks b = 14 (3.3·10⁷ collision pairs,
+    * 31 s); target 8 picks b = 15 (1.6·10⁷ pairs, 15 s). The cap, not
+    * the target, is the only recall-neutral limit. */
+  private val SimhashTargetBucket = 8
+
   /** log₂(N) sizing for the SimHash band width — the smallest b in
-    * [8, 15] with 2^b ≥ ⌈N / targetBucket⌉, so expected random band
-    * collisions (the N²/2^(b+1) quadratic term that saturated the fixed
-    * 8-bit setting near N ≈ 10⁵ — 19.4 s at sf3) stay bounded as N
-    * grows. Same integer-only pattern as [[Similarity.lshBitsFor]]: no
-    * float log, because the sized oracle recomputes the same b from
-    * COUNT(*) in SQL. Cap 15: the signature is 4 bands × b bits and 60
-    * is the widest safe width (bit 63 is the BIGINT sign bit, shifted
-    * differently per engine); floor 8 is the classic small-N setting.
-    * The signature width 4·b must equal the shingle-hash width
-    * ([[sparkShingleHashesW]]) — majority bits above the hash width are
-    * constant 0 and would turn the top band into one all-docs bucket.
-    *
-    * targetBucket = 8, not 32: candidate-join work is ~2·N·targetBucket
-    * pairs, and — unlike LSH bits, where more bits cost recall — the
-    * 4-band pigeonhole guarantee (Hamming ≤ 3 ⇒ some band agrees
-    * exactly) holds at ANY band width, so a wider band only sheds
-    * random collisions. Measured at sf10 (N = 5·10⁵): target 32 picks
-    * b = 14 (3.3·10⁷ collision pairs, 31 s); target 8 picks b = 15
-    * (1.6·10⁷ pairs, 15 s). The cap, not the target, is the only
-    * recall-neutral limit. */
-  def simhashBandBitsFor(n: Long, targetBucket: Int = 8): Int = {
-    val target = n / targetBucket + (if (n % targetBucket == 0) 0 else 1)
+    * [8, 15] with 2^b ≥ ⌈N / [[SimhashTargetBucket]]⌉, so expected
+    * random band collisions (the N²/2^(b+1) quadratic term that
+    * saturated the fixed 8-bit setting near N ≈ 10⁵ — 19.4 s at sf3)
+    * stay bounded as N grows. Same integer-only pattern as
+    * [[Similarity.lshBitsFor]]: no float log, because the sized oracle
+    * recomputes the same b from COUNT(*) in SQL. Cap 15: the signature
+    * is 4 bands × b bits and 60 is the widest safe width (bit 63 is the
+    * BIGINT sign bit, shifted differently per engine); floor 8 is the
+    * classic small-N setting. The signature width 4·b must equal the
+    * shingle-hash width ([[sparkShingleHashesW]]) — majority bits above
+    * the hash width are constant 0 and would turn the top band into one
+    * all-docs bucket. */
+  def simhashBandBitsFor(n: Long): Int = {
+    val target = n / SimhashTargetBucket + (if (n % SimhashTargetBucket == 0) 0 else 1)
     var b = 8
     while (b < 15 && (1L << b) < target) b += 1
     b
   }
 
   /** The corpus size past which [[simhashBandBitsFor]]'s 15-bit cap
-    * binds (⌈N/targetBucket⌉ > 2¹⁵ ⟺ N > 8·2¹⁵ = 262144): beyond it a
+    * binds (⌈N/8⌉ > 2¹⁵ ⟺ N > 8·2¹⁵ = 262144): beyond it a
     * wider band no longer exists inside the 60-bit signature and the
     * N²/2¹⁶ random-collision term returns (measured: 17.0 s at sf10
     * and rising quadratically, BASELINE.md). The gate below makes the
     * documented MinHash fallback EXECUTABLE at exactly this point. */
-  private[graft] val SimhashCapDocs: Long = 8L << 15
+  private[graft] val SimhashCapDocs: Long = SimhashTargetBucket.toLong << 15
 
   /** COUNT-driven near-dup pair relation — the headline dedup entry.
     *
@@ -382,73 +417,70 @@ object Dedup {
     * recomputes the same gate from COUNT(*) in integer SQL. `capDocs`
     * is injectable so specs can force the fallback branch without a
     * 262k-doc fixture. */
-  private[graft] def simhashPairsGated(s: org.apache.spark.sql.SparkSession, d: String,
-                                       capDocs: Long = SimhashCapDocs): org.apache.spark.sql.DataFrame = {
+  private[graft] def simhashPairsGated(s: SparkSession, d: String,
+                                       capDocs: Long = SimhashCapDocs): DataFrame = {
     val n = Tables.documents(s, d).count()
     if (n > capDocs)
       minhashPairs(s, d).select(col("a"), col("b"),
         lit("minhash").as("method"), col("jaccard").cast("double").as("score"))
-    else {
-      val bb = simhashBandBitsFor(n)
-      simhashPairs(s, d, bits = 4 * bb, bandBits = bb).select(col("a"), col("b"),
+    else
+      simhashPairs(s, d, simhashBandBitsFor(n)).select(col("a"), col("b"),
         lit("simhash").as("method"), col("hamming").cast("double").as("score"))
-    }
   }
+
+  /** DuckDB brute-force twin of [[simhashPairs]] — every pair within
+    * Hamming distance 3, the same answer from a different join
+    * strategy — as the CTEs `shs` (shingle hashes of `bandBits` md5 hex
+    * digits, i.e. 4·`bandBits` bits, per row of `from`), `ssims`
+    * (`bits`-wide SimHash) and `simpairs(a, b, hamming)`. The CTEs are
+    * prefixed `s` so they sit beside [[duckVerifiedPairsCtes]]. */
+  private def duckSimhashCtes(bandBits: String, from: String, bits: Int): String =
+    s"""shs AS (SELECT doc_id, list_distinct(list_transform($duckShingles, x ->
+       |         CAST(('0x' || substr(md5(x), 1, $bandBits)) AS BIGINT))) AS hs
+       |       FROM $from),
+       |ssims AS (SELECT doc_id, ${duckSimhash(bits)} AS sim FROM shs),
+       |simpairs AS (SELECT x.doc_id AS a, y.doc_id AS b,
+       |               CAST(bit_count(xor(x.sim, y.sim)) AS INT) AS hamming
+       |             FROM ssims x JOIN ssims y ON x.doc_id < y.doc_id
+       |             WHERE bit_count(xor(x.sim, y.sim)) <= 3)""".stripMargin
+
+  /** DuckDB twin of the fixed-width [[simhashPairs]]. */
+  private def duckSimhashPairs(bandBits: Int): String =
+    s"""WITH ${duckSimhashCtes(bandBits.toString, "documents", 4 * bandBits)}
+       |SELECT a, b, hamming FROM simpairs ORDER BY a, b""".stripMargin
 
   /** Oracle twin of [[simhashPairsGated]] — BOTH regimes, selected by
     * the same integer gate recomputed from COUNT(*). The SimHash side
-    * is the brute-force pair scan over a RUNTIME signature width: a
-    * one-row `sized(b)` CTE recomputes [[simhashBandBitsFor]] from
-    * COUNT(*), the shingle hashes take their width from it
-    * (`substr(md5(x), 1, b)`: b hex digits = 4·b bits, the signature
-    * width), and the 60 statically-emitted majority terms need no mask
-    * — bits above the hash width are constant 0 in every member hash,
-    * so their majority is never set. The MinHash side is the shared
-    * [[duckVerifiedPairsCtes]] chain; its CTEs keep their canonical
-    * names, so the SimHash-side hash/signature CTEs are prefixed `s`.
-    * The two regime SELECTs are gated by mutually exclusive COUNT(*)
-    * predicates and unioned — exactly one contributes rows. (The gates
-    * are non-constant scalar subqueries, so DuckDB may still EVALUATE
-    * the quadratic simpairs CTE even when the MinHash regime wins —
-    * acceptable at oracle scale (~500 docs); if a verify fixture past
-    * the 8·2¹⁵-doc cap is ever added, split this into two statements
-    * chosen driver-side by the same gate instead of a guarded UNION.) */
-  private def duckSimhashPairsGated(targetBucket: Int = 8): String =
+    * is the brute-force scan over a RUNTIME signature width: a one-row
+    * `sized(b)` CTE recomputes [[simhashBandBitsFor]] from COUNT(*), the
+    * shingle hashes take their width from it (b hex digits = 4·b bits,
+    * the signature width), and the 60 statically-emitted majority terms
+    * need no mask — bits above the hash width are constant 0 in every
+    * member hash, so their majority is never set. The MinHash side is
+    * the shared [[duckVerifiedPairsCtes]] chain. The two regime SELECTs
+    * are gated by mutually exclusive COUNT(*) predicates and unioned —
+    * exactly one contributes rows. (The gates are non-constant scalar
+    * subqueries, so DuckDB may still EVALUATE the quadratic simpairs CTE
+    * even when the MinHash regime wins — acceptable at oracle scale
+    * (~500 docs); if a verify fixture past the 8·2¹⁵-doc cap is ever
+    * added, split this into two statements chosen driver-side by the
+    * same gate instead of a guarded UNION.) */
+  private def duckSimhashPairsGated: String =
     s"""WITH sized AS (
        |  SELECT COALESCE(MIN(b), 15) AS b
        |  FROM generate_series(8, 15) t(b)
        |  WHERE (CAST(1 AS BIGINT) << b) >=
-       |    (SELECT COUNT(*) // $targetBucket
-       |            + CASE WHEN COUNT(*) % $targetBucket = 0 THEN 0 ELSE 1 END
+       |    (SELECT COUNT(*) // $SimhashTargetBucket
+       |            + CASE WHEN COUNT(*) % $SimhashTargetBucket = 0 THEN 0 ELSE 1 END
        |     FROM documents)),
        |corpus_n AS (SELECT COUNT(*) AS n FROM documents),
-       |shs AS (SELECT doc_id, list_distinct(list_transform($duckShingles, x ->
-       |         CAST(('0x' || substr(md5(x), 1, b)) AS BIGINT))) AS hs
-       |       FROM documents CROSS JOIN sized),
-       |ssims AS (SELECT doc_id, ${duckSimhash(60)} AS sim FROM shs),
-       |simpairs AS (SELECT x.doc_id AS a, y.doc_id AS b,
-       |               CAST(bit_count(xor(x.sim, y.sim)) AS DOUBLE) AS score
-       |             FROM ssims x JOIN ssims y ON x.doc_id < y.doc_id
-       |             WHERE bit_count(xor(x.sim, y.sim)) <= 3),
+       |${duckSimhashCtes("b", "documents CROSS JOIN sized", 60)},
        |$duckVerifiedPairsCtes
-       |SELECT a, b, 'simhash' AS method, score FROM simpairs
+       |SELECT a, b, 'simhash' AS method, CAST(hamming AS DOUBLE) AS score FROM simpairs
        |WHERE (SELECT n FROM corpus_n) <= $SimhashCapDocs
        |UNION ALL
        |SELECT a, b, 'minhash' AS method, CAST(jaccard AS DOUBLE) AS score FROM verified
        |WHERE (SELECT n FROM corpus_n) > $SimhashCapDocs
-       |ORDER BY a, b""".stripMargin
-
-  /** DuckDB brute-force twin of [[simhashPairs]] (all pairs + Hamming
-    * filter — same answer from a different join strategy). */
-  private def duckSimhashPairs(bits: Int): String =
-    s"""WITH hs AS (SELECT doc_id, ${
-         if (bits == 32) duckShingleHashes else duckShingleHashesW(bits)
-       } AS hs FROM documents),
-       |sims AS (SELECT doc_id, ${duckSimhash(bits)} AS sim FROM hs)
-       |SELECT x.doc_id AS a, y.doc_id AS b,
-       |       CAST(bit_count(xor(x.sim, y.sim)) AS INT) AS hamming
-       |FROM sims x JOIN sims y ON x.doc_id < y.doc_id
-       |WHERE bit_count(xor(x.sim, y.sim)) <= 3
        |ORDER BY a, b""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
@@ -506,10 +538,8 @@ object Dedup {
     QueryDef(
       "q_dedup_sorted_neighborhood",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val toksF = Tables.documents(s, d)
-          .selectExpr("doc_id", "split(text, ' ') AS toks")
-        val keyed = Tables.documents(s, d).selectExpr(
+        val docs = Tables.documents(s, d)
+        val keyed = docs.selectExpr(
           "doc_id",
           "substring(array_join(array_sort(split(text, ' ')), ' '), 1, 64) AS skey")
           .withColumn("blk", element_at(split(col("skey"), " "), 1))
@@ -518,15 +548,13 @@ object Dedup {
           .withColumn("n1_id", lead(col("doc_id"), 1).over(w))
           .withColumn("n2_id", lead(col("doc_id"), 2).over(w))
         val cand = nb.filter(col("n1_id").isNotNull)
-          .select(col("doc_id").as("a_id"), col("n1_id").as("b_id"))
+          .select(col("doc_id").as("a"), col("n1_id").as("b"))
           .unionAll(nb.filter(col("n2_id").isNotNull)
-            .select(col("doc_id").as("a_id"), col("n2_id").as("b_id")))
-        cand
-          .join(toksF.select(col("doc_id").as("a_id"), col("toks").as("ta")), "a_id")
-          .join(toksF.select(col("doc_id").as("b_id"), col("toks").as("tb")), "b_id")
-          .selectExpr("a_id", "b_id",
-            "CAST(size(array_intersect(ta, tb)) AS DOUBLE) " +
-              "/ size(array_distinct(concat(ta, tb))) AS jac")
+            .select(col("doc_id").as("a"), col("n2_id").as("b")))
+        withBothSides(cand, docs.selectExpr("doc_id", "split(text, ' ') AS toks"), "toks")
+          .selectExpr("a AS a_id", "b AS b_id",
+            "CAST(size(array_intersect(toks_a, toks_b)) AS DOUBLE) " +
+              "/ size(array_distinct(concat(toks_a, toks_b))) AS jac")
           .filter(col("jac") >= 0.6)
           .orderBy("a_id", "b_id")
       },
@@ -622,8 +650,8 @@ object Dedup {
     // which is what the sized entry exists to avoid — scale-excluded.
     QueryDef(
       "q_dedup_simhash",
-      (s, d) => simhashPairs(s, d, bits = 32, bandBits = 8),
-      Some(duckSimhashPairs(32)),
+      (s, d) => simhashPairs(s, d, bandBits = 8),
+      Some(duckSimhashPairs(8)),
       scaleExcluded = true),
 
     // The WIDE scale variant: 60-bit signature, 15-bit bands — the
@@ -631,8 +659,8 @@ object Dedup {
     // grows (see [[simhashPairs]]; the sf3 bench point is the evidence).
     QueryDef(
       "q_dedup_simhash_wide",
-      (s, d) => simhashPairs(s, d, bits = 60, bandBits = 15),
-      Some(duckSimhashPairs(60))),
+      (s, d) => simhashPairs(s, d, bandBits = 15),
+      Some(duckSimhashPairs(15))),
 
     // The SIZED variant — the headline dedup entry: band width EXECUTES
     // simhashBandBitsFor(COUNT) per run, so the candidate join's
@@ -645,7 +673,7 @@ object Dedup {
     QueryDef(
       "q_dedup_simhash_sized",
       (s, d) => simhashPairsGated(s, d).orderBy("a", "b"),
-      Some(duckSimhashPairsGated())),
+      Some(duckSimhashPairsGated)),
 
     // MinHash signatures via the typed Aggregator UDAF
     // ([[graft.functions.MinHashSignature]]): explode the shingle
@@ -663,34 +691,18 @@ object Dedup {
           .groupBy("doc_id")
           .agg(array_join(expr("minhash_sig(x)"), ",").as("sig_csv"))
           .orderBy("doc_id")
-      }, {
-        val sigExprs = MinhashPerms.map { case (a, b) =>
-          s"list_min(list_transform(hs, s -> ($a * s + $b) % $MinhashP))"
-        }
-        Some(s"""WITH hs AS (SELECT doc_id, $duckShingleHashes AS hs FROM documents)
-                |SELECT doc_id, array_to_string([${sigExprs.mkString(", ")}], ',') AS sig_csv FROM hs
-                |ORDER BY doc_id""".stripMargin)
-      }),
+      },
+      Some(s"""WITH hs AS (SELECT doc_id, $duckShingleHashes AS hs FROM documents)
+              |SELECT doc_id, array_to_string($duckMinhashSig, ',') AS sig_csv FROM hs
+              |ORDER BY doc_id""".stripMargin)),
 
     // n-gram Jaccard, brute force: the quadratic baseline the LSH paths
     // are measured against. Verify-scale only by design.
     QueryDef(
       "q_dedup_ngram",
-      (s, d) => {
-        val sh = shingleFrame(s, d).select("doc_id", "g")
-        sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
-          .selectExpr("x.doc_id AS a", "y.doc_id AS b",
-            "CAST(size(array_intersect(x.g, y.g)) AS DOUBLE) / size(array_union(x.g, y.g)) AS jaccard")
-          .filter(col("jaccard") >= 0.5)
-          .orderBy("a", "b")
-      },
-      Some(s"""WITH sh AS (SELECT doc_id, $duckShingles AS g FROM documents)
-              |SELECT a, b, jaccard FROM (
-              |  SELECT x.doc_id AS a, y.doc_id AS b,
-              |    CAST(len(list_intersect(x.g, y.g)) AS DOUBLE)
-              |      / len(list_distinct(list_cat(x.g, y.g))) AS jaccard
-              |  FROM sh x JOIN sh y ON x.doc_id < y.doc_id)
-              |WHERE jaccard >= 0.5 ORDER BY a, b""".stripMargin),
+      (s, d) => allPairsJaccard(s, d).orderBy("a", "b"),
+      Some(s"""WITH $duckAllPairsJaccardCtes
+              |SELECT a, b, jaccard FROM truth ORDER BY a, b""".stripMargin),
       scaleExcluded = true),
 
     // Containment verification over the SAME LSH candidates: C(A→B) =
@@ -702,25 +714,18 @@ object Dedup {
     // predicate differs — the pipeline pays the expensive stage once.
     QueryDef(
       "q_contain_minhash",
-      (s, d) => {
-        val hs = shingleFrame(s, d).select("doc_id", "hs")
-        bandCandidates(s, d)
-          .join(hs.select(col("doc_id").as("a"), col("hs").as("ha")), "a")
-          .join(hs.select(col("doc_id").as("b"), col("hs").as("hb")), "b")
-          .selectExpr("a", "b",
-            "CAST(size(array_intersect(ha, hb)) AS DOUBLE) / size(ha) AS c_ab",
-            "CAST(size(array_intersect(ha, hb)) AS DOUBLE) / size(hb) AS c_ba")
-          .filter(greatest(col("c_ab"), col("c_ba")) >= 0.5)
-          .orderBy("a", "b")
-      },
-      Some(s"""WITH $duckCandidateCtes
-              |SELECT a, b, c_ab, c_ba FROM (
-              |  SELECT a, b,
-              |    CAST(len(list_intersect(xa.hs, xb.hs)) AS DOUBLE) / len(xa.hs) AS c_ab,
-              |    CAST(len(list_intersect(xa.hs, xb.hs)) AS DOUBLE) / len(xb.hs) AS c_ba
-              |  FROM pairs JOIN hs xa ON xa.doc_id = pairs.a
-              |             JOIN hs xb ON xb.doc_id = pairs.b)
-              |WHERE GREATEST(c_ab, c_ba) >= 0.5 ORDER BY a, b""".stripMargin)),
+      (s, d) => withBothSides(bandCandidates(s, d), shingleFrame(s, d), "hs")
+        .selectExpr("a", "b",
+          "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / size(hs_a) AS c_ab",
+          "CAST(size(array_intersect(hs_a, hs_b)) AS DOUBLE) / size(hs_b) AS c_ba")
+        .filter(greatest(col("c_ab"), col("c_ba")) >= 0.5)
+        .orderBy("a", "b"),
+      Some {
+        val c = (x: String) => s"CAST(len(list_intersect(xa.hs, xb.hs)) AS DOUBLE) / len($x.hs)"
+        s"""WITH $duckCandidateCtes
+           |${duckVerified(Seq("c_ab" -> c("xa"), "c_ba" -> c("xb")), "GREATEST(c_ab, c_ba) >= 0.5")}
+           |ORDER BY a, b""".stripMargin
+      }),
 
     // Benchmark decontamination — the pipeline pass that removes
     // training documents sharing n-grams with an evaluation set (the
@@ -761,8 +766,7 @@ object Dedup {
     // role), and the output is per-delta-doc admission metadata.
     //
     // The exact-digest screen is TWO-REGIME, gated on the base corpus's
-    // cardinality (round-9 verdict, item 3 — the probe must pay for
-    // itself):
+    // cardinality (the probe must pay for itself):
     //   - base ≥ `spark.graft.bloom.minKeys` (default 2^20): the base
     //     key set aggregates once into a COUNT-sized bloom bitmap
     //     (~9.85 bits/key, FP ≈ 1% — a static, distributively UPDATABLE
@@ -775,27 +779,27 @@ object Dedup {
     //     to the plain semi-join the oracle runs.
     //   - below the gate the bitmap-build pass (a full scan + hash of
     //     the base text) costs more than the delta rows it would prune,
-    //     so the delta goes straight to the confirm semi-join — the
-    //     round-9 sweep measured the always-on probe at 3.1× the plain
-    //     join at sf0.1's ~4.5k-doc base.
+    //     so the delta goes straight to the confirm semi-join — an
+    //     always-on probe measured 3.1× the plain join at sf0.1's
+    //     ~4.5k-doc base.
     // The gate reads ONE cheap count — a zero-column count of the
     // documents scan (parquet footer metadata, no text decode, no
     // digest computation), which also upper-bounds the base count for
-    // bitmap sizing — replacing round 9's dedicated `base.count()` job
-    // that decoded and hashed the full text column. PlanSpec pins BOTH
-    // regimes via the conf knob.
+    // bitmap sizing; a `base.count()` would decode and hash the full
+    // text column. PlanSpec pins BOTH regimes via the conf knob.
     QueryDef(
       "q_dedup_incremental",
       (s, d) => {
         graft.functions.GraftFunctions.ensureBloomProbe(s)
-        val digests = Tables.documents(s, d)
+        val docs = Tables.documents(s, d)
+        val digests = docs
           .select(col("doc_id"), sha2(col("text"), 256).as("dg"),
             xxhash64(col("text")).as("k"),
             (col("doc_id") % 10 === 7).as("is_delta"))
         val delta = digests.filter(col("is_delta"))
         val base = digests.filter(!col("is_delta"))
         val minKeys = s.conf.get("spark.graft.bloom.minKeys", (1L << 20).toString).toLong
-        val totalDocs = Tables.documents(s, d).count()
+        val totalDocs = docs.count()
         val screened =
           if (totalDocs - totalDocs / 10 >= minKeys) {
             val bloomAgg = graft.functions.BloomFilterAgg.sized(totalDocs)
@@ -970,16 +974,14 @@ object Dedup {
     // token — so the self-join runs over the RARE end of the token
     // distribution, the load-bearing trick: frequent shingles never
     // join. THREE candidate pruning stages run BEFORE the expensive
-    // exact-verification join (the r11 sf10 hotspot — 147.7 s median —
-    // was verifying every prefix-overlap pair):
+    // exact-verification join (verifying every prefix-overlap pair
+    // measured 147.7 s median at sf10):
     //   1. length filter inside the token join: Jaccard ≥ 3/5 needs
     //      5·min(|a|,|b|) ≥ 3·max(|a|,|b|) — cross-document size
     //      mismatches die on the spot, never reaching the group-by;
-    //   2. PPJoin positional filter on the FIRST common prefix token
-    //      (min (pa,pb) over matched tokens — both docs sort by the
-    //      same global (df,h) order, so for any true pair the globally
-    //      first common token is inside both prefixes and lexicographic
-    //      min recovers its positions): overlap ≤ min(|a|−pa,|b|−pb)+1,
+    //   2. PPJoin positional filter on the LAST matched prefix pair
+    //      and the match count cp (the proof is at
+    //      [[prefixFilterVerified]]): overlap ≤ cp + min(|a|−pa,|b|−pb),
     //      and passing τ needs 8·overlap ≥ 3·(|a|+|b|), so candidates
     //      whose positional bound can't reach that die pre-join;
     //   3. verification computes array_intersect ONCE per survivor and
@@ -994,11 +996,11 @@ object Dedup {
     QueryDef(
       "q_dedup_prefix_filter",
       (s, d) => {
-        // r14: the verified survivor set is O(near-dup pairs) — tiny —
-        // but the global sort's RANGE-SAMPLING pass was re-executing
-        // the whole verification join just to pick sort bounds
-        // (StageProf at sf10: two full 3.4 GB passes over the fat
-        // candidate exchange, one purely for sampling). Materialize
+        // The verified survivor set is O(near-dup pairs) — tiny — but
+        // a global sort's RANGE-SAMPLING pass would re-execute the
+        // whole verification join just to pick sort bounds (StageProf
+        // at sf10: two full 3.4 GB passes over the fat candidate
+        // exchange, one purely for sampling). Materialize
         // the survivors once (eager local checkpoint), then sort the
         // materialized rows — guide §2.4 "an orderBy used only to make
         // output deterministic". Plan-shape pins live on
@@ -1094,11 +1096,7 @@ object Dedup {
     QueryDef(
       "q_dedup_lsh_recall",
       (s, d) => {
-        val sh = shingleFrame(s, d).select("doc_id", "g")
-        val truth = sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
-          .selectExpr("x.doc_id AS a", "y.doc_id AS b",
-            "CAST(size(array_intersect(x.g, y.g)) AS DOUBLE) / size(array_union(x.g, y.g)) AS j")
-          .filter(col("j") >= 0.5).select("a", "b")
+        val truth = allPairsJaccard(s, d).select("a", "b")
         val got = minhashPairs(s, d).select(col("a"), col("b"))
           .localCheckpoint(true)
         val hits = truth.join(got, Seq("a", "b"), "left_semi")
@@ -1110,14 +1108,7 @@ object Dedup {
             "CAST(n_hit AS DOUBLE) / n_lsh AS precision")
       },
       Some(s"""WITH $duckVerifiedPairsCtes,
-              |sh AS (SELECT doc_id, $duckShingles AS g FROM documents),
-              |truth AS (
-              |  SELECT a, b FROM (
-              |    SELECT x.doc_id AS a, y.doc_id AS b,
-              |      CAST(len(list_intersect(x.g, y.g)) AS DOUBLE)
-              |        / len(list_distinct(list_cat(x.g, y.g))) AS j
-              |    FROM sh x JOIN sh y ON x.doc_id < y.doc_id)
-              |  WHERE j >= 0.5),
+              |$duckAllPairsJaccardCtes,
               |got AS (SELECT a, b FROM verified),
               |c AS (
               |  SELECT
@@ -1143,7 +1134,6 @@ object Dedup {
     QueryDef(
       "q_dedup_threshold_curve",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val w = Window.orderBy(col("bin").desc)
           .rowsBetween(Window.unboundedPreceding, 0)
         minhashPairs(s, d)
@@ -1177,8 +1167,8 @@ object Dedup {
     * higher-order-function lambdas are interpreted per element, and
     * two slice allocations plus 16 lambda frames per window measured
     * 2.4× slower than the same arithmetic as one flat expression. */
-  private[graft] def substringWindows(s: org.apache.spark.sql.SparkSession,
-                                      d: String): org.apache.spark.sql.DataFrame =
+  private[graft] def substringWindows(s: SparkSession,
+                                      d: String): DataFrame =
     graft.FrameCache.memo(s, s"subwins:$d") {
       val W = 8
       val th = graft.functions.TextAnalysis.tokHash("t")
@@ -1204,8 +1194,8 @@ object Dedup {
     * the already-co-partitioned relation — the per-partition hash
     * build is the shape that holds (build side = one partition's
     * capped windows, not the relation). */
-  private def substringScreen(s: org.apache.spark.sql.SparkSession, d: String,
-                              sample: Int): org.apache.spark.sql.DataFrame = {
+  private def substringScreen(s: SparkSession, d: String,
+                              sample: Int): DataFrame = {
     val F = 10
     val w0 = substringWindows(s, d)
     val wins = if (sample == 1) w0 else w0.filter(col("wh") % sample === 0)

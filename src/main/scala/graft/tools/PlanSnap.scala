@@ -1,8 +1,8 @@
 package graft.tools
 
 /** Writes the `.explain("formatted")` output AND the post-AQE executed
-  * plan of named `SparkEntry` queries to files — the round's committed
-  * plan evidence (`plans/rNN/<q>_{before,after}.txt`).
+  * plan of named `SparkEntry` queries to files, e.g. to diff a query's
+  * plans before and after a change (suffixes `before` / `after`).
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...> [sfDir]
   * Writes <outDir>/<q>_<suffix>.txt for each query.

@@ -197,6 +197,29 @@ class NativeFunctionsSpec extends AnyFunSuite {
       bands(rows.selectExpr("id", s"array(${sigExprs.mkString(", ")}) AS sig")).toSeq)
   }
 
+  test("minhash_sigs UDF fallback in an extension-less session keeps the native null semantics") {
+    // a null element is skipped (not folded as a phantom 0 hash) and an
+    // all-null or empty array gives a null signature, as natively
+    val vanilla = spark.newSession()
+    vanilla.sessionState.functionRegistry.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"))
+    assert(!vanilla.catalog.functionExists("minhash_sigs"))
+    GraftFunctions.ensureMinhashSigs(vanilla)
+    assert(vanilla.catalog.functionExists("minhash_sigs"))
+    def sigs(s: org.apache.spark.sql.SparkSession) = s.sql(
+      """SELECT * FROM VALUES
+        |  (1L, array(CAST(NULL AS BIGINT), 42L, 7L, 1234567L)),
+        |  (2L, array(42L, 7L, 99L)),
+        |  (3L, array(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))),
+        |  (4L, CAST(array() AS ARRAY<BIGINT>))
+        |AS t(id, hs)""".stripMargin)
+      .selectExpr("id", "minhash_sigs(hs) AS sig").orderBy("id").collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList))
+    val native = sigs(spark)
+    assert(native.map(_._2.isDefined).toSeq === Seq(true, true, false, false))
+    assert(sigs(vanilla).toSeq === native.toSeq)
+  }
+
   test("MinHashSignature Aggregator reproduces the HOF signatures per document") {
     MinHashSignature.ensureRegistered(spark)
     val agg = Dedup.shingleFrame(spark, sf)

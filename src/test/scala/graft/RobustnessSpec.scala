@@ -112,7 +112,8 @@ class RobustnessSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, "one"), (2L, "two words"), (3L, "three word doc"))
       .toDF("doc_id", "text")
-    val shingled = df.selectExpr("doc_id", s"${operators.Dedup.sparkShingles} AS g")
+    val shingled = df.selectExpr("doc_id", "split(text, ' ') AS toks")
+      .selectExpr("doc_id", s"${operators.Dedup.sparkShingles("toks")} AS g")
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(shingled(1L).isEmpty && shingled(2L).isEmpty)
     assert(shingled(3L) === Seq("three word doc"))
