@@ -467,7 +467,7 @@ object Bench {
     // round 12 (driver numbering): the cross-session sketch store, the
     // transactional-manifest family, and the CART stump — all carry
     // committed 4-point mini-sweep medians from the day they landed
-    // (tools/sweep_report_round12.md)
+    // (that sweep report lives in git history; see BASELINE.md)
     "q_agg_hll_persist",
     "q_tx_commit",
     "q_tx_timetravel",

@@ -846,29 +846,14 @@ object Analytics {
       "q_event_transitions",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val counts = Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-          .agg(count(lit(1)).as("n"))
-        val wFrom = Window.partitionBy("from_type")
-        counts
-          .withColumn("p", col("n").cast("double") / sum(col("n")).over(wFrom))
+        transitionCounts(s, d)
+          .withColumn("p", col("n").cast("double") / sum(col("n")).over(Window.partitionBy("from_type")))
           .orderBy("from_type", "to_type")
       },
-      Some("""WITH seq AS (
-             |  SELECT event_type,
-             |    LEAD(event_type, 1) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS next_type
-             |  FROM events),
-             |c AS (SELECT event_type AS from_type, next_type AS to_type,
-             |    COUNT(*) AS n
-             |  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2)
-             |SELECT from_type, to_type, n,
-             |  CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
-             |FROM c ORDER BY from_type, to_type""".stripMargin)),
+      Some(s"""WITH $duckTransitionCtes
+              |SELECT from_type, to_type, n,
+              |  CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_type) AS p
+              |FROM c ORDER BY from_type, to_type""".stripMargin)),
 
     // Event-sequence pattern matching (the MATCH_RECOGNIZE class,
     // regex form): each user's event stream is reduced to an ordered
@@ -1372,10 +1357,7 @@ object Analytics {
     QueryDef(
       "q_churn",
       (s, d) => {
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("es"))
-        val head = ev.agg(max(col("es")).as("head_es"))
-        ev.crossJoin(broadcast(head))
+        withStreamHead(s, d)
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_events"),
             (first(col("head_es")) - max(col("es"))).as("silent_s"))
@@ -1389,8 +1371,7 @@ object Analytics {
             sum(col("n_events")).cast("bigint").as("n_events"))
           .orderBy("status")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS es FROM events),
-             |head AS (SELECT MAX(es) AS head_es FROM ev),
+      Some(s"""WITH $duckStreamHead,
              |u AS (
              |  SELECT user_id, COUNT(*) AS n_events,
              |    MAX(head_es) - MAX(es) AS silent_s
@@ -1584,14 +1565,7 @@ object Analytics {
     QueryDef(
       "q_welch_ttest",
       (s, d) => {
-        val o = Tables.orders(s, d)
-          .join(broadcast(Tables.customer(s, d)
-            .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-            .select("c_custkey", "c_mktsegment")),
-            col("o_custkey") === col("c_custkey"))
-          .selectExpr("c_mktsegment AS seg",
-            "CAST(floor(o_totalprice) AS BIGINT) AS x")
-        o.groupBy("seg")
+        segOrders(s, d).groupBy("seg")
           .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
             sum(col("x") * col("x")).as("s2"))
           .agg(
@@ -1613,10 +1587,7 @@ object Analytics {
               | / ((v1 / n1) * (v1 / n1) / (n1 - 1)
               |    + (v2 / n2) * (v2 / n2) / (n2 - 1)) AS df""".stripMargin)
       },
-      Some("""WITH o AS (
-             |  SELECT c_mktsegment AS seg, CAST(floor(o_totalprice) AS BIGINT) AS x
-             |  FROM orders JOIN customer ON o_custkey = c_custkey
-             |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+      Some(s"""WITH $duckSegOrders,
              |g AS (
              |  SELECT seg, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS s1,
              |    CAST(SUM(x * x) AS BIGINT) AS s2
@@ -1730,10 +1701,7 @@ object Analytics {
       "q_survival",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("es"))
-        val head = ev.agg(max(col("es")).as("head_es"))
-        val life = ev.crossJoin(broadcast(head))
+        val life = withStreamHead(s, d)
           .groupBy("user_id")
           .agg(min(col("es")).as("first_es"), max(col("es")).as("last_es"),
             first(col("head_es")).as("head_es"))
@@ -1761,8 +1729,7 @@ object Analytics {
             "CAST(cum_nano AS DOUBLE) / 1e9 AS cum_hazard")
           .orderBy("t_days")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS es FROM events),
-             |head AS (SELECT MAX(es) AS head_es FROM ev),
+      Some(s"""WITH $duckStreamHead,
              |life AS (
              |  SELECT (MAX(es) - MIN(es)) // 86400 AS t_days,
              |    CASE WHEN MAX(head_es) - MAX(es) > 604800 THEN 1 ELSE 0 END AS ev
@@ -1801,13 +1768,7 @@ object Analytics {
       "q_markov_acc",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val pairs = Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .withColumn("next_type", lead(col("event_type"), 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-          .agg(count(lit(1)).as("n"))
+        val pairs = transitionCounts(s, d)
         val wP = Window.partitionBy("from_type")
           .orderBy(col("n").desc, col("to_type"))
         val pred = pairs.withColumn("rn", row_number().over(wP))
@@ -1820,25 +1781,18 @@ object Analytics {
             "CAST(n_hit AS DOUBLE) / n_total AS hit_rate")
           .orderBy("from_type")
       },
-      Some("""WITH seq AS (
-             |  SELECT event_type,
-             |    LEAD(event_type, 1) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS next_type
-             |  FROM events),
-             |c AS (SELECT event_type AS from_type, next_type AS to_type,
-             |    COUNT(*) AS n
-             |  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2),
-             |p AS (
-             |  SELECT from_type, to_type AS pred_type, n AS n_hit,
-             |    ROW_NUMBER() OVER (PARTITION BY from_type
-             |      ORDER BY n DESC, to_type) AS rn
-             |  FROM c),
-             |t AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_total
-             |  FROM c GROUP BY 1)
-             |SELECT from_type, pred_type, CAST(n_hit AS BIGINT) AS n_hit,
-             |  n_total, CAST(n_hit AS DOUBLE) / n_total AS hit_rate
-             |FROM p JOIN t USING (from_type) WHERE rn = 1
-             |ORDER BY from_type""".stripMargin)),
+      Some(s"""WITH $duckTransitionCtes,
+              |p AS (
+              |  SELECT from_type, to_type AS pred_type, n AS n_hit,
+              |    ROW_NUMBER() OVER (PARTITION BY from_type
+              |      ORDER BY n DESC, to_type) AS rn
+              |  FROM c),
+              |t AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS n_total
+              |  FROM c GROUP BY 1)
+              |SELECT from_type, pred_type, CAST(n_hit AS BIGINT) AS n_hit,
+              |  n_total, CAST(n_hit AS DOUBLE) / n_total AS hit_rate
+              |FROM p JOIN t USING (from_type) WHERE rn = 1
+              |ORDER BY from_type""".stripMargin)),
 
     // Mix-shift decomposition — "did the average move because segments
     // changed, or because the customer mix changed?" The Oaxaca-style
@@ -1931,13 +1885,9 @@ object Analytics {
   private def segValueCdf(s: org.apache.spark.sql.SparkSession,
                           d: String): org.apache.spark.sql.DataFrame =
     graft.FrameCache.memo(s, s"segcdf:$d") {
-      val g = Tables.orders(s, d)
-        .join(broadcast(Tables.customer(s, d)
-          .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-          .select("c_custkey", "c_mktsegment")),
-          col("o_custkey") === col("c_custkey"))
-        .selectExpr("CAST(floor(o_totalprice) AS BIGINT) AS x",
-          "CASE WHEN c_mktsegment = 'BUILDING' THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is1")
+      val g = segOrders(s, d)
+        .selectExpr("x",
+          "CASE WHEN seg = 'BUILDING' THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS is1")
         .groupBy("x")
         .agg(sum(col("is1")).as("c1"),
           sum(lit(1L) - col("is1")).as("c2"))
@@ -1949,18 +1899,77 @@ object Analytics {
     * value-grouped two-sample CDF (plain window cumsum — the oracle
     * runs at sf0.01 where a serial window is fine). */
   private lazy val duckSegCdf: String =
-    """WITH o AS (
-      |  SELECT CAST(floor(o_totalprice) AS BIGINT) AS x,
-      |    CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is1
-      |  FROM orders JOIN customer ON o_custkey = c_custkey
-      |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
+    s"""WITH $duckSegOrders,
       |g AS (
-      |  SELECT x, CAST(SUM(is1) AS BIGINT) AS c1,
-      |    CAST(SUM(1 - is1) AS BIGINT) AS c2
+      |  SELECT x, CAST(SUM(CASE WHEN seg = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+      |    CAST(SUM(CASE WHEN seg = 'BUILDING' THEN 0 ELSE 1 END) AS BIGINT) AS c2
       |  FROM o GROUP BY 1),
       |c AS (
       |  SELECT x, c1, c2,
       |    CAST(SUM(c1) OVER (ORDER BY x) AS BIGINT) AS cum1,
       |    CAST(SUM(c2) OVER (ORDER BY x) AS BIGINT) AS cum2
       |  FROM g)""".stripMargin
+
+  /** BUILDING and MACHINERY customers' orders as (seg, x), x the order
+    * total floored to whole dollars: the two samples of q_welch_ttest,
+    * q_ks_test and q_mannwhitney. The customer side is filtered to the
+    * two segments and broadcast. */
+  private def segOrders(s: org.apache.spark.sql.SparkSession,
+                        d: String): org.apache.spark.sql.DataFrame =
+    Tables.orders(s, d)
+      .join(broadcast(Tables.customer(s, d)
+        .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
+        .select("c_custkey", "c_mktsegment")),
+        col("o_custkey") === col("c_custkey"))
+      .selectExpr("c_mktsegment AS seg", "CAST(floor(o_totalprice) AS BIGINT) AS x")
+
+  /** DuckDB twin of [[segOrders]]: the CTE `o`. */
+  private lazy val duckSegOrders: String =
+    """o AS (
+      |  SELECT c_mktsegment AS seg, CAST(floor(o_totalprice) AS BIGINT) AS x
+      |  FROM orders JOIN customer ON o_custkey = c_custkey
+      |  WHERE c_mktsegment IN ('BUILDING', 'MACHINERY'))""".stripMargin
+
+  /** First-order transition counts of each user's event stream
+    * (ordered by ts, ties broken by event_id so the sequence is total):
+    * (from_type, to_type, n). One per-user `lead()` window, then a
+    * keyed aggregate bounded by |types|². */
+  private def transitionCounts(s: org.apache.spark.sql.SparkSession,
+                               d: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    Tables.events(s, d)
+      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** DuckDB twin of [[transitionCounts]]: the CTEs `seq` and `c`. */
+  private lazy val duckTransitionCtes: String =
+    """seq AS (
+      |  SELECT event_type,
+      |    LEAD(event_type, 1) OVER (PARTITION BY user_id
+      |      ORDER BY ts, event_id) AS next_type
+      |  FROM events),
+      |c AS (SELECT event_type AS from_type, next_type AS to_type,
+      |    COUNT(*) AS n
+      |  FROM seq WHERE next_type IS NOT NULL GROUP BY 1, 2)""".stripMargin
+
+  /** Every event as (user_id, es) in epoch seconds, with the stream
+    * head `head_es` (the latest es) attached from a broadcast one-row
+    * aggregate: the frame q_churn and q_survival measure silence
+    * against. */
+  private def withStreamHead(s: org.apache.spark.sql.SparkSession,
+                             d: String): org.apache.spark.sql.DataFrame = {
+    val ev = Tables.events(s, d)
+      .select(col("user_id"), unix_timestamp(col("ts")).as("es"))
+    ev.crossJoin(broadcast(ev.agg(max(col("es")).as("head_es"))))
+  }
+
+  /** DuckDB twin of [[withStreamHead]]: the CTEs `ev` and `head`. */
+  private lazy val duckStreamHead: String =
+    """ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS es FROM events),
+      |head AS (SELECT MAX(es) AS head_es FROM ev)""".stripMargin
 }

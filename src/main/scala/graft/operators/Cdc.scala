@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Parity, QueryDef, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Change-data-capture shapes over the event log: snapshot merge
@@ -35,7 +37,6 @@ object Cdc {
     QueryDef(
       "q_merge_upsert",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         def latest(pred: org.apache.spark.sql.Column) = {
           val w = Window.partitionBy("o_custkey")
             .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
@@ -94,30 +95,9 @@ object Cdc {
     // are two ordered windows over the same user partition.
     QueryDef(
       "q_scd2",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        val seg = Window.partitionBy("user_id").orderBy(col("valid_from"), col("event_id"))
-        Tables.events(s, d)
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-          .withColumn("valid_from", col("ts"))
-          .withColumn("valid_to", lead(col("valid_from"), 1).over(seg))
-          .withColumn("version", row_number().over(seg))
-          .select("user_id", "version", "event_type", "valid_from", "valid_to")
-          .orderBy("user_id", "version")
-      },
-      Some("""WITH chg AS (
-             |  SELECT user_id, event_type, ts AS valid_from, event_id FROM (
-             |    SELECT *, LAG(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS prev_type
-             |    FROM events)
-             |  WHERE prev_type IS NULL OR prev_type <> event_type)
-             |SELECT user_id,
-             |  ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS version,
-             |  event_type, valid_from,
-             |  LEAD(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to
-             |FROM chg ORDER BY user_id, version""".stripMargin)),
+      (s, d) => scd2Segments(s, d).orderBy("user_id", "version"),
+      Some(s"""WITH $duckScd2Segments
+              |SELECT * FROM seg ORDER BY user_id, version""".stripMargin)),
 
     // Batch sessionization (gaps-and-islands, 30-minute timeout):
     // session index = running count of gap-opens per user, then a
@@ -127,42 +107,11 @@ object Cdc {
     // DuckDB's boundary-crossing date_diff reproduces exactly.
     QueryDef(
       "q_sessionize",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        val cum = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        val sessions = Tables.events(s, d)
-          .withColumn("gap_open", when(
-            col("ts").cast("long") - lag(col("ts"), 1).over(w).cast("long") > 1800
-              || lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L))
-          .withColumn("session_idx", sum(col("gap_open")).over(cum))
-          .groupBy("user_id", "session_idx")
-          .agg(count(lit(1)).as("session_len"),
-            (max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("dur_s"))
-        sessions.groupBy("session_len")
-          .agg(count(lit(1)).as("n_sessions"),
-            sum(col("dur_s")).cast("bigint").as("total_dur_s"))
-          .orderBy("session_len")
-      },
-      Some("""WITH g AS (
-             |  SELECT user_id, ts, event_id,
-             |    CASE WHEN prev_ts IS NULL
-             |           OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS gap_open
-             |  FROM (SELECT *, LAG(ts) OVER (PARTITION BY user_id
-             |          ORDER BY ts, event_id) AS prev_ts FROM events)),
-             |sess AS (
-             |  SELECT user_id,
-             |    SUM(gap_open) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx,
-             |    ts FROM g),
-             |per AS (
-             |  SELECT user_id, session_idx, COUNT(*) AS session_len,
-             |    date_diff('second', MIN(ts), MAX(ts)) AS dur_s
-             |  FROM sess GROUP BY user_id, session_idx)
-             |SELECT session_len, COUNT(*) AS n_sessions,
-             |  CAST(SUM(dur_s) AS BIGINT) AS total_dur_s
-             |FROM per GROUP BY session_len ORDER BY session_len""".stripMargin)),
+      (s, d) => sessionHistogram(Tables.events(s, d)
+        .withColumn("gap_open", gapOpen(lag(col("ts"), 1).over(byUserTime)))
+        .withColumn("session_idx", sum(col("gap_open"))
+          .over(byUserTime.rowsBetween(Window.unboundedPreceding, 0)))),
+      Some(duckSessionize)),
 
     // Snapshot diff: classify every key across two table versions as
     // added / removed / changed / unchanged — the table-history audit
@@ -226,7 +175,6 @@ object Cdc {
     QueryDef(
       "q_cdc_apply",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("user_id")
           .orderBy(col("ts").desc, col("event_id").desc)
         val part = Window.partitionBy("user_id")
@@ -273,43 +221,25 @@ object Cdc {
     // (valid_from <= T < valid_to, open segment = NULL valid_to), no
     // window re-computation. At 100 TB the dimension is stored sorted
     // by (key, valid_from) and the filter prunes to ≤1 row per key;
-    // here the segments are rebuilt inline (same logic as q_scd2) and
-    // then filtered — the read itself is stateless.
+    // here the segments are rebuilt by the same kernel as q_scd2
+    // ([[scd2Segments]]) and then filtered — the read itself is
+    // stateless.
     QueryDef(
       "q_scd2_asof",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val t = "TIMESTAMP'2024-01-16 00:00:00'"
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        val seg = Window.partitionBy("user_id").orderBy(col("valid_from"), col("event_id"))
-        Tables.events(s, d)
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-          .withColumn("valid_from", col("ts"))
-          .withColumn("valid_to", lead(col("valid_from"), 1).over(seg))
-          .withColumn("version", row_number().over(seg))
+        scd2Segments(s, d)
           .filter(expr(s"valid_from <= $t AND (valid_to IS NULL OR valid_to > $t)"))
           .select("user_id", "version", "event_type", "valid_from")
           .orderBy("user_id")
       },
-      Some("""WITH ch AS (
-             |  SELECT user_id, ts, event_id, event_type,
-             |    LAG(event_type) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS prev_type
-             |  FROM events),
-             |seg AS (
-             |  SELECT user_id, ts AS valid_from, event_type, event_id,
-             |    LEAD(ts) OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS valid_to,
-             |    ROW_NUMBER() OVER (PARTITION BY user_id
-             |      ORDER BY ts, event_id) AS version
-             |  FROM ch WHERE prev_type IS NULL OR prev_type <> event_type)
-             |SELECT user_id, CAST(version AS BIGINT) AS version, event_type,
-             |  valid_from
-             |FROM seg
-             |WHERE valid_from <= TIMESTAMP '2024-01-16 00:00:00'
-             |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-16 00:00:00')
-             |ORDER BY user_id""".stripMargin)),
+      Some(s"""WITH $duckScd2Segments
+              |SELECT user_id, CAST(version AS BIGINT) AS version, event_type,
+              |  valid_from
+              |FROM seg
+              |WHERE valid_from <= TIMESTAMP '2024-01-16 00:00:00'
+              |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-16 00:00:00')
+              |ORDER BY user_id""".stripMargin)),
 
     // Incremental sessionization — the 100 TB form of q_sessionize:
     // history is NEVER re-scanned. The closed batch contributes (a) its
@@ -326,17 +256,14 @@ object Cdc {
     QueryDef(
       "q_sessionize_incremental",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val cutoff = "TIMESTAMP'2024-01-16 00:00:00'"
-        val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+        val w = byUserTime
         val cum = w.rowsBetween(Window.unboundedPreceding, 0)
-        def flagged(df: org.apache.spark.sql.DataFrame) = df
+        def flagged(df: DataFrame) = df
           .withColumn("prev_ts", lag(col("ts"), 1).over(w))
         val ev = Tables.events(s, d).select("user_id", "ts", "event_id")
         val b1 = flagged(ev.filter(expr(s"ts < $cutoff")))
-          .withColumn("gap_open", when(col("prev_ts").isNull
-            || col("ts").cast("long") - col("prev_ts").cast("long") > 1800, 1L)
-            .otherwise(0L))
+          .withColumn("gap_open", gapOpen(col("prev_ts")))
           .withColumn("session_idx", sum(col("gap_open")).over(cum))
         // the persisted carry state: one row per user seen in batch 1
         val state = b1.groupBy("user_id")
@@ -346,38 +273,91 @@ object Cdc {
         val b2 = flagged(ev.filter(expr(s"ts >= $cutoff")))
           .join(state, Seq("user_id"), "left_outer")
           .withColumn("eff_prev", coalesce(col("prev_ts"), col("last_ts")))
-          .withColumn("gap_open", when(col("eff_prev").isNull
-            || col("ts").cast("long") - col("eff_prev").cast("long") > 1800, 1L)
-            .otherwise(0L))
+          .withColumn("gap_open", gapOpen(col("eff_prev")))
           .withColumn("session_idx",
             sum(col("gap_open")).over(cum) + coalesce(col("n_sessions"), lit(0L)))
-        val all = b1.select("user_id", "session_idx", "ts")
-          .unionAll(b2.select("user_id", "session_idx", "ts"))
-        all.groupBy("user_id", "session_idx")
-          .agg(count(lit(1)).as("session_len"),
-            (max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("dur_s"))
-          .groupBy("session_len")
-          .agg(count(lit(1)).as("n_sessions"),
-            sum(col("dur_s")).cast("bigint").as("total_dur_s"))
-          .orderBy("session_len")
+        sessionHistogram(b1.select("user_id", "session_idx", "ts")
+          .unionAll(b2.select("user_id", "session_idx", "ts")))
       },
-      Some("""WITH g AS (
-             |  SELECT user_id, ts, event_id,
-             |    CASE WHEN prev_ts IS NULL
-             |           OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS gap_open
-             |  FROM (SELECT *, LAG(ts) OVER (PARTITION BY user_id
-             |          ORDER BY ts, event_id) AS prev_ts FROM events)),
-             |sess AS (
-             |  SELECT user_id,
-             |    SUM(gap_open) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx,
-             |    ts FROM g),
-             |per AS (
-             |  SELECT user_id, session_idx, COUNT(*) AS session_len,
-             |    date_diff('second', MIN(ts), MAX(ts)) AS dur_s
-             |  FROM sess GROUP BY user_id, session_idx)
-             |SELECT session_len, COUNT(*) AS n_sessions,
-             |  CAST(SUM(dur_s) AS BIGINT) AS total_dur_s
-             |FROM per GROUP BY session_len ORDER BY session_len""".stripMargin))
+      Some(duckSessionize))
   )
+
+  /** Each user's events in (ts, event_id) order — a total order, since
+    * ts alone ties in a real log. */
+  private def byUserTime: WindowSpec =
+    Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+
+  /** The session rule: an event opens a session when it is the user's
+    * first (`prev` is null) or follows `prev` by more than 30 minutes. */
+  private def gapOpen(prev: Column): Column =
+    when(prev.isNull || col("ts").cast("long") - prev.cast("long") > 1800, 1L)
+      .otherwise(0L)
+
+  /** Session-length histogram over (user_id, session_idx, ts) rows: one
+    * row per session with its event count and duration, then per
+    * session length the number of sessions and their total duration. */
+  private def sessionHistogram(sessions: DataFrame): DataFrame =
+    sessions.groupBy("user_id", "session_idx")
+      .agg(count(lit(1)).as("session_len"),
+        (max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("dur_s"))
+      .groupBy("session_len")
+      .agg(count(lit(1)).as("n_sessions"),
+        sum(col("dur_s")).cast("bigint").as("total_dur_s"))
+      .orderBy("session_len")
+
+  /** DuckDB twin of q_sessionize over all events in one pass; it is
+    * also q_sessionize_incremental's oracle, which makes that entry's
+    * hash check the incremental-equals-full invariant. */
+  private lazy val duckSessionize: String =
+    """WITH g AS (
+      |  SELECT user_id, ts, event_id,
+      |    CASE WHEN prev_ts IS NULL
+      |           OR date_diff('second', prev_ts, ts) > 1800 THEN 1 ELSE 0 END AS gap_open
+      |  FROM (SELECT *, LAG(ts) OVER (PARTITION BY user_id
+      |          ORDER BY ts, event_id) AS prev_ts FROM events)),
+      |sess AS (
+      |  SELECT user_id,
+      |    SUM(gap_open) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx,
+      |    ts FROM g),
+      |per AS (
+      |  SELECT user_id, session_idx, COUNT(*) AS session_len,
+      |    date_diff('second', MIN(ts), MAX(ts)) AS dur_s
+      |  FROM sess GROUP BY user_id, session_idx)
+      |SELECT session_len, COUNT(*) AS n_sessions,
+      |  CAST(SUM(dur_s) AS BIGINT) AS total_dur_s
+      |FROM per GROUP BY session_len ORDER BY session_len""".stripMargin
+
+  /** SCD2 segments of each user's event_type: change detection keeps
+    * the events whose type differs from the previous one, then a second
+    * window over the same user partition stitches the kept rows into
+    * versioned [valid_from, valid_to) ranges (the open segment's
+    * valid_to is null). Columns: user_id, version, event_type,
+    * valid_from, valid_to. */
+  private def scd2Segments(s: SparkSession, d: String): DataFrame = {
+    val seg = Window.partitionBy("user_id").orderBy(col("valid_from"), col("event_id"))
+    Tables.events(s, d)
+      .withColumn("prev_type", lag(col("event_type"), 1).over(byUserTime))
+      .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
+      .withColumn("valid_from", col("ts"))
+      .withColumn("valid_to", lead(col("valid_from"), 1).over(seg))
+      .withColumn("version", row_number().over(seg))
+      .select("user_id", "version", "event_type", "valid_from", "valid_to")
+  }
+
+  /** DuckDB twin of [[scd2Segments]]: the CTEs `chg` (change rows) and
+    * `seg` (the segments, same columns). */
+  private lazy val duckScd2Segments: String =
+    """chg AS (
+      |  SELECT user_id, event_type, ts AS valid_from, event_id FROM (
+      |    SELECT *, LAG(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY ts, event_id) AS prev_type
+      |    FROM events)
+      |  WHERE prev_type IS NULL OR prev_type <> event_type),
+      |seg AS (
+      |  SELECT user_id,
+      |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS version,
+      |    event_type, valid_from,
+      |    LEAD(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from, event_id) AS valid_to
+      |  FROM chg)""".stripMargin
 }

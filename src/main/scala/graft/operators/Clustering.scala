@@ -276,10 +276,13 @@ object Clustering {
     }
 
   /** `KmIters` rounds of Lloyd's from the deterministic seed; returns
-    * the final assignment with its centroid, (cid, vec_id, cent). */
+    * the final assignment with its centroid, (cid, vec_id, cent). The
+    * fitted centroids are memoized per (session, dir), as the PQ
+    * codebooks are: q_kmeans and q_kmeans_silhouette consume the same
+    * deterministic fit, so a session runs it once. */
   def kmeansAssign(s: SparkSession, d: String): DataFrame = {
     val pts = cachedPoints(s, d)
-    val cents = lloyd(pts, KmK, KmIters)
+    val cents = graft.FrameCache.memo(s, s"kmfit:$d")(lloyd(pts, KmK, KmIters))
     kmAssign(pts, cents).join(cents, "cid")
   }
 

@@ -412,14 +412,15 @@ object Dedup {
     *    relation is session-memoized — a pipeline that already ran the
     *    MinHash stage pays nothing here.
     *
-    * The parquet COUNT is footer-metadata work (at 100 TB the N should
-    * come from table statistics, not any scan); the oracle twin
-    * recomputes the same gate from COUNT(*) in integer SQL. `capDocs`
-    * is injectable so specs can force the fallback branch without a
-    * 262k-doc fixture. */
+    * N is counted on the session-memoized [[shingleFrame]] (one row
+    * per document), which the SimHash branch reads next anyway, so the
+    * gate costs no extra parquet scan (at 100 TB the N should come from
+    * table statistics instead); the oracle twin recomputes the same
+    * gate from COUNT(*) in integer SQL. `capDocs` is injectable so
+    * specs can force the fallback branch without a 262k-doc fixture. */
   private[graft] def simhashPairsGated(s: SparkSession, d: String,
                                        capDocs: Long = SimhashCapDocs): DataFrame = {
-    val n = Tables.documents(s, d).count()
+    val n = shingleFrame(s, d).count()
     if (n > capDocs)
       minhashPairs(s, d).select(col("a"), col("b"),
         lit("minhash").as("method"), col("jaccard").cast("double").as("score"))

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Parity, QueryDef, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Time-series regularization: resample to a fixed grid with gap fill —
@@ -13,25 +15,21 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: bucketing is a stateless per-row truncation
   * (epoch-aligned `window()`, same grid as the streaming twins); the
-  * spine is generated per-entity from its own [min, max] span
-  * (`sequence()` explode — rows ∝ buckets actually needed, never
-  * |entities| × global-span); the gap join is a keyed left join on
-  * (entity, bucket); forward fill is a per-entity ordered window. Every
-  * stage partitions by entity — no global anything.
+  * gap rows are generated per entity from its own observed buckets
+  * (`sequence()` explode in [[gapFill]] — rows ∝ buckets actually
+  * needed, never |entities| × global-span); every window partitions by
+  * entity — no global anything.
   *
-  * The explode-after-coalesce trap, measured: the spine's parent (one
-  * row per entity) is tiny, so AQE coalesces its exchange to ~1
-  * partition and `sequence()` then multiplies rows ∝ span AFTER the
-  * coalesce; when the gap join resolves to a broadcast (entity×bucket
-  * agg under the threshold — exactly the mid-size regime), nothing
-  * downstream re-shuffles and every window pass runs serially in that
-  * one partition. The round-11 sf1 sweep caught it as an inverted
-  * scale curve: 15.1 s at sf1 vs 5.9 s at sf3, stable medians — sf3
-  * was "saved" only by its agg outgrowing the broadcast threshold,
-  * which forced a shuffle join whose exchange re-parallelized the
-  * frame. Fix: [[spreadByEntity]] pins an explicit fixed-count
-  * repartition on the joined frame — it satisfies the windows'
-  * required distribution (so it REPLACES their implicit exchange, not
+  * The explode-after-coalesce trap: a small pre-explode frame lets AQE
+  * coalesce its exchange to ~1 partition, and `sequence()` then
+  * multiplies rows ∝ span AFTER the coalesce; when nothing downstream
+  * re-shuffles, every later pass runs serially in that one partition.
+  * It shows as an inverted scale curve (15.1 s at sf1 vs 5.9 s at sf3,
+  * stable medians): sf3 escapes only because its aggregate outgrows
+  * the broadcast threshold, which forces a shuffle whose exchange
+  * re-parallelizes the frame. [[spreadByEntity]] pins an explicit
+  * fixed-count repartition under the window — it satisfies the window's
+  * required distribution (so it REPLACES its implicit exchange, not
   * adds one) and a user-specified partition count is exempt from AQE
   * coalescing.
   */
@@ -40,55 +38,112 @@ object TimeSeries {
   /** Explicit entity-keyed exchange sized to the session's shuffle
     * parallelism; the windows' ClusteredDistribution(user_id) is
     * satisfied by it, so this is the window exchange, pinned. */
-  private def spreadByEntity(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  private def spreadByEntity(df: DataFrame): DataFrame = {
     val np = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     df.repartition(scala.util.Try(np.toInt).getOrElse(32), col("user_id"))
   }
 
+  /** Gaps-and-islands 6-hour grid per user. The per-(user, bucket)
+    * aggregate (n, sum_value) gets ONE `lead()` window for each of
+    * `bucket` and `leads`, as `next_<c>`; then `posexplode(sequence(
+    * bucket, next_bucket − 6h))` emits the observed row (pos = 0) and
+    * its trailing empty buckets (`col`), each carrying its island's
+    * columns inline. So the only window runs over the observed buckets,
+    * never the exploded frame, and no spine ⋈ agg join is needed. An
+    * observed bucket's sum is non-null (a SUM over a non-null measure
+    * with n ≥ 1), which is what lets the island's own row stand for the
+    * carried value. */
+  private def gapFill(s: SparkSession, d: String, leads: String*): DataFrame = {
+    val agg = Tables.events(s, d)
+      .groupBy(col("user_id"), window(col("ts"), "6 hours").getField("start").as("bucket"))
+      .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
+    val w = Window.partitionBy("user_id").orderBy("bucket")
+    ("bucket" +: leads).foldLeft(spreadByEntity(agg)) { (df, c) =>
+        df.withColumn(s"next_$c", lead(col(c), 1).over(w))
+      }
+      .select(col("*"), posexplode(expr(
+        "sequence(bucket, coalesce(next_bucket - INTERVAL 6 HOURS, bucket), INTERVAL 6 HOURS)")))
+  }
+
+  /** DuckDB side of the 6-hour grid: the CTEs `agg` (the observed
+    * buckets) and `spine` (every bucket of each user's [min, max]
+    * span), joined by the callers. */
+  private lazy val duckGapSpine: String =
+    s"""agg AS (
+       |  SELECT user_id, time_bucket(INTERVAL 6 HOUR, ts) AS bucket,
+       |    COUNT(*) AS n, ${Parity.sqlDsum("value", 2)} AS sum_value
+       |  FROM events GROUP BY 1, 2),
+       |spine AS (
+       |  SELECT user_id, UNNEST(generate_series(b0, b1, INTERVAL 6 HOUR)) AS bucket
+       |  FROM (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
+       |        FROM agg GROUP BY user_id))""".stripMargin
+
+  /** Daily event counts per type: (event_type, dday, x). The only pass
+    * over raw events of the daily-series entries; everything after it
+    * runs on ≤ types × days rows. */
+  private def dailyCounts(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"), to_date(col("ts")).as("dday"))
+      .agg(count(lit(1)).as("x"))
+
+  /** DuckDB twin of [[dailyCounts]]: the CTE `daily`. */
+  private lazy val duckDaily: String =
+    """daily AS (
+      |  SELECT event_type, CAST(ts AS DATE) AS dday, COUNT(*) AS x
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** A sequential fold over each type's day-ordered count series, run
+    * as one `aggregate()` over the sorted array `cs`: the state starts
+    * at `init` and each later day's count `v` maps it through `step`
+    * (lambda `(st, v)`). Columns: event_type, n_days, `extra`…, st. */
+  private def dailyFold(s: SparkSession, d: String, init: String, step: String,
+                        extra: String*): DataFrame =
+    dailyCounts(s, d)
+      .groupBy("event_type")
+      .agg(collect_list(struct(col("dday"), col("x"))).as("ds"))
+      .selectExpr("event_type", "transform(array_sort(ds), e -> e.x) AS cs")
+      .selectExpr(Seq("event_type", "CAST(size(cs) AS BIGINT) AS n_days") ++ extra :+
+        s"aggregate(slice(cs, 2, size(cs) - 1), $init, (st, v) -> $step) AS st": _*)
+
+  /** DuckDB twin of [[dailyFold]]: a recursive CTE `r` stepping the day
+    * index `i`, with one column per `(name, init, step)` of `state`
+    * (`init` reads the first day's `x`; `step` reads the previous row as
+    * `r` and the day as `idx`). The final row of each type joins `tot`
+    * (n_days, total_cnt) and selects `event_type, n_days, out`. */
+  private def duckDailyFold(state: Seq[(String, String, String)], out: String): String =
+    s"""WITH RECURSIVE $duckDaily,
+       |idx AS (
+       |  SELECT event_type, CAST(x AS BIGINT) AS x,
+       |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY dday) AS i
+       |  FROM daily),
+       |r AS (
+       |  SELECT event_type, i, ${state.map { case (name, init, _) => s"$init AS $name" }.mkString(", ")}
+       |  FROM idx WHERE i = 1
+       |  UNION ALL
+       |  SELECT idx.event_type, idx.i, ${state.map(_._3).mkString(",\n    ")}
+       |  FROM r JOIN idx ON idx.event_type = r.event_type AND idx.i = r.i + 1),
+       |tot AS (
+       |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
+       |    CAST(SUM(x) AS BIGINT) AS total_cnt
+       |  FROM daily GROUP BY 1)
+       |SELECT r.event_type, tot.n_days, $out
+       |FROM r JOIN tot ON tot.event_type = r.event_type AND r.i = tot.n_days
+       |ORDER BY r.event_type""".stripMargin
+
   val defs: Seq[QueryDef] = Seq(
 
     // 6-hour resample per user: zero-filled counts and forward-carried
-    // last observed bucket sum over each user's active span.
-    //
-    // Gaps-and-islands form (round-11 rewrite): ONE `lead()` window
-    // over the per-(user, bucket) aggregate finds each observed
-    // bucket's successor, and `posexplode(sequence(bucket, next-6h))`
-    // emits the observed row (pos=0) plus its trailing gap rows with
-    // the carried value inline — no spine aggregation, no spine⋈agg
-    // join, and the only window pass runs over the PRE-explode
-    // aggregate (observed buckets), never the exploded frame. The
-    // prior spine-join form paid 3 extra passes over the exploded
-    // frame and, in the mid-size regime where the agg side broadcast,
-    // inherited a 1-partition layout from the explode-after-coalesce
-    // trap (see object scaladoc). Precondition (holds by
-    // construction here): an observed bucket's sum is non-null — true
-    // for any SUM over a non-null measure, since groups have n ≥ 1.
+    // last observed bucket sum over each user's active span, from the
+    // gaps-and-islands rows of [[gapFill]] (the carried value is the
+    // island's own sum).
     QueryDef(
       "q_ts_resample",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val agg = Tables.events(s, d)
-          .groupBy(col("user_id"), window(col("ts"), "6 hours").getField("start").as("bucket"))
-          .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
-        val w = Window.partitionBy("user_id").orderBy("bucket")
-        spreadByEntity(agg)
-          .withColumn("nb", lead(col("bucket"), 1).over(w))
-          .select(col("user_id"), col("n"), col("sum_value"),
-            posexplode(expr(
-              "sequence(bucket, coalesce(nb - INTERVAL 6 HOURS, bucket), INTERVAL 6 HOURS)")))
-          .selectExpr("user_id", "col AS bucket",
-            "IF(pos = 0, n, CAST(0 AS BIGINT)) AS n",
-            "sum_value AS ffill_value")
-          .orderBy("user_id", "bucket")
-      },
-      Some(s"""WITH agg AS (
-              |  SELECT user_id, time_bucket(INTERVAL 6 HOUR, ts) AS bucket,
-              |    COUNT(*) AS n, ${Parity.sqlDsum("value", 2)} AS sum_value
-              |  FROM events GROUP BY 1, 2),
-              |spine AS (
-              |  SELECT user_id, UNNEST(generate_series(b0, b1, INTERVAL 6 HOUR)) AS bucket
-              |  FROM (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
-              |        FROM agg GROUP BY user_id))
+      (s, d) => gapFill(s, d)
+        .selectExpr("user_id", "col AS bucket",
+          "IF(pos = 0, n, CAST(0 AS BIGINT)) AS n",
+          "sum_value AS ffill_value")
+        .orderBy("user_id", "bucket"),
+      Some(s"""WITH $duckGapSpine
               |SELECT spine.user_id, spine.bucket, COALESCE(agg.n, 0) AS n,
               |  last_value(agg.sum_value IGNORE NULLS) OVER (
               |    PARTITION BY spine.user_id ORDER BY spine.bucket
@@ -102,47 +157,22 @@ object TimeSeries {
     // each empty 6-hour bucket gets prev + (next − prev) · frac, frac
     // from integer epoch seconds. Arithmetic is IEEE per-row over
     // Parity-deterministic bucket sums — no transcendental, no
-    // quantization needed.
-    //
-    // Gaps-and-islands form (round-11 rewrite; see q_ts_resample): the
-    // lerp endpoints (pv=island start, nv=next observed) ride the SAME
-    // `lead()` row the explode came from, so the four ignore-null
-    // carry windows of the spine-join form (two of them
-    // UnboundedFollowing frames — each a full extra pass over the
-    // exploded frame) disappear entirely. sf1 compute measured
-    // 11.9 → ~5 s on identical output.
+    // quantization needed. The lerp endpoints (island start and next
+    // observed bucket) ride the same [[gapFill]] row the gap rows were
+    // exploded from, so no carry window ever runs over the exploded
+    // frame.
     QueryDef(
       "q_ts_interpolate",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val agg = Tables.events(s, d)
-          .groupBy(col("user_id"), window(col("ts"), "6 hours").getField("start").as("bucket"))
-          .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
-        val w = Window.partitionBy("user_id").orderBy("bucket")
-        spreadByEntity(agg)
-          .withColumn("nb", lead(col("bucket"), 1).over(w))
-          .withColumn("nv", lead(col("sum_value"), 1).over(w))
-          .select(col("user_id"), col("n"),
-            col("sum_value").as("pv"), col("bucket").as("pb"), col("nb"), col("nv"),
-            posexplode(expr(
-              "sequence(bucket, coalesce(nb - INTERVAL 6 HOURS, bucket), INTERVAL 6 HOURS)")))
-          .selectExpr("user_id", "col AS bucket",
-            "IF(pos = 0, n, CAST(0 AS BIGINT)) AS n",
-            """CASE WHEN pos = 0 THEN pv
-              |     ELSE pv + (nv - pv)
-              |          * (CAST(unix_timestamp(col) - unix_timestamp(pb) AS DOUBLE)
-              |             / (unix_timestamp(nb) - unix_timestamp(pb)))
-              |END AS interp_value""".stripMargin)
-          .orderBy("user_id", "bucket")
-      },
-      Some(s"""WITH agg AS (
-              |  SELECT user_id, time_bucket(INTERVAL 6 HOUR, ts) AS bucket,
-              |    COUNT(*) AS n, ${Parity.sqlDsum("value", 2)} AS sum_value
-              |  FROM events GROUP BY 1, 2),
-              |spine AS (
-              |  SELECT user_id, UNNEST(generate_series(b0, b1, INTERVAL 6 HOUR)) AS bucket
-              |  FROM (SELECT user_id, MIN(bucket) AS b0, MAX(bucket) AS b1
-              |        FROM agg GROUP BY user_id)),
+      (s, d) => gapFill(s, d, "sum_value")
+        .selectExpr("user_id", "col AS bucket",
+          "IF(pos = 0, n, CAST(0 AS BIGINT)) AS n",
+          """CASE WHEN pos = 0 THEN sum_value
+            |     ELSE sum_value + (next_sum_value - sum_value)
+            |          * (CAST(unix_timestamp(col) - unix_timestamp(bucket) AS DOUBLE)
+            |             / (unix_timestamp(next_bucket) - unix_timestamp(bucket)))
+            |END AS interp_value""".stripMargin)
+        .orderBy("user_id", "bucket"),
+      Some(s"""WITH $duckGapSpine,
               |j AS (SELECT spine.user_id, spine.bucket,
               |    COALESCE(agg.n, 0) AS n, agg.sum_value,
               |    last_value(agg.sum_value IGNORE NULLS) OVER wp AS pv,
@@ -177,7 +207,6 @@ object TimeSeries {
     QueryDef(
       "q_interval_overlap",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("l_suppkey").orderBy(col("d"), col("delta"))
           .rowsBetween(Window.unboundedPreceding, 0)
         Tables.lineitem(s, d)
@@ -220,7 +249,6 @@ object TimeSeries {
     QueryDef(
       "q_ts_anomaly",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val ord = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         val frame = ord.rowsBetween(-4, 0)
         Tables.events(s, d)
@@ -307,41 +335,12 @@ object TimeSeries {
     // as a recursive CTE stepping the day index.
     QueryDef(
       "q_ts_ewma",
-      (s, d) => {
-        Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("event_type")
-          .agg(collect_list(struct(col("day"), col("cnt"))).as("ds"))
-          .selectExpr("event_type",
-            "transform(array_sort(ds), x -> x.cnt) AS cs")
-          .selectExpr("event_type",
-            "CAST(size(cs) AS BIGINT) AS n_days",
-            "aggregate(cs, CAST(0 AS BIGINT), (acc, v) -> acc + v) AS total_cnt",
-            "aggregate(slice(cs, 2, size(cs) - 1), element_at(cs, 1), " +
-              "(acc, v) -> (acc + v) div 2) AS ewma")
-          .orderBy("event_type")
-      },
-      Some("""WITH RECURSIVE daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             |idx AS (
-             |  SELECT event_type, cnt,
-             |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-             |  FROM daily),
-             |r AS (
-             |  SELECT event_type, i, CAST(cnt AS BIGINT) AS ewma FROM idx WHERE i = 1
-             |  UNION ALL
-             |  SELECT idx.event_type, idx.i, (r.ewma + idx.cnt) // 2
-             |  FROM r JOIN idx ON idx.event_type = r.event_type AND idx.i = r.i + 1),
-             |tot AS (
-             |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days,
-             |    CAST(SUM(cnt) AS BIGINT) AS total_cnt
-             |  FROM daily GROUP BY 1)
-             |SELECT r.event_type, tot.n_days, tot.total_cnt,
-             |  CAST(r.ewma AS BIGINT) AS ewma
-             |FROM r JOIN tot ON tot.event_type = r.event_type AND r.i = tot.n_days
-             |ORDER BY r.event_type""".stripMargin)),
+      (s, d) => dailyFold(s, d, "element_at(cs, 1)", "(st + v) div 2",
+          "aggregate(cs, CAST(0 AS BIGINT), (acc, v) -> acc + v) AS total_cnt")
+        .selectExpr("event_type", "n_days", "total_cnt", "st AS ewma")
+        .orderBy("event_type"),
+      Some(duckDailyFold(Seq(("ewma", "x", "(r.ewma + idx.x) // 2")),
+        "tot.total_cnt, r.ewma"))),
 
     // Period-over-period growth: weekly event volume per type with the
     // previous week's count and the percent change — the WoW report
@@ -353,7 +352,6 @@ object TimeSeries {
     QueryDef(
       "q_ts_pop",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val weekly = Tables.events(s, d)
           .groupBy(col("event_type"),
             date_trunc("week", col("ts")).cast("date").as("week"))
@@ -389,7 +387,6 @@ object TimeSeries {
     QueryDef(
       "q_ts_twap",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val ord = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         Tables.events(s, d)
           .withColumn("vq", expr("CAST(floor(value * 1000) AS BIGINT)"))
@@ -431,15 +428,12 @@ object TimeSeries {
     QueryDef(
       "q_ts_seasonal",
       (s, d) => {
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("dday"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("dow", dayofweek(col("dday")))
+        val daily = dailyCounts(s, d).withColumn("dow", dayofweek(col("dday")))
         val base = daily.groupBy("event_type", "dow")
-          .agg(sum(col("n")).as("sum_dow"), count(lit(1)).as("nd_dow"))
+          .agg(sum(col("x")).as("sum_dow"), count(lit(1)).as("nd_dow"))
         daily.join(base, Seq("event_type", "dow"))
-          .withColumn("hi", (col("n") * col("nd_dow") * 10 > col("sum_dow") * 13).cast("long"))
-          .withColumn("lo", (col("n") * col("nd_dow") * 10 < col("sum_dow") * 7).cast("long"))
+          .withColumn("hi", (col("x") * col("nd_dow") * 10 > col("sum_dow") * 13).cast("long"))
+          .withColumn("lo", (col("x") * col("nd_dow") * 10 < col("sum_dow") * 7).cast("long"))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_days"),
             sum(col("hi")).cast("bigint").as("n_high"),
@@ -449,26 +443,23 @@ object TimeSeries {
               .otherwise(0L)).cast("bigint").as("flag_checksum"))
           .orderBy("event_type")
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS dday, COUNT(*) AS n,
-             |    dayofweek(CAST(ts AS DATE)) AS dow
-             |  FROM events GROUP BY 1, 2, 4),
-             |base AS (
-             |  SELECT event_type, dow, SUM(n) AS sum_dow, COUNT(*) AS nd_dow
-             |  FROM daily GROUP BY 1, 2),
-             |f AS (
-             |  SELECT d.event_type, d.dday,
-             |    CASE WHEN d.n * b.nd_dow * 10 > b.sum_dow * 13 THEN 1 ELSE 0 END AS hi,
-             |    CASE WHEN d.n * b.nd_dow * 10 < b.sum_dow * 7 THEN 1 ELSE 0 END AS lo
-             |  FROM daily d JOIN base b
-             |    ON b.event_type = d.event_type AND b.dow = d.dow)
-             |SELECT event_type, COUNT(*) AS n_days,
-             |  CAST(SUM(hi) AS BIGINT) AS n_high,
-             |  CAST(SUM(lo) AS BIGINT) AS n_low,
-             |  CAST(SUM(CASE WHEN hi = 1 OR lo = 1
-             |    THEN date_diff('day', DATE '1970-01-01', dday) ELSE 0 END) AS BIGINT)
-             |    AS flag_checksum
-             |FROM f GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH $duckDaily,
+              |base AS (
+              |  SELECT event_type, dayofweek(dday) AS dow, SUM(x) AS sum_dow, COUNT(*) AS nd_dow
+              |  FROM daily GROUP BY 1, 2),
+              |f AS (
+              |  SELECT d.event_type, d.dday,
+              |    CASE WHEN d.x * b.nd_dow * 10 > b.sum_dow * 13 THEN 1 ELSE 0 END AS hi,
+              |    CASE WHEN d.x * b.nd_dow * 10 < b.sum_dow * 7 THEN 1 ELSE 0 END AS lo
+              |  FROM daily d JOIN base b
+              |    ON b.event_type = d.event_type AND b.dow = dayofweek(d.dday))
+              |SELECT event_type, COUNT(*) AS n_days,
+              |  CAST(SUM(hi) AS BIGINT) AS n_high,
+              |  CAST(SUM(lo) AS BIGINT) AS n_low,
+              |  CAST(SUM(CASE WHEN hi = 1 OR lo = 1
+              |    THEN date_diff('day', DATE '1970-01-01', dday) ELSE 0 END) AS BIGINT)
+              |    AS flag_checksum
+              |FROM f GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Autocorrelation function: Pearson r of each type's daily-count
     // series against itself at lags 1..7 — the periodicity probe run
@@ -485,10 +476,7 @@ object TimeSeries {
     QueryDef(
       "q_ts_acf",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("dday"))
-          .agg(count(lit(1)).as("x"))
+        val daily = dailyCounts(s, d)
           .withColumn("i",
             row_number().over(Window.partitionBy("event_type").orderBy("dday")).cast("long"))
         val lags = daily.sparkSession.range(1, 8).select(col("id").as("k"))
@@ -508,19 +496,20 @@ object TimeSeries {
               |    * sqrt(CAST(n * syy - sy * sy AS DOUBLE))) AS acf""".stripMargin)
           .orderBy("event_type", "lag")
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS dday, COUNT(*) AS x,
-             |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY CAST(ts AS DATE)) AS i
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $duckDaily,
+             |di AS (
+             |  SELECT event_type, x,
+             |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY dday) AS i
+             |  FROM daily),
              |m AS (
              |  SELECT a.event_type, k.k, COUNT(*) AS n,
              |    CAST(SUM(a.x) AS BIGINT) AS sx, CAST(SUM(b.x) AS BIGINT) AS sy,
              |    CAST(SUM(a.x * b.x) AS BIGINT) AS sxy,
              |    CAST(SUM(a.x * a.x) AS BIGINT) AS sxx,
              |    CAST(SUM(b.x * b.x) AS BIGINT) AS syy
-             |  FROM daily a
+             |  FROM di a
              |  CROSS JOIN (SELECT UNNEST(range(1, 8)) AS k) k
-             |  JOIN daily b ON b.event_type = a.event_type AND b.i = a.i + k.k
+             |  JOIN di b ON b.event_type = a.event_type AND b.i = a.i + k.k
              |  GROUP BY 1, 2)
              |SELECT event_type, CAST(k AS BIGINT) AS lag, n,
              |  CAST(n * sxy - sx * sy AS DOUBLE)
@@ -540,10 +529,7 @@ object TimeSeries {
     QueryDef(
       "q_ts_cusum",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("dday"))
-          .agg(count(lit(1)).as("x"))
+        val daily = dailyCounts(s, d)
         val tot = daily.groupBy("event_type")
           .agg(count(lit(1)).as("nd"), sum(col("x")).as("sx"))
         val wc = Window.partitionBy("event_type").orderBy("dday")
@@ -560,9 +546,7 @@ object TimeSeries {
             col("s_scaled"), col("nd").as("n_days"))
           .orderBy("event_type")
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS dday, COUNT(*) AS x
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $duckDaily,
              |tot AS (
              |  SELECT event_type, COUNT(*) AS nd, SUM(x) AS sx FROM daily GROUP BY 1),
              |c AS (
@@ -591,10 +575,7 @@ object TimeSeries {
     QueryDef(
       "q_ts_forecast",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("dday"))
-          .agg(count(lit(1)).as("x"))
+        val daily = dailyCounts(s, d)
         val w = Window.partitionBy("event_type").orderBy("dday")
         daily
           .withColumn("i", row_number().over(w).cast("long"))
@@ -610,9 +591,7 @@ object TimeSeries {
             "CAST(sae AS DOUBLE) / n_eval AS mae")
           .orderBy("event_type")
       },
-      Some("""WITH daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS dday, COUNT(*) AS x
-             |  FROM events GROUP BY 1, 2),
+      Some(s"""WITH $duckDaily,
              |r AS (
              |  SELECT event_type, x,
              |    ROW_NUMBER() OVER w AS i,
@@ -638,7 +617,6 @@ object TimeSeries {
     QueryDef(
       "q_ts_gaps",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val hours = Tables.events(s, d)
           .select(col("event_type"),
             (unix_timestamp(date_trunc("hour", col("ts")))).as("hes"))
@@ -713,45 +691,17 @@ object TimeSeries {
     // ever touches the driver, and keys fold in parallel.
     QueryDef(
       "q_ts_holt",
-      (s, d) => {
-        Tables.events(s, d)
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("event_type")
-          .agg(collect_list(struct(col("day"), col("cnt"))).as("ds"))
-          .selectExpr("event_type",
-            "transform(array_sort(ds), x -> x.cnt) AS cs")
-          .selectExpr("event_type",
-            "CAST(size(cs) AS BIGINT) AS n_days",
-            "aggregate(slice(cs, 2, size(cs) - 1), " +
-              "named_struct('l', element_at(cs, 1), 'b', CAST(0 AS BIGINT)), " +
-              "(st, v) -> named_struct(" +
-              "  'l', (v + st.l + st.b) div 2, " +
-              "  'b', (st.b + ((v + st.l + st.b) div 2 - st.l)) div 2)) AS st")
-          .selectExpr("event_type", "n_days",
-            "st.l AS level", "st.b AS trend", "st.l + st.b AS forecast_next")
-          .orderBy("event_type")
-      },
-      Some("""WITH RECURSIVE daily AS (
-             |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS cnt
-             |  FROM events GROUP BY 1, 2),
-             |idx AS (
-             |  SELECT event_type, CAST(cnt AS BIGINT) AS cnt,
-             |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-             |  FROM daily),
-             |r AS (
-             |  SELECT event_type, i, cnt AS l, CAST(0 AS BIGINT) AS b
-             |  FROM idx WHERE i = 1
-             |  UNION ALL
-             |  SELECT idx.event_type, idx.i,
-             |    (idx.cnt + r.l + r.b) // 2,
-             |    (r.b + ((idx.cnt + r.l + r.b) // 2 - r.l)) // 2
-             |  FROM r JOIN idx ON idx.event_type = r.event_type AND idx.i = r.i + 1),
-             |tot AS (
-             |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_days FROM daily GROUP BY 1)
-             |SELECT r.event_type, tot.n_days, r.l AS level, r.b AS trend,
-             |  r.l + r.b AS forecast_next
-             |FROM r JOIN tot ON tot.event_type = r.event_type AND r.i = tot.n_days
-             |ORDER BY r.event_type""".stripMargin))
+      (s, d) => dailyFold(s, d,
+          "named_struct('l', element_at(cs, 1), 'b', CAST(0 AS BIGINT))",
+          "named_struct(" +
+            "'l', (v + st.l + st.b) div 2, " +
+            "'b', (st.b + ((v + st.l + st.b) div 2 - st.l)) div 2)")
+        .selectExpr("event_type", "n_days",
+          "st.l AS level", "st.b AS trend", "st.l + st.b AS forecast_next")
+        .orderBy("event_type"),
+      Some(duckDailyFold(Seq(
+          ("l", "x", "(idx.x + r.l + r.b) // 2"),
+          ("b", "CAST(0 AS BIGINT)", "(r.b + ((idx.x + r.l + r.b) // 2 - r.l)) // 2")),
+        "r.l AS level, r.b AS trend, r.l + r.b AS forecast_next")))
   )
 }

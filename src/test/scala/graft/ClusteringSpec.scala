@@ -133,7 +133,6 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("iterative graph, k-means and PQ entries keep every output row") {
-    import org.apache.spark.sql.functions._
     // (row count : order-independent row-hash sum) per entry, in the
     // tembench suite's fingerprint form; pinned so that a change to the
     // shared message-pass or Lloyd kernels that shifts any row of any
@@ -155,10 +154,7 @@ class ClusteringSpec extends AnyFunSuite {
       "q_ivfpq" -> "20:-538669539211246956",
       "q_pq_recall" -> "1:9100714886878829062")
     val got = expected.keys.map { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val hash = xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*)
-      val r = df.agg(count(lit(1)), sum(hash.cast("decimal(38,0)"))).head()
-      name -> s"${r.getLong(0)}:${r.get(1)}"
+      name -> TestSpark.fingerprint(SparkEntry.queries(name)(spark, sf))
     }.toMap
     assert(got === expected)
   }

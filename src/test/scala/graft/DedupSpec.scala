@@ -14,7 +14,6 @@ class DedupSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("dedup entries and the pair-relation consumers keep every output row") {
-    import org.apache.spark.sql.functions._
     // (row count : order-independent row-hash sum) per entry, in the
     // tembench suite's fingerprint form; pinned so that a change to a
     // shared kernel that shifts any row of any entry fails here, not
@@ -46,10 +45,7 @@ class DedupSpec extends AnyFunSuite {
       "q_corpus_dedup_report" -> "20:-5096754827785873798")
     assert(operators.Dedup.defs.map(_.name).toSet.subsetOf(expected.keySet))
     val got = expected.keys.map { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val hash = xxhash64(df.columns.toSeq.map(c => col(s"`$c`")): _*)
-      val r = df.agg(count(lit(1)), sum(hash.cast("decimal(38,0)"))).head()
-      name -> s"${r.getLong(0)}:${r.get(1)}"
+      name -> TestSpark.fingerprint(SparkEntry.queries(name)(spark, sf))
     }.toMap
     assert(got === expected)
   }
