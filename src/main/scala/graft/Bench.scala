@@ -15,9 +15,9 @@ import scala.util.control.NonFatal
   * QueryDef: q_dedup_ngram, q_dedup_embed, fixed 8-bit q_dedup_simhash)
   * are correctness fixtures, not performance claims — their scalable
   * twins (q_dedup_minhash, q_sim_lsh, q_dedup_simhash_sized) are what
-  * gets timed. SPARK_GRAFT_BENCH_ALL=1 times everything EXCEPT the
-  * tagged baselines (the tag is mechanical, not a list convention);
-  * naming one in SPARK_GRAFT_BENCH_ONLY still runs it.
+  * gets timed. The run fails if the headline names a tagged baseline
+  * (the tag is mechanical, not a list convention); naming one in
+  * SPARK_GRAFT_BENCH_ONLY still runs it.
   *
   * One untimed warm-up query absorbs the JVM and session start-up;
   * each query is then timed in a single run.
@@ -494,16 +494,13 @@ object Bench {
     val spark = GraftSession.create(cpus)
 
     // the deliberately quadratic verification baselines carry a
-    // QueryDef tag, not a list convention — any scale run excludes
-    // them mechanically (an explicit BENCH_ONLY naming still wins)
+    // QueryDef tag, not a list convention — the headline must not
+    // name one (an explicit BENCH_ONLY naming still runs it)
     val excluded = SparkEntry.allDefs.filter(_.scaleExcluded).map(_.name).toSet
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       // dev knob: time a comma-separated subset without the full sweep
       case Some(only) => only.split(',').toSeq.filter(SparkEntry.queries.contains)
-      case None =>
-        if (sys.env.contains("SPARK_GRAFT_BENCH_ALL"))
-          SparkEntry.queries.keys.toSeq.sorted.filterNot(excluded)
-        else headline.filter(SparkEntry.queries.contains)
+      case None => headline.filter(SparkEntry.queries.contains)
     }
     require(headline.forall(!excluded(_)),
       s"headline contains scale-excluded baselines: ${headline.filter(excluded)}")
@@ -537,10 +534,11 @@ object Bench {
     println(s"""{"metric":"total","kind":"full","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
     // Compact trailing line: the driver keeps only the LAST ~2000 chars
     // of stdout, so the full per-query line above (>>2000 chars at 170+
-    // headline entries) arrives headless and unparseable (BENCH_r09/r10
-    // both landed with parsed:null). This line carries the total, the
-    // entry count, every error, and the slowest 40 entries at 3-decimal
-    // precision — sized to survive the tail capture whole. Both lines
+    // headline entries) arrives headless and unparseable (the round-9
+    // and round-10 driver records both landed with parsed:null). This
+    // line carries the total, the entry count, every error, and the
+    // slowest 40 entries at 3-decimal precision — sized to survive the
+    // tail capture whole. Both lines
     // keep "metric":"total" (the driver's tail parser keys on it); the
     // "kind" field is what distinguishes them — sweep.py selects
     // kind=="full" by key instead of the old longest-line heuristic,

@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   * `spark.hadoop.fs.file.impl=graft.io.NioLocalFileSystem` and
   * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.io.NioLocalFs`
   * where they write to local disk.
+  *
+  * The extensions are required, not an optimization: graft's native
+  * functions and its range join exist only through them, so in a
+  * session built without them a query that uses one fails at analysis
+  * (the function is undefined) or at planning (no strategy plans the
+  * range-join node).
   */
 object GraftSession {
   def create(cpus: String): SparkSession = {

@@ -17,9 +17,10 @@ final case class QueryDef(
     oracle: Option[String] = None,
     /** Deliberately quadratic correctness baseline (all-pairs ngram /
       * embed cosine, fixed-band 8-bit SimHash, brute-force top-k):
-      * verified at oracle scale, but mechanically excluded from scale
-      * benches — [[Bench]] honors the tag instead of a list convention.
-      * An explicit `SPARK_GRAFT_BENCH_ONLY` naming still runs one. */
+      * verified at oracle scale, never timed by the headline —
+      * [[Bench]] fails if its headline names a tagged entry, a check on
+      * the tag instead of a list convention. An explicit
+      * `SPARK_GRAFT_BENCH_ONLY` naming still runs one. */
     scaleExcluded: Boolean = false)
 
 /** Collision-proof tmpdir slice keys for write-path queries (compact /

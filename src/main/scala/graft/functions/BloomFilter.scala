@@ -88,32 +88,20 @@ object BloomHash {
     }
   }
 
+  /** [[mightContain]] over a driver-side bitmap, as TxLog's manifest
+    * bloom skip reads it. */
+  def mightContainBoxed(bits: Seq[Long], key: Long): Boolean =
+    mightContain(ArrayData.toArrayData(bits.toArray), key)
+
   /** Probe shared by the interpreted eval AND the generated code (the
     * codegen template calls this static forwarder, the same pattern
     * Spark's own templates use for `DateTimeUtils`) — one source of
     * truth for the bit arithmetic, so eval and codegen cannot drift.
     * The bit count comes from the bitmap itself, so a probe against a
-    * bitmap built at any size stays correct.
+    * bitmap built at any size stays correct: probing a COUNT-sized
+    * bitmap modulo the fixed floor size would read the wrong positions
+    * and return false NEGATIVES (pinned by BloomSpec).
     */
-  /** Boxed twin of [[mightContain]] for the degraded-mode UDF fallback
-    * (`GraftFunctions.ensureBloomProbe`). The bit count comes from the
-    * bitmap itself, exactly like the native expression — probing a
-    * COUNT-sized bitmap modulo the fixed floor size reads the wrong
-    * positions and can return false NEGATIVES (round-10 fix; pinned by
-    * BloomSpec). */
-  def mightContainBoxed(bits: Seq[Long], key: Long): Boolean = {
-    val nbits = bits.length.toLong << 6
-    val h = mix(key)
-    val h2 = (h >>> 32) | 1L
-    var i = 0
-    while (i < K) {
-      val bit = (((h + i * h2) & Long.MaxValue) % nbits).toInt
-      if ((bits(bit >> 6) & (1L << (bit & 63))) == 0L) return false
-      i += 1
-    }
-    true
-  }
-
   def mightContain(bits: ArrayData, key: Long): Boolean = {
     val nbits = bits.numElements().toLong << 6
     val h = mix(key)

@@ -6,14 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** Native Catalyst expression: the order-8 2-D Hilbert index (grid
-  * 256×256) — the whole xy2d loop in one codegen'd primitive loop.
+  * 256×256) — the whole xy2d loop in one primitive loop, which the
+  * generated code calls as one static method.
   *
   * Replaces the 8 chained CASE projections [[graft.operators.Layout
   * .hilbertStep]] builds in the hot path: the chain is correct and
   * dialect-neutral (the DuckDB oracle still runs it), but each layer
   * re-evaluates three CASE trees per row and the stacked projection was
-  * the most expensive new sf10 entry (25 s for 60M rows). This compiles
-  * to the textbook bit loop — same rotations, same quadrant term — and
+  * the most expensive new sf10 entry (25 s for 60M rows). This is
+  * the textbook bit loop — same rotations, same quadrant term — and
   * LayoutSpec pins native == chain on the full 65 536-cell grid, plus
   * the bijection/adjacency property both must satisfy.
   *
@@ -22,10 +23,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
   * chain. Null in → null out.
   */
 object HilbertIndex {
-  /** The one interpreted xy2d loop — shared by [[HilbertIndex
-    * .nullSafeEval]] and the [[GraftFunctions.ensureHilbert]] UDF
-    * fallback so the two cannot drift (the codegen template remains a
-    * second, spec-pinned copy by necessity). */
+  /** The one xy2d loop, run by the interpreted eval and the generated
+    * code. */
   def xy2d(x0: Long, y0: Long): Long = {
     var x = x0; var y = y0; var d = 0L; var s = 128L
     while (s > 0) {
@@ -70,28 +69,6 @@ case class HilbertIndex(left: Expression, right: Expression)
     HilbertIndex.xy2d(asLong(left, a), asLong(right, b))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xv, yv) => {
-      val x = ctx.freshName("hx")
-      val y = ctx.freshName("hy")
-      val d = ctx.freshName("hd")
-      val s = ctx.freshName("hs")
-      val rx = ctx.freshName("hrx")
-      val ry = ctx.freshName("hry")
-      val t = ctx.freshName("ht")
-      s"""
-         |long $x = (long) $xv;
-         |long $y = (long) $yv;
-         |long $d = 0L;
-         |for (long $s = 128L; $s > 0L; $s >>= 1) {
-         |  long $rx = ($x & $s) > 0L ? 1L : 0L;
-         |  long $ry = ($y & $s) > 0L ? 1L : 0L;
-         |  $d += $s * $s * ((3L * $rx) ^ $ry);
-         |  if ($ry == 0L) {
-         |    if ($rx == 1L) { $x = 255L - $x; $y = 255L - $y; }
-         |    long $t = $x; $x = $y; $y = $t;
-         |  }
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      s"${ev.value} = graft.functions.HilbertIndex.xy2d((long) $x, (long) $y);")
 }

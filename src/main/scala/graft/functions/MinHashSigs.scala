@@ -48,8 +48,8 @@ case class MinHashSigs(child: Expression) extends UnaryExpression {
 }
 
 /** The one MinHash fold: the native expression (interpreted and
-  * codegen), its extension-less UDF fallback and the
-  * [[MinHashSignature]] aggregator all run these loops. */
+  * codegen) and the [[MinHashSignature]] aggregator both run these
+  * loops. */
 object MinHashSigs {
   private val as = Dedup.MinhashPerms.map(_._1).toArray
   private val bs = Dedup.MinhashPerms.map(_._2).toArray

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StructType}
 
@@ -18,9 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * at sf10 that is 350M rows carrying 64-float embeddings through a
   * sort, the dominant cost of the shared cell assignment. The
   * expression path evaluates the identical quantized cosines
-  * ([[NearestCell.bestCell]] reuses [[CosineSim]]'s exact arithmetic:
-  * per-element floor-quantized products, `sqrt(na)·sqrt(nb)`
-  * denominator) in a tight per-row loop — zero extra rows, zero sort,
+  * ([[NearestCell.bestCell]] calls [[CosineSim.cosine]], the loop
+  * `cosine_sim` runs) in a tight per-row loop — zero extra rows, zero sort,
   * zero shuffle — and keeps the winner by strict `>` scanning ids in
   * ascending order, which is bit-for-bit `row_number() OVER (ORDER BY
   * c_cos DESC, cent_id) = 1`. Results are therefore identical to the
@@ -31,9 +30,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * centroid relation itself is data-sized.
   *
   * CodegenFallback is deliberate: the per-row work is `C × dim`
-  * arithmetic inside one static JVM helper (JIT-compiled like the
-  * codegen'd path's inner loop); the per-row interpreted-eval overhead
-  * is noise against it.
+  * arithmetic inside one static JVM helper (JIT-compiled, the same
+  * loop the codegen'd `cosine_sim` calls); the per-row interpreted-eval
+  * overhead is noise against it.
   */
 case class NearestCell(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -64,16 +63,16 @@ case class NearestCell(left: Expression, right: Expression)
   /** The centroid table, decoded ONCE per task from the foldable right
     * child (a literal: `Similarity.cellAssign` builds it with typedlit
     * from a bounded driver collect). */
-  @transient private lazy val cents: (Array[Long], Array[Array[Float]]) = {
+  @transient private lazy val cents: (Array[Long], Array[ArrayData]) = {
     val arr = right.eval(null).asInstanceOf[ArrayData]
     val n = arr.numElements()
     val ids = new Array[Long](n)
-    val embs = new Array[Array[Float]](n)
+    val embs = new Array[ArrayData](n)
     var i = 0
     while (i < n) {
       val row = arr.getStruct(i, 2)
       ids(i) = row.getLong(0)
-      embs(i) = row.getArray(1).toFloatArray()
+      embs(i) = UnsafeArrayData.fromPrimitiveArray(row.getArray(1).toFloatArray())
       i += 1
     }
     (ids, embs)
@@ -95,30 +94,17 @@ object NearestCell {
   val MaxCents = 65536
 
   /** Winner by quantized cosine, ties to the smallest id (ids MUST be
-    * sorted ascending — strict `>` then keeps the first). The inner
-    * arithmetic mirrors [[CosineSim]] exactly (same floor-quantized
-    * terms, same float→double widening, same denominator), so the
-    * selected centroid is bit-identical to ranking `cosine_sim` results.
-    * Returns -1 when no centroid matches the embedding's length. */
-  def bestCell(x: ArrayData, ids: Array[Long], embs: Array[Array[Float]]): Long = {
-    val n = x.numElements()
+    * sorted ascending — strict `>` then keeps the first). Each score is
+    * [[CosineSim.cosine]], so the selected centroid is bit-identical to
+    * ranking `cosine_sim` results. Returns -1 when no centroid matches
+    * the embedding's length. */
+  def bestCell(x: ArrayData, ids: Array[Long], embs: Array[ArrayData]): Long = {
     var best = Double.NegativeInfinity
     var bestId = -1L
     var j = 0
     while (j < embs.length) {
-      val y = embs(j)
-      if (y.length == n) {
-        var d = 0L; var na = 0L; var nb = 0L
-        var i = 0
-        while (i < n) {
-          val xv = x.getFloat(i).toDouble
-          val yv = y(i).toDouble
-          d += math.floor(xv * yv * 1.0e14).toLong
-          na += math.floor(xv * xv * 1.0e14).toLong
-          nb += math.floor(yv * yv * 1.0e14).toLong
-          i += 1
-        }
-        val c = (d / 1.0e14) / (math.sqrt(na / 1.0e14) * math.sqrt(nb / 1.0e14))
+      if (embs(j).numElements() == x.numElements()) {
+        val c = CosineSim.cosine(x, embs(j))
         if (c > best) { best = c; bestId = ids(j) }
       }
       j += 1

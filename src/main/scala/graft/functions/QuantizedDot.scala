@@ -50,55 +50,48 @@ case class QuantizedDot(left: Expression, right: Expression)
   private def rightIsFloat: Boolean =
     right.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  // A null ELEMENT nullifies the whole result, matching the HOF twin
-  // ([[graft.operators.Similarity.sparkDotHof]]): `floor(null * q)` is a
-  // null zip element and `acc + null` poisons the aggregate — reading
-  // ArrayData.getDouble past isNullAt would silently yield 0.0 instead.
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     if (x.numElements() != y.numElements()) null
-    else {
-      val (xf, yf) = (leftIsFloat, rightIsFloat)
-      var d = 0L
-      var i = 0
-      val n = x.numElements()
-      while (i < n) {
-        if (x.isNullAt(i) || y.isNullAt(i)) return null
-        val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-        val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-        d += math.floor(xv * yv * 1.0e14).toLong
-        i += 1
-      }
-      d / 1.0e14
-    }
+    else QuantizedDot.dot(x, leftIsFloat, y, rightIsFloat)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
       val d = ctx.freshName("d")
-      val hasNull = ctx.freshName("hasNull")
-      def get(arr: String, isFloat: Boolean, idx: String) =
-        if (isFloat) s"(double) $arr.getFloat($idx)" else s"$arr.getDouble($idx)"
-      s"""
-         |if ($x.numElements() != $y.numElements()) {
+      s"""if ($x.numElements() != $y.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
-         |  long $d = 0L;
-         |  int $n = $x.numElements();
-         |  boolean $hasNull = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $hasNull = true; break; }
-         |    $d += (long) Math.floor(${get(x, leftIsFloat, i)} * ${get(y, rightIsFloat, i)} * 1.0E14);
-         |  }
-         |  if ($hasNull) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $d / 1.0E14;
-         |  }
-         |}
-       """.stripMargin
+         |  java.lang.Double $d = graft.functions.QuantizedDot.dot($x, $leftIsFloat, $y, $rightIsFloat);
+         |  ${ev.isNull} = $d == null;
+         |  if ($d != null) ${ev.value} = $d;
+         |}""".stripMargin
     })
+}
+
+object QuantizedDot {
+
+  /** The one floor-quantized dot loop, run by the interpreted eval and
+    * the generated code. `x` and `y` must have equal lengths; each is
+    * read as float or double arrays by its flag.
+    *
+    * A null ELEMENT nullifies the whole result, matching the HOF twin
+    * ([[graft.operators.Similarity.sparkDotHof]]): `floor(null * q)` is
+    * a null zip element and `acc + null` poisons the aggregate — reading
+    * ArrayData.getDouble past isNullAt would silently yield 0.0 instead. */
+  def dot(x: ArrayData, xFloat: Boolean,
+          y: ArrayData, yFloat: Boolean): java.lang.Double = {
+    var d = 0L
+    var i = 0
+    val n = x.numElements()
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      d += math.floor(xv * yv * 1.0e14).toLong
+      i += 1
+    }
+    d / 1.0e14
+  }
 }

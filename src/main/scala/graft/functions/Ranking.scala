@@ -173,7 +173,6 @@ object Ranking {
           .withColumn("lex_rank", row_number().over(wScore))
           .select("doc_id", "lex_rank")
         val e = Tables.embeddings(s, d)
-        graft.functions.GraftFunctions.ensureDot(s)
         val q = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("q_emb"))
         val dot = graft.operators.Similarity.sparkDot _

@@ -17,10 +17,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * output dims that chain is a single 2048-term expression whose
   * generated Java exceeds janino's 64 KB method limit, silently
   * dropping the whole stage to interpreted execution. Here the same
-  * arithmetic is a ~20-line primitive loop — codegen-friendly at any
-  * width. Bit-identity with the chain (and the oracle) holds because
-  * the loop accumulates coordinate j over i ascending with
-  * `acc + (±1.0 · x_i)`, and IEEE negation is exact, so
+  * arithmetic is one primitive loop that the generated code calls —
+  * codegen-friendly at any width. Bit-identity with the chain (and the
+  * oracle) holds because the loop accumulates coordinate j over i
+  * ascending with `acc + (±1.0 · x_i)`, and IEEE negation is exact, so
   * `acc + (-1.0·x)` ≡ `acc - x` bit-for-bit.
   *
   * Null/shape contract mirrors the chain it replaces: an input shorter
@@ -52,52 +52,13 @@ case class RpProject(child: Expression, projDim: Int)
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    if (x.numElements() < RpProject.inDim) return null
-    val out = new Array[Double](projDim)
-    var i = 0
-    while (i < RpProject.inDim) {
-      if (x.isNullAt(i)) return null
-      val v = if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val row = RpProject.signs(i)
-      var j = 0
-      while (j < projDim) { out(j) += row(j) * v; j += 1 }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any): Any =
+    RpProject.project(a.asInstanceOf[ArrayData], isFloat, projDim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val signs = ctx.addReferenceObj("rpSigns", RpProject.signs, "double[][]")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      val bad = ctx.freshName("bad")
-      val get = if (isFloat) s"(double) $x.getFloat($i)" else s"$x.getDouble($i)"
-      s"""
-         |if ($x.numElements() < ${RpProject.inDim}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $out = new double[$projDim];
-         |  boolean $bad = false;
-         |  for (int $i = 0; $i < ${RpProject.inDim}; $i++) {
-         |    if ($x.isNullAt($i)) { $bad = true; break; }
-         |    double $v = $get;
-         |    for (int $j = 0; $j < $projDim; $j++) {
-         |      $out[$j] += $signs[$i][$j] * $v;
-         |    }
-         |  }
-         |  if ($bad) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |  }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, x =>
+      s"""${ev.value} = graft.functions.RpProject.project($x, $isFloat, $projDim);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 }
 
 object RpProject {
@@ -105,12 +66,31 @@ object RpProject {
   val maxDim = 32
 
   /** ±1.0 sign matrix, md5("rp:i:j") parity — the shared constant both
-    * engines' arithmetic derives from. Doubles (not ints) so codegen
+    * engines' arithmetic derives from. Doubles (not ints) so the loop
     * multiplies without an int→double conversion per term. */
   lazy val signs: Array[Array[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
     Array.tabulate(inDim, maxDim) { (i, j) =>
       if ((md.digest(s"rp:$i:$j".getBytes("UTF-8"))(0) & 1) == 0) 1.0 else -1.0
     }
+  }
+
+  /** The one projection loop, run by the interpreted eval and the
+    * generated code: `x` read as a float or double array by `xFloat`,
+    * projected onto the first `projDim` sign columns. Null when `x` has
+    * fewer than [[inDim]] elements or a null among them. */
+  def project(x: ArrayData, xFloat: Boolean, projDim: Int): ArrayData = {
+    if (x.numElements() < inDim) return null
+    val out = new Array[Double](projDim)
+    var i = 0
+    while (i < inDim) {
+      if (x.isNullAt(i)) return null
+      val v = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val row = signs(i)
+      var j = 0
+      while (j < projDim) { out(j) += row(j) * v; j += 1 }
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 }

@@ -74,9 +74,12 @@ class SpaceSavingTopK(capacity: Int)
 }
 
 object SpaceSavingTopK {
+  /** Counters kept by the SQL-registered sketch. */
+  val Capacity = 32
+
   /** Register as SQL aggregate `topk_sketch(item)` (idempotent). */
-  def ensureRegistered(spark: SparkSession, capacity: Int = 32): Unit =
+  def ensureRegistered(spark: SparkSession): Unit =
     if (!spark.catalog.functionExists("topk_sketch")) {
-      spark.udf.register("topk_sketch", F.udaf(new SpaceSavingTopK(capacity)))
+      spark.udf.register("topk_sketch", F.udaf(new SpaceSavingTopK(Capacity)))
     }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{BloomFilterAgg, GraftFunctions}
+import graft.functions.BloomFilterAgg
 import graft.{Parity, QueryDef, Tables}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,6 @@ object BloomPrune {
     QueryDef(
       "q_join_bloom",
       (s, d) => {
-        GraftFunctions.ensureBloomProbe(s)
         val keys = Tables.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"))
@@ -78,7 +77,6 @@ object BloomPrune {
     QueryDef(
       "q_decontaminate_bloom",
       (s, d) => {
-        GraftFunctions.ensureBloomProbe(s)
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             sha2(col("text"), 256).as("dg"), xxhash64(col("text")).as("k"))

@@ -231,7 +231,6 @@ object Clustering {
     * (point, centroid) pair for a value that only depends on the
     * centroid. */
   private[graft] def kmAssign(pts: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureDot(pts.sparkSession)
     pts.crossJoin(broadcast(
         cents.selectExpr("cid", "cent", s"${sparkDot("cent", "cent")} AS cc")))
       .selectExpr("vec_id", "cid",
@@ -347,7 +346,6 @@ object Clustering {
     * (vec_id, cid, dist) with the centroid self-dot hoisted to the
     * broadcast side and all dots floor-quantized. */
   private def pqDist(frame: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureDot(frame.sparkSession)
     frame.crossJoin(broadcast(
         cents.selectExpr("cid", "cent", s"${sparkDot("cent", "cent")} AS cc")))
       .selectExpr("vec_id", "cid",
@@ -770,7 +768,6 @@ object Clustering {
       "q_pq_recall",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.ensureDot(s)
         val all = cachedPoints(s, d)
         val q = all.filter(col("vec_id") < 12)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))

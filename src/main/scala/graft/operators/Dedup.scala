@@ -174,9 +174,8 @@ object Dedup {
       // one fused native pass for all 16 permutations
       // ([[graft.functions.MinHashSigs]]) — the HOF alternative is 16
       // array_min(transform(...)) scans per row, pinned equal in
-      // NativeFunctionsSpec
-      graft.functions.GraftFunctions.ensureMinhashSigs(s)
-      // sub-shingle-length docs (hs empty → NULL signature → empty band
+      // NativeFunctionsSpec.
+      // Sub-shingle-length docs (hs empty → NULL signature → empty band
       // string) would otherwise all collide on one ("", band) bucket —
       // a silent clique of unrelated tiny documents. An empty shingle
       // set cannot be a near-duplicate of anything; drop it before
@@ -791,7 +790,6 @@ object Dedup {
     QueryDef(
       "q_dedup_incremental",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureBloomProbe(s)
         val docs = Tables.documents(s, d)
         val digests = docs
           .select(col("doc_id"), sha2(col("text"), 256).as("dg"),

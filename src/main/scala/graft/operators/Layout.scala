@@ -72,7 +72,6 @@ object Layout {
     * way. LayoutSpec pins native == chain over the full grid. */
   private[graft] def hilbertD(df: org.apache.spark.sql.DataFrame,
                               keep: Seq[String]): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.ensureHilbert(df.sparkSession)
     df.selectExpr(keep :+
       "hilbert_d(CAST(x AS BIGINT), CAST(y AS BIGINT)) AS d": _*)
   }

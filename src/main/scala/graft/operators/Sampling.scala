@@ -281,7 +281,6 @@ object Sampling {
       "q_sample_kcenter",
       (s, d) => {
         import graft.operators.Similarity.sparkDot
-        graft.functions.GraftFunctions.ensureDot(s)
         val k = 8
         val pts = Tables.embeddings(s, d).select("vec_id", "embedding")
         def d2(centEmb: Seq[Float]): String = {

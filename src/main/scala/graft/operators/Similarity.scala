@@ -60,9 +60,7 @@ object Similarity {
     * operator computes this quantized dot *by definition*.
     *
     * Emits the native codegen expression [[graft.functions.QuantizedDot]]
-    * (registered by GraftExtensions; [[graft.functions.GraftFunctions
-    * .ensureDot]] installs a same-numerics UDF in foreign sessions —
-    * the dot-consuming entry points call it). The equivalent HOF
+    * (registered by GraftExtensions). The equivalent HOF
     * formulation it replaced — kept for reference and pinned equal in
     * NativeFunctionsSpec — is [[sparkDotHof]]: higher-order functions
     * stay outside whole-stage codegen, so the fused loop wins on every
@@ -158,7 +156,6 @@ object Similarity {
 
   /** vec_id, embedding, nrm (L2 norm as double) — Spark side. */
   private def withNorm(s: SparkSession, d: String) = {
-    graft.functions.GraftFunctions.ensureDot(s)
     Tables.embeddings(s, d).selectExpr(
       "vec_id", "embedding", "label",
       s"sqrt(${sparkDot("embedding", "embedding")}) AS nrm")
@@ -309,7 +306,7 @@ object Similarity {
       if (cells <= graft.functions.NearestCell.MaxCents)
         assignByExpression(s, e, cells)
       else
-        assignByJoin(s, e, cells)
+        assignByJoin(e, cells)
     }
 
   /** Expression-shaped argmax (round 10, the small-centroid-set
@@ -324,7 +321,6 @@ object Similarity {
     * regime equality). */
   private[graft] def assignByExpression(s: SparkSession, e: DataFrame,
                                         cells: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureNearestCell(s)
     import s.implicits._
     val cent: Seq[(Long, Seq[Float])] = e.filter(col("vec_id") < cells)
       .select(col("vec_id"), col("embedding")).orderBy("vec_id")
@@ -340,8 +336,7 @@ object Similarity {
     * SORT before the partial window group-limit — at sf10 that was 350M
     * wide rows sorted for a top-1, the dominant cost of the shared cell
     * assignment, which is why the expression regime exists. */
-  private[graft] def assignByJoin(s: SparkSession, e: DataFrame, cells: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureCosine(s)
+  private[graft] def assignByJoin(e: DataFrame, cells: Int): DataFrame = {
     val cent = e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
     val wAssign = Window.partitionBy("vec_id")
@@ -450,7 +445,6 @@ object Similarity {
     // the flat N·√N assignment) — a memoized build would let whichever
     // gated entry runs first absorb it and turn the other into a
     // probe-only number. The flat cellAssign memo is the reuse story.
-    graft.functions.GraftFunctions.ensureCosine(s)
     val e = Tables.embeddings(s, d)
     val cells = ivfCellsFor(e.count()) // footer-metadata count; table stats at 100 TB
     val supers = ivfSuperCellsFor(cells)
@@ -607,7 +601,6 @@ object Similarity {
     // limit at projDim=32, silently dropping the stage to interpreted
     // execution; the native loop is bit-identical to the oracle's
     // chain text and codegen-compact at any width
-    graft.functions.GraftFunctions.ensureRpProject(s)
     val proj = graft.FrameCache.memo(s, s"rp-proj:$d:$projDim") {
       n.selectExpr("vec_id", s"rp_project(embedding, $projDim) AS p")
         .selectExpr("vec_id", "p", s"sqrt(${sparkDot("p", "p")}) AS pnrm")
@@ -710,7 +703,6 @@ object Similarity {
     * the same scored frame serves both, no second pass. */
   def ivfProbeRecall(s: SparkSession, d: String, cells: Int,
                      nprobe: Int, k: Int = 5, queryLimit: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.ensureCosine(s)
     // one table load serves the cell ranking and the exact scoring
     val n = withNorm(s, d)
     val cent = n.filter(col("vec_id") < cells)
@@ -1044,13 +1036,11 @@ object Similarity {
 
     // Native-expression path: the same quantized cosine as a custom
     // Catalyst Expression with codegen ([[graft.functions.CosineSim]])
-    // — a fused loop instead of the HOF's per-row lambda array; falls
-    // back to an equivalent Scala UDF in sessions without
-    // GraftExtensions. Identical numerics → same oracle machinery.
+    // — a fused loop instead of the HOF's per-row lambda array.
+    // Identical numerics → same oracle machinery.
     QueryDef(
       "q_sim_cosine",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureCosine(s)
         val e = Tables.embeddings(s, d)
         val x = e.filter(col("vec_id") < 50)
           .select(col("vec_id").as("a"), col("embedding").as("ea"))
@@ -1250,7 +1240,6 @@ object Similarity {
     QueryDef(
       "q_decontaminate_semantic",
       (s, d) => {
-        graft.functions.GraftFunctions.ensureCosine(s)
         val e = Tables.embeddings(s, d)
         val ev = e.filter(col("vec_id") % 97 === 0 && col("vec_id") < 2000)
           .select(col("vec_id").as("b"), col("embedding").as("eb"))

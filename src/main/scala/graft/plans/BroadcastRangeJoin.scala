@@ -248,10 +248,8 @@ object RangeJoins {
     * evals to Int DAYS, both timestamp types to Long MICROS, integrals
     * to their numeric value — a mixed pair (e.g. a date probe against
     * timestamp bounds) would compare days against micros and silently
-    * match nothing, so it is rejected instead. Checked from the
-    * SCHEMAS, before the custom/degraded branch, so both modes agree
-    * on rejection (the degraded built-in join would otherwise coerce
-    * and return rows the custom path never could). */
+    * match nothing, so it is rejected instead, from the SCHEMAS,
+    * before the node is built. */
   private def requireSameType(kind: String,
                               fields: org.apache.spark.sql.types.StructField*): Unit = {
     import org.apache.spark.sql.types._
@@ -273,14 +271,6 @@ object RangeJoins {
     df.schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
       s"column '$n' not in [${df.schema.fieldNames.mkString(", ")}]"))
 
-  /** True when this session's planner carries the custom strategy —
-    * the GraftFunctions.ensure* degraded-mode convention, decided
-    * up-front instead of swallowing planning exceptions (a catch-all
-    * would also mask real planning bugs in the exec). */
-  private def hasStrategy(spark: org.apache.spark.sql.SparkSession): Boolean =
-    org.apache.spark.sql.GraftSqlBridge.plannerStrategies(spark)
-      .exists(_ eq BroadcastRangeJoinStrategy)
-
   /** As-of enrichment against a broadcast-small versioned dimension:
     * each probe row joins the single build row with the greatest
     * `t` <= its `point` (probe rows before every version drop, inner
@@ -293,30 +283,11 @@ object RangeJoins {
                         point: String, t: String)
       : org.apache.spark.sql.DataFrame = {
     requireSameType("asof", field(probe, point), field(build, t))
-    if (hasStrategy(probe.sparkSession)) {
-      val l = probe.queryExecution.analyzed
-      val r = freshened(build.queryExecution.analyzed)
-      val (pA, tA) = (attr(l, point), attr(r, t))
-      org.apache.spark.sql.GraftSqlBridge.ofRows(probe.sparkSession,
-        BroadcastRangeJoin(l, r, pA, tA, tA, asof = true))
-    } else {
-      // Degraded twin: candidates at-or-before, keep the latest per
-      // probe row (identified by an execution-scoped row id). Side-
-      // qualified refs (keyed(point), b(t)) keep the predicate and the
-      // window key unambiguous when probe and build share column names
-      // — mirroring the custom path's exprId freshening — and __bid
-      // (build collect order) is the deterministic t-tie-break, the
-      // same "last build row wins" rule the sorted-index exec applies.
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{col, monotonically_increasing_id, row_number}
-      val keyed = probe.withColumn("__rid", monotonically_increasing_id())
-      val b = build.withColumn("__bid", monotonically_increasing_id())
-      val w = Window.partitionBy("__rid").orderBy(b(t).desc, col("__bid").desc)
-      keyed.join(b, keyed(point) >= b(t))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__rn", "__rid", "__bid")
-    }
+    val l = probe.queryExecution.analyzed
+    val r = freshened(build.queryExecution.analyzed)
+    val (pA, tA) = (attr(l, point), attr(r, t))
+    org.apache.spark.sql.GraftSqlBridge.ofRows(probe.sparkSession,
+      BroadcastRangeJoin(l, r, pA, tA, tA, asof = true))
   }
 
   def broadcastRangeJoin(probe: org.apache.spark.sql.DataFrame,
@@ -325,16 +296,10 @@ object RangeJoins {
       : org.apache.spark.sql.DataFrame = {
     requireSameType("range",
       field(probe, point), field(build, lo), field(build, hi))
-    if (hasStrategy(probe.sparkSession)) {
-      val l = probe.queryExecution.analyzed
-      val r = freshened(build.queryExecution.analyzed)
-      val (pA, loA, hiA) = (attr(l, point), attr(r, lo), attr(r, hi))
-      org.apache.spark.sql.GraftSqlBridge.ofRows(probe.sparkSession,
-        BroadcastRangeJoin(l, r, pA, loA, hiA))
-    } else {
-      import org.apache.spark.sql.functions.col
-      probe.join(build,
-        col(point) >= col(lo) && col(point) <= col(hi))
-    }
+    val l = probe.queryExecution.analyzed
+    val r = freshened(build.queryExecution.analyzed)
+    val (pA, loA, hiA) = (attr(l, point), attr(r, lo), attr(r, hi))
+    org.apache.spark.sql.GraftSqlBridge.ofRows(probe.sparkSession,
+      BroadcastRangeJoin(l, r, pA, loA, hiA))
   }
 }

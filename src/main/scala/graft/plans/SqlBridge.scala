@@ -11,12 +11,4 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** The session planner's strategy list — lets callers decide
-    * up-front whether a custom strategy is installed (degraded-mode
-    * gate) instead of probing with a catch-all around planning. */
-  def plannerStrategies(spark: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.planning.GenericStrategy[
-        org.apache.spark.sql.execution.SparkPlan]] =
-    spark.asInstanceOf[classic.SparkSession].sessionState.planner.strategies
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.functions.{BloomFilterAgg, GraftFunctions}
+import graft.functions.BloomFilterAgg
 import org.apache.spark.sql.functions._
 
 /** Measures the bloom prune's selectivity for the BASELINE record: how
@@ -28,7 +28,6 @@ object BloomStats {
     }
     val d = args(0)
     val spark = graft.GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    GraftFunctions.ensureBloomProbe(spark)
 
     // q_join_bloom's sides: urgent-order keys vs the lineitem stream.
     locally {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BloomFilterAgg, BloomHash, GraftFunctions}
+import graft.functions.{BloomFilterAgg, BloomHash}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,7 +60,6 @@ class BloomSpec extends AnyFunSuite {
   test("native probe expression agrees with the UDF fallback") {
     import spark.implicits._
     BloomFilterAgg.ensureRegistered(spark)
-    GraftFunctions.ensureBloomProbe(spark)
     val keys = (0L until 2000L).map(k => k * 31L).toDF("k")
     val bloom = keys.agg(expr("bloom_agg(k)").as("bits"))
     val probes = (0L until 4000L).map(k => k * 17L).toDF("p")
@@ -82,7 +81,6 @@ class BloomSpec extends AnyFunSuite {
 
   test("bloom prefilter prunes the fact side and the final answer is exact") {
     BloomFilterAgg.ensureRegistered(spark)
-    GraftFunctions.ensureBloomProbe(spark)
     val keys = Tables.orders(spark, sf)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))

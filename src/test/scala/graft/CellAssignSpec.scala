@@ -23,7 +23,7 @@ class CellAssignSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sf)
     for (cells <- Seq(4, 7, 32)) {
       val viaExpr = assignments(Similarity.assignByExpression(spark, e, cells))
-      val viaJoin = assignments(Similarity.assignByJoin(spark, e, cells))
+      val viaJoin = assignments(Similarity.assignByJoin(e, cells))
       assert(viaExpr === viaJoin, s"regimes diverged at cells=$cells")
       assert(viaExpr.nonEmpty)
     }

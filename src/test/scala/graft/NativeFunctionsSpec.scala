@@ -1,13 +1,14 @@
 package graft
 
-import graft.functions.{GraftFunctions, MinHashSignature}
+import graft.functions.MinHashSignature
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The custom-extension ladder: native Catalyst Expression (codegen),
-  * typed Aggregator UDAF, and the UDF fallback — each asserted
-  * equivalent to its declarative formulation.
+/** The custom-extension ladder: native Catalyst Expression (codegen)
+  * and typed Aggregator UDAF — each asserted equivalent to its
+  * declarative formulation — and the analysis error a session without
+  * the extensions gets.
   */
 class NativeFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -54,25 +55,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
     assert(p.contains("quantized_dot"), p)
   }
 
-  test("quantized_dot UDF fallback in an extension-less session matches the native path") {
-    val vanilla = spark.newSession()
-    vanilla.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("quantized_dot"))
-    assert(!vanilla.catalog.functionExists("quantized_dot"))
-    GraftFunctions.ensureDot(vanilla)
-    assert(vanilla.catalog.functionExists("quantized_dot"))
-    def dots(s: org.apache.spark.sql.SparkSession) = {
-      val e = Tables.embeddings(s, sf).limit(40)
-      val x = e.select(col("vec_id").as("a"), col("embedding").as("ea"))
-      val y = e.select(col("vec_id").as("b"), col("embedding").as("eb"))
-      x.join(y, col("a") < col("b"))
-        .selectExpr("a", "b", s"${Similarity.sparkDot("ea", "eb")} AS d")
-        .orderBy("a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    }
-    assert(dots(vanilla).toSeq === dots(spark).toSeq)
-  }
-
   test("cosine_sim resolves through the session extension and codegen compiles it") {
     assert(spark.catalog.functionExists("cosine_sim"))
     val df = Tables.embeddings(spark, sf).limit(10)
@@ -93,34 +75,17 @@ class NativeFunctionsSpec extends AnyFunSuite {
     assert(df.collect().forall(_.isNullAt(0)))
   }
 
-  test("ensureCosine is idempotent when the extension already registered it") {
-    GraftFunctions.ensureCosine(spark)
-    GraftFunctions.ensureCosine(spark)
-    assert(spark.catalog.functionExists("cosine_sim"))
-  }
-
-  test("UDF fallback path: an extension-less session gets identical cosine results") {
-    // Simulates a host harness's own session (no GraftExtensions): drop
-    // the injected function from a fresh session state, let ensureCosine
-    // take the degraded UDF branch, and pin result equality with the
-    // native expression — plus the entry() smoke the driver runs.
+  test("a session without GraftExtensions fails at analysis, naming the function") {
+    // newSession() inherits the extensions, so the injected function is
+    // dropped by hand to stand in for a session built without them
     val vanilla = spark.newSession()
     vanilla.sessionState.functionRegistry.dropFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"))
-    assert(!vanilla.catalog.functionExists("cosine_sim"))
-    GraftFunctions.ensureCosine(vanilla)
-    assert(vanilla.catalog.functionExists("cosine_sim"))
-
-    def pairs(s: org.apache.spark.sql.SparkSession) = {
-      val e = Tables.embeddings(s, sf).limit(40)
-      val x = e.select(col("vec_id").as("a"), col("embedding").as("ea"))
-      val y = e.select(col("vec_id").as("b"), col("embedding").as("eb"))
-      x.join(y, col("a") < col("b"))
-        .selectExpr("a", "b", "cosine_sim(ea, eb) AS c")
-        .orderBy("a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val ex = intercept[org.apache.spark.sql.AnalysisException] {
+      Bench.force(SparkEntry.queries("q_sim_cosine")(vanilla, sf))
     }
-    assert(pairs(vanilla).toSeq === pairs(spark).toSeq)
+    assert(ex.getMessage.contains("cosine_sim"), ex.getMessage)
+    // the driver's entry uses no graft function and still runs there
     assert(SparkEntry.entry(vanilla).count() > 0)
   }
 
@@ -195,29 +160,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(bands(rows.selectExpr("id", "minhash_sigs(hs) AS sig")).toSeq ===
       bands(rows.selectExpr("id", s"array(${sigExprs.mkString(", ")}) AS sig")).toSeq)
-  }
-
-  test("minhash_sigs UDF fallback in an extension-less session keeps the native null semantics") {
-    // a null element is skipped (not folded as a phantom 0 hash) and an
-    // all-null or empty array gives a null signature, as natively
-    val vanilla = spark.newSession()
-    vanilla.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"))
-    assert(!vanilla.catalog.functionExists("minhash_sigs"))
-    GraftFunctions.ensureMinhashSigs(vanilla)
-    assert(vanilla.catalog.functionExists("minhash_sigs"))
-    def sigs(s: org.apache.spark.sql.SparkSession) = s.sql(
-      """SELECT * FROM VALUES
-        |  (1L, array(CAST(NULL AS BIGINT), 42L, 7L, 1234567L)),
-        |  (2L, array(42L, 7L, 99L)),
-        |  (3L, array(CAST(NULL AS BIGINT), CAST(NULL AS BIGINT))),
-        |  (4L, CAST(array() AS ARRAY<BIGINT>))
-        |AS t(id, hs)""".stripMargin)
-      .selectExpr("id", "minhash_sigs(hs) AS sig").orderBy("id").collect()
-      .map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toList))
-    val native = sigs(spark)
-    assert(native.map(_._2.isDefined).toSeq === Seq(true, true, false, false))
-    assert(sigs(vanilla).toSeq === native.toSeq)
   }
 
   test("MinHashSignature Aggregator reproduces the HOF signatures per document") {

@@ -9,7 +9,7 @@ class SpaceSavingSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("sketch contains every true heavy hitter of the corpus vocabulary") {
-    SpaceSavingTopK.ensureRegistered(spark, capacity = 32)
+    SpaceSavingTopK.ensureRegistered(spark)
     val words = Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("w"))
     val n = words.count()
@@ -20,7 +20,7 @@ class SpaceSavingSpec extends AnyFunSuite {
     val exact = words.groupBy("w").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // SpaceSaving guarantee: freq > n/capacity ⇒ present in sketch
-    val guaranteed = exact.filter { case (_, c) => c > n / 32 }.keySet
+    val guaranteed = exact.filter { case (_, c) => c > n / SpaceSavingTopK.Capacity }.keySet
     val inSketch = sketch.map(_._1).toSet
     assert(guaranteed.subsetOf(inSketch),
       s"missing heavy hitters: ${guaranteed.diff(inSketch)}")

@@ -97,15 +97,7 @@ def main():
         ref_path = os.path.join(REPO, ref_name)
         ref = {}
         if os.path.exists(ref_path):
-            refdoc = json.load(open(ref_path))
-            ref = refdoc.get("queries", {})
-            if not ref and "tail" in refdoc:
-                # driver-round logs (BENCH_r*.json) wrap the bench line
-                # in a stdout tail, often truncated mid-JSON — recover
-                # the per-query pairs by regex
-                import re
-                ref = {m.group(1): float(m.group(2)) for m in
-                       re.finditer(r'"(q_\w+)":([0-9.]+)', refdoc["tail"])}
+            ref = json.load(open(ref_path)).get("queries", {})
         print(f"[sweep] {point}: full headline run ...", flush=True)
         first = run_bench(sf_dir)
 
