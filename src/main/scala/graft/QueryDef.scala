@@ -15,13 +15,12 @@ final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None,
-    /** Deliberately quadratic correctness baseline (all-pairs ngram /
-      * embed cosine, fixed-band 8-bit SimHash, brute-force top-k):
-      * verified at oracle scale, never timed by the headline —
-      * [[Bench]] fails if its headline names a tagged entry, a check on
-      * the tag instead of a list convention. An explicit
-      * `SPARK_GRAFT_BENCH_ONLY` naming still runs one. */
-    scaleExcluded: Boolean = false)
+    /** Timed by [[Bench]]'s headline run, in declaration order. `false`
+      * marks an entry that is verified but not timed: a deliberately
+      * quadratic baseline, a recall measurement whose ground truth is
+      * brute force, or a shape a timed entry already covers. An explicit
+      * `SPARK_GRAFT_BENCH_ONLY` name still runs an untimed entry. */
+    headline: Boolean = true)
 
 /** Collision-proof tmpdir slice keys for write-path queries (compact /
   * dynamic-overwrite / retention / DPP / binary-asset exports / format

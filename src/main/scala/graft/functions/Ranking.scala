@@ -218,7 +218,8 @@ object Ranking {
            |SELECT ROW_NUMBER() OVER (ORDER BY rrf_micro DESC, doc_id) AS fused_rank,
            |  doc_id, rrf_micro, lex_rank, sem_rank
            |FROM fused ORDER BY rrf_micro DESC, doc_id LIMIT 10""".stripMargin
-      }),
+      },
+      headline = false),
 
     // PMI co-occurrence head: top-30 unordered token pairs by document
     // co-occurrence count (integer rank), with the pointwise mutual
@@ -257,7 +258,8 @@ object Ranking {
              |  round(CAST(round(ln(CAST(n_docs AS DOUBLE) * c_ab / (CAST(x.c AS DOUBLE) * y.c)) * 1e6) AS BIGINT) / 1e6, 6) AS pmi
              |FROM pairs JOIN ca x ON x.tok = t1 JOIN ca y ON y.tok = t2
              |CROSS JOIN n
-             |ORDER BY c_ab DESC, t1, t2 LIMIT 30""".stripMargin)),
+             |ORDER BY c_ab DESC, t1, t2 LIMIT 30""".stripMargin),
+      headline = false),
 
     // NDCG@10 of the BM25 ranking — the eval metric that closes the IR
     // loop (q_bm25 retrieves, q_rrf_fusion combines, this grades):

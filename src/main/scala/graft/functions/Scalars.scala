@@ -96,7 +96,8 @@ object Scalars {
              |  ROUND(EXP(l_discount), 6) AS exp_v,
              |  l_orderkey % 7 AS mod_v
              |FROM lineitem WHERE l_orderkey % 100 = 0
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+      headline = false),
 
     // Error-safe casts and arithmetic: try_cast / try_divide return null
     // instead of failing — the ingestion-hardening surface for dirty
@@ -115,7 +116,8 @@ object Scalars {
              |  TRY_CAST(regexp_extract(p_name, '([0-9]+)', 1) AS INT) AS digits_int,
              |  CASE WHEN p_partkey % 10 = 0 THEN NULL
              |       ELSE CAST(p_partkey AS DOUBLE) / (p_partkey % 10) END AS div_maybe_zero
-             |FROM part ORDER BY p_partkey""".stripMargin)),
+             |FROM part ORDER BY p_partkey""".stripMargin),
+      headline = false),
 
     // Calendar arithmetic: day/month offsets with end-of-month clamping,
     // last_day, week truncation.
@@ -136,7 +138,8 @@ object Scalars {
              |  last_day(o_orderdate) AS month_end,
              |  CAST(date_trunc('week', o_orderdate) AS DATE) AS week_start
              |FROM orders WHERE o_orderkey % 25 = 0
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     // Timestamp parse/format round trip — the dateTime string→timestamp
     // cast the reference never performs (SURVEY.md §1.2: TimestampType
@@ -161,7 +164,8 @@ object Scalars {
              |         '%Y-%m-%d %H:%M:%S')) AS BIGINT) AS reparsed_epoch,
              |    CAST(epoch(o_orderdate) AS BIGINT) AS orig_epoch
              |  FROM orders)
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     // split → explode → word frequency: the array/generator path.
     QueryDef(
@@ -172,7 +176,8 @@ object Scalars {
         .orderBy(col("n").desc, col("word")),
       Some("""SELECT word, COUNT(*) AS n
              |FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM documents)
-             |GROUP BY word ORDER BY n DESC, word""".stripMargin)),
+             |GROUP BY word ORDER BY n DESC, word""".stripMargin),
+      headline = false),
 
     // Array scalar functions over the embedding column.
     QueryDef(
@@ -192,7 +197,8 @@ object Scalars {
              |  CAST(embedding[-1] AS DOUBLE) AS last_v,
              |  CAST(list_max(embedding) AS DOUBLE) AS max_v,
              |  CAST(list_min(embedding) AS DOUBLE) AS min_v
-             |FROM embeddings ORDER BY vec_id""".stripMargin)),
+             |FROM embeddings ORDER BY vec_id""".stripMargin),
+      headline = false),
 
     // Higher-order functions over arrays: exists/forall/filter/
     // transform/aggregate plus posexplode, sort_array, flatten and
@@ -220,7 +226,8 @@ object Scalars {
              |  array_to_string(list_sort(toks[1:4]), ',') AS first4_csv,
              |  CAST(len(toks) AS INT) AS seq_n
              |FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // posexplode → UNNEST WITH ORDINALITY: position-preserving generator.
     QueryDef(
@@ -233,7 +240,8 @@ object Scalars {
              |  SELECT doc_id, UNNEST(string_split(text, ' ')[1:5]) AS tok,
              |         generate_subscripts(string_split(text, ' ')[1:5], 1) AS pos
              |  FROM documents WHERE doc_id % 100 = 0)
-             |ORDER BY doc_id, pos""".stripMargin)),
+             |ORDER BY doc_id, pos""".stripMargin),
+      headline = false),
 
     // Map construction + extraction. The oracle pins the *values* (map
     // lookup must return exactly the source columns), which checks the
@@ -253,7 +261,8 @@ object Scalars {
       Some("""SELECT l_orderkey, l_linenumber,
              |  l_quantity AS qty_v, l_discount AS disc_v, 2 AS n_keys
              |FROM lineitem WHERE l_orderkey % 500 = 0
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+      headline = false),
 
     // Conditional / null-handling family: coalesce, nullif, nvl2-shape,
     // least/greatest, boolean algebra with three-valued NULL logic.
@@ -276,7 +285,8 @@ object Scalars {
              |  GREATEST(l_quantity, l_discount * 100) AS hi,
              |  ((l_quantity > 25 AND NULL) IS NULL) AS three_valued
              |FROM lineitem WHERE l_orderkey % 50 = 0
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+      headline = false),
 
     // Bitwise family as first-class scalars (used structurally by
     // SimHash; here as the declared operator surface).
@@ -301,7 +311,8 @@ object Scalars {
              |  o_orderkey >> 3 AS shr,
              |  CAST(bit_count(o_orderkey) AS INT) AS popcnt
              |FROM orders WHERE o_orderkey % 100 = 0
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     // Map explode: generator over key/value pairs of a map column.
     QueryDef(
@@ -316,7 +327,8 @@ object Scalars {
              |  SELECT l_orderkey, l_linenumber, UNNEST(['qty','disc','tax']) AS k,
              |         UNNEST([l_quantity, l_discount, l_tax]) AS v
              |  FROM lineitem WHERE l_orderkey % 1000 = 0)
-             |ORDER BY l_orderkey, l_linenumber, k""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber, k""".stripMargin),
+      headline = false),
 
     // String family II: pad, translate, initcap-adjacent casing, repeat,
     // reverse, position.
@@ -341,7 +353,8 @@ object Scalars {
              |  repeat(substr(n_name, 1, 2), 3) AS rep,
              |  CAST(instr(n_name, 'A') AS INT) AS pos_a,
              |  split_part(n_name, 'A', 1) AS first_part
-             |FROM nation ORDER BY n_nationkey""".stripMargin)),
+             |FROM nation ORDER BY n_nationkey""".stripMargin),
+      headline = false),
 
     // Map higher-order functions — transform_keys/values, map_filter,
     // map_zip_with. DuckDB has no map lambdas, so the oracle pins the
@@ -366,7 +379,8 @@ object Scalars {
              |     + (CASE WHEN l_discount > 0.5 THEN 1 ELSE 0 END) AS INT) AS n_big,
              |  l_discount * 10.0 AS disc10
              |FROM lineitem WHERE l_orderkey % 1000 = 0
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+      headline = false),
 
     // JSON extraction over events.props (e.g. '{"k": 87}').
     QueryDef(

@@ -142,7 +142,8 @@ object TextAnalysis {
              |  CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
              |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INT) AS lex_tokens,
              |  CAST(len(list_filter(string_split(text, ' '), w -> len(w) > 6)) AS INT) AS long_tokens
-             |FROM documents ORDER BY doc_id""".stripMargin)),
+             |FROM documents ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // Language-ID heuristic: English stopword fraction → 'en'/'other',
     // summarized per true lang. (The synthetic corpus shares vocabulary
@@ -171,7 +172,8 @@ object TextAnalysis {
               |      CAST(len(list_filter(string_split(text, ' '), w -> w IN ($stopSql))) AS DOUBLE)
               |        / len(string_split(text, ' ')) AS en_score
               |    FROM documents))
-              |GROUP BY lang ORDER BY lang""".stripMargin)),
+              |GROUP BY lang ORDER BY lang""".stripMargin),
+      headline = false),
 
     // Quality scoring: blend of length, distinctness and stopword signal,
     // bucketed. The per-row score is pure IEEE arithmetic on exact ints.
@@ -203,7 +205,8 @@ object TextAnalysis {
               |       + 0.2 * (CAST(len(list_filter(string_split(text, ' '), w -> w IN ($stopSql))) AS DOUBLE)
               |                 / len(string_split(text, ' '))) AS score
               |    FROM documents))
-              |GROUP BY bucket ORDER BY bucket""".stripMargin)),
+              |GROUP BY bucket ORDER BY bucket""".stripMargin),
+      headline = false),
 
     // Overlapping token chunking — THE training-data preprocessing op:
     // fixed-size windows (40 tokens, stride 30) per document, exploded
@@ -234,7 +237,8 @@ object TextAnalysis {
              |    SELECT doc_id, toks,
              |      generate_series(1, greatest(len(toks) - 9, 1), 30) AS starts
              |    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)))
-             |ORDER BY doc_id, chunk_idx""".stripMargin)),
+             |ORDER BY doc_id, chunk_idx""".stripMargin),
+      headline = false),
 
     // Greedy sequence packing: assign documents to fixed-budget bins by
     // cumulative token count (the distributed approximation of training
@@ -256,7 +260,8 @@ object TextAnalysis {
              |    CAST(floor((SUM(n_toks) OVER (ORDER BY doc_id
              |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1) / 2048) AS BIGINT) AS bin
              |  FROM (SELECT doc_id, len(string_split(text, ' ')) AS n_toks FROM documents))
-             |GROUP BY bin ORDER BY bin""".stripMargin)),
+             |GROUP BY bin ORDER BY bin""".stripMargin),
+      headline = false),
 
     // Edit distance between consecutive documents — levenshtein as the
     // character-level near-dup metric (token/shingle metrics live in
@@ -278,7 +283,8 @@ object TextAnalysis {
              |    CAST(levenshtein(substr(x.text, 1, 120), substr(y.text, 1, 120)) AS INT) AS dist,
              |    CAST(levenshtein(substr(x.text, 1, 120), substr(x.text, 1, 120)) AS INT) AS self_zero
              |  FROM documents x JOIN documents y ON y.doc_id = x.doc_id + 1)
-             |ORDER BY a""".stripMargin)),
+             |ORDER BY a""".stripMargin),
+      headline = false),
 
     // Deterministic train/val/test split by content hash — the holdout
     // idiom for a 100 TB corpus: no RNG state, no sampling seed to
@@ -339,7 +345,8 @@ object TextAnalysis {
              |SELECT doc_id, term, score FROM (
              |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
              |            ORDER BY score DESC, term) AS rnk FROM scored)
-             |WHERE rnk = 1 ORDER BY doc_id""".stripMargin)),
+             |WHERE rnk = 1 ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // Document fingerprint: left-fold rolling hash over md5-derived token
     // hashes, mod 1e9+7 at each step (no overflow: h*31 + tok < 2^63).

@@ -404,7 +404,8 @@ object Vocab {
              |                 i -> struct_pack(w1 := t[i], w2 := t[i + 1])), recursive := true)
              |          FROM toks)
              |SELECT w1, w2, COUNT(*) AS n FROM pairs
-             |GROUP BY w1, w2 ORDER BY n DESC, w1, w2 LIMIT 30""".stripMargin)),
+             |GROUP BY w1, w2 ORDER BY n DESC, w1, w2 LIMIT 30""".stripMargin),
+      headline = false),
 
     // The merge LOOP over those pair counts — k greedy rounds training
     // an actual BPE merge table, with the corpus rewritten between
@@ -417,11 +418,13 @@ object Vocab {
     // The inference half: ENCODE the corpus with the 6 trained merges —
     // per-doc token counts before/after, the compression the vocabulary
     // buys. Round r's rewrite feeds round r+1's argmax, so merge and
-    // encode share one corpus state.
+    // encode share one corpus state. Untimed: it re-runs the training
+    // loop q_bpe_merges already times.
     QueryDef(
       "q_bpe_encode",
       (s, d) => bpeEncode(s, d, 6),
-      Some(duckBpeEncode(6))),
+      Some(duckBpeEncode(6)),
+      headline = false),
 
     // Trigram LM conditionals: P(w3 | w1 w2) = c(w1w2w3)/c(w1w2) for the
     // 20 most frequent trigrams. Two count aggregates joined on the
@@ -460,7 +463,8 @@ object Vocab {
              |  FROM toks) GROUP BY w1, w2)
              |SELECT w1, w2, w3, n3, n2, CAST(n3 AS DOUBLE) / n2 AS p_cond
              |FROM tri JOIN bi USING (w1, w2)
-             |ORDER BY n3 DESC, w1, w2, w3 LIMIT 20""".stripMargin)),
+             |ORDER BY n3 DESC, w1, w2, w3 LIMIT 20""".stripMargin),
+      headline = false),
 
     // Stopword-strip + whitespace-normalize — the cleaning map every
     // corpus pass applies before tokenization counts. Stateless per-row
@@ -480,7 +484,8 @@ object Vocab {
               |  list_filter(string_split(text, ' '),
               |              w -> NOT (w IN (${TextAnalysis.stopSql}))) AS kept
               |  FROM documents)
-              |ORDER BY doc_id""".stripMargin)),
+              |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // Digit-run redaction over the events' JSON payloads — the masking
     // shape of PII scrubbing (the patterns here are toy; the machinery —
@@ -497,7 +502,8 @@ object Vocab {
       Some("""SELECT event_id,
              |  regexp_replace(props, '[0-9]+', '#', 'g') AS masked,
              |  len(regexp_extract_all(props, '[0-9]+')) AS n_runs
-             |FROM events ORDER BY event_id""".stripMargin)),
+             |FROM events ORDER BY event_id""".stripMargin),
+      headline = false),
 
     // Bounded inverted index: document frequency + the first 8 postings
     // per token, for tokens appearing in ≥ 100 documents. The posting
@@ -526,7 +532,8 @@ object Vocab {
              |  FROM documents)
              |SELECT tok, COUNT(*) AS doc_freq,
              |  array_to_string(list_sort(list(doc_id ORDER BY doc_id))[1:8], ',') AS postings_head
-             |FROM posting GROUP BY tok HAVING COUNT(*) >= 100 ORDER BY tok""".stripMargin)),
+             |FROM posting GROUP BY tok HAVING COUNT(*) >= 100 ORDER BY tok""".stripMargin),
+      headline = false),
 
     // Trigram-LM document scoring — the KenLM-style perplexity filter
     // every corpus pass runs (here self-scored against the corpus's own

@@ -340,7 +340,8 @@ object Aggregates {
           (abs(col("approx") - col("exact")) <= col("exact") * 0.1).as("within_10pct")),
       Some("""SELECT exact, ABS(approx - exact) <= exact * 0.1 AS within_10pct
              |FROM (SELECT approx_count_distinct(l_partkey) AS approx,
-             |             COUNT(DISTINCT l_partkey) AS exact FROM lineitem)""".stripMargin)),
+             |             COUNT(DISTINCT l_partkey) AS exact FROM lineitem)""".stripMargin),
+      headline = false),
 
     // approx_percentile, same contract style as q_agg_hll: sketches (and
     // their partial-merge orders) differ across engines, so the checkable
@@ -365,7 +366,8 @@ object Aggregates {
              |        MAX(l_extendedprice) AS mx, MIN(l_extendedprice) AS mn,
              |        COUNT(*) AS n
              |      FROM lineitem GROUP BY l_returnflag)
-             |ORDER BY l_returnflag""".stripMargin)),
+             |ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // ROLLUP / CUBE: group cols coalesced to a sentinel so the compare
     // avoids engine-specific NULL ordering (data itself is null-free).
@@ -395,7 +397,8 @@ object Aggregates {
       Some(s"""SELECT COALESCE(o_orderstatus,'ALL') AS st, COALESCE(o_orderpriority,'ALL') AS pri,
               |  COUNT(*) AS n, ${sqlDsum("o_totalprice", 2)} AS sum_price
               |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-              |ORDER BY st, pri""".stripMargin)),
+              |ORDER BY st, pri""".stripMargin),
+      headline = false),
 
     // Fixed-width histogram: bucket index is pure integer math on the
     // value, counts by bucket — the distributed histogram idiom (no
@@ -408,7 +411,8 @@ object Aggregates {
         .orderBy("bucket"),
       Some("""SELECT CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS bucket,
              |       COUNT(*) AS n
-             |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin)),
+             |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin),
+      headline = false),
 
     // collect_set / collect_list surfaced deterministically: sets are
     // sorted before output (collection order is partition-dependent,
@@ -428,7 +432,8 @@ object Aggregates {
              |  array_to_string(list_sort(list(DISTINCT o_orderstatus)), ',') AS statuses_csv,
              |  CAST(len(list(DISTINCT o_orderstatus)) AS INT) AS n_distinct,
              |  COUNT(*) AS n
-             |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+             |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      headline = false),
 
     // Modal value per group — two chained hash aggregates (value counts,
     // then a rank-1 cut with a total tie order: count desc, value asc).
@@ -453,7 +458,8 @@ object Aggregates {
              |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
              |      ORDER BY COUNT(*) DESC, l_quantity ASC) AS rk
              |  FROM lineitem GROUP BY l_returnflag, l_quantity)
-             |WHERE rk = 1 ORDER BY l_returnflag""".stripMargin)),
+             |WHERE rk = 1 ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // min_by / max_by with a unique ordering key (ties on the ordering
     // value would make the picked row engine-dependent).
@@ -470,7 +476,8 @@ object Aggregates {
              |  max_by(o_totalprice, o_orderkey) AS price_of_max_key,
              |  min_by(o_totalprice, o_orderkey) AS price_of_min_key,
              |  MAX(o_orderkey) AS max_key
-             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+      headline = false),
 
     // Pearson correlation and covariance from exact decimal moments
     // Skewness / excess kurtosis from exact power sums — the 3rd/4th
@@ -519,7 +526,8 @@ object Aggregates {
              |SELECT l_linestatus,
              |  m3 / (m2 * sqrt(m2)) AS skewness,
              |  m4 / (m2 * m2) - 3 AS kurtosis_excess
-             |FROM cm ORDER BY l_linestatus""".stripMargin)),
+             |FROM cm ORDER BY l_linestatus""".stripMargin),
+      headline = false),
 
     // (same closed-form discipline as q_agg_stddev — the built-ins'
     // merge order differs per engine, the moments don't).
@@ -556,7 +564,8 @@ object Aggregates {
               |        ${sqlDsum("l_extendedprice * l_extendedprice", 4)} AS syy,
               |        ${sqlDsum("l_quantity * l_extendedprice", 4)} AS sxy
               |      FROM lineitem GROUP BY l_linestatus)
-              |ORDER BY l_linestatus""".stripMargin)),
+              |ORDER BY l_linestatus""".stripMargin),
+      headline = false),
 
     // Count-min sketch: the mergeable frequency sketch for vocabularies
     // that don't fit anywhere — a FIXED d×w counter matrix (4×16 here;
@@ -860,7 +869,8 @@ object Aggregates {
       Some("""SELECT word, COUNT(*) AS cnt
              |FROM (SELECT UNNEST(string_split(text, ' ')) AS word FROM documents)
              |GROUP BY word
-             |ORDER BY cnt DESC, word""".stripMargin)),
+             |ORDER BY cnt DESC, word""".stripMargin),
+      headline = false),
 
     // Pivot — groupBy().pivot() with explicit value list (never let the
     // engine scan for distinct pivot values at scale); the oracle is the
@@ -950,7 +960,8 @@ object Aggregates {
               |       COUNT(*) AS n, ${sqlDsum("l_quantity", 2)} AS sum_qty
               |FROM lineitem
               |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-              |ORDER BY rf, ls""".stripMargin)),
+              |ORDER BY rf, ls""".stripMargin),
+      headline = false),
 
     // stddev via exact decimal moments: sqrt((n*Σx² - (Σx)²) / (n(n-1))).
     // The built-in stddev_samp is exercised too, asserted within 1e-9 of
@@ -981,7 +992,8 @@ object Aggregates {
               |        ${sqlDsum("l_quantity * l_quantity", 4)} AS sxx,
               |        stddev_samp(l_quantity) AS sd_builtin
               |      FROM lineitem GROUP BY l_returnflag)
-              |ORDER BY l_returnflag""".stripMargin)),
+              |ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Bitmap-index exact distinct: users bucketed into 64-bit words
     // (word = id/63, bit = id%63 — 63-bit words keep the shift off the

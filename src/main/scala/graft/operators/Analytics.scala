@@ -825,7 +825,8 @@ object Analytics {
              |  CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
              |FROM pairs JOIN sizes sa ON sa.event_type = ta
              |           JOIN sizes sb ON sb.event_type = tb
-             |ORDER BY ta, tb""".stripMargin)),
+             |ORDER BY ta, tb""".stripMargin),
+      headline = false),
 
     // -- behavioral / growth analytics over the event log ----------------
     // The query family every event pipeline runs at scale; all three
@@ -914,7 +915,8 @@ object Analytics {
              |SELECT d, n_new,
              |  CAST(SUM(n_new) OVER (ORDER BY d
              |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-             |FROM daily ORDER BY d""".stripMargin)),
+             |FROM daily ORDER BY d""".stripMargin),
+      headline = false),
 
     // Weekly cohort retention: users bucketed by first-seen week; how
     // many of each cohort are active k weeks later.
@@ -936,7 +938,8 @@ object Analytics {
              |SELECT cohort, CAST(date_diff('day', cohort, week) / 7 AS INT) AS k,
              |  COUNT(DISTINCT ev.user_id) AS n_active
              |FROM ev JOIN firsts USING (user_id)
-             |GROUP BY 1, 2 ORDER BY cohort, k""".stripMargin)),
+             |GROUP BY 1, 2 ORDER BY cohort, k""".stripMargin),
+      headline = false),
 
     // Ordered conversion funnel view → click → purchase: one conditional
     // per-user aggregate pass, then a strict time-order predicate per
@@ -966,7 +969,8 @@ object Analytics {
              |  CAST(SUM(CASE WHEN tv IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
              |  CAST(SUM(CASE WHEN tv IS NOT NULL AND tc > tv THEN 1 ELSE 0 END) AS BIGINT) AS n_view_click,
              |  CAST(SUM(CASE WHEN tv IS NOT NULL AND tc > tv AND tp > tc THEN 1 ELSE 0 END) AS BIGINT) AS n_full_funnel
-             |FROM u""".stripMargin)),
+             |FROM u""".stripMargin),
+      headline = false),
 
     // Last-touch attribution — the oracle-checked batch twin of the
     // watermarked stream-stream join ([[graft.streaming.EventStreams
@@ -1060,7 +1064,8 @@ object Analytics {
              |FROM items x JOIN items y
              |  ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
              |GROUP BY 1, 2
-             |ORDER BY support DESC, pa, pb LIMIT 20""".stripMargin)),
+             |ORDER BY support DESC, pa, pb LIMIT 20""".stripMargin),
+      headline = false),
 
     // RFM segmentation: each customer's recency (days since last
     // order), frequency (order count), and monetary (exact-decimal

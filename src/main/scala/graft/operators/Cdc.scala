@@ -159,7 +159,8 @@ object Cdc {
              |         WHEN dg_base <> dg_next THEN 'changed'
              |         ELSE 'unchanged' END AS status
              |  FROM base FULL OUTER JOIN next ON base.doc_id = next.doc_id)
-             |GROUP BY status ORDER BY status""".stripMargin)),
+             |GROUP BY status ORDER BY status""".stripMargin),
+      headline = false),
 
     // Ordered changelog apply with tombstones: the event log AS a CDC
     // stream — 'error' rows are DELETEs of the user key, everything

@@ -337,6 +337,12 @@ object Clustering {
   private val PqSub = 16   // dims per subspace (4 × 16 = 64)
   private[graft] val PqK = 16 // codewords per subspace (16⁴ effective cells)
   private val PqIters = 2
+  /** ADC queries of q_pq_search and q_pq_recall: vec_id < PqQueries. */
+  private val PqQueries = 12
+  /** q_ivfpq's probe: the coarse cell count and the query id range. */
+  private val IvfPqCells = 8
+  private val IvfPqQLo = 100
+  private val IvfPqQHi = 119
 
   /** Subspace m's (vec_id, embedding) slice. */
   private def pqSub(all: DataFrame, m: Int): DataFrame =
@@ -430,10 +436,10 @@ object Clustering {
     acc
   }
 
-  private def pqScores(s: SparkSession, d: String, queryLimit: Int): DataFrame = {
+  private def pqScores(s: SparkSession, d: String): DataFrame = {
     val all = cachedPoints(s, d)
     val fitted = pqFit(s, d)
-    pqAdcJoin(pqCodes(s, d, fitted), all, fitted, col("vec_id") < queryLimit)
+    pqAdcJoin(pqCodes(s, d, fitted), all, fitted, col("vec_id") < PqQueries)
       .filter(col("q_id") =!= col("vec_id"))
       .selectExpr("q_id", "vec_id", "qd0 + qd1 + qd2 + qd3 AS adist")
   }
@@ -446,20 +452,19 @@ object Clustering {
     * candidate generation, broadcast code-table lookups — no stage
     * touches more than the probed cells' rows, and the database side
     * needs only codes + cell ids, not vectors. */
-  def ivfPqSearch(s: SparkSession, d: String, cells: Int = 8,
-                  qLo: Int = 100, qHi: Int = 119): DataFrame = {
+  def ivfPqSearch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val all = cachedPoints(s, d)
     val fitted = pqFit(s, d)
-    val cellsF = Similarity.cellAssign(s, d, cells).select("vec_id", "cell")
-    val q = cellsF.filter(col("vec_id").between(qLo, qHi))
+    val cellsF = Similarity.cellAssign(s, d, IvfPqCells).select("vec_id", "cell")
+    val q = cellsF.filter(col("vec_id").between(IvfPqQLo, IvfPqQHi))
       .select(col("vec_id").as("q_id"), col("cell"))
     val cand = q.join(
         cellsF.select(col("vec_id"), col("cell").as("c_cell")),
         col("cell") === col("c_cell") && col("q_id") =!= col("vec_id"))
       .select("q_id", "cell", "vec_id")
     val scored = pqAdcJoin(cand.join(pqCodes(s, d, fitted), "vec_id"), all, fitted,
-        col("vec_id").between(qLo, qHi))
+        col("vec_id").between(IvfPqQLo, IvfPqQHi))
       .selectExpr("q_id", "cell", "vec_id", "qd0 + qd1 + qd2 + qd3 AS adist")
     val w = Window.partitionBy("q_id").orderBy(col("adist"), col("vec_id"))
     scored.withColumn("rk", row_number().over(w))
@@ -469,10 +474,10 @@ object Clustering {
   }
 
   /** The ADC nearest neighbor per query (rank-1 of [[pqScores]]). */
-  def pqSearch(s: SparkSession, d: String, queryLimit: Int = 12): DataFrame = {
+  def pqSearch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("q_id").orderBy(col("adist"), col("vec_id"))
-    pqScores(s, d, queryLimit).withColumn("rk", row_number().over(w))
+    pqScores(s, d).withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .selectExpr("q_id", "vec_id AS nn_id", "adist")
       .orderBy("q_id")
@@ -518,9 +523,9 @@ object Clustering {
   /** ADC-search CTEs over [[duckPqCtes]]'s outputs: codes, per-query
     * distance tables, the code-lookup scoring join, and the ranked
     * `adc` frame (filter `rk = 1` for the nearest neighbor). */
-  private def duckPqSearchCtes(queryPred: String = "p.vec_id < 12"): String =
+  private def duckPqSearchCtes: String =
     s"""$duckPqCodesCte,
-       |${duckPqDtabCtes(queryPred)},
+       |${duckPqDtabCtes(s"p.vec_id < $PqQueries")},
        |scored AS (
        |  SELECT dt0.q_id, codes.vec_id, qd0 + qd1 + qd2 + qd3 AS adist
        |  FROM codes
@@ -603,7 +608,7 @@ object Clustering {
       .agg(count(lit(1)).as("n_triangles"))
 
   /** Synchronous label propagation over the near-dup pair graph:
-    * `rounds` fixed rounds, each node adopting the most frequent label
+    * [[GraphRounds]] fixed rounds, each node adopting the most frequent label
     * among neighbors + self, ties by MIN label — deterministic, so the
     * DuckDB oracle replays the identical trajectory. Returns the final
     * (v, lbl) assignment (q_graph_labelprop aggregates it;
@@ -615,11 +620,10 @@ object Clustering {
     * the (count DESC, lbl ASC) argmax without a per-group sort. The
     * final assignment is session-memoized: q_graph_labelprop and
     * q_graph_modularity share one run of the rounds. */
-  private[graft] def labelProp(s: SparkSession, d: String,
-                               rounds: Int = 3): DataFrame =
-    graft.FrameCache.memo(s, s"labelprop$rounds:$d") {
+  private[graft] def labelProp(s: SparkSession, d: String): DataFrame =
+    graft.FrameCache.memo(s, s"labelprop:$d") {
       val nodes = degFrame(s, d).select(col("src").as("v"))
-      (1 to rounds).foldLeft(nodes.withColumn("lbl", col("v"))) { (lbl, _) =>
+      (1 to GraphRounds).foldLeft(nodes.withColumn("lbl", col("v"))) { (lbl, _) =>
         val votes = send(edgeFrame(s, d), lbl).select(col("dst").as("v"), col("lbl"))
           .unionAll(lbl)
         // named struct fields keep the argmax robust to field order;
@@ -653,10 +657,13 @@ object Clustering {
   private val duckDeg = "deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)"
   private val duckNodes = "nodes AS (SELECT DISTINCT src AS v FROM edges)"
 
-  /** The three rounds of a graph entry's CTE chain, round i built by
-    * `round(i)`. */
+  /** Rounds of label propagation, and of every graph entry's CTE chain. */
+  private val GraphRounds = 3
+
+  /** The [[GraphRounds]] rounds of a graph entry's CTE chain, round i
+    * built by `round(i)`. */
   private def duckRounds(round: Int => String): String =
-    (1 to 3).map(round).mkString(",\n")
+    (1 to GraphRounds).map(round).mkString(",\n")
 
   /** [[rankSums]]'s twin: `name(v, …)` over the `prev(v, pr)` ranks,
     * where `sel` places the quantized contribution sum `q` it is given. */
@@ -725,23 +732,25 @@ object Clustering {
       "q_pq_search",
       (s, d) => pqSearch(s, d),
       Some(s"""WITH $duckPqCtes,
-              |${duckPqSearchCtes()}
-              |SELECT q_id, vec_id AS nn_id, adist FROM adc WHERE rk = 1 ORDER BY q_id""".stripMargin)),
+              |$duckPqSearchCtes
+              |SELECT q_id, vec_id AS nn_id, adist FROM adc WHERE rk = 1 ORDER BY q_id""".stripMargin),
+      headline = false),
 
     // The composed IVF×PQ index: probe only your coarse cell, rank its
     // members by ADC over the codes — bounded candidates AND compressed
-    // storage, the production vector-index shape.
+    // storage, the production vector-index shape. It reuses the codebook
+    // fit q_pq_assign memoizes, so a session pays that fit once.
     QueryDef(
       "q_ivfpq",
       (s, d) => ivfPqSearch(s, d),
       Some(s"""WITH $duckPqCtes,
               |$duckPqCodesCte,
-              |${duckPqDtabCtes("p.vec_id BETWEEN 100 AND 119")},
-              |${Similarity.duckCellCtes(8)},
+              |${duckPqDtabCtes(s"p.vec_id BETWEEN $IvfPqQLo AND $IvfPqQHi")},
+              |${Similarity.duckCellCtes(IvfPqCells)},
               |ipq_cand AS (
               |  SELECT q.vec_id AS q_id, q.cell AS cell, c.vec_id AS vec_id
               |  FROM cells q JOIN cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-              |  WHERE q.vec_id BETWEEN 100 AND 119),
+              |  WHERE q.vec_id BETWEEN $IvfPqQLo AND $IvfPqQHi),
               |ipq_scored AS (
               |  SELECT cand.q_id, cand.cell, cand.vec_id, qd0 + qd1 + qd2 + qd3 AS adist
               |  FROM ipq_cand cand
@@ -763,13 +772,13 @@ object Clustering {
     // ordering would put the mean near N/2 (~250 here); the codes pull
     // it to the top — that concentration, not recall@1 (hopeless for
     // 256-byte-ish codes over near-random vectors), is the operative
-    // quality knob.
+    // quality knob. Untimed: a verify-gated recall measurement.
     QueryDef(
       "q_pq_recall",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val all = cachedPoints(s, d)
-        val q = all.filter(col("vec_id") < 12)
+        val q = all.filter(col("vec_id") < PqQueries)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
         val c = all.select(col("vec_id").as("c_id"), col("embedding").as("c_emb"))
         val wb = Window.partitionBy("q_id").orderBy(col("dist"), col("c_id"))
@@ -781,7 +790,7 @@ object Clustering {
           .filter(col("rk") === 1)
           .select(col("q_id"), col("c_id").as("true_nn"))
         val wa = Window.partitionBy("q_id").orderBy(col("adist"), col("vec_id"))
-        val ranked = pqScores(s, d, queryLimit = 12)
+        val ranked = pqScores(s, d)
           .withColumn("adc_rank", row_number().over(wa))
         brute.join(ranked,
             brute("q_id") === ranked("q_id") && col("true_nn") === col("vec_id"))
@@ -796,20 +805,21 @@ object Clustering {
             "CAST(n_top50 AS DOUBLE) / n_queries AS recall_at_50")
       },
       Some(s"""WITH $duckPqCtes,
-              |${duckPqSearchCtes()},
+              |$duckPqSearchCtes,
               |brute AS (SELECT q_id, c_id AS true_nn FROM (
               |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
               |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
               |      ${duckDot("q.embedding", "q.embedding")} + ${duckDot("c.embedding", "c.embedding")}
               |        - 2 * ${duckDot("q.embedding", "c.embedding")}, c.vec_id) AS rk
               |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-              |  WHERE q.vec_id < 12) WHERE rk = 1)
+              |  WHERE q.vec_id < $PqQueries) WHERE rk = 1)
               |SELECT COUNT(*) AS n_queries,
               |  CAST(CAST(SUM(adc.rk) AS BIGINT) AS DOUBLE) / COUNT(*) AS mean_true_rank,
               |  CAST(SUM(CASE WHEN adc.rk <= 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_top10,
               |  CAST(SUM(CASE WHEN adc.rk <= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_top50,
               |  CAST(SUM(CASE WHEN adc.rk <= 50 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS recall_at_50
-              |FROM brute JOIN adc ON adc.q_id = brute.q_id AND adc.vec_id = brute.true_nn""".stripMargin)),
+              |FROM brute JOIN adc ON adc.q_id = brute.q_id AND adc.vec_id = brute.true_nn""".stripMargin),
+      headline = false),
 
     // k-means fit + final assignment, pinned per cluster: exact member
     // set (count + checksum) and the fitted centroid's quantized norm.
@@ -1032,7 +1042,8 @@ object Clustering {
       },
       Some(s"""WITH $duckPairs
               |SELECT (SELECT COUNT(*) FROM e) AS n_edges,
-              |  $duckTriangles""".stripMargin)),
+              |  $duckTriangles""".stripMargin),
+      headline = false),
 
     // Global clustering coefficient (transitivity) — the triangle
     // count's denominator: C = 3·triangles / wedges, where the wedge
@@ -1061,7 +1072,8 @@ object Clustering {
               |SELECT n_vertices, n_wedges, n_triangles,
               |  CASE WHEN n_wedges = 0 THEN CAST(0.0 AS DOUBLE)
               |       ELSE CAST(3.0 AS DOUBLE) * n_triangles / n_wedges END AS transitivity
-              |FROM w CROSS JOIN t""".stripMargin)),
+              |FROM w CROSS JOIN t""".stripMargin),
+      headline = false),
 
     // PageRank (3 unrolled damped iterations) over the near-dup graph —
     // "which documents sit at the center of a duplication cluster". Each
@@ -1088,7 +1100,8 @@ object Clustering {
               |${duckRounds(i => duckRankPass(s"p$i", s"p${i - 1}",
                   q => s"0.15 + 0.85 * (CAST($q AS DOUBLE) / 1000000000000) AS pr"))}
               |SELECT p3.v, deg.deg, p3.pr FROM p3 JOIN deg ON deg.src = p3.v
-              |ORDER BY p3.pr DESC, p3.v LIMIT 20""".stripMargin)),
+              |ORDER BY p3.pr DESC, p3.v LIMIT 20""".stripMargin),
+      headline = false),
 
     // Personalized PageRank — random walk with restart to a SEED SET
     // (the 4 smallest graph nodes): "what is near MY documents" rather
@@ -1283,7 +1296,8 @@ object Clustering {
               |       COUNT(*) AS n_kept,
               |       (SELECT COUNT(*) FROM documents) - COUNT(*) AS n_removed,
               |       CAST(SUM(doc_id) AS BIGINT) AS kept_checksum
-              |FROM kept""".stripMargin)),
+              |FROM kept""".stripMargin),
+      headline = false),
 
     // Dedup impact report, per source — the accounting table a corpus
     // owner signs off on before a dedup pass ships: how many documents

@@ -496,7 +496,8 @@ object Dedup {
         .select("keep_id", "n_copies")
         .orderBy("keep_id"),
       Some("""SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-             |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin)),
+             |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin),
+      headline = false),
 
     // Content-hash dedup: at 100 TB you group on the 32-byte digest, not
     // the document body — the shuffle moves hashes, not texts.
@@ -642,25 +643,29 @@ object Dedup {
               |  FROM agg
               |  UNION ALL
               |  SELECT 'source_hash', n_pairs, c_src, tr_src, te_src FROM agg)
-              |ORDER BY policy""".stripMargin)),
+              |ORDER BY policy""".stripMargin),
+      headline = false),
 
     // SimHash near-dup: banded equi-join in Spark, brute force in the
     // oracle — same result set. Classic 32-bit/8-bit-band setting; its
     // N²/2⁹ band-collision term saturates near N ≈ 10⁵ (19.4 s at sf3),
-    // which is what the sized entry exists to avoid — scale-excluded.
+    // which is what the sized entry exists to avoid — untimed.
     QueryDef(
       "q_dedup_simhash",
       (s, d) => simhashPairs(s, d, bandBits = 8),
       Some(duckSimhashPairs(8)),
-      scaleExcluded = true),
+      headline = false),
 
     // The WIDE scale variant: 60-bit signature, 15-bit bands — the
     // band-width knob that keeps the candidate join sub-quadratic as N
     // grows (see [[simhashPairs]]; the sf3 bench point is the evidence).
+    // Untimed: q_dedup_simhash_sized lands on this setting by itself at
+    // sf10.
     QueryDef(
       "q_dedup_simhash_wide",
       (s, d) => simhashPairs(s, d, bandBits = 15),
-      Some(duckSimhashPairs(15))),
+      Some(duckSimhashPairs(15)),
+      headline = false),
 
     // The SIZED variant — the headline dedup entry: band width EXECUTES
     // simhashBandBitsFor(COUNT) per run, so the candidate join's
@@ -694,7 +699,8 @@ object Dedup {
       },
       Some(s"""WITH hs AS (SELECT doc_id, $duckShingleHashes AS hs FROM documents)
               |SELECT doc_id, array_to_string($duckMinhashSig, ',') AS sig_csv FROM hs
-              |ORDER BY doc_id""".stripMargin)),
+              |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // n-gram Jaccard, brute force: the quadratic baseline the LSH paths
     // are measured against. Verify-scale only by design.
@@ -703,7 +709,7 @@ object Dedup {
       (s, d) => allPairsJaccard(s, d).orderBy("a", "b"),
       Some(s"""WITH $duckAllPairsJaccardCtes
               |SELECT a, b, jaccard FROM truth ORDER BY a, b""".stripMargin),
-      scaleExcluded = true),
+      headline = false),
 
     // Containment verification over the SAME LSH candidates: C(A→B) =
     // |A∩B|/|A| — the asymmetric signal that catches sub-document
@@ -917,7 +923,8 @@ object Dedup {
         .limit(20),
       Some(s"""${duckWindowCtes(1)}
               |SELECT wh, COUNT(*) AS n_docs FROM wins GROUP BY wh
-              |HAVING COUNT(*) >= 2 ORDER BY n_docs DESC, wh LIMIT 20""".stripMargin)),
+              |HAVING COUNT(*) >= 2 ORDER BY n_docs DESC, wh LIMIT 20""".stripMargin),
+      headline = false),
 
     // N-gram novelty: per language, the share of document shingles
     // FIRST introduced by their document (min doc_id per shingle ==
@@ -1087,7 +1094,7 @@ object Dedup {
     // near-dup relation against the exact all-pairs shingle-Jaccard
     // ground truth — the number that justifies (or indicts) the banding
     // parameters before anyone trusts the screen at scale. Truth pays
-    // the N² twin's cost, so the ENTRY is scaleExcluded like its
+    // the N² twin's cost, so the ENTRY is untimed like its
     // baseline; the measured relation (minhashPairs) is the production
     // path unchanged. Truth jaccard is over raw shingles, the verified
     // relation's over their 32-bit hashes — collisions can disagree at
@@ -1120,7 +1127,7 @@ object Dedup {
               |  CAST(n_hit AS DOUBLE) / n_truth AS recall,
               |  CAST(n_hit AS DOUBLE) / n_lsh AS precision
               |FROM c""".stripMargin),
-      scaleExcluded = true),
+      headline = false),
 
     // Threshold operating curve over the verified near-dup relation —
     // the table a curator reads before picking "dedup at j ≥ X": pair

@@ -76,7 +76,8 @@ object Joins {
       Some("""SELECT c_custkey, c_mktsegment FROM customer
              |WHERE NOT EXISTS (SELECT 1 FROM orders
              |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-             |ORDER BY c_custkey""".stripMargin)),
+             |ORDER BY c_custkey""".stripMargin),
+      headline = false),
 
     // region ⋈ nation ⋈ customer with broadcast hints on both dims: the
     // customer (fact) side never shuffles; plan must show BroadcastHashJoin.
@@ -102,7 +103,8 @@ object Joins {
         .orderBy("r_regionkey", "o_orderstatus"),
       Some("""SELECT r_regionkey, r_name, o_orderstatus
              |FROM region CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders)
-             |ORDER BY r_regionkey, o_orderstatus""".stripMargin)),
+             |ORDER BY r_regionkey, o_orderstatus""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_join_full",
@@ -121,7 +123,8 @@ object Joins {
              |FROM (SELECT DISTINCT c_nationkey AS nk FROM customer WHERE c_acctbal > 9990) c
              |FULL JOIN (SELECT DISTINCT s_nationkey AS snk FROM supplier WHERE s_acctbal > 5000) s
              |  ON nk = snk
-             |ORDER BY nationkey""".stripMargin)),
+             |ORDER BY nationkey""".stripMargin),
+      headline = false),
 
     // Equi key + range residual: still a hash/sort-merge join on the key,
     // with the date-range predicate evaluated as a post-join filter.
@@ -136,7 +139,8 @@ object Joins {
       Some(s"""SELECT COUNT(*) AS n, ${sqlDsum("l_extendedprice", 2)} AS sum_price
               |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
               |  AND l_shipdate >= o_orderdate
-              |  AND l_shipdate <= o_orderdate + INTERVAL 30 DAY""".stripMargin)),
+              |  AND l_shipdate <= o_orderdate + INTERVAL 30 DAY""".stripMargin),
+      headline = false),
 
     // Pure range join through the CUSTOM PLANNED OPERATOR
     // ([[graft.plans.BroadcastRangeJoin]] — logical node → strategy →
@@ -207,7 +211,8 @@ object Joins {
       Some("""SELECT a.n_nationkey AS k1, b.n_nationkey AS k2, a.n_regionkey AS r1
              |FROM nation a JOIN nation b
              |  ON a.n_nationkey < b.n_nationkey AND a.n_regionkey = b.n_regionkey
-             |ORDER BY k1, k2""".stripMargin)),
+             |ORDER BY k1, k2""".stripMargin),
+      headline = false),
 
     // As-of join (SURVEY.md §2.2): for every purchase event, the most
     // recent signup at-or-before it by the same user. Implemented with the
@@ -319,7 +324,8 @@ object Joins {
              |FROM p x JOIN p y
              |  ON x.block = y.block AND x.p_partkey < y.p_partkey
              |WHERE levenshtein(x.p_name, y.p_name) <= 3
-             |GROUP BY x.block ORDER BY block""".stripMargin)),
+             |GROUP BY x.block ORDER BY block""".stripMargin),
+      headline = false),
 
     // Interval join with NO equi key — the shape Spark can only plan as
     // a nested loop (every probe row × every interval), which is a bug
@@ -354,7 +360,8 @@ object Joins {
       Some(s"""SELECT COUNT(*) AS n, ${sqlDsum("l_extendedprice", 2)} AS sum_price
               |FROM lineitem JOIN orders
               |  ON CAST(l_shipdate AS DATE) >= CAST(o_orderdate AS DATE)
-              | AND CAST(l_shipdate AS DATE) <= CAST(o_orderdate AS DATE) + 3""".stripMargin)),
+              | AND CAST(l_shipdate AS DATE) <= CAST(o_orderdate AS DATE) + 3""".stripMargin),
+      headline = false),
 
     // Grid-bucketed spatial radius join: customer and supplier sites
     // (deterministic key-derived integer coordinates on a 1000×1000

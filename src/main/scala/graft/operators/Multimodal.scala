@@ -574,7 +574,8 @@ object Multimodal {
              |        octet_length(CAST(text AS BLOB)) AS len,
              |        2 * (1 + doc_id % 2) AS ba
              |      FROM documents)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // binaryFile ingestion — the layout multimodal corpora actually
     // arrive in: one opaque file per asset in an object store, not
@@ -645,7 +646,8 @@ object Multimodal {
              |        2 * (1 + doc_id % 2) AS ba
              |      FROM documents)
              |WHERE doc_id < 200
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // Feature extraction INSIDE the binary payload — one step past the
     // header codecs: decode the PCM body of every audio asset and

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * single task): range-partition on the key, run each partition's
   * running sums locally, then broadcast back one tiny per-partition
   * offset row. Wall-clock is two narrow passes regardless of n; the
-  * only global structure is the `parts`-row offset frame.
+  * only global structure is the [[Parts]]-row offset frame.
   *
   * Determinism: partition ids are pinned with `localCheckpoint` so the
   * local pass and the offset pass read the SAME physical partitioning
@@ -20,20 +20,22 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSums {
 
+  /** Range partitions of the local pass, and rows of the offset frame. */
+  private val Parts = 32
+
   /** Adds `cum_<c>` (inclusive cumulative sum ordered by `x` ascending)
     * for each count column `c` in `cols`. Input must be one row per
     * distinct `x`; count columns must be integral (LongType) so the
     * offset addition stays exact. */
-  def cumulate(df: DataFrame, x: String, cols: Seq[String],
-               parts: Int = 32): DataFrame = {
-    val g = df.repartitionByRange(parts, col(x))
+  def cumulate(df: DataFrame, x: String, cols: Seq[String]): DataFrame = {
+    val g = df.repartitionByRange(Parts, col(x))
       .withColumn("pid", spark_partition_id())
       .localCheckpoint(true)
     val wLocal = Window.partitionBy("pid").orderBy(x)
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = cols.foldLeft(g)((acc, c) =>
       acc.withColumn(s"l_$c", sum(col(c)).over(wLocal)))
-    // the offset frame is <= `parts` rows — the ordered window over it
+    // the offset frame is <= `Parts` rows — the ordered window over it
     // is bounded by construction, not by data volume
     val wPrefix = Window.orderBy("pid")
       .rowsBetween(Window.unboundedPreceding, -1)

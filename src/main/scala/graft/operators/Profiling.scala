@@ -73,6 +73,8 @@ object Profiling {
              |FROM m ORDER BY lang""".stripMargin)),
 
     // Per-column summary: one pass, stacked to one row per column.
+    // Untimed: the approximate-distinct twin q_profile_approx below is
+    // the timed profile.
     QueryDef(
       "q_profile_table",
       (s, d) => {
@@ -97,7 +99,8 @@ object Profiling {
         s"""SELECT '$c' AS col_name, COUNT($c) AS n_nonnull,
            |  COUNT(DISTINCT $c) AS n_distinct, MIN($c) AS min_v, MAX($c) AS max_v,
            |  ${Parity.sqlDavg(c, 2)} AS mean_v FROM lineitem""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name"))),
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")),
+      headline = false),
 
     // The headline profile: same single-pass shape with
     // approx_count_distinct (HLL++) replacing the exact distincts — the
@@ -194,7 +197,8 @@ object Profiling {
               |       WHEN l_extendedprice <= q75 THEN 3 ELSE 4 END AS bucket,
               |  COUNT(*) AS n, ${Parity.sqlDavg("l_extendedprice", 2)} AS avg_price
               |FROM lineitem l JOIN b USING (l_returnflag)
-              |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+              |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      headline = false),
 
     // Median absolute deviation — the robust scale estimate (stddev
     // blows up on the same outliers it's meant to flag). A two-pass
@@ -226,7 +230,8 @@ object Profiling {
              |  FROM orders o JOIN m USING (o_orderpriority))
              |SELECT o_orderpriority, ANY_VALUE(med) AS med,
              |  quantile_cont(adev, 0.5) AS mad
-             |FROM dev GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+             |FROM dev GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      headline = false),
 
     // IQR outlier screen: Tukey fences per group; pins the outlier SET
     // via key checksum, not just its size. Fence arithmetic is per-row
@@ -261,7 +266,8 @@ object Profiling {
              |  CAST(SUM(CASE WHEN o_totalprice < q1 - 1.5 * (q3 - q1)
              |                  OR o_totalprice > q3 + 1.5 * (q3 - q1) THEN o_orderkey ELSE 0 END) AS BIGINT) AS outlier_checksum
              |FROM orders o JOIN b USING (o_orderpriority)
-             |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin)),
+             |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin),
+      headline = false),
 
     // Feature scaling: per-group z-score and min-max normalization of
     // l_extendedprice — the standardization pass before any numeric
@@ -305,7 +311,8 @@ object Profiling {
               |FROM lineitem JOIN stats USING (l_returnflag)
               |WHERE ${graft.functions.TextAnalysis.duckTokHash(
                  "concat(l_orderkey, '#', l_linenumber)")} % 100 < 2
-              |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+              |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+      headline = false),
 
     // Winsorization: clip each group's values to its exact [p05, p95]
     // — the robust alternative to dropping outliers (IQR screens flag,

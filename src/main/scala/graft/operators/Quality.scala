@@ -166,7 +166,8 @@ object Quality {
              |  CAST(COALESCE(SUM(o_orderkey), 0) AS BIGINT)
              |FROM orders o
              |WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-             |ORDER BY "check"""".stripMargin)),
+             |ORDER BY "check"""".stripMargin),
+      headline = false),
 
     // Key-uniqueness accounting over the declared primary keys: total
     // rows, distinct keys, duplicated keys, and worst multiplicity.
@@ -207,7 +208,8 @@ object Quality {
              |UNION ALL
              |SELECT 'documents_pk', CAST(SUM(c) AS BIGINT), COUNT(*),
              |  CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT), MAX(c) FROM f
-             |ORDER BY key_constraint""".stripMargin)),
+             |ORDER BY key_constraint""".stripMargin),
+      headline = false),
 
     // Categorical-column entropy and concentration: Shannon entropy
     // H = ln(N) - Σ c·ln(c) / N over the value counts, plus the top

@@ -41,7 +41,8 @@ object Relational {
              |  SELECT 'orders', COUNT(*) FROM orders UNION ALL
              |  SELECT 'lineitem', COUNT(*) FROM lineitem UNION ALL
              |  SELECT 'events', COUNT(*) FROM events
-             |) ORDER BY tbl""".stripMargin)),
+             |) ORDER BY tbl""".stripMargin),
+      headline = false),
 
     // -- filters ----------------------------------------------------------
     QueryDef(
@@ -63,7 +64,8 @@ object Relational {
         .agg(count(lit(1)).as("n"), Parity.dsum(col("o_totalprice"), 2).as("sum_price")),
       Some(s"""SELECT COUNT(*) AS n, ${Parity.sqlDsum("o_totalprice", 2)} AS sum_price
               |FROM orders
-              |WHERE o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31'""".stripMargin)),
+              |WHERE o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1996-12-31'""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_filter_in_like",
@@ -73,7 +75,8 @@ object Relational {
         .orderBy("p_partkey"),
       Some("""SELECT p_partkey, p_name, p_brand, p_type FROM part
              |WHERE p_brand IN ('Brand#1','Brand#2') OR p_name LIKE '%widget%'
-             |ORDER BY p_partkey""".stripMargin)),
+             |ORDER BY p_partkey""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_filter_null",
@@ -84,7 +87,8 @@ object Relational {
           sum(when(col("st").isNull, 1L).otherwise(0L)).as("n_null")),
       Some("""SELECT COUNT(*) AS n_total, COUNT(st) AS n_nonnull,
              |       CAST(SUM(CASE WHEN st IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null
-             |FROM (SELECT NULLIF(l_linestatus, 'F') AS st FROM lineitem)""".stripMargin)),
+             |FROM (SELECT NULLIF(l_linestatus, 'F') AS st FROM lineitem)""".stripMargin),
+      headline = false),
 
     // -- projections --------------------------------------------------------
     QueryDef(
@@ -111,7 +115,8 @@ object Relational {
       Some("""SELECT CASE WHEN l_quantity < 10 THEN 'low'
              |            WHEN l_quantity < 30 THEN 'mid'
              |            ELSE 'high' END AS bucket, COUNT(*) AS n
-             |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin)),
+             |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin),
+      headline = false),
 
     // -- sorts / limits / top-k -------------------------------------------
     // Catalyst plans orderBy+limit as TakeOrderedAndProject: per-partition
@@ -153,7 +158,8 @@ object Relational {
       Some("""SELECT o_orderkey,
              |  (SELECT COUNT(*) FROM lineitem WHERE l_orderkey = o_orderkey) AS n_items
              |FROM orders WHERE o_totalprice > 450000
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_subquery_in",
@@ -170,7 +176,8 @@ object Relational {
       Some("""SELECT o_orderkey, o_totalprice FROM orders
              |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity = 50)
              |  AND o_orderpriority = '1-URGENT'
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     // -- set operations ----------------------------------------------------
     // Spark `union` is SQL UNION ALL (positional); output is aggregated so
@@ -199,7 +206,8 @@ object Relational {
       Some("""SELECT c_nationkey AS nk FROM customer WHERE c_acctbal > 9500
              |UNION
              |SELECT s_nationkey FROM supplier WHERE s_acctbal > 5000
-             |ORDER BY nk""".stripMargin)),
+             |ORDER BY nk""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_intersect",
@@ -211,7 +219,8 @@ object Relational {
       Some("""SELECT c_nationkey AS nk FROM customer WHERE c_acctbal > 9000
              |INTERSECT
              |SELECT s_nationkey FROM supplier WHERE s_acctbal > 0
-             |ORDER BY nk""".stripMargin)),
+             |ORDER BY nk""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_except",
@@ -222,7 +231,8 @@ object Relational {
       Some("""SELECT n_nationkey AS nk FROM nation
              |EXCEPT
              |SELECT s_nationkey FROM supplier WHERE s_acctbal > 5000
-             |ORDER BY nk""".stripMargin)),
+             |ORDER BY nk""".stripMargin),
+      headline = false),
 
     // -- reshaping --------------------------------------------------------
     // Wide → long (unpivot/melt): the layout step feeding per-measure
@@ -250,7 +260,8 @@ object Relational {
              |  UNION ALL
              |  SELECT l_orderkey, l_linenumber, 'l_tax', l_tax
              |  FROM lineitem WHERE l_orderkey < 200)
-             |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin)),
+             |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
+      headline = false),
 
     // -- preference queries -----------------------------------------------
     // 2-D skyline (Pareto frontier): parts no other part dominates

@@ -63,7 +63,8 @@ object Sampling {
       Some(s"""SELECT COUNT(*) AS n,
               |  CAST(SUM(l_orderkey * 7 + l_linenumber) AS BIGINT) AS key_checksum,
               |  ${Parity.sqlDsum("l_extendedprice", 2)} AS sum_price
-              |FROM lineitem WHERE ${duckPct(rowKey)} < 10""".stripMargin)),
+              |FROM lineitem WHERE ${duckPct(rowKey)} < 10""".stripMargin),
+      headline = false),
 
     // Stratified sample: a different rate per stratum (downsample the
     // dominant classes, keep the rare one) — still one stateless scan,
@@ -86,7 +87,8 @@ object Sampling {
               |FROM lineitem
               |WHERE ${duckPct(rowKey)} <
               |  CASE l_returnflag WHEN 'N' THEN 5 WHEN 'A' THEN 20 ELSE 50 END
-              |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+              |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Per-group exemplars: k=5 uniform-without-replacement picks per
     // order priority, via top-k in hash order (rank pushdown /
@@ -143,7 +145,8 @@ object Sampling {
               |      ORDER BY CAST(round(-ln((${duckTokHash(rowKey)} % 1000000 + 1) / 1e6) * 1e6
               |                / l_quantity) AS BIGINT), l_orderkey, l_linenumber) AS rk
               |  FROM lineitem)
-              |WHERE rk <= 8 ORDER BY l_returnflag, rk""".stripMargin)),
+              |WHERE rk <= 8 ORDER BY l_returnflag, rk""".stripMargin),
+      headline = false),
 
     // Corpus rebalancing: downsample every language to (approximately)
     // the rarest language's share — the mixture-control pass of a
@@ -463,7 +466,8 @@ object Sampling {
               |  WHERE rn <= n_alloc GROUP BY l_returnflag)
               |SELECT l_returnflag, n_rows, sigma_q, n_alloc, n_drawn, key_checksum
               |FROM alloc JOIN drawn USING (l_returnflag)
-              |ORDER BY l_returnflag""".stripMargin)),
+              |ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Distributed Poisson bootstrap: 16 resampled means of the order
     // value, the spread a CI comes from — the ONLY bootstrap that

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * multi-probe nprobe, filtered IVF, random projection) runs the same
   * four steps, each owned by one helper:
   *  1. [[bruteTopK]] — broadcast queries, one pass over the candidates,
-  *     session-memoized per (dir, k, queryLimit, predicate);
+  *     session-memoized per (dir, k, predicate);
   *  2. [[scoreIds]] — exact cosine of an index's candidate ids;
   *  3. [[topK]] — the per-query `(cosine DESC, c_id)` window;
   *  4. [[recallFold]] — `n_queries / n_brute / n_cand / n_matched /
@@ -112,17 +112,22 @@ object Similarity {
   private[graft] def duckBucket(bits: Int, offset: Int = 0) =
     bucketExpr(bits, i => s"embedding[$i]", offset)
 
-  /** log₂(N) sizing for the LSH bit count — the smallest b in [4, dim]
-    * with 2^b ≥ ⌈N / targetBucket⌉, keeping expected bucket population
-    * ≤ targetBucket as N grows (N=500 → 4 bits; N=10⁹ → 25 bits). Pure
+  /** Embedding dimension, the cap on the sized LSH bit count. */
+  private val Dim = 64
+  /** Expected bucket population the sized LSH bit count stays under. */
+  private val TargetBucket = 32
+
+  /** log₂(N) sizing for the LSH bit count — the smallest b in [4, Dim]
+    * with 2^b ≥ ⌈N / TargetBucket⌉, keeping expected bucket population
+    * ≤ TargetBucket as N grows (N=500 → 4 bits; N=10⁹ → 25 bits). Pure
     * integer arithmetic, deliberately no float log/ceil: the sized
     * oracle ([[duckLshSizedCte]]) recomputes the same b in SQL, and a
     * float log at an exact power-of-two boundary (`log(16)/log(2)` =
     * 3.999…96 in the JVM) rounds differently per engine. */
-  def lshBitsFor(n: Long, dim: Int = 64, targetBucket: Int = 32): Int = {
-    val target = n / targetBucket + (if (n % targetBucket == 0) 0 else 1)
+  def lshBitsFor(n: Long): Int = {
+    val target = n / TargetBucket + (if (n % TargetBucket == 0) 0 else 1)
     var b = 4
-    while (b < dim && (1L << b) < target && b < 62) b += 1
+    while (b < Dim && (1L << b) < target && b < 62) b += 1
     b
   }
 
@@ -137,20 +142,20 @@ object Similarity {
   /** SQL twin of [[lshBitsFor]] (DuckDB): a one-row CTE `sized(b)`
     * computing the same smallest-power-of-two bound in integer
     * arithmetic from the live row count. */
-  private def duckLshSizedCte(dim: Int = 64, targetBucket: Int = 32): String =
+  private def duckLshSizedCte: String =
     s"""sized AS (
-       |  SELECT COALESCE(MIN(b), $dim) AS b
-       |  FROM generate_series(4, LEAST($dim, 62)) t(b)
+       |  SELECT COALESCE(MIN(b), $Dim) AS b
+       |  FROM generate_series(4, LEAST($Dim, 62)) t(b)
        |  WHERE (CAST(1 AS BIGINT) << b) >=
-       |    (SELECT COUNT(*) // $targetBucket
-       |            + CASE WHEN COUNT(*) % $targetBucket = 0 THEN 0 ELSE 1 END
+       |    (SELECT COUNT(*) // $TargetBucket
+       |            + CASE WHEN COUNT(*) % $TargetBucket = 0 THEN 0 ELSE 1 END
        |     FROM embeddings))""".stripMargin
 
   /** Sign-bucket over a RUNTIME bit count (column `b` from the sized
-    * CTE, cross-joined in): all `dim` terms emitted, masked by `i < b`
+    * CTE, cross-joined in): all `Dim` terms emitted, masked by `i < b`
     * — the static-text way to express a data-dependent bucket width. */
-  private def duckBucketSized(dim: Int = 64): String =
-    (0 until dim).map(i =>
+  private def duckBucketSized: String =
+    (0 until Dim).map(i =>
       s"(CASE WHEN $i < b AND embedding[${i + 1}] > 0 THEN ${1L << i} ELSE 0 END)")
       .mkString("(", " + ", ")")
 
@@ -175,23 +180,28 @@ object Similarity {
   /** Exact cosine of a scored (q, c) row of [[sides]]. */
   private val exactCosine = s"${sparkDot("q_emb", "c_emb")} / (q_nrm * c_nrm) AS cosine"
 
+  /** The queries every ANN and recall entry scores: vec_id < QueryLimit. */
+  private val QueryLimit = 100
+  /** Neighbors per query a recall entry compares with the brute top-k. */
+  private val RecallK = 5
+
   /** Per-query top-k of `scored` by (cosine DESC, c_id); rank in `rnk`. */
   private def topK(scored: DataFrame, k: Int): DataFrame =
     scored.withColumn("rnk", row_number().over(
         Window.partitionBy("q_id").orderBy(col("cosine").desc, col("c_id"))))
       .filter(col("rnk") <= k)
 
-  /** Exact top-k (q_id, c_id) of the first `queryLimit` vectors of `n`
+  /** Exact top-k (q_id, c_id) of the first [[QueryLimit]] vectors of `n`
     * ([[withNorm]] over `d`) against every other one satisfying `pred`:
     * the queries are broadcast and the candidates stream once. The ground
     * truth does not depend on the index setting, so it is
-    * session-memoized per (dir, k, queryLimit, pred) and a recall curve
-    * pays the brute force once. */
-  private def bruteTopK(s: SparkSession, d: String, n: DataFrame, k: Int, queryLimit: Int,
+    * session-memoized per (dir, k, pred) and a recall curve pays the
+    * brute force once. */
+  private def bruteTopK(s: SparkSession, d: String, n: DataFrame, k: Int,
                         pred: String = "true"): DataFrame =
-    graft.FrameCache.memo(s, s"ann-brute:$d:$k:$queryLimit:$pred") {
+    graft.FrameCache.memo(s, s"ann-brute:$d:$k:$pred") {
       val (q, c) = sides(n)
-      topK(c.join(broadcast(q.filter(col("q_id") < queryLimit)), expr(s"q_id <> c_id AND $pred"))
+      topK(c.join(broadcast(q.filter(col("q_id") < QueryLimit)), expr(s"q_id <> c_id AND $pred"))
         .selectExpr("q_id", "c_id", exactCosine), k).select("q_id", "c_id")
     }
 
@@ -229,11 +239,11 @@ object Similarity {
 
   /** Every (query, other) pair of `tbl` scored by cosine — the source of
     * a brute top-k; `emb` and `nrm` name the vector and norm columns. */
-  private def duckAllPairs(tbl: String, emb: String, nrm: String, queryLimit: Int): String =
+  private def duckAllPairs(tbl: String, emb: String, nrm: String): String =
     s"""(SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |               ${duckDot(s"q.$emb", s"c.$emb")} / (q.$nrm * c.$nrm) AS cosine
        |        FROM $tbl q JOIN $tbl c ON q.vec_id <> c.vec_id
-       |        WHERE q.vec_id < $queryLimit)""".stripMargin
+       |        WHERE q.vec_id < $QueryLimit)""".stripMargin
 
   /** DuckDB twin of [[recallFold]]: `setting` columns, then the counts
     * against `brute` and `approx`; `counts` are the (table, column) row
@@ -263,19 +273,19 @@ object Similarity {
 
   /** Query ids under the same cell as another vector of `cells` — the
     * IVF candidate ids, as the CTE `name`. */
-  private def duckCellIds(name: String, cells: String, queryLimit: Int): String =
+  private def duckCellIds(name: String, cells: String): String =
     s"""$name AS (SELECT q.vec_id AS q_id, c.vec_id AS c_id
        |  FROM $cells q JOIN $cells c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $queryLimit)""".stripMargin
+       |  WHERE q.vec_id < $QueryLimit)""".stripMargin
 
   /** LSH ANN at a given hyperplane count: bucket assignment is map work,
     * candidates come from an equi-join on the bucket id, top-1 per query
     * by a window keyed on q_id. The only shuffles are the bucket join
     * and the per-query window — both keyed, both skew-bounded because
     * 2^bits tracks N ([[lshBitsFor]]). */
-  def lshAnn(s: SparkSession, d: String, bits: Int, queryLimit: Int = 100): DataFrame = {
+  def lshAnn(s: SparkSession, d: String, bits: Int): DataFrame = {
     val b = withNorm(s, d).selectExpr("vec_id", "embedding", "nrm", s"${sparkBucket(bits)} AS bucket")
-    val q = b.filter(col("vec_id") < queryLimit).select(
+    val q = b.filter(col("vec_id") < QueryLimit).select(
       col("vec_id").as("q_id"), col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
     val c = b.select(
@@ -512,8 +522,7 @@ object Similarity {
     * the recall was bought at). All-integer counts + one final
     * division — deterministic. Requires bits·tables ≤ dim (64).
     */
-  def annRecall(s: SparkSession, d: String, bits: Int,
-                tables: Int = 1, k: Int = 5, queryLimit: Int = 100): DataFrame = {
+  def annRecall(s: SparkSession, d: String, bits: Int, tables: Int = 1): DataFrame = {
     // beyond dim, element_at returns NULL and the high bits silently
     // zero on BOTH engines — degenerate buckets with no error anywhere
     require(bits * tables <= 64,
@@ -526,21 +535,20 @@ object Similarity {
     val candIds = bkt.as("x").join(bkt.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket")
           && col("x.vec_id") =!= col("y.vec_id"))
-      .filter(col("x.vec_id") < queryLimit)
+      .filter(col("x.vec_id") < QueryLimit)
       .select(col("x.vec_id").as("q_id"), col("y.vec_id").as("c_id"))
       .distinct()
-    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, candIds), k)
+    recallFold(bruteTopK(s, d, n, RecallK), scoreIds(n, candIds), RecallK)
       .selectExpr(s"$bits AS bits", s"$tables AS tables", "n_queries", "n_cand", "n_matched",
         "recall_at_k")
   }
 
   /** DuckDB twin of [[annRecall]]: per-setting CTEs (names suffixed
     * `_<bits>_<tables>`) + one shared brute CTE the caller emits once. */
-  def recallOracleBruteCte(k: Int = 5, queryLimit: Int = 100): String =
-    duckTopK("brute", duckAllPairs("n", "embedding", "nrm", queryLimit), k)
+  def recallOracleBruteCte: String =
+    duckTopK("brute", duckAllPairs("n", "embedding", "nrm"), RecallK)
 
-  def recallOracleCtes(bits: Int, tables: Int = 1, k: Int = 5,
-                       queryLimit: Int = 100): (String, String) = {
+  def recallOracleCtes(bits: Int, tables: Int = 1): (String, String) = {
     val sfx = s"_${bits}_$tables"
     val tableSelects = (0 until tables).map(t =>
       s"SELECT vec_id, $t AS tbl, ${duckBucket(bits, t * bits)} AS bucket FROM n")
@@ -549,7 +557,7 @@ object Similarity {
          |ids$sfx AS (SELECT DISTINCT x.vec_id AS q_id, y.vec_id AS c_id
          |  FROM bkt$sfx x JOIN bkt$sfx y
          |  ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id <> y.vec_id
-         |  WHERE x.vec_id < $queryLimit)""".stripMargin, k)
+         |  WHERE x.vec_id < $QueryLimit)""".stripMargin, RecallK)
   }
 
   // ---- random projection (Johnson–Lindenstrauss) ------------------------
@@ -591,8 +599,7 @@ object Similarity {
     * map-only pass fused into the scan (16 sign-sum expressions, no
     * shuffle, no model to broadcast), so reduced-space vectors are
     * ~4× cheaper to score AND to shuffle. */
-  def rpRecall(s: SparkSession, d: String, projDim: Int,
-               k: Int = 5, queryLimit: Int = 100): DataFrame = {
+  def rpRecall(s: SparkSession, d: String, projDim: Int): DataFrame = {
     require(projDim <= rpMaxDim, s"projDim $projDim exceeds the sign matrix ($rpMaxDim)")
     val n = withNorm(s, d)
     // cache the projected vectors — computed by the NATIVE rp_project
@@ -605,13 +612,13 @@ object Similarity {
       n.selectExpr("vec_id", s"rp_project(embedding, $projDim) AS p")
         .selectExpr("vec_id", "p", s"sqrt(${sparkDot("p", "p")}) AS pnrm")
     }
-    val qp = proj.filter(col("vec_id") < queryLimit).select(
+    val qp = proj.filter(col("vec_id") < QueryLimit).select(
       col("vec_id").as("q_id"), col("p").as("q_p"), col("pnrm").as("q_pnrm"))
     val cp = proj.select(
       col("vec_id").as("c_id"), col("p").as("c_p"), col("pnrm").as("c_pnrm"))
     val projected = cp.join(broadcast(qp), col("q_id") =!= col("c_id"))
       .selectExpr("q_id", "c_id", s"${sparkDot("q_p", "c_p")} / (q_pnrm * c_pnrm) AS cosine")
-    recallFold(bruteTopK(s, d, n, k, queryLimit), projected, k, nCand = false)
+    recallFold(bruteTopK(s, d, n, RecallK), projected, RecallK, nCand = false)
       .selectExpr(s"$projDim AS proj_dim", "n_queries", "n_matched", "recall_at_k")
   }
 
@@ -623,7 +630,7 @@ object Similarity {
       s"""proj$sfx AS (
          |  SELECT vec_id, p, sqrt(${duckDot("p", "p")}) AS pnrm
          |  FROM (SELECT vec_id, [$pList] AS p FROM embeddings)),
-         |${duckTopK(s"approx$sfx", duckAllPairs(s"proj$sfx", "p", "pnrm", 100), 5)}""".stripMargin
+         |${duckTopK(s"approx$sfx", duckAllPairs(s"proj$sfx", "p", "pnrm"), RecallK)}""".stripMargin
     (ctes, duckRecallSelect(s"$projDim AS proj_dim", "brute", s"approx$sfx", Nil))
   }
 
@@ -633,23 +640,26 @@ object Similarity {
     * retention, this is the coarse-quantizer knob). Candidates are the
     * query's own cell members; more cells → fewer candidates per
     * probe → lower recall. */
-  def ivfRecall(s: SparkSession, d: String, cells: Int,
-                k: Int = 5, queryLimit: Int = 100): DataFrame = {
+  def ivfRecall(s: SparkSession, d: String, cells: Int): DataFrame = {
     val n = withNorm(s, d)
-    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, cellIds(s, d, cells, queryLimit)), k)
+    recallFold(bruteTopK(s, d, n, RecallK), scoreIds(n, cellIds(s, d, cells)), RecallK)
       .selectExpr(s"$cells AS cells", "n_queries", "n_cand", "n_matched", "recall_at_k")
   }
 
   /** IVF candidate ids: each query paired with the other members of its
     * own cell. */
-  private def cellIds(s: SparkSession, d: String, cells: Int, queryLimit: Int): DataFrame = {
+  private def cellIds(s: SparkSession, d: String, cells: Int): DataFrame = {
     val cellsF = cellAssign(s, d, cells).select("vec_id", "cell")
     cellsF.select(col("vec_id").as("q_id"), col("cell"))
-      .filter(col("q_id") < queryLimit)
+      .filter(col("q_id") < QueryLimit)
       .join(cellsF.select(col("vec_id").as("c_id"), col("cell").as("c_cell")),
         col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
   }
+
+  /** The filtered-ANN setting: coarse cells and recall@k. */
+  private val FilteredCells = 8
+  private val FilteredK = 3
 
   /** FILTERED ANN — vector search under a metadata predicate (here:
     * same-label neighbors only), the production "filtered vector
@@ -658,22 +668,22 @@ object Similarity {
     * never as a post-filter over an unfiltered top-k, which is the
     * classic recall bug (a k-cut taken before the predicate can starve
     * or empty the filtered result). Ground truth is the brute filtered
-    * top-k (broadcast of `queryLimit` queries — O(Q·N), linear in the
+    * top-k (broadcast of [[QueryLimit]] queries — O(Q·N), linear in the
     * corpus); published output is the checked recall + candidate
-    * counts, the same surface as [[ivfRecall]]. */
-  def filteredAnn(s: SparkSession, d: String, cells: Int,
-                  k: Int = 3, queryLimit: Int = 100): DataFrame = {
+    * counts, the same surface as [[ivfRecall]], at [[FilteredCells]]
+    * cells and recall@[[FilteredK]]. */
+  def filteredAnn(s: SparkSession, d: String): DataFrame = {
     val n = withNorm(s, d)
     val sameLabel = "q_label = c_label"
-    recallFold(bruteTopK(s, d, n, k, queryLimit, sameLabel),
-        scoreIds(n, cellIds(s, d, cells, queryLimit), sameLabel), k)
-      .selectExpr(s"$cells AS cells", "n_queries", "n_brute", "n_cand", "n_matched",
+    recallFold(bruteTopK(s, d, n, FilteredK, sameLabel),
+        scoreIds(n, cellIds(s, d, FilteredCells), sameLabel), FilteredK)
+      .selectExpr(s"$FilteredCells AS cells", "n_queries", "n_brute", "n_cand", "n_matched",
         "recall_at_k")
   }
 
   /** DuckDB twin of [[filteredAnn]]. */
-  def filteredAnnOracle(cells: Int, k: Int = 3, queryLimit: Int = 100): String = {
-    val sfx = s"_f$cells"
+  def filteredAnnOracle: String = {
+    val sfx = s"_f$FilteredCells"
     s"""WITH $duckNormCte,
        |fbrute AS (SELECT q_id, c_id FROM (
        |  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -681,15 +691,15 @@ object Similarity {
        |           ORDER BY ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) DESC,
        |                    c.vec_id) AS rnk
        |  FROM n q JOIN n c ON q.vec_id <> c.vec_id AND q.label = c.label
-       |  WHERE q.vec_id < $queryLimit) WHERE rnk <= $k),
-       |${duckCellCtes(cells, sfx)},
-       |${duckCellIds("fids", s"cells$sfx", queryLimit)},
+       |  WHERE q.vec_id < $QueryLimit) WHERE rnk <= $FilteredK),
+       |${duckCellCtes(FilteredCells, sfx)},
+       |${duckCellIds("fids", s"cells$sfx")},
        |fcand AS (SELECT q_id, c_id,
        |    ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
        |  FROM fids JOIN n q ON q.vec_id = q_id JOIN n c ON c.vec_id = c_id
        |  WHERE q.label = c.label),
-       |${duckTopK("fapprox", "fcand", k)}
-       |${duckRecallSelect(s"$cells AS cells", "fbrute", "fapprox",
+       |${duckTopK("fapprox", "fcand", FilteredK)}
+       |${duckRecallSelect(s"$FilteredCells AS cells", "fbrute", "fapprox",
           Seq("fbrute" -> "n_brute", "fcand" -> "n_cand"))}""".stripMargin
   }
 
@@ -701,8 +711,7 @@ object Similarity {
     * One broadcast argmax pass RANKS the cells per vector; rank 1 is
     * the member assignment, ranks ≤ nprobe are the query's probe set —
     * the same scored frame serves both, no second pass. */
-  def ivfProbeRecall(s: SparkSession, d: String, cells: Int,
-                     nprobe: Int, k: Int = 5, queryLimit: Int = 100): DataFrame = {
+  def ivfProbeRecall(s: SparkSession, d: String, cells: Int, nprobe: Int): DataFrame = {
     // one table load serves the cell ranking and the exact scoring
     val n = withNorm(s, d)
     val cent = n.filter(col("vec_id") < cells)
@@ -714,22 +723,21 @@ object Similarity {
       .withColumn("rn", row_number().over(wAssign))
     val members = ranked.filter(col("rn") === 1)
       .select(col("vec_id").as("c_id"), col("cent_id").as("c_cell"))
-    val probes = ranked.filter(col("vec_id") < queryLimit && col("rn") <= nprobe)
+    val probes = ranked.filter(col("vec_id") < QueryLimit && col("rn") <= nprobe)
       .select(col("vec_id").as("q_id"), col("cent_id").as("cell"))
     // unique by construction: one member cell per c_id, nprobe distinct
     // probe cells per q_id — no distinct needed on the candidate join
     val candIds = probes.join(members,
         col("cell") === col("c_cell") && col("q_id") =!= col("c_id"))
       .select("q_id", "c_id")
-    recallFold(bruteTopK(s, d, n, k, queryLimit), scoreIds(n, candIds), k)
+    recallFold(bruteTopK(s, d, n, RecallK), scoreIds(n, candIds), RecallK)
       .selectExpr(s"$cells AS cells", s"$nprobe AS nprobe", "n_queries", "n_cand", "n_matched",
         "recall_at_k")
   }
 
   /** DuckDB twin of [[ivfProbeRecall]] (expects the shared `n` and
     * `brute` CTEs); suffixed by nprobe so settings union. */
-  def ivfProbeRecallOracleCtes(cells: Int, nprobe: Int, k: Int = 5,
-                               queryLimit: Int = 100): (String, String) = {
+  def ivfProbeRecallOracleCtes(cells: Int, nprobe: Int): (String, String) = {
     val sfx = s"_p$nprobe"
     val cos = s"${duckDot("e.embedding", "c.cent_emb")} / " +
       s"(sqrt(${duckDot("e.embedding", "e.embedding")}) * sqrt(${duckDot("c.cent_emb", "c.cent_emb")}))"
@@ -746,37 +754,37 @@ object Similarity {
          |  SELECT q.vec_id AS q_id, m.vec_id AS c_id
          |  FROM ranked$sfx q JOIN ranked$sfx m
          |    ON q.cent_id = m.cent_id AND m.rn = 1 AND q.vec_id <> m.vec_id
-         |  WHERE q.vec_id < $queryLimit AND q.rn <= $nprobe)""".stripMargin, k)
+         |  WHERE q.vec_id < $QueryLimit AND q.rn <= $nprobe)""".stripMargin, RecallK)
   }
 
   /** DuckDB twin of [[ivfRecall]]; cell CTEs suffixed by the cell count
     * so two settings union in one statement (expects the shared `n` and
     * `brute` CTEs of [[recallOracleBruteCte]]). */
-  def ivfRecallOracleCtes(cells: Int, k: Int = 5, queryLimit: Int = 100): (String, String) = {
+  def ivfRecallOracleCtes(cells: Int): (String, String) = {
     val sfx = s"_c$cells"
     duckIdRecall(sfx, s"$cells AS cells",
       s"""${duckCellCtes(cells, sfx)},
-         |${duckCellIds(s"ids$sfx", s"cells$sfx", queryLimit)}""".stripMargin, k)
+         |${duckCellIds(s"ids$sfx", s"cells$sfx")}""".stripMargin, RecallK)
   }
 
   /** DuckDB twin of the SIZED [[lshAnn]]: the bit count comes from the
     * live COUNT(*) through the same integer rule as [[lshBitsFor]], so
     * the oracle follows the knob wherever the data scale puts it. */
-  def lshOracleSized(queryLimit: Int = 100): String =
+  def lshOracleSized: String =
     s"""WITH $duckNormCte,
-       |${duckLshSizedCte()},
-       |b AS (SELECT vec_id, embedding, nrm, ${duckBucketSized()} AS bucket
+       |$duckLshSizedCte,
+       |b AS (SELECT vec_id, embedding, nrm, $duckBucketSized AS bucket
        |      FROM n CROSS JOIN sized),
-       |${duckLshProbe(queryLimit)}""".stripMargin
+       |$duckLshProbe""".stripMargin
 
   /** The probe tail of both LSH twins over `b(vec_id, embedding, nrm,
     * bucket)`: in-bucket top-1 per query with its candidate count. */
-  private def duckLshProbe(queryLimit: Int): String =
+  private def duckLshProbe: String =
     s"""scored AS (
        |  SELECT q.vec_id AS q_id, q.bucket AS bucket, c.vec_id AS c_id,
        |         ${duckDot("q.embedding", "c.embedding")} / (q.nrm * c.nrm) AS cosine
        |  FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $queryLimit),
+       |  WHERE q.vec_id < $QueryLimit),
        |ranked AS (
        |  SELECT q_id, bucket, c_id, cosine,
        |         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS rnk,
@@ -793,6 +801,9 @@ object Similarity {
        |${duckCellCtesExpr("(SELECT c FROM sizedc)")},
        |$duckFlatProbe""".stripMargin
 
+  /** Cell count past which [[ivfSizedAnn]] assigns two-level. */
+  private val FlatCellCap = 64
+
   /** COUNT-driven IVF — the production sized entry. The cell count
     * executes [[ivfCellsFor]]; the ASSIGNMENT strategy gates on it:
     * flat broadcast argmax while cells ≤ `flatCellCap` (N·cells dots —
@@ -801,9 +812,10 @@ object Similarity {
     * flat's N^1.5 build, 84× fewer dots at 10⁹ vectors). Cap 64
     * ⟺ N ≈ 4096: by then the flat assignment does ≥64 dots/vector
     * while hier does ~8+8, so the crossover is safely behind it. The
-    * oracle twin recomputes cells AND the gate from COUNT(*); `cap` is
-    * injectable so specs can pin both branches without scale fixtures. */
-  def ivfSizedAnn(s: SparkSession, d: String, flatCellCap: Int = 64): DataFrame = {
+    * oracle twin recomputes cells AND the gate from COUNT(*) at
+    * [[FlatCellCap]]; `flatCellCap` is injectable so specs can pin both
+    * branches without scale fixtures. */
+  def ivfSizedAnn(s: SparkSession, d: String, flatCellCap: Int = FlatCellCap): DataFrame = {
     val cells = ivfCellsFor(Tables.embeddings(s, d).count())
     if (cells > flatCellCap) ivfHierAnn(s, d) else ivfAnn(s, d, cells)
   }
@@ -812,19 +824,19 @@ object Similarity {
     * subqueries, gated by mutually exclusive predicates on the same
     * ⌊√COUNT(*)⌋ the Spark side executes — exactly one contributes
     * rows. */
-  def ivfOracleGated(flatCellCap: Int = 64): String = {
+  def ivfOracleGated: String = {
     val gate = "SELECT GREATEST(4, CAST(floor(sqrt(COUNT(*))) AS INT)) FROM embeddings"
-    s"""SELECT * FROM (${ivfOracleSized()}) WHERE ($gate) <= $flatCellCap
+    s"""SELECT * FROM (${ivfOracleSized()}) WHERE ($gate) <= $FlatCellCap
        |UNION ALL
-       |SELECT * FROM ($ivfHierOracle) WHERE ($gate) > $flatCellCap
+       |SELECT * FROM ($ivfHierOracle) WHERE ($gate) > $FlatCellCap
        |ORDER BY q_id""".stripMargin
   }
 
   /** DuckDB twin of [[lshAnn]], generated from the same parameters. */
-  def lshOracle(bits: Int, queryLimit: Int = 100): String =
+  def lshOracle(bits: Int): String =
     s"""WITH $duckNormCte,
        |b AS (SELECT vec_id, embedding, nrm, ${duckBucket(bits)} AS bucket FROM n),
-       |${duckLshProbe(queryLimit)}""".stripMargin
+       |$duckLshProbe""".stripMargin
 
   /** Directed k-NN edges within the sized coarse-quantizer cells:
     * every vector's top-`k` neighbors by quantized cosine, ties by
@@ -913,7 +925,8 @@ object Similarity {
               |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rnk
               |  FROM scored)
               |SELECT q_id, rnk, c_id, cosine FROM ranked WHERE rnk <= 5
-              |ORDER BY q_id, rnk""".stripMargin)),
+              |ORDER BY q_id, rnk""".stripMargin),
+      headline = false),
 
     // Hard-negative mining for contrastive training: per query vector,
     // the top-3 most-similar candidates with a DIFFERENT label — the
@@ -943,7 +956,8 @@ object Similarity {
               |         CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rnk
               |  FROM scored)
               |SELECT q_id, rnk, c_id, cosine FROM ranked WHERE rnk <= 3
-              |ORDER BY q_id, rnk""".stripMargin)),
+              |ORDER BY q_id, rnk""".stripMargin),
+      headline = false),
 
     // MMR diverse re-ranking (maximal marginal relevance, λ = 1/2): from
     // the top-16 candidates by relevance to a query vector, greedily
@@ -1032,7 +1046,7 @@ object Similarity {
     QueryDef(
       "q_sim_lsh_scaled",
       (s, d) => lshAnn(s, d, bits = lshBitsFor(Tables.embeddings(s, d).count())),
-      Some(lshOracleSized())),
+      Some(lshOracleSized)),
 
     // Native-expression path: the same quantized cosine as a custom
     // Catalyst Expression with codegen ([[graft.functions.CosineSim]])
@@ -1075,7 +1089,7 @@ object Similarity {
     QueryDef(
       "q_sim_ivf_scaled",
       (s, d) => ivfSizedAnn(s, d),
-      Some(ivfOracleGated())),
+      Some(ivfOracleGated)),
 
     // Two-level coarse quantizer: N^¼ super-cells bound the INDEX BUILD
     // to ~2·N^1.25 dots (flat √N assignment is N^1.5 — 3×10¹³ at 10⁹
@@ -1088,7 +1102,9 @@ object Similarity {
     // candidates and no higher recall; 1→4 tables must show more
     // candidates and higher recall. Single-probe single-table sign-LSH
     // recalls poorly by construction (the honest number is the point);
-    // tables are the production lever that buys it back.
+    // tables are the production lever that buys it back. Untimed, like
+    // every recall entry: a verify-gated measurement whose ground
+    // truth is brute-force top-k.
     QueryDef(
       "q_sim_recall",
       (s, d) => annRecall(s, d, bits = 8, tables = 1)
@@ -1098,11 +1114,12 @@ object Similarity {
         val settings = Seq((8, 1), (10, 1), (8, 4))
         val parts = settings.map { case (b, t) => recallOracleCtes(b, t) }
         Some(s"""WITH $duckNormCte,
-                |${recallOracleBruteCte()},
+                |$recallOracleBruteCte,
                 |${parts.map(_._1).mkString(",\n")}
                 |${parts.map(_._2).mkString("\nUNION ALL\n")}
                 |ORDER BY bits, tables""".stripMargin)
-      }),
+      },
+      headline = false),
 
     // IVF recall at both oracle-checked cell settings — completes the
     // recall surface (LSH: bits×tables; PQ: ADC rank retention; this:
@@ -1112,6 +1129,7 @@ object Similarity {
     // which is exactly why the knob needs measuring, not assuming.
     // Centroid-bucketed probing recalls an order of magnitude better
     // than single-table sign-LSH at comparable candidate budgets.
+    // Untimed: a verify-gated recall measurement.
     QueryDef(
       "q_ivf_recall",
       (s, d) => ivfRecall(s, d, cells = 8)
@@ -1119,11 +1137,12 @@ object Similarity {
         .orderBy("cells"), {
         val parts = Seq(8, 22).map(c => ivfRecallOracleCtes(c))
         Some(s"""WITH $duckNormCte,
-                |${recallOracleBruteCte()},
+                |$recallOracleBruteCte,
                 |${parts.map(_._1).mkString(",\n")}
                 |${parts.map(_._2).mkString("\nUNION ALL\n")}
                 |ORDER BY cells""".stripMargin)
-      }),
+      },
+      headline = false),
 
     // Filtered vector search: the metadata predicate (same label)
     // intersects the candidate set BEFORE the top-k cut — pre-filter,
@@ -1131,14 +1150,15 @@ object Similarity {
     // documents). Rides the memoized cell assignment.
     QueryDef(
       "q_ann_filtered",
-      (s, d) => filteredAnn(s, d, cells = 8),
-      Some(filteredAnnOracle(cells = 8))),
+      (s, d) => filteredAnn(s, d),
+      Some(filteredAnnOracle)),
 
     // Multi-probe recall curve at a fixed quantizer: nprobe = 1, 2, 4
     // over 22 cells. Probing more cells buys recall linearly in
     // candidates WITHOUT rebuilding the index — the knob a production
     // IVF serves queries with (cells sets the build, nprobe the
     // per-query recall/latency point). ScaleSpec pins monotonicity.
+    // Untimed: a verify-gated recall measurement.
     QueryDef(
       "q_ivf_probe_recall",
       (s, d) => ivfProbeRecall(s, d, cells = 22, nprobe = 1)
@@ -1147,17 +1167,19 @@ object Similarity {
         .orderBy("nprobe"), {
         val parts = Seq(1, 2, 4).map(p => ivfProbeRecallOracleCtes(22, p))
         Some(s"""WITH $duckNormCte,
-                |${recallOracleBruteCte()},
+                |$recallOracleBruteCte,
                 |${parts.map(_._1).mkString(",\n")}
                 |${parts.map(_._2).mkString("\nUNION ALL\n")}
                 |ORDER BY nprobe""".stripMargin)
-      }),
+      },
+      headline = false),
 
     // Random-projection (JL) recall curve: top-k in the ±1-projected
     // 8/16/32-dim spaces vs exact 64-dim top-k — measures what each
     // dot-cost cut (8×/4×/2×) costs in recall ([[rpRecall]]). The
     // lower dims are prefixes of the same sign matrix, so the curve
-    // isolates the dimension knob.
+    // isolates the dimension knob. Untimed: a verify-gated recall
+    // measurement.
     QueryDef(
       "q_rp_recall",
       (s, d) => rpRecall(s, d, projDim = 8)
@@ -1166,11 +1188,12 @@ object Similarity {
         .orderBy("proj_dim"), {
         val parts = Seq(8, 16, 32).map(rpRecallOracleCtes)
         Some(s"""WITH $duckNormCte,
-                |${recallOracleBruteCte()},
+                |$recallOracleBruteCte,
                 |${parts.map(_._1).mkString(",\n")}
                 |${parts.map(_._2).mkString("\nUNION ALL\n")}
                 |ORDER BY proj_dim""".stripMargin)
-      }),
+      },
+      headline = false),
 
     // Embedding-cosine near-dup pairs, brute force (verify-scale
     // baseline; the LSH bucket join above is the 100 TB shape).
@@ -1191,7 +1214,7 @@ object Similarity {
               |         ${duckDot("x.embedding", "y.embedding")} / (x.nrm * y.nrm) AS cosine
               |  FROM n x JOIN n y ON x.vec_id < y.vec_id)
               |WHERE cosine >= 0.4 ORDER BY a, b""".stripMargin),
-      scaleExcluded = true),
+      headline = false),
 
     // Semantic dedup (the SemDeDup shape, Abbas et al. 2023): assign
     // every embedding to its nearest of ⌊√N⌋ coarse-quantizer cells

@@ -61,7 +61,8 @@ object Skew {
               |  ${Parity.sqlDsum("l_extendedprice", 2)} AS sum_price
               |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
               |WHERE o_orderpriority = '1-URGENT'
-              |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+              |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Two-phase distinct count: salt by hash OF THE COUNTED VALUE, so
     // each distinct value lands in exactly one (group, salt) cell —
@@ -78,7 +79,8 @@ object Skew {
         .agg(sum(col("c")).cast("bigint").as("n_distinct_parts"))
         .orderBy("l_returnflag"),
       Some("""SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_distinct_parts
-             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     // Skew audit — the measurement that decides BETWEEN the two
     // mitigations above: per-key row counts for the join/agg key, the

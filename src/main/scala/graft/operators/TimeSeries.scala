@@ -236,7 +236,8 @@ object TimeSeries {
              |  FROM ev)
              |SELECT l_suppkey, CAST(MAX(live) AS BIGINT) AS max_concurrent,
              |  CAST(COUNT(*) / 2 AS BIGINT) AS n_intervals
-             |FROM run GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin)),
+             |FROM run GROUP BY l_suppkey ORDER BY l_suppkey""".stripMargin),
+      headline = false),
 
     // Rolling z-score anomaly screen: each event against the trailing
     // 5-event window of its own user's series. The window sums run over
@@ -286,7 +287,8 @@ object TimeSeries {
              |SELECT user_id, COUNT(*) AS n_scored,
              |  CAST(SUM(CASE WHEN abs(z) > 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
              |  CAST(SUM(CASE WHEN abs(z) > 2 THEN event_id ELSE 0 END) AS BIGINT) AS flag_checksum
-             |FROM z GROUP BY user_id ORDER BY user_id""".stripMargin)),
+             |FROM z GROUP BY user_id ORDER BY user_id""".stripMargin),
+      headline = false),
 
     // Exponentially-decayed trending score per event type — the
     // "what's hot NOW" ranking every event-analytics surface serves
@@ -320,7 +322,8 @@ object TimeSeries {
              |FROM (SELECT event_type,
              |        datediff('day', CAST(ts AS DATE), CAST(now_ts AS DATE)) AS dd
              |      FROM events CROSS JOIN now_t)
-             |GROUP BY event_type ORDER BY decayed_u DESC, event_type""".stripMargin)),
+             |GROUP BY event_type ORDER BY decayed_u DESC, event_type""".stripMargin),
+      headline = false),
 
     // Integer-exact EWMA (α = 1/2, floor at each step) over each event
     // type's daily count series: ewma₁ = x₁, ewmaₜ = ⌊(ewmaₜ₋₁ + xₜ)/2⌋

@@ -52,6 +52,7 @@ object TypedOps {
              |  CAST(SUM(CAST(floor(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100 AS sum_price
              |FROM orders
              |WHERE o_totalprice > 1000 AND o_orderstatus <> 'F'
-             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))
+             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      headline = false)
   )
 }

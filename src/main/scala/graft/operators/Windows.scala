@@ -95,7 +95,8 @@ object Windows {
              |  SELECT *, RANK() OVER (PARTITION BY o_orderpriority
              |            ORDER BY o_totalprice DESC) AS rk
              |  FROM orders) WHERE rk <= 3
-             |ORDER BY o_orderpriority, rk, o_orderkey""".stripMargin)),
+             |ORDER BY o_orderpriority, rk, o_orderkey""".stripMargin),
+      headline = false),
 
     // Running (cumulative) revenue per user over time — exact decimal sum.
     QueryDef(
@@ -113,7 +114,8 @@ object Windows {
              |FROM events
              |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |ORDER BY event_id""".stripMargin)),
+             |ORDER BY event_id""".stripMargin),
+      headline = false),
 
     // Distribution functions: percent_rank, cume_dist, dense_rank over a
     // unique ordering (identical rank→ratio definitions both engines).
@@ -136,7 +138,8 @@ object Windows {
              |  CAST(DENSE_RANK() OVER w AS INT) AS drank
              |FROM orders WHERE o_orderkey % 20 = 0
              |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-             |ORDER BY o_orderkey""".stripMargin)),
+             |ORDER BY o_orderkey""".stripMargin),
+      headline = false),
 
     // RANGE frame: count of same-user events within the trailing hour of
     // each event — a value-based frame (rangeBetween), not a row count.
@@ -154,7 +157,8 @@ object Windows {
       Some("""SELECT event_id, user_id,
              |  COUNT(*) OVER (PARTITION BY user_id ORDER BY CAST(epoch(ts) AS BIGINT)
              |                 RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_last_hour
-             |FROM events ORDER BY event_id""".stripMargin)),
+             |FROM events ORDER BY event_id""".stripMargin),
+      headline = false),
 
     // first/last/nth over explicit full-partition frames (last_value
     // needs the unbounded-following frame or it degenerates to the
@@ -178,7 +182,8 @@ object Windows {
              |FROM events
              |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
              |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-             |ORDER BY event_id""".stripMargin)),
+             |ORDER BY event_id""".stripMargin),
+      headline = false),
 
     // ntile over a unique ordering (deterministic bucket assignment),
     // summarized per bucket. ntile is semantically global, but the
@@ -192,7 +197,8 @@ object Windows {
              |       MAX(o_orderkey) AS max_key
              |FROM (SELECT o_orderkey, NTILE(4) OVER (ORDER BY o_orderkey) AS quartile
              |      FROM orders)
-             |GROUP BY quartile ORDER BY quartile""".stripMargin))
+             |GROUP BY quartile ORDER BY quartile""".stripMargin),
+      headline = false)
   )
 
   /** Exact NTILE(k) without a global single-task window, over ANY frame

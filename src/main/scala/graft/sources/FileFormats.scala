@@ -53,7 +53,8 @@ object FileFormats {
              |  CAST(SUM(l_linenumber) AS BIGINT) AS sum_line,
              |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key,
              |  MIN(l_shipdate) AS first_ship
-             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+             |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+      headline = false),
 
     QueryDef(
       "q_scan_avro",
@@ -74,7 +75,8 @@ object FileFormats {
              |  CAST(SUM(o_custkey) AS BIGINT) AS sum_cust,
              |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
              |  MIN(o_orderdate) AS first_date
-             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+             |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+      headline = false),
 
     // JSON-lines — the interchange format most text corpora actually
     // arrive in. The round-trip covers string escaping (document text
@@ -105,7 +107,8 @@ object FileFormats {
              |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
              |  CAST(SUM(len(text)) AS BIGINT) AS sum_text_len,
              |  MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+      headline = false),
 
     // CSV — the reference's own format (its pipelines are schema-first
     // CSV readers, `temDataRead.py:21-25`; graft.reference exercises
@@ -141,7 +144,8 @@ object FileFormats {
              |  CAST(SUM(c_nationkey) AS BIGINT) AS sum_nation,
              |  CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS sum_acctbal_cents,
              |  MIN(c_custkey) AS min_key, MAX(c_custkey) AS max_key
-             |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+             |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+      headline = false),
 
     // Plain-text lines — the rawest corpus interchange (one document
     // per line, the Common-Crawl-derivative drop format). `read.text`
@@ -170,7 +174,8 @@ object FileFormats {
              |  CAST(SUM(len(text)) AS BIGINT) AS sum_len,
              |  CAST(MIN(len(text)) AS INT) AS min_len,
              |  CAST(MAX(len(text)) AS INT) AS max_len
-             |FROM documents""".stripMargin)),
+             |FROM documents""".stripMargin),
+      headline = false),
 
     // Hive-style partitioned parquet — THE 100 TB scan layout: the
     // partition column lives in the directory name, so a filter on it
@@ -204,7 +209,8 @@ object FileFormats {
              |  CAST(SUM(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty_int,
              |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
              |FROM lineitem WHERE year(l_shipdate) >= 1996
-             |GROUP BY 1, 2 ORDER BY ship_year, l_returnflag""".stripMargin)),
+             |GROUP BY 1, 2 ORDER BY ship_year, l_returnflag""".stripMargin),
+      headline = false),
 
     // XML — Spark 4's built-in XML source (merged from spark-xml; no
     // external connector jar). Feeds/exports still arrive as XML in
@@ -237,7 +243,8 @@ object FileFormats {
              |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
              |  CAST(SUM(len(text)) AS BIGINT) AS sum_text_len,
              |  MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+      headline = false),
 
     // Parquet schema evolution — the lakehouse reality every long-lived
     // table hits: old files were written before a column existed, new

@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * mode, no watermark, event time left as a string
   * (`03_temStreamEveryMin.py:94-102`; SURVEY.md §2.2). Our engine
   * declares real event-time ops; each one here is the batch-mode twin of
-  * a streaming query (identical `window()` / `session_window()` /
-  * first-per-key expression), which is what DuckDB can oracle-check.
+  * a streaming query, which is what DuckDB can oracle-check. The window
+  * twins call the streaming transform itself ([[EventStreams]]): on a
+  * batch frame the analyzer drops its watermark, so batch and stream run
+  * one declared query.
   * Streaming-specific behavior (append emission, watermark late-drop,
   * state cleanup) is exercised in the ScalaTest harness via
   * `MemoryStream` ([[EventStreams]]), where the assertion is that the
@@ -30,11 +32,7 @@ object StreamingTwins {
     // Tumbling 1-hour event-time windows: count + exact sum per window.
     QueryDef(
       "q_stream_tumble",
-      (s, d) => Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
-        .select(col("window.start").as("wstart"), col("n"), col("sum_value"))
-        .orderBy("wstart"),
+      (s, d) => EventStreams.tumblingAgg(Tables.events(s, d)).orderBy("wstart"),
       Some(s"""SELECT time_bucket(INTERVAL 1 HOUR, ts) AS wstart, COUNT(*) AS n,
               |  ${Parity.sqlDsum("value", 2)} AS sum_value
               |FROM events GROUP BY 1 ORDER BY wstart""".stripMargin)),
@@ -43,11 +41,7 @@ object StreamingTwins {
     // windows; the oracle unrolls the two candidate starts per event.
     QueryDef(
       "q_stream_slide",
-      (s, d) => Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-        .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
-        .select(col("window.start").as("wstart"), col("n"), col("sum_value"))
-        .orderBy("wstart"),
+      (s, d) => EventStreams.slidingAgg(Tables.events(s, d)).orderBy("wstart"),
       Some(s"""SELECT wstart, COUNT(*) AS n, ${Parity.sqlDsum("value", 2)} AS sum_value
               |FROM (
               |  SELECT UNNEST([time_bucket(INTERVAL 30 MINUTE, ts),
@@ -55,18 +49,14 @@ object StreamingTwins {
               |         ts, value
               |  FROM events)
               |WHERE ts >= wstart AND ts < wstart + INTERVAL 60 MINUTE
-              |GROUP BY wstart ORDER BY wstart""".stripMargin)),
+              |GROUP BY wstart ORDER BY wstart""".stripMargin),
+      headline = false),
 
     // Session windows per user, 2-hour gap. Spark's session end is
     // last-event + gap; the oracle's gaps-and-islands twin reproduces it.
     QueryDef(
       "q_stream_session",
-      (s, d) => Tables.events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "2 hours"))
-        .agg(count(lit(1)).as("n"), Parity.dsum(col("value"), 2).as("sum_value"))
-        .select(col("user_id"), col("session_window.start").as("s_start"),
-          col("session_window.end").as("s_end"), col("n"), col("sum_value"))
-        .orderBy("user_id", "s_start"),
+      (s, d) => EventStreams.sessionAgg(Tables.events(s, d)).orderBy("user_id", "s_start"),
       Some(s"""WITH flagged AS (
               |  SELECT user_id, ts, value,
               |    CASE WHEN LAG(ts) OVER w IS NULL
@@ -99,7 +89,8 @@ object StreamingTwins {
       Some("""SELECT user_id, event_type, event_id AS first_event_id, ts AS first_ts
              |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
              |                ORDER BY ts, event_id) AS rn FROM events)
-             |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
+             |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin),
+      headline = false),
 
     // Streaming corpus admission twin: a delta batch (doc_id % 10 = 7,
     // the arriving crawl — same convention as q_dedup_incremental)
@@ -133,7 +124,8 @@ object StreamingTwins {
              |  WHERE rn = 1)
              |SELECT doc_id, lang, source FROM first_d
              |WHERE dg NOT IN (SELECT dg FROM dg WHERE doc_id % 10 <> 7)
-             |ORDER BY doc_id""".stripMargin)),
+             |ORDER BY doc_id""".stripMargin),
+      headline = false),
 
     // Stream-static enrichment twin: the events fact joined with the
     // customer dimension snapshot through the SAME code path the
@@ -155,7 +147,8 @@ object StreamingTwins {
       Some("""SELECT c_mktsegment AS segment, event_type,
              |  COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
              |FROM events JOIN customer ON user_id = c_custkey
-             |GROUP BY 1, 2 ORDER BY segment, event_type""".stripMargin)),
+             |GROUP BY 1, 2 ORDER BY segment, event_type""".stripMargin),
+      headline = false),
 
     // Late-data accounting twin — what a 10-minute watermark WOULD have
     // dropped: replaying the stream in ARRIVAL order, the high-water

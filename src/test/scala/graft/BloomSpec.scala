@@ -16,7 +16,7 @@ class BloomSpec extends AnyFunSuite {
     assert(keys.forall(BloomHash.mightContain(bits, _)))
   }
 
-  test("boxed fallback probe derives the bit count from the bitmap — no false negatives at non-floor sizes") {
+  test("driver-side boxed probe derives the bit count from the bitmap — no false negatives at non-floor sizes") {
     // a COUNT-sized bitmap twice the floor: keys whose bits land in the
     // upper half would be missed by a probe that mods by the fixed
     // floor size (the pre-round-10 fallback bug)
@@ -57,7 +57,7 @@ class BloomSpec extends AnyFunSuite {
     assert(fp.toDouble / probes.size < 0.005, s"fp=$fp/${probes.size}")
   }
 
-  test("native probe expression agrees with the UDF fallback") {
+  test("native probe expression agrees with BloomHash.mightContain") {
     import spark.implicits._
     BloomFilterAgg.ensureRegistered(spark)
     val keys = (0L until 2000L).map(k => k * 31L).toDF("k")

@@ -64,7 +64,7 @@ class CellAssignSpec extends AnyFunSuite {
   }
 
   test("filtered ANN pre-filters: candidates shrink and recall stays a valid fraction") {
-    val f = operators.Similarity.filteredAnn(spark, sf, cells = 8).head()
+    val f = operators.Similarity.filteredAnn(spark, sf).head()
     val u = operators.Similarity.ivfRecall(spark, sf, cells = 8).head()
     // the label predicate must prune the candidate set BEFORE scoring —
     // filtered candidates are a strict subset of the unfiltered cell

@@ -60,4 +60,10 @@ class EntryFailureSpec extends AnyFunSuite {
       Bench.runEntry(spark, sf, throwing(new OutOfMemoryError("heap")))
     }
   }
+
+  test("Bench: an unknown BENCH_ONLY name fails the selection; an explicit untimed entry runs") {
+    val e = intercept[IllegalArgumentException](Bench.selected(Some("q_scan_parquet,q_nope")))
+    assert(e.getMessage.contains("q_nope"))
+    assert(Bench.selected(Some("q_dedup_ngram")) === Seq("q_dedup_ngram"))
+  }
 }

@@ -17,16 +17,19 @@ class QuerySurfaceSpec extends AnyFunSuite {
   }
 
   test("quadratic baselines are tagged and mechanically excluded from scale benches") {
-    val excluded = SparkEntry.allDefs.filter(_.scaleExcluded).map(_.name).toSet
-    // exactly the deliberately all-pairs / fixed-band fixtures, plus
-    // the screen-evaluation entry whose ground-truth side IS one
-    assert(excluded === Set("q_dedup_ngram", "q_dedup_embed",
-      "q_dedup_simhash", "q_dedup_lsh_recall"))
-    // every tagged baseline keeps its oracle (verify-scale correctness
-    // is the reason it exists) and never reaches the headline set
-    excluded.foreach { n =>
-      assert(SparkEntry.oracleSql.contains(n), s"$n must stay oracle-checked")
-      assert(!Bench.headline.contains(n), s"$n must not be timed in the headline sweep")
+    // the deliberately all-pairs / fixed-band fixtures, plus the
+    // screen-evaluation entry whose ground-truth side IS one
+    val baselines = Set("q_dedup_ngram", "q_dedup_embed",
+      "q_dedup_simhash", "q_dedup_lsh_recall")
+    val defs = SparkEntry.allDefs.filter(q => baselines(q.name))
+    assert(defs.map(_.name).toSet === baselines)
+    // every baseline keeps its oracle (verify-scale correctness is the
+    // reason it exists) and never reaches the headline set
+    val timed = Bench.selected(None).toSet
+    defs.foreach { q =>
+      assert(!q.headline, s"${q.name} must be headline = false")
+      assert(q.oracle.isDefined, s"${q.name} must stay oracle-checked")
+      assert(!timed(q.name), s"${q.name} must not be timed in the headline sweep")
     }
   }
 
